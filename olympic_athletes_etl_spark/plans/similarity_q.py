@@ -13,6 +13,7 @@ compute bit-identical bucket ids and similarities.
 
 from __future__ import annotations
 
+import math
 import os
 import tempfile
 
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from olympic_athletes_etl_spark.operators.graph import (
+    _observed_checkpoint,
     _release_checkpoint as _release_ckpt,
 )
 from olympic_athletes_etl_spark.operators.store import GenStore, TableSpec
@@ -520,7 +522,17 @@ def _km_round_sums(
     and the old exploded sum all produce the identical integers (the
     same argument that already made the exploded sum layout-invariant).
     Only lists with ≥ 1 member emit rows, matching groupBy semantics
-    (an emptied list drops out of the next round's centroid set)."""
+    (an emptied list drops out of the next round's centroid set).
+
+    One Python task runs per partition of ``n``, and each task has a
+    fixed cost that dwarfs the numpy work at small row counts: every
+    task, on a reused worker too, calls ``importlib.invalidate_caches()``
+    (pyspark's ``worker_util.setup_spark_files``), which makes each of
+    the worker's 16 cached zipimporters of ``pyspark.zip`` re-read the
+    zip directory — 0.19–0.24 CPU s per call, measured inside a worker
+    on a 4-vCPU VM (PySpark 4.1). A 500-row mapInPandas costs ~1.05
+    worker CPU s on 4 partitions and ~0.27 s on one. The fits therefore
+    pass the row-count-sized view from _fit_base, not the raw base."""
     c_ids, comps, cdots = _np_entry_data(cents)
     ids = [int(c) for c in c_ids]
     assign = _np_assign_fn(comps, cdots)
@@ -1038,6 +1050,36 @@ def _train_sample(n: DataFrame, train_mod: int) -> DataFrame:
     return n.filter(F.col("vec_id") % train_mod == 0)
 
 
+def _fit_base(n: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """(base, rounds) for a Lloyd fit. ``base`` is the eager checkpoint
+    of ``n``'s ``cols``: the init collect reads it, and the caller
+    releases it (releasing ``rounds`` would be a silent no-op, since
+    its plan is a Coalesce, not the checkpoint's LogicalRDD).
+    ``rounds`` is ``base`` coalesced so that each Lloyd round's Python
+    task gets at least one Arrow batch of rows:
+
+        k = max(1, min(base partitions, ceil(rows / maxRecordsPerBatch)))
+
+    The row count is observed during the checkpoint's own job, so the
+    sizing costs no Spark job. The count is only ever lowered: once
+    every partition holds a full batch (sf1 and above here) the rounds
+    run on ``base``'s partitioning unchanged. A non-positive
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` means unbounded
+    batches, so one task. Round sums are exact integers (module note),
+    so the partition count cannot change a bit of the fit."""
+    base, metrics = _observed_checkpoint(
+        n.select(*cols), [F.count(F.lit(1)).alias("rows")]
+    )
+    per_batch = int(
+        n.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    k = 1
+    if per_batch > 0:
+        rows_k = math.ceil(metrics["rows"] / per_batch)
+        k = max(1, min(base.rdd.getNumPartitions(), rows_k))
+    return base, base.coalesce(k)
+
+
 def _km_fit(n: DataFrame, train_mod: int = 1) -> list[tuple[int, list[int]]]:
     """Run the deterministic Lloyd iterations; returns the final centroids
     as (c_id, integer components). Each round: one shuffle-free broadcast
@@ -1046,7 +1088,13 @@ def _km_fit(n: DataFrame, train_mod: int = 1) -> list[tuple[int, list[int]]]:
     of table size. ``train_mod`` fits on the vec_id-modulus sample (see
     _train_sample) — init then becomes the sample's lowest-vec_id k rows
     (a bounded TakeOrdered collect); the default full fit keeps the
-    literal ``vec_id < k`` init the oracles unroll."""
+    literal ``vec_id < k`` init the oracles unroll.
+
+    The rounds run over _fit_base's coalesced view: one Python task per
+    ``maxRecordsPerBatch`` rows, at most one per base partition,
+    because each task pays ~0.2 CPU s of fixed worker set-up
+    (_km_round_sums). At the bench's 500 rows that is one task per
+    round instead of one per core."""
     n = _train_sample(n, train_mod)
     # Materialize the quantized training projection ONCE for the whole
     # fit (r14, guide §5 localCheckpoint): the init collect and every
@@ -1055,9 +1103,9 @@ def _km_fit(n: DataFrame, train_mod: int = 1) -> list[tuple[int, list[int]]]:
     # derivations of the identical frame. In-plan intermediate, computed
     # fresh from parquet on every fit call (never cached across runs);
     # released as soon as the fit returns. Fits are bit-identical — the
-    # checkpoint replays the same rows (tools/probe_fitbase.py:
-    # identical=True on all pairs, km round −12–18%).
-    base = n.select("vec_id", "vq", "qnrm").localCheckpoint(eager=True)
+    # checkpoint replays the same rows (OPTIMIZATION_r14.md: km round
+    # −12–18%).
+    base, rounds = _fit_base(n, "vec_id", "vq", "qnrm")
     try:
         if train_mod == 1:
             cent_rows = (
@@ -1081,7 +1129,7 @@ def _km_fit(n: DataFrame, train_mod: int = 1) -> list[tuple[int, list[int]]]:
             # argmax-projection + posexplode + groupBy round — assignment
             # pinned in test_kmeans/test_annkernel, sums exact-integer so
             # accumulation order is immaterial; ≤ k·dim rows collected
-            sums = _km_round_sums(base, cents)
+            sums = _km_round_sums(rounds, cents)
             by_list: dict[int, dict[int, int]] = {}
             for r in sums:
                 by_list.setdefault(int(r["list_id"]), {})[int(r["d"])] = int(
@@ -1417,12 +1465,15 @@ def _pq_fit(
     grouping/order cannot change a single bit. ``train_mod`` fits every
     codebook on the vec_id-modulus sample (see _train_sample); the
     default full fit keeps the literal ``vec_id < ksub`` init the
-    oracles unroll."""
+    oracles unroll. Rounds run one Python task per
+    ``maxRecordsPerBatch`` rows, at most one per base partition
+    (_fit_base), because each task pays ~0.2 CPU s of fixed worker
+    set-up (_km_round_sums)."""
     n = _train_sample(n, train_mod)
     # One eager checkpoint of the quantized training projection for the
     # whole fit — the same §5 rationale (and bit-identity evidence) as
     # _km_fit's; the PQ rounds only need vq, the init only vec_id+vq.
-    base = n.select("vec_id", "vq").localCheckpoint(eager=True)
+    base, rounds = _fit_base(n, "vec_id", "vq")
     try:
         # ONE init job for all subspaces: the per-subspace init rows are
         # the same vec_ids for every j (first ksub by vec_id), so collect
@@ -1456,7 +1507,7 @@ def _pq_fit(
             # bit-identical sums to the old struct-explode + posexplode +
             # groupBy round (assignment pinned in test_annkernel, sums
             # exact-integer); ≤ M·k·subdim rows collected
-            sums = _pq_round_sums(base, books)
+            sums = _pq_round_sums(rounds, books)
             by_j: dict[int, dict[int, dict[int, int]]] = {}
             for r in sums:
                 by_j.setdefault(int(r["j"]), {}).setdefault(

@@ -13,6 +13,11 @@ TIMESTAMP_NTZ. We handle both: enable
 ``spark.sql.legacy.parquet.nanosAsLong`` before the read, and convert
 ns→µs (exactly DuckDB's truncation) only when the column actually came
 back as a long — a native timestamp column passes through untouched.
+
+Each table's schema is inferred once per process and file version
+(``_read_parquet``): a plain ``spark.read.parquet`` launches a one-task
+footer-inference job on every call, and plans re-read their tables on
+every build.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from olympic_athletes_etl_spark.session import tune_for_oracle
 
@@ -72,6 +77,39 @@ def _scan_row_groups(path: str, stop_at: int) -> int:
     return total
 
 
+# path -> ((st_mtime_ns, st_size), inferred schema); one entry per path,
+# replaced when the file or directory is rewritten.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only on the
+    first read of each version of ``path``. Inference is a Spark job of
+    its own, one task reading footers: on a 4-vCPU VM a read of the
+    sf0.01 lineitem file took 0.11 s wall and 0.23 s of driver+JVM CPU
+    that way, against 0.02-0.03 s and 0.03-0.04 s with the schema
+    given. Later reads pass the cached schema, which is the one
+    inference returned, so the plan is the same.
+
+    A version is the path's ``(st_mtime_ns, st_size)``: a rewritten
+    file is re-inferred, and so is a directory whose files were added,
+    removed or replaced by a Spark overwrite (a part file rewritten in
+    place under an unchanged directory is not noticed). Paths the
+    local filesystem cannot stat (remote URIs, missing tables) take the
+    plain read, so Spark reports its own errors."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def spread(
     df: DataFrame, spark: SparkSession, path: str, *keys: str
 ) -> DataFrame:
@@ -118,11 +156,11 @@ def load(
         # to micros (matches DuckDB). TIMESTAMP(MICROS) files ignore the
         # conf and arrive as a native timestamp — pass through.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     if spread_on is not None:
         keys = (spread_on,) if isinstance(spread_on, str) else spread_on
         df = spread(df, spark, path, *keys)

@@ -7,6 +7,7 @@ there instead of walking every file (VERDICT r13 item 3).
 from __future__ import annotations
 
 import os
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as real_pq
@@ -75,3 +76,40 @@ def test_spread_decision_unchanged(many_file_dir, spark):
     if 20 >= max(2, par // 2):
         assert out is df  # no-op: layout already splits
     tables._scan_row_groups.cache_clear()
+
+
+def test_load_infers_each_table_schema_once(tmp_path, spark):
+    """load() infers a table's parquet schema with one Spark job the
+    first time, then reuses it: a second load launches no job. A file
+    rewritten with a different schema is inferred again."""
+    sc = spark.sparkContext
+    path = tmp_path / "region.parquet"
+    real_pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+
+    def jobs_of_load():
+        group = f"schema-cache-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            df = tables.load(spark, str(tmp_path), "region")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, n_first = jobs_of_load()
+    assert n_first >= 1  # the footer-inference job
+    again, n_again = jobs_of_load()
+    assert n_again == 0
+    assert again.schema == first.schema
+    assert sorted(r[0] for r in again.collect()) == [0, 1]
+
+    real_pq.write_table(
+        pa.table({"r_regionkey": [2], "r_name": ["x"]}), path
+    )
+    st = os.stat(path)
+    # a rewrite within the filesystem's timestamp granularity keeps the
+    # old mtime; move it so the test does not depend on that granularity
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    rewritten, _ = jobs_of_load()
+    assert rewritten.columns == ["r_regionkey", "r_name"]
+    assert [tuple(r) for r in rewritten.collect()] == [(2, "x")]
