@@ -14,10 +14,10 @@ TIMESTAMP_NTZ. We handle both: enable
 ns→µs (exactly DuckDB's truncation) only when the column actually came
 back as a long — a native timestamp column passes through untouched.
 
-Each table's schema is inferred once per process and file version
-(``_read_parquet``): a plain ``spark.read.parquet`` launches a one-task
-footer-inference job on every call, and plans re-read their tables on
-every build.
+Each table's schema is inferred once per process, file version and
+set of inference confs (``_read_parquet``): a plain
+``spark.read.parquet`` launches a one-task footer-inference job on
+every call, and plans re-read their tables on every build.
 """
 
 from __future__ import annotations
@@ -77,9 +77,18 @@ def _scan_row_groups(path: str, stop_at: int) -> int:
     return total
 
 
-# path -> ((st_mtime_ns, st_size), inferred schema); one entry per path,
-# replaced when the file or directory is rewritten.
-_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+# Session confs that change the schema parquet inference returns.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (version key, inferred schema); one entry per path, replaced
+# when the file or directory is rewritten or an inference conf changes.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -91,22 +100,31 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     given. Later reads pass the cached schema, which is the one
     inference returned, so the plan is the same.
 
-    A version is the path's ``(st_mtime_ns, st_size)``: a rewritten
-    file is re-inferred, and so is a directory whose files were added,
-    removed or replaced by a Spark overwrite (a part file rewritten in
-    place under an unchanged directory is not noticed). Paths the
-    local filesystem cannot stat (remote URIs, missing tables) take the
-    plain read, so Spark reports its own errors."""
+    A version is the path's ``(st_mtime_ns, st_size)`` plus the values
+    of ``_INFER_CONFS`` in the reading session: a rewritten file is
+    re-inferred, so is a directory whose files were added, removed or
+    replaced by a Spark overwrite, and so is any read under different
+    inference confs. The cache assumes tables are not rewritten in
+    place while a process reads them (true of read-only table
+    directories): a part file rewritten under an unchanged directory,
+    or a same-size rewrite within the filesystem's mtime granularity,
+    is not noticed. Paths the local filesystem cannot stat (remote
+    URIs, missing tables) take the plain read, so Spark reports its own
+    errors."""
     try:
         st = os.stat(path)
     except OSError:
         return spark.read.parquet(path)
-    stamp = (st.st_mtime_ns, st.st_size)
+    version = (
+        st.st_mtime_ns,
+        st.st_size,
+        tuple(spark.conf.get(k) for k in _INFER_CONFS),
+    )
     hit = _SCHEMAS.get(path)
-    if hit is not None and hit[0] == stamp:
+    if hit is not None and hit[0] == version:
         return spark.read.schema(hit[1]).parquet(path)
     df = spark.read.parquet(path)
-    _SCHEMAS[path] = (stamp, df.schema)
+    _SCHEMAS[path] = (version, df.schema)
     return df
 
 

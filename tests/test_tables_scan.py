@@ -113,3 +113,26 @@ def test_load_infers_each_table_schema_once(tmp_path, spark):
     rewritten, _ = jobs_of_load()
     assert rewritten.columns == ["r_regionkey", "r_name"]
     assert [tuple(r) for r in rewritten.collect()] == [(2, "x")]
+
+
+def test_schema_cache_keys_on_inference_confs(tmp_path, spark):
+    """A read under a different inference conf is inferred again, not
+    served the schema cached under the old conf."""
+    from pyspark.sql.types import BinaryType, StringType
+
+    conf = "spark.sql.parquet.binaryAsString"
+    real_pq.write_table(
+        pa.table({"r_regionkey": [0], "r_name": pa.array([b"x"], pa.binary())}),
+        tmp_path / "region.parquet",
+    )
+    assert isinstance(
+        tables.load(spark, str(tmp_path), "region").schema["r_name"].dataType,
+        BinaryType,
+    )
+    spark.conf.set(conf, "true")
+    try:
+        df = tables.load(spark, str(tmp_path), "region")
+        assert isinstance(df.schema["r_name"].dataType, StringType)
+        assert [tuple(r) for r in df.collect()] == [(0, "x")]
+    finally:
+        spark.conf.unset(conf)
