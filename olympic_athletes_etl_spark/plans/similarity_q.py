@@ -251,58 +251,32 @@ def s_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: the first 16 vectors serve as deterministic
     centroids (s_ann_ivf_kmeans below LEARNS them with deterministic
     Lloyd iterations at the same plan shape);
-    every vector joins its nearest-centroid list in one broadcast pass
-    (argmax over an in-row struct array — no shuffle); the probe searches
-    only its nprobe=2 nearest lists. At 100 TB: write the table
+    every vector joins its nearest-centroid list in one narrow pass
+    (the numpy ranking kernel's argmax — no shuffle); the probe searches
+    only its nprobe=2 nearest lists, ranked driver-side by the same
+    kernel. At 100 TB: write the table
     partitioned BY list_id and the probe's scan prunes to nprobe
     partitions — the classic IVF speedup, expressed as partition pruning.
     Recall grows with nprobe at linear candidate cost."""
     n = _emb_double(spark, sf_dir).withColumn(
         "nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v")))
     )
-    cent = (
-        n.filter(F.col("vec_id") < _N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("c_id"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cnrm"),
-        )
+    # collect the 16 centroids once (bounded dim); the probe vector
+    # (vec_id 0) is one of them, so its lists need no further job
+    cents = sorted(
+        (int(r["vec_id"]), list(r["v"]))
+        for r in n.filter(F.col("vec_id") < _N_CENTROIDS)
+        .select("vec_id", "v")
+        .collect()
     )
-    # collect the 16 centroids once (bounded dim) and assign via an
-    # in-row argmax — the assignment pass is shuffle-free
-    cent_rows = cent.collect()
-    # (sim_sql, c_id) per centroid — same raw-double dot expression as
-    # before, built as one SQL string per centroid
-    sim_cid = [
-        (
-            f"(({_DOT.format(a='v', b=_arr_lit_sql(r['cv']))})"
-            f" / (nrm * {_dlit(r['cnrm'])}))",
-            int(r["c_id"]),
-        )
-        for r in cent_rows
-    ]
-    assigned = n.withColumn("list_id", F.expr(_argmax_cid_sql(sim_cid)))
-    probe = assigned.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
+    probe_lists = _km_probe_lists(dict(cents)[_QUERY_VEC_ID], cents, _N_PROBE)
+    assigned = n.withColumn("list_id", _km_assign_np_col(cents, "v", "nrm"))
+    probe = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
         F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
-    # the probe's nprobe nearest centroid lists
-    entries_sql = "array(" + ", ".join(
-        f"named_struct('sim', {s}, 'c_id', {c})" for s, c in sim_cid
-    ) + ")"
-    probe_entries = assigned.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.explode(
-            F.expr(
-                f"slice(array_sort({entries_sql}, {_CMP_SQL}), 1, {_N_PROBE})"
-            )
-        ).alias("e")
-    ).select(F.col("e.c_id").alias("probe_list"))
     cos = F.expr(_DOT.format(a="v", b="qv")) / (F.col("nrm") * F.col("qnrm"))
     cand = (
-        assigned.join(
-            F.broadcast(probe_entries),
-            F.col("list_id") == F.col("probe_list"),
-            "left_semi",
-        )
+        assigned.filter(F.col("list_id").isin(probe_lists))
         .filter(F.col("vec_id") != _QUERY_VEC_ID)
         .crossJoin(F.broadcast(probe))
         .select("vec_id", cos.alias("cos_raw"))
@@ -349,9 +323,9 @@ def _dlit(x: float) -> str:
     ``...D`` literal goes through Double.parseDouble — also correctly
     rounded — so the engine sees the identical bits the old
     CAST('...' AS DOUBLE) string form produced, at ONE AST node instead
-    of a Cast+Literal pair (these literals appear thousands of times per
-    centroid/codebook expression tree; the plain form halves
-    construction+parse time — OPTIMIZATION_r13.md). Non-finite values
+    of a Cast+Literal pair (the ADC lookup maps carry hundreds of them;
+    the plain form halves construction+parse time —
+    OPTIMIZATION_r13.md). Non-finite values
     keep the cast form ('NaN'/'Infinity' are not lexable as D-literals);
     they never occur in quantized components."""
     v = float(x)
@@ -360,102 +334,67 @@ def _dlit(x: float) -> str:
     return f"{v!r}D"
 
 
-def _arr_lit_sql(comps: list) -> str:
-    """A literal double-array SQL fragment (exact: see _dlit)."""
-    return "array(" + ", ".join(_dlit(x) for x in comps) + ")"
-
-
 def _ieee_self_dot(comps: list) -> float:
-    """The literal vector's self-dot folded sequentially in IEEE double —
-    bit-identical to what ``aggregate(zip_with(c, c, *))`` computes
-    engine-side (same multiplies, same left fold), so emitting the
-    folded literal is a pure constant-fold even past 2^53, where the
-    fold rounds (centroid components at sf1+ square beyond 2^53; a
-    Python exact-int sum would DIFFER there — this fold cannot)."""
+    """The vector's self-dot folded sequentially in IEEE double — the
+    same multiplies and left fold as the engine's
+    ``aggregate(zip_with(v, v, *))`` and DuckDB's ``list_dot_product``,
+    so a norm taken from it equals the engine-side norm bit for bit.
+    For the quantized vectors here every partial sum is an integer far
+    below 2^53 (the largest k-means centroid self-dot at sf0.1 measured
+    1.5e-5 × 2^53), so the fold is also exact; an exact Python-int sum
+    would agree there, but only the fold keeps agreeing past 2^53."""
     acc = 0.0
     for c in comps:
         acc += float(c) * float(c)
     return acc
 
 
-# array_sort comparator — (sim DESC, c_id ASC) — as a SQL lambda, the
-# string twin of _sim_desc_sorted's Column comparator.
-_CMP_SQL = (
-    "(l, r) -> CASE WHEN l.sim < r.sim THEN 1 WHEN l.sim > r.sim THEN -1 "
-    "WHEN l.c_id < r.c_id THEN -1 WHEN l.c_id > r.c_id THEN 1 ELSE 0 END"
-)
-
-
-def _argmax_cid_sql(sim_cid: list[tuple[str, int]]) -> str:
-    """argmax c_id by (sim DESC, c_id ASC) WITHOUT a sort: array_max over
-    (sim, -c_id) structs — struct comparison is field-lexicographic, so
-    the max struct has the highest sim and (negated) the LOWEST c_id on
-    ties, exactly _sim_desc_sorted(...)[1].c_id. Built as ONE expr
-    string: no per-row comparator-lambda interpretation (a 16-entry
-    sort runs ~60 interpreted comparator closures per row) and no py4j
-    tree construction (one call instead of thousands — the r12 IVF/PQ
-    rewrite cut serve-path construction ~3x and execution ~4-8x).
-
-    sim is coalesced to -inf: a zero-norm (degenerate) vector's sim is
-    NULL, which struct-ordered array_max would rank BELOW every real
-    sim while the comparator form treats NULL comparisons as ties — the
-    sentinel makes the NULL policy explicit (a degenerate vector loses
-    to any real sim; all-degenerate falls back to the c_id tie-break)
-    instead of an ordering accident (r12 ADVICE). Gated corpora have
-    nrm > 0 everywhere, so this changes nothing on real data."""
-    arr = ", ".join(
-        f"named_struct('sim', coalesce({s}, CAST('-Infinity' AS DOUBLE)),"
-        f" 'nc', {-int(c)})"
-        for s, c in sim_cid
-    )
-    return f"(- (array_max(array({arr}))).nc)"
-
-
 # --------------------------------------------------------------------------
-# Arrow-batched numpy assignment kernels — the vectorized twins of the
-# HOF-expression forms above (guide §4.2: hand whole batches to
-# vectorized native code instead of interpreted per-element lambdas).
+# The centroid-ranking kernel — ONE numpy closure, _np_sims_fn, ranks
+# row vectors against a centroid set. Every ranking in this module is a
+# view of its (rows × k) cosine matrix S, columns in c_id-ascending
+# order:
+#   * assignment (IVF list, fit rounds, PQ code): np.argmax(S, axis=1);
+#   * probe lists: a stable argsort of -S — (sim DESC, c_id ASC);
+#   * drift residual: S gathered at the stored code.
+# The reference semantics are the DuckDB oracles' ORDER BY sim DESC,
+# c_id ASC (_km_train_ctes, _pq_train_ctes); tests/test_annkernel.py
+# pins every consumer against them.
 #
-# WHY: `aggregate(zip_with(...))` is a HigherOrderFunction — Spark
-# evaluates it INTERPRETED (CodegenFallback), one lambda closure call
-# per array element. A km assignment therefore runs 16 centroids × 64
-# dims × 2 closures per row, a PQ encode another 16×16×4×2 — ~4k
-# interpreted closure invocations per row, the measured hot spot of
-# every IVF/PQ build and serve plan (r13 probe: the encode projection
-# alone halves when vectorized, and plan construction shrinks from a
-# ~200 KB literal tree to one UDF node).
+# WHY NUMPY: a per-row `aggregate(zip_with(...))` is an interpreted
+# higher-order function in Spark — one closure call per array element,
+# ~4k per row for a k-means assignment plus a PQ encode. Handing whole
+# Arrow batches to numpy (guide §4.2) replaces that with a few dozen
+# vectorized ops per batch.
 #
-# WHY IT IS EXACT (the property every oracle hash rides on): per row the
-# kernel executes the IDENTICAL IEEE-754 operation sequence as the
-# expression form —
-#   * dot  = left fold ((0.0 + x0·c0) + x1·c1) + … : numpy elementwise
-#     mul/add over a column of rows are the same correctly-rounded
-#     binary64 ops, applied in the same order per row (no FMA, no
-#     pairwise reassociation — the fold is unrolled dim-by-dim below);
+# WHY IT IS EXACT (the property every oracle hash rides on): per
+# (row, centroid) the kernel executes the same IEEE-754 operation
+# sequence as DuckDB's list_dot_product and Spark's aggregate fold —
+#   * dot  = left fold ((0.0 + x0·c0) + x1·c1) + … : the fold is unrolled
+#     dim by dim, each step one correctly-rounded multiply and add over
+#     the whole (rows × k) block (no FMA, no pairwise reassociation);
 #   * norms/similarities: np.sqrt and / are correctly rounded single
-#     ops on identical operands;
-#   * Spark `Divide` yields NULL on a zero divisor; _argmax_cid_sql
-#     coalesces that NULL to -inf — replicated via np.where(denom==0);
-#   * argmax tie-break (sim DESC, c_id ASC) with Spark's total order
-#     (NaN greatest): entries are scanned in ascending c_id with a
-#     strict-greater update, so ties keep the lowest c_id, and the
-#     NaN arm of _gt matches struct-ordering semantics.
-# Equivalence to the expression forms is pinned on real data in
-# test_kmeans/test_pq_recall (exceptAll both ways == 0).
+#     ops on identical operands; centroid self-dots are folded
+#     driver-side by _ieee_self_dot;
+#   * a zero denominator (Spark: NULL, DuckDB: NaN/inf) becomes -inf,
+#     so a degenerate row loses to every real sim and an all-degenerate
+#     row falls back to c_id order;
+#   * ties: np.argmax keeps the FIRST maximum and the argsort is
+#     stable, so both keep the lowest c_id; np.argmax also returns the
+#     first NaN, matching Spark's total order (NaN greatest).
 #
-# The closures capture only plain data (centroid component lists and
-# driver-side-folded self-dots) and import numpy inside, so they pickle
-# by value — no module import needed on executors (the
-# bpe_encode_pandas worker-closure convention).
+# The closure captures only plain data (component lists and folded
+# self-dots) and imports numpy inside, so cloudpickle ships it BY VALUE
+# — executors need no import of this package (the bpe_encode_pandas
+# worker-closure convention).
 # --------------------------------------------------------------------------
 def _np_entry_data(
     cents: list[tuple[int, list[int]]],
 ) -> tuple[list[int], list[list[float]], list[float]]:
     """(c_ids, float components, driver-folded self-dots), c_id ASC —
-    the plain-data closure payload of every numpy kernel. Raises if any
-    centroid self-dot is 0: the expression forms give such an entry a
-    NULL sim (tie-everywhere under _CMP_SQL's comparator), a
-    non-total ordering the kernel deliberately refuses to emulate —
+    the plain-data payload of every _np_sims_fn closure. Raises if any
+    centroid self-dot is 0: such an entry has no cosine on either
+    engine (NULL/NaN sims), an ordering the kernel refuses to guess —
     never observed (centroid sums of real corpora are nonzero), and
     failing loud beats a silent ordering divergence."""
     ordered = sorted((int(c), [float(x) for x in comps]) for c, comps in cents)
@@ -464,44 +403,41 @@ def _np_entry_data(
     cdots = [_ieee_self_dot(cv) for cv in comps]
     if any(cd == 0.0 for cd in cdots):
         raise ValueError(
-            "numpy assignment kernel: zero-norm centroid — the "
-            "expression form's NULL-sim ordering is not total; refusing"
+            "numpy assignment kernel: zero-norm centroid — its "
+            "NULL-sim ordering is not total; refusing"
         )
     return c_ids, comps, cdots
 
 
-def _np_assign_fn(comps: list[list[float]], cdots: list[float]):
-    """Factory for the row-batch assignment routine shared by the fit
-    partial-sum workers: returns ``assign(V, nrm) -> entry INDEX array``
-    (index into the c_id-ascending entry order, NOT the c_id itself).
-    Defined nested so cloudpickle ships it BY VALUE with only plain data
-    captured; the arithmetic is the same fold/divide/argmax sequence as
-    _km_assign_np_col (see the section comment for the exactness
-    argument)."""
+def _np_sims_fn(comps: list[list[float]], cdots: list[float]):
+    """Factory for the module's one ranking kernel: returns
+    ``sims(V, nrm) -> S``, the (rows × k) cosine matrix of the row
+    vectors ``V`` (rows × dim) against the ``k`` centroids, column i
+    for ``comps[i]``. ``nrm`` is the rows' norm; ``None`` derives it
+    from ``V`` by the same fold (the PQ subvector norm). Zero
+    denominators give -inf. Nested so cloudpickle ships it by value
+    (see the section comment for the exactness argument)."""
 
-    def assign(V, nrm):  # type: ignore[no-untyped-def]
+    def sims(V, nrm):  # type: ignore[no-untyped-def]
         import numpy as np
 
-        best = None
-        best_ix = None
-        for ix, (cv, cd) in enumerate(zip(comps, cdots)):
-            acc = np.zeros(V.shape[0], dtype=np.float64)
-            for d, c in enumerate(cv):
-                acc = acc + V[:, d] * c
-            denom = nrm * np.sqrt(cd)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = acc / denom
-            s = np.where(denom == 0.0, -np.inf, s)
-            if best is None:
-                best = s
-                best_ix = np.zeros(V.shape[0], dtype=np.int64)
-            else:
-                take = (s > best) | (np.isnan(s) & ~np.isnan(best))
-                best = np.where(take, s, best)
-                best_ix = np.where(take, ix, best_ix)
-        return best_ix
+        C = np.asarray(comps, dtype=np.float64)
+        if nrm is None:
+            sq = np.zeros(V.shape[0], dtype=np.float64)
+            for d in range(V.shape[1]):
+                sq = sq + V[:, d] * V[:, d]
+            nrm = np.sqrt(sq)
+        acc = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
+        for d in range(C.shape[1]):
+            acc = acc + V[:, d, None] * C[:, d]
+        denom = np.asarray(nrm, dtype=np.float64)[:, None] * np.sqrt(
+            np.asarray(cdots, dtype=np.float64)
+        )
+        with np.errstate(divide="ignore", invalid="ignore"):
+            S = acc / denom
+        return np.where(denom == 0.0, -np.inf, S)
 
-    return assign
+    return sims
 
 
 def _km_round_sums(
@@ -511,7 +447,7 @@ def _km_round_sums(
     rows — the in-worker replacement for the old assignment-projection +
     posexplode + groupBy pipeline (which materialized rows × dims
     exploded records through a hash aggregate). The worker assigns each
-    batch with the numpy kernel and scatter-adds the quantized
+    batch with the ranking kernel and scatter-adds the quantized
     components into a (k, dim) accumulator (np.add.at); the engine then
     sums the ≤ k·dim partials per partition.
 
@@ -535,7 +471,7 @@ def _km_round_sums(
     pass the row-count-sized view from _fit_base, not the raw base."""
     c_ids, comps, cdots = _np_entry_data(cents)
     ids = [int(c) for c in c_ids]
-    assign = _np_assign_fn(comps, cdots)
+    sims = _np_sims_fn(comps, cdots)
 
     def part(batches):  # type: ignore[no-untyped-def]
         import numpy as np
@@ -547,7 +483,7 @@ def _km_round_sums(
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf["vq"].to_numpy())
-            ix = assign(V, pdf["qnrm"].to_numpy())
+            ix = np.argmax(sims(V, pdf["qnrm"].to_numpy()), axis=1)
             if acc is None:
                 acc = np.zeros((len(ids), V.shape[1]), dtype=np.float64)
                 cnt = np.zeros(len(ids), dtype=np.int64)
@@ -587,7 +523,7 @@ def _pq_round_sums(
     data = {j: _np_entry_data(cents) for j, cents in sorted(books.items())}
     ids = {j: [int(c) for c in c_ids] for j, (c_ids, _, _) in data.items()}
     fns = {
-        j: _np_assign_fn(comps, cdots)
+        j: _np_sims_fn(comps, cdots)
         for j, (_, comps, cdots) in data.items()
     }
     subdim = _PQ_SUBDIM
@@ -602,16 +538,13 @@ def _pq_round_sums(
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf["vq"].to_numpy())
-            for j, fn in fns.items():
-                S = V[:, j * subdim : (j + 1) * subdim]
-                a = np.zeros(S.shape[0], dtype=np.float64)
-                for d in range(subdim):
-                    a = a + S[:, d] * S[:, d]
-                ix = fn(S, np.sqrt(a))
+            for j, sims in fns.items():
+                sub = V[:, j * subdim : (j + 1) * subdim]
+                ix = np.argmax(sims(sub, None), axis=1)
                 if j not in acc:
                     acc[j] = np.zeros((len(ids[j]), subdim), dtype=np.float64)
                     cnt[j] = np.zeros(len(ids[j]), dtype=np.int64)
-                np.add.at(acc[j], ix, S)
+                np.add.at(acc[j], ix, sub)
                 np.add.at(cnt[j], ix, 1)
         if not acc:
             return
@@ -650,11 +583,14 @@ def _pq_round_sums(
     )
 
 
-def _km_assign_np_col(cents: list[tuple[int, list[int]]]) -> F.Column:
-    """``list_id`` assignment as one Arrow-batched numpy kernel —
-    bit-identical to ``_km_argmax_col(cents)`` over (vq, qnrm); see the
-    section comment for the exactness argument."""
+def _km_assign_np_col(
+    cents: list[tuple[int, list[int]]], vec: str = "vq", nrm: str = "qnrm"
+) -> F.Column:
+    """Nearest-centroid ``list_id`` of each row's ``vec`` (norm ``nrm``)
+    by (sim DESC, c_id ASC): the argmax of the ranking kernel. Defaults
+    to the quantized (vq, qnrm) pair; s_ann_ivf passes its raw (v, nrm)."""
     c_ids, comps, cdots = _np_entry_data(cents)
+    sims = _np_sims_fn(comps, cdots)
 
     @F.pandas_udf("integer")
     def _assign(vq, qnrm):  # type: ignore[no-untyped-def]
@@ -663,48 +599,21 @@ def _km_assign_np_col(cents: list[tuple[int, list[int]]]) -> F.Column:
 
         if len(vq) == 0:  # np.stack rejects zero arrays (r13 ADVICE)
             return pd.Series([], dtype="int32")
-        V = np.stack(vq.to_numpy())
-        q = qnrm.to_numpy()
-        best = None
-        best_id = None
-        for cid, cv, cd in zip(c_ids, comps, cdots):
-            acc = np.zeros(V.shape[0], dtype=np.float64)
-            for d, c in enumerate(cv):
-                acc = acc + V[:, d] * c
-            denom = q * np.sqrt(cd)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = acc / denom
-            s = np.where(denom == 0.0, -np.inf, s)
-            if best is None:
-                best = s
-                best_id = np.full(V.shape[0], cid, dtype=np.int32)
-            else:
-                take = (s > best) | (np.isnan(s) & ~np.isnan(best))
-                best = np.where(take, s, best)
-                best_id = np.where(take, np.int32(cid), best_id).astype(
-                    np.int32
-                )
-        import pandas as pd
+        S = sims(np.stack(vq.to_numpy()), qnrm.to_numpy())
+        return pd.Series(np.asarray(c_ids, dtype=np.int32)[np.argmax(S, axis=1)])
 
-        return pd.Series(best_id)
-
-    return _assign(F.col("vq"), F.col("qnrm"))
+    return _assign(F.col(vec), F.col(nrm))
 
 
 def _km_probe_ids_np_col(
     cents: list[tuple[int, list[int]]], nprobe: int
 ) -> F.Column:
-    """Top-``nprobe`` list ids by (sim DESC, c_id ASC) per row — the
-    id-only numpy twin of ``_km_probe_slice_col`` (whose consumers read
-    ONLY the c_id field). Sims are computed exactly as in
-    _km_assign_np_col; the per-row ranking is a STABLE argsort of the
-    negated sim matrix over c_id-ascending columns, which is precisely
-    (sim DESC, c_id ASC) — negation of a double is exact, ties stay in
-    column (c_id) order. A qnrm == 0 row (all sims NULL engine-side,
-    where _CMP_SQL ties everywhere and Spark's stable sort keeps the
-    build order) degrades to the same first-nprobe-by-c_id result via
-    the -inf fill."""
+    """Top-``nprobe`` list ids of each (vq, qnrm) row by (sim DESC, c_id
+    ASC): a STABLE argsort of the negated kernel matrix — negating a
+    double is exact and ties stay in column (c_id) order. A qnrm == 0
+    row ranks by c_id via the -inf fill."""
     c_ids, comps, cdots = _np_entry_data(cents)
+    sims = _np_sims_fn(comps, cdots)
 
     @F.pandas_udf("array<integer>")
     def _probe(vq, qnrm):  # type: ignore[no-untyped-def]
@@ -713,32 +622,37 @@ def _km_probe_ids_np_col(
 
         if len(vq) == 0:  # np.stack rejects zero arrays (r13 ADVICE)
             return pd.Series([], dtype=object)
-        V = np.stack(vq.to_numpy())
-        q = qnrm.to_numpy()
-        k = len(c_ids)
-        S = np.empty((V.shape[0], k), dtype=np.float64)
-        for i, (cv, cd) in enumerate(zip(comps, cdots)):
-            acc = np.zeros(V.shape[0], dtype=np.float64)
-            for d, c in enumerate(cv):
-                acc = acc + V[:, d] * c
-            denom = q * np.sqrt(cd)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = acc / denom
-            S[:, i] = np.where(denom == 0.0, -np.inf, s)
+        S = sims(np.stack(vq.to_numpy()), qnrm.to_numpy())
         order = np.argsort(-S, axis=1, kind="stable")[:, :nprobe]
-        ids = np.asarray(c_ids, dtype=np.int32)[order]
-        return pd.Series(list(ids))
+        return pd.Series(list(np.asarray(c_ids, dtype=np.int32)[order]))
 
     return _probe(F.col("vq"), F.col("qnrm"))
+
+
+def _km_probe_lists(
+    probe: list[float], cents: list[tuple[int, list[int]]], nprobe: int
+) -> list[int]:
+    """Coarse-quantize one query vector driver-side: its nearest
+    ``nprobe`` list ids by (cosine DESC, c_id ASC) — the step a deployed
+    ANN service runs on the client/driver so the scan can be a LITERAL
+    list_id filter. The kernel of _km_probe_ids_np_col on a one-row
+    batch, with the query norm folded like the engine's
+    (_ieee_self_dot), so it equals the in-plan ranking bit for bit."""
+    import numpy as np
+
+    c_ids, comps, cdots = _np_entry_data(cents)
+    S = _np_sims_fn(comps, cdots)(
+        np.asarray([probe], dtype=np.float64), [math.sqrt(_ieee_self_dot(probe))]
+    )
+    return [c_ids[i] for i in np.argsort(-S[0], kind="stable")[:nprobe]]
 
 
 def _pq_codes_np_col(
     books: dict[int, list[tuple[int, list[int]]]]
 ) -> F.Column:
-    """All ``_PQ_M`` PQ codes as ONE array<int> column — the numpy twin
-    of the 16 per-subspace ``_pq_code_col`` projections (bit-identical
-    per subspace; one Arrow crossing instead of 16 CASE/array_max
-    ladders). ``element_at(codes, j+1)`` is ``code{j}``."""
+    """All ``_PQ_M`` PQ codes as ONE array<int> column: per subspace, the
+    argmax of the ranking kernel over the subvector (one Arrow crossing
+    for all subspaces). ``element_at(codes, j+1)`` is ``code{j}``."""
     data = {j: _np_entry_data(cents) for j, cents in sorted(books.items())}
     if sorted(data) != list(range(len(data))):
         # out[:, j] below indexes by the subspace key directly — a
@@ -748,6 +662,10 @@ def _pq_codes_np_col(
             f"_pq_codes_np_col: books keys must be 0..{len(data) - 1} "
             f"contiguous, got {sorted(data)}"
         )
+    enc = {
+        j: (c_ids, _np_sims_fn(comps, cdots))
+        for j, (c_ids, comps, cdots) in data.items()
+    }
     subdim = _PQ_SUBDIM
 
     @F.pandas_udf("array<integer>")
@@ -758,34 +676,10 @@ def _pq_codes_np_col(
         if len(vq) == 0:  # np.stack rejects zero arrays (r13 ADVICE)
             return pd.Series([], dtype=object)
         V = np.stack(vq.to_numpy())
-        m = len(data)
-        out = np.empty((V.shape[0], m), dtype=np.int32)
-        for j, (c_ids, comps, cdots) in data.items():
-            S = V[:, j * subdim : (j + 1) * subdim]
-            acc = np.zeros(V.shape[0], dtype=np.float64)
-            for d in range(subdim):
-                acc = acc + S[:, d] * S[:, d]
-            sqn = np.sqrt(acc)
-            best = None
-            best_id = None
-            for cid, cv, cd in zip(c_ids, comps, cdots):
-                acc = np.zeros(V.shape[0], dtype=np.float64)
-                for d, c in enumerate(cv):
-                    acc = acc + S[:, d] * c
-                denom = sqn * np.sqrt(cd)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = acc / denom
-                s = np.where(denom == 0.0, -np.inf, s)
-                if best is None:
-                    best = s
-                    best_id = np.full(V.shape[0], cid, dtype=np.int32)
-                else:
-                    take = (s > best) | (np.isnan(s) & ~np.isnan(best))
-                    best = np.where(take, s, best)
-                    best_id = np.where(take, np.int32(cid), best_id).astype(
-                        np.int32
-                    )
-            out[:, j] = best_id
+        out = np.empty((V.shape[0], len(enc)), dtype=np.int32)
+        for j, (c_ids, sims) in enc.items():
+            S = sims(V[:, j * subdim : (j + 1) * subdim], None)
+            out[:, j] = np.asarray(c_ids, dtype=np.int32)[np.argmax(S, axis=1)]
         return pd.Series(list(out))
 
     return _encode(F.col("vq"))
@@ -794,16 +688,15 @@ def _pq_codes_np_col(
 def _pq_drift_err_np_col(
     books: dict[int, list[tuple[int, list[int]]]]
 ) -> F.Column:
-    """Per-row total quantization error of the STORED codes — the numpy
-    twin of ivfpq_drift_stats' per-subspace CASE ladders: for each
-    subspace the ASSIGNED entry's cosine, err_j = 10000 - floor(10000 *
-    sim_j), summed to one BIGINT. NULL propagation matches the
-    expression form exactly: an unknown code or a zero denominator
+    """Per-row total quantization error of the STORED codes: for each
+    subspace the kernel's cosine at the stored code, err_j = 10000 -
+    floor(10000 * sim_j), summed to one BIGINT — the oracle's drift{j}
+    arithmetic. An unknown code or a zero denominator (the -inf fill)
     yields a NULL row err (pandas nullable Int64 -> Arrow null), which
     the engine-side sum skips while count(1) still counts the row — the
-    books/index-mismatch tripwire the docstring pins. vq is derived
-    in-kernel as floor(v * scale), the same single multiply+floor the
-    transform expression executes."""
+    books/index-mismatch tripwire ivfpq_drift_stats documents. vq is
+    derived in-kernel as floor(v * scale), the same single
+    multiply+floor the transform expression executes."""
     data = {j: _np_entry_data(cents) for j, cents in sorted(books.items())}
     if sorted(data) != list(range(_PQ_M)):
         # C[:, j] below indexes the code array (built for j in
@@ -814,6 +707,10 @@ def _pq_drift_err_np_col(
             f"_pq_drift_err_np_col: books keys must be 0..{_PQ_M - 1} "
             f"contiguous, got {sorted(data)}"
         )
+    enc = {
+        j: (c_ids, _np_sims_fn(comps, cdots))
+        for j, (c_ids, comps, cdots) in data.items()
+    }
     subdim = _PQ_SUBDIM
     scale = float(_KM_SCALE)
 
@@ -824,34 +721,18 @@ def _pq_drift_err_np_col(
 
         if len(v) == 0:  # np.stack rejects zero arrays (r13 ADVICE)
             return pd.Series([], dtype="Int64")
-        Vr = np.stack(v.to_numpy())
-        V = np.floor(Vr * scale)
+        V = np.floor(np.stack(v.to_numpy()) * scale)
         C = np.stack(codes.to_numpy())
+        rows = np.arange(V.shape[0])
         tot = np.zeros(V.shape[0], dtype=np.float64)
         bad = np.zeros(V.shape[0], dtype=bool)
-        for j, (c_ids, comps, cdots) in data.items():
-            S = V[:, j * subdim : (j + 1) * subdim]
-            acc = np.zeros(V.shape[0], dtype=np.float64)
-            for d in range(subdim):
-                acc = acc + S[:, d] * S[:, d]
-            sqn = np.sqrt(acc)
-            cj = C[:, j]
-            sim = np.zeros(V.shape[0], dtype=np.float64)
-            seen = np.zeros(V.shape[0], dtype=bool)
-            for cid, cv, cd in zip(c_ids, comps, cdots):
-                sel = cj == cid
-                if not sel.any():
-                    continue
-                acc = np.zeros(V.shape[0], dtype=np.float64)
-                for d, c in enumerate(cv):
-                    acc = acc + S[:, d] * c
-                denom = sqn * np.sqrt(cd)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = acc / denom
-                bad |= sel & (denom == 0.0)
-                sim = np.where(sel, s, sim)
-                seen |= sel
-            bad |= ~seen
+        for j, (c_ids, sims) in enc.items():
+            S = sims(V[:, j * subdim : (j + 1) * subdim], None)
+            ids = np.asarray(c_ids)
+            ix = np.minimum(np.searchsorted(ids, C[:, j]), len(ids) - 1)
+            sim = S[rows, ix]
+            # -inf is the kernel's zero-denominator fill (Spark: NULL)
+            bad |= (ids[ix] != C[:, j]) | np.isneginf(sim)
             tot = tot + (10000.0 - np.floor(10000.0 * sim))
         # bad rows can carry inf/NaN through tot; zero them BEFORE the
         # int cast (undefined-value casting emits RuntimeWarnings on
@@ -864,74 +745,6 @@ def _pq_drift_err_np_col(
         return pd.Series(out)
 
     return _err(F.col("v"), F.array(*[f"code{j}" for j in range(_PQ_M)]))
-
-
-def _km_entries_sql(cents: list[tuple[int, list[int]]]) -> str:
-    return "array(" + ", ".join(
-        f"named_struct('sim', {_km_sim_sql(comps)}, 'c_id', {int(c_id)})"
-        for c_id, comps in cents
-    ) + ")"
-
-
-def _km_sorted_sql(cents: list[tuple[int, list[int]]]) -> str:
-    return f"array_sort({_km_entries_sql(cents)}, {_CMP_SQL})"
-
-
-def _km_argmax_col(cents: list[tuple[int, list[int]]]) -> F.Column:
-    """The full-corpus list assignment column (nearest centroid by
-    cosine, c_id tie-break) in its codegen form — the hot map of every
-    IVF build/serve; selection identical to
-    ``element_at(_sim_desc_sorted(_km_entries(cents)), 1)["c_id"]``."""
-    return F.expr(
-        _argmax_cid_sql([(_km_sim_sql(comps), c_id) for c_id, comps in cents])
-    )
-
-
-def _km_probe_slice_col(cents: list[tuple[int, list[int]]], nprobe: int) -> F.Column:
-    """Top-``nprobe`` (sim DESC, c_id ASC) entry structs — the probe-side
-    list selection (evaluated on one row; the SQL-string form exists for
-    cheap construction, not row throughput)."""
-    return F.expr(f"slice({_km_sorted_sql(cents)}, 1, {nprobe})")
-
-
-def _km_sim_sql(c_comps: list[int]) -> str:
-    """cos(vq, centroid-literal) as a SQL string (sequential double dot —
-    the exact accumulation order DuckDB's list_dot_product uses), with
-    the centroid's self-dot folded driver-side into a literal (see
-    _ieee_self_dot for why that fold is bit-identical to the engine's).
-    The aggregate(zip_with) loop beat an unrolled 64-term Add chain ~4x
-    in the r12 probe — the giant chain trips the codegen size limit and
-    interprets worse than the tight HOF loop."""
-    dot = _DOT.format(a="vq", b=_arr_lit_sql(c_comps))
-    cdot = _ieee_self_dot(c_comps)
-    return f"(({dot}) / (qnrm * sqrt({_dlit(cdot)})))"
-
-
-def _km_entries(cents: list[tuple[int, list[int]]]) -> F.Column:
-    return F.array(
-        *[
-            F.struct(
-                F.expr(_km_sim_sql(comps)).alias("sim"),
-                F.lit(c_id).alias("c_id"),
-            )
-            for c_id, comps in cents
-        ]
-    )
-
-
-def _sim_desc_sorted(entries: F.Column) -> F.Column:
-    """array_sort by (sim DESC, c_id ASC) — the argmax tie-break used by
-    every centroid assignment (mirrors the oracles' ORDER BY)."""
-    return F.array_sort(
-        entries,
-        lambda l, r: F.when(l["sim"] < r["sim"], F.lit(1))
-        .when(l["sim"] > r["sim"], F.lit(-1))
-        .otherwise(
-            F.when(l["c_id"] < r["c_id"], F.lit(-1))
-            .when(l["c_id"] > r["c_id"], F.lit(1))
-            .otherwise(F.lit(0))
-        ),
-    )
 
 
 def _km_train_ctes(train_mod: int = 1) -> tuple[str, str]:
@@ -1198,6 +1011,12 @@ def s_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _km_ann_search(n, _km_fit_for(spark, sf_dir))
 
 
+def _probe_q(n: DataFrame) -> list[int]:
+    """The query vector's quantized components (one collected row)."""
+    row = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select("vq").collect()[0]
+    return [int(x) for x in row["vq"]]
+
+
 def _km_ann_search(
     n: DataFrame, cents: list[tuple[int, list[int]]]
 ) -> DataFrame:
@@ -1207,22 +1026,15 @@ def _km_ann_search(
     search the gated query runs. Train and serve are separate phases by
     design: at scale the fit happens once per index build while this
     search runs per query (bench.py times them separately)."""
+    probe_q = _probe_q(n)
+    probe_lists = _km_probe_lists(probe_q, cents, _N_PROBE)
     assigned = n.withColumn("list_id", _km_assign_np_col(cents))
-    probe = assigned.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
+    probe = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
         F.col("v").alias("pv"), F.col("vnrm").alias("pnrm")
-    )
-    probe_lists = (
-        assigned.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(F.explode(_km_probe_slice_col(cents, _N_PROBE)).alias("e"))
-        .select(F.col("e.c_id").alias("probe_list"))
     )
     cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col("vnrm") * F.col("pnrm"))
     cand = (
-        assigned.join(
-            F.broadcast(probe_lists),
-            F.col("list_id") == F.col("probe_list"),
-            "left_semi",
-        )
+        assigned.filter(F.col("list_id").isin(probe_lists))
         .filter(F.col("vec_id") != _QUERY_VEC_ID)
         .crossJoin(F.broadcast(probe))
         .select("vec_id", cos.alias("cos_raw"))
@@ -1254,7 +1066,7 @@ def s_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample's lowest-vec_id k rows on both engines) — is driver-proven,
     not just asserted. Recall floors for this exact configuration are
     pinned in test_round8_ops; serving plan identical to
-    s_ann_ivf_kmeans (the centroids are literals either way)."""
+    s_ann_ivf_kmeans (only the fitted centroids differ)."""
     n = _km_base(spark, sf_dir)
     return _km_ann_search(n, _km_fit_for(spark, sf_dir, train_mod=_TRAIN_MOD_DEMO))
 
@@ -1279,7 +1091,7 @@ def s_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine similarity to the assigned centroid — the training-data
     workhorse behind semantic bucketing, cluster-balanced sampling, and
     cluster-level dedup/filtering. The assignment pass is shuffle-free
-    (centroids are literals in a single projection); output is one narrow
+    (one numpy-kernel projection); output is one narrow
     row per vector, so at 100 TB this is scan-bound and trivially
     partitionable — write it partitioned BY cluster and every downstream
     per-cluster op becomes partition-pruned."""
@@ -1402,59 +1214,6 @@ _PQ_SUBDIM = _DIM // _PQ_M
 _PQ_KSUB = 16
 _PQ_ITERS = 1
 _PQ_SHORTLIST = 50
-
-
-def _pq_sub_sql(j: int, col: str = "vq") -> str:
-    return f"slice({col}, {j * _PQ_SUBDIM + 1}, {_PQ_SUBDIM})"
-
-
-def _pq_hoist_cols() -> tuple[dict[str, F.Column], dict[str, F.Column]]:
-    """(sq_cols, sqn_cols): each subspace's subvector slice ``sq{j}``
-    and its norm ``sqn{j}`` hoisted into REAL columns, so the 16
-    codebook-entry sims of a code column share one slice + one sqrt per
-    row instead of re-evaluating both per entry (the measured serve-path
-    hot spot was exactly this 16x re-work: 0.74 → 0.54 s on the 16-code
-    encode at sf0.1, values bit-identical — OPTIMIZATION_r13.md).
-    CollapseProject cannot inline them back: both are non-cheap and
-    multiply-referenced. The fold/slice arithmetic is unchanged, so
-    every downstream value is bit-for-bit the pre-hoist one."""
-    sq = {f"sq{j}": F.expr(_pq_sub_sql(j)) for j in range(_PQ_M)}
-    sqn = {
-        f"sqn{j}": F.expr(f"sqrt({_DOT.format(a=f'sq{j}', b=f'sq{j}')})")
-        for j in range(_PQ_M)
-    }
-    return sq, sqn
-
-
-def _with_pq_hoist(df: DataFrame) -> DataFrame:
-    """Add the shared PQ subvector/norm columns (see _pq_hoist_cols);
-    required before any column built by _pq_sim_sql/_pq_code_col is
-    evaluated. Downstream selects prune them, so they never appear in
-    results."""
-    sq, sqn = _pq_hoist_cols()
-    return df.withColumns(sq).withColumns(sqn)
-
-
-def _pq_sim_sql(comps: list[int], j: int) -> str:
-    """cos(subvector_j, codebook-entry literal) as a SQL string — the
-    same (dot) / (sqn * sqrt(cdot)) expression shape and fold order as
-    the original inline form (only the entry's constant self-dot moves
-    driver-side; see _ieee_self_dot), referencing the hoisted ``sq{j}``
-    / ``sqn{j}`` columns (_pq_hoist_cols) so the per-row slice and norm
-    are evaluated once per subspace, not once per entry."""
-    dot = _DOT.format(a=f"sq{j}", b=_arr_lit_sql(comps))
-    cdot = _ieee_self_dot(comps)
-    return f"(({dot}) / (sqn{j} * sqrt({_dlit(cdot)})))"
-
-
-def _pq_code_sql(cents: list[tuple[int, list[int]]], j: int) -> str:
-    return _argmax_cid_sql(
-        [(_pq_sim_sql(comps, j), c_id) for c_id, comps in cents]
-    )
-
-
-def _pq_code_col(cents: list[tuple[int, list[int]]], j: int) -> F.Column:
-    return F.expr(_pq_code_sql(cents, j))
 
 
 def _pq_fit(
@@ -1642,15 +1401,13 @@ def _pq_oracle() -> str:
 def _pq_adc_exprs(
     books: dict[int, list[tuple[int, list[int]]]],
     probe_q: list[int],
-    with_codes: bool = True,
-) -> tuple[dict[str, F.Column], F.Column, F.Column]:
-    """Per-subspace code columns plus the ADC accumulators for a collected
-    integer probe vector: returns ``(code_cols, num_expr, cn2_expr)``.
+) -> tuple[F.Column, F.Column]:
+    """The ADC accumulators over the ``code{j}`` columns for a collected
+    integer probe vector: returns ``(num_expr, cn2_expr)``.
     The pdot/cn2 lookup tables are exact Python-int arithmetic folded into
     literal maps (bounded: _PQ_KSUB entries per subspace), so the scored
     scan touches only the code columns — shared by s_ann_pq (full-corpus
-    ADC) and s_ann_ivfpq (probed-lists ADC)."""
-    code_cols: dict[str, F.Column] = {}
+    ADC), s_ann_ivfpq (probed-lists ADC) and the stored-index serve."""
     num_terms: list[str] = []
     cn2_terms: list[str] = []
     for j, cents in sorted(books.items()):
@@ -1664,25 +1421,21 @@ def _pq_adc_exprs(
             f"{int(c_id)}, {_dlit(sum(c * c for c in comps))}"
             for c_id, comps in cents
         )
-        if with_codes:
-            code_cols[f"code{j}"] = _pq_code_col(cents, j)
         num_terms.append(f"element_at(map({pdot_items}), code{j})")
         cn2_terms.append(f"element_at(map({cn2_items}), code{j})")
     # left-associated sums — same fold order as the previous
     # lit(0.0) + e0 + e1 + ... Column chain (0.0 + e0 == e0)
     num_expr = F.expr("(" + " + ".join(num_terms) + ")")
     cn2_expr = F.expr("(" + " + ".join(cn2_terms) + ")")
-    return code_cols, num_expr, cn2_expr
+    return num_expr, cn2_expr
 
 
 def _with_np_codes(
     df: DataFrame, books: dict[int, list[tuple[int, list[int]]]]
 ) -> DataFrame:
     """One numpy-kernel ``codes`` column plus the per-subspace
-    ``code{j}`` views the ADC map lookups / index schema read —
-    the vectorized replacement for _with_pq_hoist + 16 _pq_code_col
-    ladders on the in-plan encode paths (values bit-identical; see the
-    kernel section comment)."""
+    ``code{j}`` views the ADC map lookups / index schema read (see
+    _pq_codes_np_col)."""
     return df.withColumn("codes", _pq_codes_np_col(books)).withColumns(
         {f"code{j}": F.element_at("codes", j + 1) for j in range(_PQ_M)}
     )
@@ -1713,14 +1466,9 @@ def _pq_ann_search(
     (_pq_fit(train_mod=...)) is recall-tested through the exact search
     the gated query runs, and bench.py times the one-per-build fit
     separately from the per-query search."""
-    probe_q = [
-        int(x)
-        for x in n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("vq")
-        .collect()[0]["vq"]
-    ]
+    probe_q = _probe_q(n)
 
-    _unused, num_expr, cn2_expr = _pq_adc_exprs(books, probe_q, with_codes=False)
+    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
     scored = _with_np_codes(n, books)
 
     # ADC cosine denominator: PROBE's quantized norm (a constant — exact
@@ -1816,8 +1564,8 @@ def s_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Against s_ann_pq the scored scan shrinks from the whole corpus to
     nprobe/k_lists of it; against s_ann_ivf_kmeans the scored bytes drop
     ~32x (codes vs raw doubles). Candidates surviving both filters
-    re-rank exactly. Plan: one broadcast semi-join (probe lists), in-row
-    encode + map lookups, TakeOrderedAndProject shortlist, broadcast
+    re-rank exactly. Plan: a literal list_id filter (probe lists ranked
+    driver-side), in-row encode + map lookups, TakeOrderedAndProject shortlist, broadcast
     re-rank — zero shuffles before the bounded top-k merges."""
     n = _km_base(spark, sf_dir)
     return _ivfpq_search(n, _km_fit_for(spark, sf_dir), _pq_fit_for(spark, sf_dir))
@@ -1833,27 +1581,15 @@ def _ivfpq_search(
     one-per-build training (coarse _km_fit + _PQ_M codebook fits — the
     dominant index-build cost at scale) separately from this per-query
     search, and so the sampled-training knob composes here too."""
-    assigned = n.withColumn("list_id", _km_assign_np_col(cents))
-    probe_lists = (
-        assigned.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(F.explode(_km_probe_slice_col(cents, _N_PROBE)).alias("e"))
-        .select(F.col("e.c_id").alias("probe_list"))
-    )
-    probe_q = [
-        int(x)
-        for x in n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("vq")
-        .collect()[0]["vq"]
-    ]
-    _unused, num_expr, cn2_expr = _pq_adc_exprs(books, probe_q, with_codes=False)
+    probe_q = _probe_q(n)
+    probe_lists = _km_probe_lists(probe_q, cents, _N_PROBE)
+    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
     # Restrict BEFORE encoding: only probed-list rows pay the in-row code
     # assignment (at 100 TB both the codes and list_id are precomputed
     # columns and this is pure partition pruning + a narrow scan).
     scored = _with_np_codes(
-        assigned.join(
-            F.broadcast(probe_lists),
-            F.col("list_id") == F.col("probe_list"),
-            "left_semi",
+        n.withColumn("list_id", _km_assign_np_col(cents)).filter(
+            F.col("list_id").isin(probe_lists)
         ),
         books,
     )
@@ -2040,15 +1776,14 @@ def ivfpq_drift_stats(
 
     Reads only (vec_id, v, code0..15) from the index — at 100 TB this
     is a narrow columnar scan of the probed batches' partitions, one
-    map-side-combinable aggregate, no joins (codebooks are literal
-    expressions). An operator watches mean_err_x10000 of appended
+    map-side-combinable aggregate, no joins (the codebooks ride in the
+    kernel closure). An operator watches mean_err_x10000 of appended
     batches against the training batch's own value: the training
     residual is the noise floor, and a sustained climb (we flag ≥ ~2×
     in SCALE.md) says re-train the quantizers and re-encode."""
     # One numpy-kernel pass over (v, code0..15): per subspace the
-    # ASSIGNED entry's cosine residual, exactly the old per-code CASE
-    # ladder's arithmetic (same fold/floor; an unknown code or zero
-    # denominator still yields a NULL row err, preserving the
+    # ASSIGNED entry's cosine residual (an unknown code or zero
+    # denominator yields a NULL row err, preserving the
     # n_vecs-vs-sum(err) mismatch tripwire) — see _pq_drift_err_np_col.
     return (
         idx.withColumn("err", _pq_drift_err_np_col(books))
@@ -2149,31 +1884,6 @@ def ivfpq_index_compact(spark: SparkSession, path: str) -> None:
     _ivfpq_store(path).compact(spark)
 
 
-def _km_probe_lists(
-    probe_q: list[int], cents: list[tuple[int, list[int]]], nprobe: int
-) -> list[int]:
-    """Coarse-quantize the query driver-side: nearest ``nprobe`` list
-    ids by (cosine DESC, c_id ASC) — the step a deployed ANN service
-    runs on the client/driver so the scan can be a LITERAL partition
-    filter. Bit-identical to the in-plan/oracle assignment: every dot
-    product here is integer-exact (quantized components and centroid
-    sums stay far below 2^53, so no addend ever rounds), sqrt/division
-    are single IEEE ops on identical operands, and the tie-break
-    matches _sim_desc_sorted."""
-    import math
-
-    qn = math.sqrt(float(sum(x * x for x in probe_q)))
-    entries = []
-    for c_id, comps in cents:
-        num = 0.0
-        for x, c in zip(probe_q, comps):
-            num += float(x) * float(c)
-        cn = math.sqrt(float(sum(c * c for c in comps)))
-        entries.append((num / (qn * cn), c_id))
-    entries.sort(key=lambda t: (-t[0], t[1]))
-    return [c_id for _, c_id in entries[:nprobe]]
-
-
 def _ivfpq_search_stored(
     idx: DataFrame,
     books: dict[int, list[tuple[int, list[int]]]],
@@ -2188,7 +1898,7 @@ def _ivfpq_search_stored(
     codebook-argmax projection of the in-plan form is gone), shortlist,
     exact re-rank against the stored raw vectors with the probe shipped
     as literals. Zero joins, zero shuffles before the bounded top-ks."""
-    _unused, num_expr, cn2_expr = _pq_adc_exprs(books, probe_q, with_codes=False)
+    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
     probe_qnrm = float(sum(x * x for x in probe_q)) ** 0.5
     adc = num_expr / (F.lit(probe_qnrm) * F.sqrt(cn2_expr))
     shortlist = (
@@ -2220,8 +1930,8 @@ def s_ann_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s_ann_ivfpq in its DEPLOYED shape: train, encode ONCE into a
     list_id-partitioned parquet index (ivfpq_index_build/store), then
     serve entirely from storage — driver-side coarse quantization of
-    the query (_km_probe_lists), a literal partition filter standing in
-    for the in-plan broadcast semi-join, ADC from the STORED 1-byte
+    the query (_km_probe_lists), the same literal list_id filter as
+    the in-plan form but now a partition filter, ADC from the STORED 1-byte
     code columns (the in-row encode is gone from the serving plan), and
     the exact re-rank against stored vectors with the probe as
     literals. Shares s_ann_ivfpq's oracle: training is deterministic,
@@ -2335,7 +2045,10 @@ def knn_graph(
     # stage; the bucket map is a per-row deterministic function, so
     # bucketing-then-filtering equals filtering-then-bucketing row for
     # row (r14; guide §2.4).
-    n = _bucketed_corpus(emb, n_planes) if bucketed is None else bucketed
+    if bucketed is None:
+        n = _bucketed_corpus(emb, n_planes)
+    else:
+        n = _check_bucketed(bucketed, n_planes)
     t = _capped_targets(n, bucket_cap)
     probes = _graph_probes(n, n_planes, multiprobe)
     # no duplicate (src, dst) pairs possible: a target lives in exactly
@@ -2359,13 +2072,31 @@ def knn_graph(
 
 def _bucketed_corpus(emb: DataFrame, n_planes: int) -> DataFrame:
     """(vec_id, v, nrm, bucket) — one eager checkpoint every graph-build
-    branch (target cap, probes, old/new splits) derives from."""
+    branch (target cap, probes, old/new splits) derives from. The
+    ``bucket`` column carries its plane count as field metadata, which
+    survives the checkpoint, filters and selects, so _check_bucketed
+    can verify a ``bucketed=`` frame without a job."""
     return emb.select(
         "vec_id",
         "v",
         F.sqrt(F.expr(_DOT.format(a="v", b="v"))).alias("nrm"),
-        _bucket_expr_spark(n_planes).alias("bucket"),
+        _bucket_expr_spark(n_planes).alias(
+            "bucket", metadata={"n_planes": n_planes}
+        ),
     ).localCheckpoint(eager=True)
+
+
+def _check_bucketed(bucketed: DataFrame, n_planes: int) -> DataFrame:
+    """``bucketed`` itself, if its buckets were hashed with ``n_planes``
+    planes; a frame bucketed with another count would silently probe
+    the wrong buckets (and break the multiprobe masks), so it raises."""
+    tag = bucketed.schema["bucket"].metadata.get("n_planes")
+    if tag != n_planes:
+        raise ValueError(
+            f"bucketed frame has n_planes={tag}, expected {n_planes}; "
+            f"build it with _bucketed_corpus(emb, {n_planes})"
+        )
+    return bucketed
 
 
 def _capped_targets(n: DataFrame, bucket_cap: int) -> DataFrame:
@@ -2505,7 +2236,10 @@ def knn_graph_merge(
         raise ValueError(f"k must be >= 1, got {k}")
     # ``bucketed``: the knn_graph escape hatch — reuse a caller-shared
     # bucketed-corpus checkpoint instead of re-scanning + re-bucketing
-    n = _bucketed_corpus(emb, n_planes) if bucketed is None else bucketed
+    if bucketed is None:
+        n = _bucketed_corpus(emb, n_planes)
+    else:
+        n = _check_bucketed(bucketed, n_planes)
     new_n = n.filter(is_new)
     t_bound = _target_bound(n_planes, bucket_cap)
     if old_graph is None:
@@ -2726,10 +2460,8 @@ def _knn_graph_ivf_build(
     # branch re-evaluates the k-dot-product assignment — the most
     # expensive map of the build (k ≈ √n centroid dots per row at corpus
     # scale) — plus a second full scan. This is the cluster-scale "write
-    # assignments, then join" IVF shape. Both consumers read ONLY the
-    # c_id fields, so the numpy probe-ids kernel (id array, bit-identical
-    # ranking — see _km_probe_ids_np_col) replaces the per-row
-    # array_sort-of-structs ladder: pls[0] ≡ the old pls[0]['c_id'].
+    # assignments, then join" IVF shape. Both consumers read only the
+    # list ids (_km_probe_ids_np_col); pls[0] is the row's own list.
     asg = n.select(
         "vec_id",
         "v",

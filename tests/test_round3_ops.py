@@ -3,6 +3,7 @@ by test_corpus_ops / test_relational_batch3 / test_tpch_close."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.plans.dedup_q import (
@@ -379,6 +380,37 @@ def test_knn_graph_merge_accepts_stored_old_graph(spark, sf_dir):
         for r in knn_graph_merge(emb, is_new, old_graph=stored).collect()
     }
     assert from_storage == self_contained
+
+
+def test_knn_graph_rejects_bucketed_frame_of_other_plane_count(spark, sf_dir):
+    """A ``bucketed=`` frame hashed with another n_planes would probe
+    the wrong buckets silently; both builders check the plane count
+    _bucketed_corpus tags on the bucket column and raise at the call.
+    The tag survives the checkpoint and a filter, so a frame built with
+    the matching count is accepted."""
+    from olympic_athletes_etl_spark.plans.similarity_q import (
+        _N_PLANES,
+        _bucketed_corpus,
+        knn_graph,
+        knn_graph_merge,
+    )
+
+    emb = _emb_double(spark, sf_dir)
+    is_new = F.col("vec_id") % 8 == 0
+    other = _bucketed_corpus(emb, _N_PLANES - 2)
+    untagged = emb.select(
+        "vec_id", "v", F.lit(1.0).alias("nrm"), F.lit(0).alias("bucket")
+    )
+    for bad in (other, untagged):
+        with pytest.raises(ValueError, match="n_planes"):
+            knn_graph(emb, bucketed=bad.filter(~is_new))
+        with pytest.raises(ValueError, match="n_planes"):
+            knn_graph_merge(emb, is_new, bucketed=bad)
+    ok = _bucketed_corpus(emb, _N_PLANES)
+    knn_graph(
+        emb, bucketed=ok.filter(~is_new).select("vec_id", "v", "nrm", "bucket")
+    )
+    knn_graph_merge(emb, is_new, bucketed=ok)
 
 
 def test_graph_recall_orders_variants(spark, sf_dir):

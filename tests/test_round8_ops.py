@@ -339,35 +339,26 @@ def test_ivfpq_index_load_rejects_foreign_parquet(spark, sf_dir, tmp_path):
 
 def test_km_probe_lists_matches_in_plan_assignment(spark, sf_dir):
     """The driver-side coarse quantizer must agree with the in-plan
-    argmax (same integer-exact dots, same (sim DESC, c_id ASC)
+    probe kernel (same folded dots, same (sim DESC, c_id ASC)
     tie-break) — checked for the probe vector across nprobe=ALL lists,
     i.e. the full preference order, not just the top-2."""
     from pyspark.sql import functions as F
 
     from olympic_athletes_etl_spark.plans.similarity_q import (
-        _km_entries,
+        _km_probe_ids_np_col,
         _km_probe_lists,
         _QUERY_VEC_ID,
-        _sim_desc_sorted,
     )
 
     n = _km_base(spark, sf_dir)
     cents = _km_fit(n)
-    probe_q = [
-        int(x)
-        for x in n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("vq")
-        .collect()[0]["vq"]
-    ]
-    in_plan = [
-        r["c_id"]
-        for r in n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(
-            F.explode(_sim_desc_sorted(_km_entries(cents))).alias("e")
-        )
-        .select("e.c_id")
-        .collect()
-    ]
+    probe = (
+        n.filter(F.col("vec_id") == _QUERY_VEC_ID)
+        .select("vq", _km_probe_ids_np_col(cents, len(cents)).alias("pls"))
+        .collect()[0]
+    )
+    probe_q = [int(x) for x in probe["vq"]]
+    in_plan = list(probe["pls"])
     assert _km_probe_lists(probe_q, cents, len(cents)) == in_plan
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as real_pq
@@ -66,15 +67,36 @@ def test_single_file(tmp_path):
     assert tables._scan_row_groups(str(p), 999) == 1
 
 
-def test_spread_decision_unchanged(many_file_dir, spark):
+def _session_with_parallelism(par: int):
+    """The one thing spread() reads from its session, pinned, so both
+    branches are asserted whatever the host's core count."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=par))
+
+
+def test_spread_decision_unchanged(many_file_dir, tmp_path, spark):
     """spread() must no-op on a many-row-group layout and fire on a
-    single-row-group one — same behavior as the r13 full-count form."""
+    single-row-group one — same behavior as the r13 full-count form.
+    It fires when row groups < max(2, par // 2), and then
+    hash-repartitions to ``par`` partitions on the key."""
+    one = tmp_path / "one.parquet"
+    real_pq.write_table(pa.table({"x": list(range(10))}), one)
     df = spark.range(10)
-    par = spark.sparkContext.defaultParallelism
-    tables._scan_row_groups.cache_clear()
-    out = tables.spread(df, spark, many_file_dir, "id")
-    if 20 >= max(2, par // 2):
-        assert out is df  # no-op: layout already splits
+    cases = [
+        (many_file_dir, 2, False),  # 20 row groups >= 2
+        (many_file_dir, 40, False),  # 20 >= 20
+        (many_file_dir, 64, True),  # 20 < 32
+        (str(one), 2, True),  # 1 < 2
+        (str(one), 64, True),  # 1 < 32
+    ]
+    for path, par, fires in cases:
+        tables._scan_row_groups.cache_clear()
+        out = tables.spread(df, _session_with_parallelism(par), path, "id")
+        if not fires:
+            assert out is df, (path, par)
+            continue
+        top = out._jdf.queryExecution().analyzed().toString().splitlines()[0]
+        assert top.startswith("RepartitionByExpression [id#"), (path, par, top)
+        assert top.endswith(f", {par}"), (path, par, top)
     tables._scan_row_groups.cache_clear()
 
 
