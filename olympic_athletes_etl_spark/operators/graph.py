@@ -41,7 +41,8 @@ def _observed_checkpoint(
     probe pays 2+ jobs: CollectLimit escalates through partition
     batches before concluding the frame is empty); ``observe`` folds
     the same aggregate into the checkpoint's own pass (guide §2.4/§5 —
-    measured 3 jobs → 1 per label-CC round, tools/probe_observe.py).
+    measured 3 jobs → 1 per label-CC round, OPTIMIZATION_r14.md batch 1;
+    the contract is pinned in tests/test_graph.py).
     ``keep`` projects the checkpointed output ABOVE the observe node,
     so metric-only columns are never materialized into the checkpoint.
     CollectMetrics is a row-level pass-through: the checkpointed rows
@@ -754,7 +755,7 @@ def connected_components_star(
     # place after the one exchange (guide §2.4 — operations keyed the
     # same way share one exchange). Measured at sf0.1: ~20% off the
     # whole loop, identical edge sets every round
-    # (tools/probe_star_ab.py; OPTIMIZATION_r13.md).
+    # (OPTIMIZATION_r13.md batch 3).
     _w_u = Window.partitionBy("u")
 
     def _large_star(df: DataFrame) -> DataFrame:

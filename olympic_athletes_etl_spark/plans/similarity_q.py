@@ -304,6 +304,9 @@ def s_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # assignments, and probe lists. At 100 TB the per-list component sums can
 # exceed 2^53: the scale path re-quantizes the mean per iteration
 # (sum/count at fixed precision) or carries DECIMAL sums — same plan shape.
+# One Lloyd fit, _lloyd_fit, trains both quantizers: these IVF centroids
+# are its one-subspace case (_km_fit), the PQ codebooks below its
+# _PQ_M-subspace case (_pq_fit).
 _KM_SCALE = 10_000
 _KM_ITERS = 2
 
@@ -440,16 +443,19 @@ def _np_sims_fn(comps: list[list[float]], cdots: list[float]):
     return sims
 
 
-def _km_round_sums(
-    n: DataFrame, cents: list[tuple[int, list[int]]]
+def _round_sums(
+    n: DataFrame, books: dict[int, list[tuple[int, list[int]]]]
 ) -> list:
-    """One Lloyd round's per-(list_id, dim) component sums as collected
-    rows — the in-worker replacement for the old assignment-projection +
-    posexplode + groupBy pipeline (which materialized rows × dims
-    exploded records through a hash aggregate). The worker assigns each
-    batch with the ranking kernel and scatter-adds the quantized
-    components into a (k, dim) accumulator (np.add.at); the engine then
-    sums the ≤ k·dim partials per partition.
+    """One _lloyd_fit round as collected rows: the per-(subspace ``j``,
+    centroid ``code``, dim ``d``) component sums ``s``. Subspace ``j``
+    is the ``j``-th contiguous ``_DIM // len(books)`` slice of ``vq``.
+    In one pass over ``vq`` the worker assigns every slice to its
+    codebook with the ranking kernel, folding the slice's norm in the
+    kernel (``sims(sub, None)``), and scatter-adds the slice into a
+    (k, subdim) accumulator (np.add.at); the engine then sums the
+    ≤ m·k·subdim partials per partition. This replaced an assignment
+    projection + posexplode + groupBy pipeline, which materialized
+    rows × dims exploded records through a hash aggregate.
 
     EXACT by the module-note integer argument: every component is an
     integer-valued double and every partial/total stays far below 2^53
@@ -457,8 +463,11 @@ def _km_round_sums(
     cannot change a bit — in-worker accumulation, engine partial-agg,
     and the old exploded sum all produce the identical integers (the
     same argument that already made the exploded sum layout-invariant).
-    Only lists with ≥ 1 member emit rows, matching groupBy semantics
-    (an emptied list drops out of the next round's centroid set).
+    The same argument makes the in-kernel norm of the one-subspace
+    (k-means) case equal to the engine's ``qnrm``: both are the sqrt of
+    the same exact integer self-dot. Only centroids with ≥ 1 member emit
+    rows, matching groupBy semantics (an emptied centroid drops out of
+    the next round's codebook).
 
     One Python task runs per partition of ``n``, and each task has a
     fixed cost that dwarfs the numpy work at small row counts: every
@@ -467,66 +476,15 @@ def _km_round_sums(
     the worker's 16 cached zipimporters of ``pyspark.zip`` re-read the
     zip directory — 0.19–0.24 CPU s per call, measured inside a worker
     on a 4-vCPU VM (PySpark 4.1). A 500-row mapInPandas costs ~1.05
-    worker CPU s on 4 partitions and ~0.27 s on one. The fits therefore
-    pass the row-count-sized view from _fit_base, not the raw base."""
-    c_ids, comps, cdots = _np_entry_data(cents)
-    ids = [int(c) for c in c_ids]
-    sims = _np_sims_fn(comps, cdots)
-
-    def part(batches):  # type: ignore[no-untyped-def]
-        import numpy as np
-        import pandas as pd
-
-        acc = None
-        cnt = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["vq"].to_numpy())
-            ix = np.argmax(sims(V, pdf["qnrm"].to_numpy()), axis=1)
-            if acc is None:
-                acc = np.zeros((len(ids), V.shape[1]), dtype=np.float64)
-                cnt = np.zeros(len(ids), dtype=np.int64)
-            np.add.at(acc, ix, V)
-            np.add.at(cnt, ix, 1)
-        if acc is None:
-            return
-        present = np.nonzero(cnt > 0)[0]
-        dim = acc.shape[1]
-        yield pd.DataFrame(
-            {
-                "list_id": np.repeat(
-                    np.asarray([ids[i] for i in present], dtype=np.int32), dim
-                ),
-                "d": np.tile(np.arange(dim, dtype=np.int32), len(present)),
-                "s": acc[present].reshape(-1),
-            }
-        )
-
-    return (
-        n.select("vq", "qnrm")
-        .mapInPandas(part, "list_id int, d int, s double")
-        .groupBy("list_id", "d")
-        .agg(F.sum("s").alias("s"))
-        .collect()
-    )
-
-
-def _pq_round_sums(
-    n: DataFrame, books: dict[int, list[tuple[int, list[int]]]]
-) -> list:
-    """The PQ twin of _km_round_sums: per-(subspace, code, dim)
-    component sums for one codebook Lloyd round, assignments and
-    scatter-adds both in the worker (one pass over vq for all
-    ``_PQ_M`` subspaces). Same exact-integer argument; only codes with
-    members emit rows."""
+    worker CPU s on 4 partitions and ~0.27 s on one. The fit therefore
+    passes the row-count-sized view from _fit_base, not the raw base."""
     data = {j: _np_entry_data(cents) for j, cents in sorted(books.items())}
     ids = {j: [int(c) for c in c_ids] for j, (c_ids, _, _) in data.items()}
     fns = {
         j: _np_sims_fn(comps, cdots)
         for j, (_, comps, cdots) in data.items()
     }
-    subdim = _PQ_SUBDIM
+    subdim = _DIM // len(books)
 
     def part(batches):  # type: ignore[no-untyped-def]
         import numpy as np
@@ -863,9 +821,9 @@ def _train_sample(n: DataFrame, train_mod: int) -> DataFrame:
     return n.filter(F.col("vec_id") % train_mod == 0)
 
 
-def _fit_base(n: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
-    """(base, rounds) for a Lloyd fit. ``base`` is the eager checkpoint
-    of ``n``'s ``cols``: the init collect reads it, and the caller
+def _fit_base(n: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(base, rounds) for _lloyd_fit. ``base`` is the eager checkpoint
+    of ``n``'s ``vec_id, vq``: the init collect reads it, and the caller
     releases it (releasing ``rounds`` would be a silent no-op, since
     its plan is a Coalesce, not the checkpoint's LogicalRDD).
     ``rounds`` is ``base`` coalesced so that each Lloyd round's Python
@@ -890,7 +848,7 @@ def _fit_base(n: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
     host with many real cores, where the sf1 rounds give up
     parallelism (2 tasks of 10,000 rows instead of P smaller ones)."""
     base, metrics = _observed_checkpoint(
-        n.select(*cols), [F.count(F.lit(1)).alias("rows")]
+        n.select("vec_id", "vq"), [F.count(F.lit(1)).alias("rows")]
     )
     per_batch = int(
         n.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -902,68 +860,73 @@ def _fit_base(n: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
     return base, base.coalesce(k)
 
 
-def _km_fit(n: DataFrame, train_mod: int = 1) -> list[tuple[int, list[int]]]:
-    """Run the deterministic Lloyd iterations; returns the final centroids
-    as (c_id, integer components). Each round: one shuffle-free broadcast
-    assignment pass + one (k·dim)-row aggregate collected to the driver —
-    the classic 'centroids fit on the driver' k-means shape, independent
-    of table size. ``train_mod`` fits on the vec_id-modulus sample (see
-    _train_sample) — init then becomes the sample's lowest-vec_id k rows
-    (a bounded TakeOrdered collect); the default full fit keeps the
-    literal ``vec_id < k`` init the oracles unroll.
+def _lloyd_fit(
+    n: DataFrame, m: int, k: int, iters: int, train_mod: int
+) -> dict[int, list[tuple[int, list[int]]]]:
+    """Deterministic spherical k-means on ``m`` contiguous ``_DIM // m``
+    subspaces of ``vq``: ``{j: [(c_id, integer components), ...]}``, at
+    most ``k`` centroids per subspace after ``iters`` Lloyd rounds.
+    Product quantization is the ``m = _PQ_M`` case (_pq_fit); the IVF
+    coarse quantizer is the same k-means with one subspace (_km_fit).
 
-    The rounds run over _fit_base's coalesced view: one Python task per
-    ``maxRecordsPerBatch`` rows, at most one per base partition,
-    because each task pays ~0.2 CPU s of fixed worker set-up
-    (_km_round_sums). At the bench's 500 rows that is one task per
-    round instead of one per core; at sf1's 20,000 rows, two."""
+    Init: the same ``k`` rows for every subspace, collected once as full
+    vectors and sliced driver-side — ``vec_id < k`` on the full fit (the
+    literal init the oracles unroll), else the sample's lowest-vec_id
+    ``k`` rows (a bounded TakeOrdered collect; see _train_sample). Each
+    round is ONE Spark job for all subspaces (_round_sums): a
+    shuffle-free assignment pass plus a bounded (m·k·subdim)-row
+    aggregate collected to the driver — the classic 'centroids fit on
+    the driver' shape, independent of table size. The sums are
+    integer-exact, so batching the subspaces is bit-identical to one
+    job per subspace, minus the per-job scheduling overhead.
+
+    Init and rounds read _fit_base's one eager checkpoint of the
+    quantized training projection (OPTIMIZATION_r14.md: km round
+    −12–18%, bit-identical fits), computed fresh on every call and
+    released on return. The rounds read its coalesced view: one Python
+    task per ``maxRecordsPerBatch`` rows, at most one per base
+    partition, because each task pays ~0.2 CPU s of fixed worker set-up
+    (_round_sums) — one task per round at the bench's 500 rows, two at
+    sf1's 20,000."""
     n = _train_sample(n, train_mod)
-    # Materialize the quantized training projection ONCE for the whole
-    # fit (r14, guide §5 localCheckpoint): the init collect and every
-    # Lloyd round otherwise re-run the full scan + v→double transform +
-    # vq quantization + interpreted-HOF self-dot per pass — 1 + _KM_ITERS
-    # derivations of the identical frame. In-plan intermediate, computed
-    # fresh from parquet on every fit call (never cached across runs);
-    # released as soon as the fit returns. Fits are bit-identical — the
-    # checkpoint replays the same rows (OPTIMIZATION_r14.md: km round
-    # −12–18%).
-    base, rounds = _fit_base(n, "vec_id", "vq", "qnrm")
+    base, rounds = _fit_base(n)
+    subdim = _DIM // m
     try:
         if train_mod == 1:
-            cent_rows = (
-                base.filter(F.col("vec_id") < _N_CENTROIDS)
-                .select("vec_id", "vq")
-                .collect()
-            )
+            init_rows = base.filter(F.col("vec_id") < k).collect()
         else:
-            cent_rows = (
-                base.orderBy(F.asc("vec_id"))
-                .limit(_N_CENTROIDS)
-                .select("vec_id", "vq")
-                .collect()
-            )
-        cents = sorted(
-            (int(r["vec_id"]), [int(x) for x in r["vq"]]) for r in cent_rows
+            init_rows = base.orderBy(F.asc("vec_id")).limit(k).collect()
+        init = sorted(
+            (int(r["vec_id"]), [int(x) for x in r["vq"]]) for r in init_rows
         )
-        for _ in range(_KM_ITERS):
-            # assignment + per-list scatter-add fused in the worker
-            # (_km_round_sums): bit-identical sums to the old
-            # argmax-projection + posexplode + groupBy round — assignment
-            # pinned in test_kmeans/test_annkernel, sums exact-integer so
-            # accumulation order is immaterial; ≤ k·dim rows collected
-            sums = _km_round_sums(rounds, cents)
-            by_list: dict[int, dict[int, int]] = {}
-            for r in sums:
-                by_list.setdefault(int(r["list_id"]), {})[int(r["d"])] = int(
-                    r["s"]
+        books = {
+            j: [(vid, full[j * subdim : (j + 1) * subdim]) for vid, full in init]
+            for j in range(m)
+        }
+        for _ in range(iters):
+            by_j: dict[int, dict[int, dict[int, int]]] = {}
+            for r in _round_sums(rounds, books):
+                by_j.setdefault(int(r["j"]), {}).setdefault(
+                    int(r["code"]), {}
+                )[int(r["d"])] = int(r["s"])
+            books = {
+                j: sorted(
+                    (c_id, [comp[d] for d in range(subdim)])
+                    for c_id, comp in by_j.get(j, {}).items()
                 )
-            cents = sorted(
-                (c_id, [comp[d] for d in range(_DIM)])
-                for c_id, comp in by_list.items()
-            )
-        return cents
+                for j in range(m)
+            }
+        return books
     finally:
         _release_ckpt(base)
+
+
+def _km_fit(n: DataFrame, train_mod: int = 1) -> list[tuple[int, list[int]]]:
+    """The IVF coarse quantizer: _N_CENTROIDS centroids as (c_id,
+    integer components) after _KM_ITERS Lloyd rounds — _lloyd_fit with
+    one subspace, the whole vector. ``train_mod`` fits on the
+    vec_id-modulus sample (see _train_sample)."""
+    return _lloyd_fit(n, 1, _N_CENTROIDS, _KM_ITERS, train_mod)[0]
 
 
 # Harness-level training memo. The centroids/codebooks are DETERMINISTIC
@@ -1200,9 +1163,9 @@ def s_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # The vector splits into _PQ_M contiguous subspaces of _PQ_SUBDIM dims;
 # each subspace trains its own _PQ_KSUB-centroid spherical k-means
-# codebook (same integer-exact machinery as the IVF k-means above: init =
-# first k subvectors, sum-as-centroid — valid because cosine assignment
-# is scale-invariant). A vector's code word is its per-subspace centroid
+# codebook (the IVF k-means above run per subspace — one _lloyd_fit:
+# init = first k subvectors, sum-as-centroid — valid because cosine
+# assignment is scale-invariant). A vector's code word is its per-subspace centroid
 # ids; search scores every vector from the probe's precomputed ADC lookup
 # tables (pdot[j][c] = <probe_j, codebook_j[c]>, |codebook_j[c]|² — all
 # exact integer arithmetic, identical in both engines), shortlists
@@ -1219,78 +1182,13 @@ _PQ_SHORTLIST = 50
 def _pq_fit(
     n: DataFrame, train_mod: int = 1
 ) -> dict[int, list[tuple[int, list[int]]]]:
-    """Train one spherical-k-means codebook per subspace. The training
-    math per subspace is a broadcast argmax-assignment pass plus a
-    bounded (k·subdim)-row aggregate; ALL ``_PQ_M`` subspaces batch into
-    each Spark job (one init collect + one combined assignment/sum job
-    per Lloyd round) instead of 16 separate per-subspace jobs — the
-    per-job scheduling overhead dominated the old loop (~32 tiny jobs),
-    and the batched form is bit-identical: the init rows are the same
-    ``vec_id``-ordered subvector slices, the assignment expression is
-    the same sequential-dot cosine argmax per subspace, and the
-    per-(subspace, code, dim) sums are integer-exact (quantized
-    components are integer-valued doubles far below 2^53), so summation
-    grouping/order cannot change a single bit. ``train_mod`` fits every
-    codebook on the vec_id-modulus sample (see _train_sample); the
-    default full fit keeps the literal ``vec_id < ksub`` init the
-    oracles unroll. Rounds run one Python task per
-    ``maxRecordsPerBatch`` rows, at most one per base partition
-    (_fit_base), because each task pays ~0.2 CPU s of fixed worker
-    set-up (_km_round_sums)."""
-    n = _train_sample(n, train_mod)
-    # One eager checkpoint of the quantized training projection for the
-    # whole fit — the same §5 rationale (and bit-identity evidence) as
-    # _km_fit's; the PQ rounds only need vq, the init only vec_id+vq.
-    base, rounds = _fit_base(n, "vec_id", "vq")
-    try:
-        # ONE init job for all subspaces: the per-subspace init rows are
-        # the same vec_ids for every j (first ksub by vec_id), so collect
-        # those rows' full quantized vectors once and slice driver-side
-        if train_mod == 1:
-            init_rows = (
-                base.filter(F.col("vec_id") < _PQ_KSUB)
-                .select("vec_id", "vq")
-                .collect()
-            )
-        else:
-            init_rows = (
-                base.orderBy(F.asc("vec_id"))
-                .limit(_PQ_KSUB)
-                .select("vec_id", "vq")
-                .collect()
-            )
-        init = sorted(
-            (int(r["vec_id"]), [int(x) for x in r["vq"]]) for r in init_rows
-        )
-        books: dict[int, list[tuple[int, list[int]]]] = {
-            j: [
-                (vid, full[j * _PQ_SUBDIM : (j + 1) * _PQ_SUBDIM])
-                for vid, full in init
-            ]
-            for j in range(_PQ_M)
-        }
-        for _ in range(_PQ_ITERS):
-            # ONE combined job for all subspaces: assignment + per-code
-            # scatter-add fused in the worker (_pq_round_sums) —
-            # bit-identical sums to the old struct-explode + posexplode +
-            # groupBy round (assignment pinned in test_annkernel, sums
-            # exact-integer); ≤ M·k·subdim rows collected
-            sums = _pq_round_sums(rounds, books)
-            by_j: dict[int, dict[int, dict[int, int]]] = {}
-            for r in sums:
-                by_j.setdefault(int(r["j"]), {}).setdefault(
-                    int(r["code"]), {}
-                )[int(r["d"])] = int(r["s"])
-            books = {
-                j: sorted(
-                    (c_id, [comp[d] for d in range(_PQ_SUBDIM)])
-                    for c_id, comp in by_j[j].items()
-                )
-                for j in range(_PQ_M)
-            }
-        return books
-    finally:
-        _release_ckpt(base)
+    """The PQ codebooks: one _PQ_KSUB-centroid codebook per _PQ_SUBDIM-dim
+    subspace ``j``, as ``{j: [(c_id, integer components), ...]}``, after
+    _PQ_ITERS Lloyd rounds — _lloyd_fit with _PQ_M subspaces, every
+    subspace batched into the same init collect and round jobs.
+    ``train_mod`` fits every codebook on the vec_id-modulus sample (see
+    _train_sample)."""
+    return _lloyd_fit(n, _PQ_M, _PQ_KSUB, _PQ_ITERS, train_mod)
 
 
 def _pq_train_ctes(base: str) -> str:

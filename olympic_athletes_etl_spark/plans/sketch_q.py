@@ -942,30 +942,32 @@ def _hll_gen_store(path: str):
     )
 
 
-def hll_rollup_store(partials: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist sketch partials partitioned BY day — a serve for any day
-    range prunes to the window's directories, each holding ≤64-row
-    register sets per batch. Generation-versioned (operators/store.py):
-    overwrite mode is an atomic snapshot replace."""
+def _check_hll_partials(partials: DataFrame, caller: str) -> None:
     missing = [c for c in _HLL_ROLLUP_COLS if c not in partials.columns]
     if missing:
         raise ValueError(
-            f"hll_rollup_store: partials frame is missing {missing}; "
+            f"{caller}: partials frame is missing {missing}; "
             "build it with hll_rollup_partials (day, b, reg)"
         )
-    store = _hll_gen_store(path)
-    if mode == "append":
-        # auto-create on a fresh path (first streaming micro-batch, or a
-        # direct mode="append" caller) — GenStore.append alone requires
-        # an existing manifest and would raise FileNotFoundError
-        store.ensure()
-        store.append({"": partials})
-    else:
-        store.create({"": partials})
+
+
+def hll_rollup_store(partials: DataFrame, path: str) -> None:
+    """Persist sketch partials partitioned BY day — a serve for any day
+    range prunes to the window's directories, each holding ≤64-row
+    register sets per batch. Generation-versioned (operators/store.py):
+    re-storing over an existing path is an atomic snapshot replace."""
+    _check_hll_partials(partials, "hll_rollup_store")
+    _hll_gen_store(path).create({"": partials})
 
 
 def hll_rollup_append(partials: DataFrame, path: str) -> None:
-    hll_rollup_store(partials, path, mode="append")
+    """Append a batch's partials. Auto-creates the store on a fresh path
+    (the streaming ingest's first micro-batch): GenStore.append alone
+    requires an existing manifest and would raise FileNotFoundError."""
+    _check_hll_partials(partials, "hll_rollup_append")
+    store = _hll_gen_store(path)
+    store.ensure()
+    store.append({"": partials})
 
 
 def hll_rollup_load(spark: SparkSession, path: str) -> DataFrame:

@@ -1445,30 +1445,30 @@ def _bm25_gen_store(path: str):
     )
 
 
-def bm25_index_store(index: dict[str, DataFrame], path: str, mode: str = "overwrite") -> None:
-    """Persist the index: postings partitioned BY token bucket (the
-    serve path prunes to the query terms' buckets at the DIRECTORY
-    level), doc lengths and stats partials as plain narrow parquet.
-    ``mode="append"`` is the ingest-batch path (bm25_index_append).
-    One generation manifest spans all three tables (operators/store.py),
-    so compaction commits postings + dlen + stats atomically together —
-    a crash can't leave merged stats beside unmerged postings."""
+def _bm25_frames(index: dict[str, DataFrame], caller: str) -> dict[str, DataFrame]:
     missing = [c for c in _BM25_POSTINGS_COLS if c not in index["postings"].columns]
     if missing:
         raise ValueError(
-            f"bm25_index_store: postings frame is missing {missing}; "
+            f"{caller}: postings frame is missing {missing}; "
             "build it with bm25_index_build"
         )
-    frames = {
+    return {
         "postings": index["postings"],
         "dlen": index["dlen"],
         "stats": index["stats"],
     }
-    store = _bm25_gen_store(path)
-    if mode == "append":
-        store.append(frames)
-    else:
-        store.create(frames)
+
+
+def bm25_index_store(index: dict[str, DataFrame], path: str) -> None:
+    """Persist the index: postings partitioned BY token bucket (the
+    serve path prunes to the query terms' buckets at the DIRECTORY
+    level), doc lengths and stats partials as plain narrow parquet.
+    Create-only: re-storing over an existing path is an atomic snapshot
+    replace; bm25_index_append is the ingest-batch path.
+    One generation manifest spans all three tables (operators/store.py),
+    so compaction commits postings + dlen + stats atomically together —
+    a crash can't leave merged stats beside unmerged postings."""
+    _bm25_gen_store(path).create(_bm25_frames(index, "bm25_index_store"))
 
 
 def bm25_index_append(docs_batch: DataFrame, path: str) -> None:
@@ -1480,7 +1480,8 @@ def bm25_index_append(docs_batch: DataFrame, path: str) -> None:
     is nothing stale to rebuild: serving recounts df from the postings
     sliver it reads — the reason this index never needs a
     read-modify-write of history."""
-    bm25_index_store(bm25_index_build(docs_batch), path, mode="append")
+    frames = _bm25_frames(bm25_index_build(docs_batch), "bm25_index_append")
+    _bm25_gen_store(path).append(frames)
 
 
 def bm25_index_compact(spark: SparkSession, path: str) -> None:

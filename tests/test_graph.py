@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.operators.graph import (
+    _observed_checkpoint,
+    _release_checkpoint,
     connected_components,
     dedup_clusters,
 )
@@ -743,3 +747,41 @@ def test_iterative_operators_do_not_accumulate_checkpoints(spark):
     core = kcore(edges, k=2)  # a path has no 2-core: full 30-round peel
     assert core.count() == 0
     assert _n_persistent(spark) - before <= 2
+
+
+def test_observed_checkpoint_metric_survives_keep_projection(spark):
+    """The observe-through-checkpoint contract that label CC, kcore, BFS,
+    PageRank and the Lloyd fits' task sizing (_fit_base) rely on: a
+    metric over a column that ``keep=`` drops still arrives from the
+    checkpoint's own job, with column pruning on (the default). The
+    checkpoint holds exactly ``keep``, row for row the unobserved
+    projection. ``Observation.get`` blocks until the metric arrives, so
+    the call runs on a daemon thread: a lost metric fails the test
+    instead of hanging it."""
+    excluded = spark.conf.get("spark.sql.optimizer.excludedRules", "") or ""
+    assert "ColumnPruning" not in excluded
+    df = spark.range(0, 300, numPartitions=4).select(
+        F.col("id").alias("k"), (F.col("id") * 7 % 11).alias("w")
+    )
+    metrics = [F.sum("w").alias("s"), F.count(F.lit(1)).alias("rows")]
+    out: dict = {}
+
+    def run():
+        try:
+            out["result"] = _observed_checkpoint(df, metrics, keep=["k"])
+        except Exception as exc:  # surfaced by the asserts below
+            out["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=180)
+    assert not t.is_alive(), "observed metric never arrived"
+    assert "error" not in out, out.get("error")
+    ck, got = out["result"]
+    try:
+        want = df.agg(*metrics).first().asDict()
+        assert got == want
+        assert ck.schema == df.select("k").schema
+        assert sorted(ck.collect()) == sorted(df.select("k").collect())
+    finally:
+        _release_checkpoint(ck)

@@ -12,6 +12,7 @@ import pytest
 from olympic_athletes_etl_spark.plans.similarity_q import (
     _KM_ITERS,
     _N_CENTROIDS,
+    _PQ_ITERS,
     _km_base,
     _km_fit,
     _pq_fit,
@@ -51,29 +52,31 @@ def test_kmeans_fit_invariant_to_partitioning(spark, sf_dir):
     """The central determinism claim: centroids are integer sums of
     integer-valued doubles, so the result cannot depend on partition
     count or row order within partitions. Re-fit under different
-    physical layouts and demand bit-identical centroids."""
+    physical layouts and demand bit-identical centroids — for the
+    k-means centroids and the PQ codebooks alike, both one Lloyd fit."""
     base = _km_base(spark, sf_dir)
-    a = _km_fit(base.repartition(3))
-    b = _km_fit(base.repartition(11, "vec_id"))
-    assert a == b
+    for fit in (_km_fit, _pq_fit):
+        a = fit(base.repartition(3))
+        b = fit(base.repartition(11, "vec_id"))
+        assert a == b, fit.__name__
 
 
 # --------------------------------------------------------------------------
 # Fit-round sizing: one Python task per Arrow batch of rows
 # --------------------------------------------------------------------------
-def _run_tagged_rounds(spark, sums_name, fit, n):
-    """Run ``fit(n)`` with every Lloyd round (``sums_name``) in its own
+def _run_tagged_rounds(spark, fit, n):
+    """Run ``fit(n)`` with every Lloyd round (``_round_sums``) in its own
     job group. Returns (fit result, per-round Python task count): the
     task count of each round's first stage, the mapInPandas scan of the
     round input."""
     from olympic_athletes_etl_spark.plans import similarity_q as sq
 
     sc = spark.sparkContext
-    orig = getattr(sq, sums_name)
+    orig = sq._round_sums
     groups: list[str] = []
 
     def tagged(df, model):
-        groups.append(f"{sums_name}-{uuid.uuid4().hex}")
+        groups.append(f"_round_sums-{uuid.uuid4().hex}")
         sc.setJobGroup(groups[-1], groups[-1])
         try:
             return orig(df, model)
@@ -81,7 +84,7 @@ def _run_tagged_rounds(spark, sums_name, fit, n):
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(sq, sums_name, tagged)
+        mp.setattr(sq, "_round_sums", tagged)
         out = fit(n)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     st = sc.statusTracker()
@@ -105,15 +108,15 @@ def test_fit_rounds_run_one_python_task_per_arrow_batch(spark, sf_dir):
     n = _km_base(spark, sf_dir)
     rows = n.count()
     assert rows <= int(spark.conf.get(conf))
-    km1, km_tasks = _run_tagged_rounds(spark, "_km_round_sums", _km_fit, n)
-    pq1, pq_tasks = _run_tagged_rounds(spark, "_pq_round_sums", _pq_fit, n)
+    km1, km_tasks = _run_tagged_rounds(spark, _km_fit, n)
+    pq1, pq_tasks = _run_tagged_rounds(spark, _pq_fit, n)
     assert km_tasks == [1] * _KM_ITERS
-    assert pq_tasks and set(pq_tasks) == {1}
+    assert pq_tasks == [1] * _PQ_ITERS
 
     spark.conf.set(conf, "50")
     try:
-        km_n, km_tasks = _run_tagged_rounds(spark, "_km_round_sums", _km_fit, n)
-        pq_n, pq_tasks = _run_tagged_rounds(spark, "_pq_round_sums", _pq_fit, n)
+        km_n, km_tasks = _run_tagged_rounds(spark, _km_fit, n)
+        pq_n, pq_tasks = _run_tagged_rounds(spark, _pq_fit, n)
     finally:
         spark.conf.unset(conf)
     want = min(spark.sparkContext.defaultParallelism, -(-rows // 50))

@@ -176,19 +176,19 @@ def test_qhist_batch_compactor_refuses_streaming_layout(spark, sf_dir, tmp_path)
 
 
 def test_hll_rollup_store_append_autocreates(spark, sf_dir, tmp_path):
-    """Direct mode="append" on a fresh path auto-creates the store (it
-    raised FileNotFoundError after the GenStore migration; only
-    hll_rollup_append ensured first)."""
+    """An append on a fresh path auto-creates the store: the streaming
+    ingest's first micro-batch appends to a path no store has written
+    yet, and GenStore.append alone would raise FileNotFoundError."""
     from olympic_athletes_etl_spark.plans.sketch_q import (
+        hll_rollup_append,
         hll_rollup_load,
         hll_rollup_partials,
-        hll_rollup_store,
     )
     from olympic_athletes_etl_spark.plans.tables import load as load_t
 
     events = load_t(spark, sf_dir, "events")
     path = str(tmp_path / "hll")
-    hll_rollup_store(hll_rollup_partials(events), path, mode="append")
+    hll_rollup_append(hll_rollup_partials(events), path)
     assert hll_rollup_load(spark, path).count() > 0
 
 
