@@ -1,20 +1,27 @@
 """Generation-versioned parquet store — the shared lifecycle under every
 maintained index / rollup family (LSH postings, IVFPQ index, kNN graph,
-exact rollup, HLL register rollup, BM25 index, dense identity columns).
+exact rollup, quantile histogram, HLL register rollup, BM25 index, dense
+identity columns).
 
 Each family follows the same deployed loop::
 
     create (history)  ->  append (ingest batches)  ->  compact (maintenance)
                                    \\-> load / serve (reads only the store)
 
-and before round 10 each hand-rolled it with a compaction that staged the
-read through a non-replicated ``localCheckpoint`` and then ``overwrite``-
-rewrote the SAME path — so a crash (or executor loss, since a local
-checkpoint lives in executor memory/disk only) between the delete and the
-rewrite permanently lost the store.  At 100 TB that is the primary copy of
-an index that took hours to build.
+``GenStore`` owns that loop for a root path and its ``TableSpec``s, and
+owns the family's column contract: ``create``/``append`` check every
+table's frame before taking the writer lock or writing a file, and
+``load`` checks the stored data with the same helper.  The three
+mergeable rollups (exact (count, sum), quantile histogram, HLL registers)
+are one more level up: a ``Rollup`` declares partials + merge + columns +
+partition key once, and serves both the batch store (``at``) and the
+streaming fold's ``batch_id``-partitioned store (``stream_at``).
 
-This module replaces that pattern with a GENERATION SWAP:
+A compaction must never rewrite a store in place: a crash (or executor
+loss, when the read is staged through a ``localCheckpoint``) between the
+delete and the rewrite would permanently lose the store.  At 100 TB that
+is the primary copy of an index that took hours to build.  Every write
+here is a GENERATION SWAP:
 
 * a store root holds numbered generation directories ``gen-0``, ``gen-1``,
   … plus a tiny ``_STORE`` manifest (JSON: the current generation number
@@ -318,21 +325,31 @@ class GenStore:
         return gen_dir(self.path, man["gen"])
 
     # -- frame validation ----------------------------------------------------
-    def _frame(self, frames: Mapping[str, DataFrame], t: TableSpec) -> DataFrame:
-        df = frames[t.name]
-        if t.columns is not None:
-            missing = [c for c in t.columns if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"store {self.path!r} table {t.name!r}: frame is "
-                    f"missing contract columns {missing}"
-                )
-            df = df.select(*t.columns)
-        return df
+    def _contract(self, t: TableSpec, df: DataFrame, what: str) -> DataFrame:
+        """``df`` projected to ``t``'s contract columns; raises naming the
+        missing ones (``what`` says whose: an incoming frame or stored
+        data)."""
+        if t.columns is None:
+            return df
+        missing = [c for c in t.columns if c not in df.columns]
+        if missing:
+            raise ValueError(
+                f"store {self.path!r} table {t.name!r}: {what} is "
+                f"missing contract columns {missing}"
+            )
+        return df.select(*t.columns)
+
+    def check(self, frames: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
+        """Every table's frame checked against its spec and projected to
+        its contract — all of them before any write, so a rejected
+        multi-table write writes nothing."""
+        return {
+            t.name: self._contract(t, frames[t.name], "frame") for t in self.tables
+        }
 
     def _write(self, root: str, frames: Mapping[str, DataFrame], mode: str) -> None:
         for t in self.tables:
-            w = self._frame(frames, t).write.mode(mode)
+            w = frames[t.name].write.mode(mode)
             if t.partition_by:
                 w = w.partitionBy(*t.partition_by)
             w.parquet(_subdir(root, t.name))
@@ -347,6 +364,7 @@ class GenStore:
         swept — a crash mid-write leaves the previous snapshot intact and
         served (the plain ``mode("overwrite")`` it replaces deleted the
         old copy before the new one existed)."""
+        frames = self.check(frames)
         with self._writer_lock("create"):
             man = self.manifest()
             expected = None if man is None else man["gen"]
@@ -368,6 +386,7 @@ class GenStore:
         lock for the duration, so an append can no longer land in a
         generation a concurrent compaction is about to sweep (it refuses
         with ConcurrentWriteError instead)."""
+        frames = self.check(frames)
         with self._writer_lock("append"):
             self._write(
                 gen_dir(self.path, self._require()["gen"]), frames, mode="append"
@@ -381,21 +400,19 @@ class GenStore:
         ``keep_last > 1``), failing any still-unmaterialized action with
         missing-file errors — resolve-then-act promptly, or size
         ``keep_last`` to the longest reader you run concurrently."""
-        man = self._require()
+        man = self.manifest()
+        if man is None:
+            raise ValueError(
+                f"{self.path} has no {MANIFEST_NAME} manifest; not a "
+                "GenStore (write it with the family's store function)"
+            )
         root = gen_dir(self.path, man["gen"])
-        out: dict[str, DataFrame] = {}
-        for t in self.tables:
-            df = spark.read.parquet(_subdir(root, t.name))
-            if t.columns is not None:
-                missing = [c for c in t.columns if c not in df.columns]
-                if missing:
-                    raise ValueError(
-                        f"store {self.path!r} table {t.name!r}: stored data "
-                        f"is missing contract columns {missing}"
-                    )
-                df = df.select(*t.columns)
-            out[t.name] = df
-        return out
+        return {
+            t.name: self._contract(
+                t, spark.read.parquet(_subdir(root, t.name)), "stored data"
+            )
+            for t in self.tables
+        }
 
     def compact(
         self,
@@ -433,9 +450,9 @@ class GenStore:
         if os.path.exists(dst_root):  # crashed prior attempt, unreferenced
             shutil.rmtree(dst_root)
         for t in self.tables:
-            src = spark.read.parquet(_subdir(src_root, t.name))
-            if t.columns is not None:
-                src = src.select(*t.columns)
+            src = self._contract(
+                t, spark.read.parquet(_subdir(src_root, t.name)), "stored data"
+            )
             fn = (merge_overrides or {}).get(t.name, t.merge)
             if fn is not None:
                 out = fn(src)
@@ -481,3 +498,69 @@ class GenStore:
             m = _GEN_RE.match(name)
             if m and not (lo <= int(m.group(1)) <= keep):
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+
+
+@dataclass(frozen=True)
+class Rollup:
+    """One mergeable rollup family, declared once: how a batch reduces to
+    partial rows (``partials``), how partial rows fold to one row per key
+    (``merge``), the stored ``columns`` and the ``partition_by`` key serves
+    prune on.  The batch lifecycle (create / append / load / compact) and
+    the streaming exactly-once fold (streaming/pipeline.py:
+    stream_fold_batch / stream_fold_compact) both run off this one
+    declaration."""
+
+    name: str
+    partials: Callable[[DataFrame], DataFrame]
+    merge: MergeFn
+    columns: tuple[str, ...]
+    partition_by: str
+
+    def at(self, path: str) -> GenStore:
+        """The batch store: partitioned by the family key, compaction
+        folds by ``merge``."""
+        return GenStore(
+            path,
+            [TableSpec("", self.columns, (self.partition_by,), self.merge)],
+        )
+
+    def stream_at(self, path: str) -> GenStore:
+        """The streaming fold's store: one ``batch_id`` partition per
+        micro-batch, so a replayed batch overwrites only its own rows."""
+        return GenStore(
+            path, [TableSpec("", (*self.columns, "batch_id"), ("batch_id",))]
+        )
+
+    def create(self, partials: DataFrame, path: str) -> None:
+        self.at(path).create({"": partials})
+
+    def append(self, partials: DataFrame, path: str) -> None:
+        """Append a batch's partials; a fresh path gets an empty store
+        first (the contract is checked before that, so a rejected frame
+        leaves the path untouched)."""
+        store = self.at(path)
+        store.check({"": partials})
+        store.ensure()
+        store.append({"": partials})
+
+    def load(self, spark: SparkSession, path: str) -> DataFrame:
+        return self.at(path).load(spark)[""]
+
+    def compact(self, spark: SparkSession, path: str) -> None:
+        """Fold the partial rows to one per key (generation swap).
+
+        Batch stores only: a streaming store is ``batch_id``-partitioned
+        and carries a replay high-water mark, and folding it here would
+        merge the batch partitions WITHOUT raising the mark — a checkpoint
+        replay of a batch committed since the last streaming compaction
+        would then re-materialize its partition and double-count.  The
+        layout is read from the directory listing, not a schema read."""
+        store = self.at(path)
+        if any(e.startswith("batch_id=") for e in os.listdir(store.data_dir())):
+            raise ValueError(
+                f"{path} is a streaming {self.name} store (batch_id-"
+                f"partitioned); use streaming.pipeline.stream_{self.name}"
+                "_compact so replayed micro-batches can't double-count "
+                "folded partials"
+            )
+        store.compact(spark)

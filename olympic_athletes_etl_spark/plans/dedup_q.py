@@ -1981,12 +1981,6 @@ def lsh_postings_store(bands: DataFrame, path: str) -> None:
     (sources/io.py:bucketed_write) so the probe join co-locates without
     shuffling the corpus side. Generation-versioned (operators/store.py):
     a re-store over an existing path is an atomic snapshot replace."""
-    missing = [c for c in _LSH_POSTINGS_COLS if c not in bands.columns]
-    if missing:
-        raise ValueError(
-            f"lsh_postings_store: bands frame is missing {missing}; "
-            "build it with _minhash_bands (doc_id, band, sig0, sig1)"
-        )
     _lsh_store(path).create({"": bands})
 
 
@@ -1999,23 +1993,11 @@ def lsh_postings_append(bands: DataFrame, path: str) -> None:
     across two batches in test_round8_ops). Each append lands one file
     set per batch — run lsh_postings_compact on a cadence to fold them
     back to one file per band (probe-invariant, pinned)."""
-    missing = [c for c in _LSH_POSTINGS_COLS if c not in bands.columns]
-    if missing:
-        raise ValueError(
-            f"lsh_postings_append: bands frame is missing {missing}; "
-            "build it with _minhash_bands (doc_id, band, sig0, sig1)"
-        )
     _lsh_store(path).append({"": bands})
 
 
 def lsh_postings_load(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        return _lsh_store(path).load(spark)[""]
-    except (ValueError, FileNotFoundError) as exc:
-        raise ValueError(
-            f"lsh_postings_load: {path} is not a lsh_postings_store "
-            f"output ({exc})"
-        ) from exc
+    return _lsh_store(path).load(spark)[""]
 
 
 def lsh_postings_compact(spark: SparkSession, path: str) -> None:

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from olympic_athletes_etl_spark.operators.store import GenStore, TableSpec
+from olympic_athletes_etl_spark.operators.store import Rollup
 from olympic_athletes_etl_spark.plans.registry import query
 from olympic_athletes_etl_spark.plans.tables import load
 
@@ -1680,32 +1680,12 @@ def r_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     semigroup (count, sum, min, max, HLL...), never the final ratio.
     Scale: both branches are map-side-combinable hash aggregates on the
     month key; the merge is a groupBy over |months| rows — free."""
-    cents = F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    orders = load(spark, sf_dir, "orders").select(
-        F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-        cents.alias("cents"),
-        F.col("o_orderdate").cast("date").alias("d"),
+    orders = load(spark, sf_dir, "orders").withColumn(
+        "d", F.col("o_orderdate").cast("date")
     )
-
-    def partial(df: DataFrame) -> DataFrame:
-        return df.groupBy("month").agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum("cents").cast("long").alias("total_cents"),
-        )
-
-    stored = partial(orders.filter(F.col("d") < F.lit(_INCR_SPLIT)))
-    batch = partial(orders.filter(F.col("d") >= F.lit(_INCR_SPLIT)))
-    merged = (
-        stored.unionByName(batch)
-        .groupBy("month")
-        .agg(
-            F.sum("n_orders").cast("long").alias("n_orders"),
-            F.sum("total_cents").cast("long").alias("total_cents"),
-        )
-    )
-    return merged.withColumn(
-        "avg_cents", F.expr("CAST(total_cents div n_orders AS BIGINT)")
-    )
+    stored = _monthly_partials(orders.filter(F.col("d") < F.lit(_INCR_SPLIT)))
+    batch = _monthly_partials(orders.filter(F.col("d") >= F.lit(_INCR_SPLIT)))
+    return _rollup_answer(stored.unionByName(batch))
 
 
 r_incremental_agg.__doc__ = r_incremental_agg.__doc__.format(split=_INCR_SPLIT)
@@ -1717,9 +1697,6 @@ r_incremental_agg.__doc__ = r_incremental_agg.__doc__.format(split=_INCR_SPLIT)
 # in-plan merge algebra taken to its DEPLOYED shape, like the stored
 # LSH postings / IVFPQ index are for their in-plan twins.
 # --------------------------------------------------------------------------
-_ROLLUP_COLS = ["month", "n_orders", "total_cents"]
-
-
 def _monthly_partials(orders: DataFrame) -> DataFrame:
     """Mergeable (count, sum) state per month — the semigroup
     r_incremental_agg's docstring names: store these, never the final
@@ -1745,18 +1722,21 @@ def _rollup_merge(partials: DataFrame) -> DataFrame:
     )
 
 
-def _rollup_gen_store(path: str) -> GenStore:
-    return GenStore(
-        path,
-        [
-            TableSpec(
-                name="",
-                columns=tuple(_ROLLUP_COLS),
-                partition_by=("month",),
-                merge=_rollup_merge,
-            )
-        ],
+def _rollup_answer(partials: DataFrame) -> DataFrame:
+    """Merged state per month plus the non-mergeable aggregate (avg),
+    derived from it."""
+    return _rollup_merge(partials).withColumn(
+        "avg_cents", F.expr("CAST(total_cents div n_orders AS BIGINT)")
     )
+
+
+ROLLUP = Rollup(
+    "rollup",
+    _monthly_partials,
+    _rollup_merge,
+    ("month", "n_orders", "total_cents"),
+    "month",
+)
 
 
 def rollup_store(partials: DataFrame, path: str) -> None:
@@ -1768,13 +1748,7 @@ def rollup_store(partials: DataFrame, path: str) -> None:
     calendar-bounded, so the directory namespace never explodes.
     Generation-versioned (operators/store.py): re-storing over an
     existing path is an atomic snapshot replace."""
-    missing = [c for c in _ROLLUP_COLS if c not in partials.columns]
-    if missing:
-        raise ValueError(
-            f"rollup_store: partials frame is missing {missing}; build "
-            "it with _monthly_partials (month, n_orders, total_cents)"
-        )
-    _rollup_gen_store(path).create({"": partials})
+    ROLLUP.create(partials, path)
 
 
 def rollup_append(partials: DataFrame, path: str) -> None:
@@ -1782,24 +1756,13 @@ def rollup_append(partials: DataFrame, path: str) -> None:
     store then holds MULTIPLE partial rows per month (one file set per
     batch); serving re-merges them, so append is pure fold-in with no
     read-modify-write of history. Run rollup_compact on a cadence to
-    fold the rows back to one per month (serve-invariant, pinned)."""
-    missing = [c for c in _ROLLUP_COLS if c not in partials.columns]
-    if missing:
-        raise ValueError(
-            f"rollup_append: partials frame is missing {missing}; build "
-            "it with _monthly_partials (month, n_orders, total_cents)"
-        )
-    _rollup_gen_store(path).append({"": partials})
+    fold the rows back to one per month (serve-invariant, pinned).
+    Auto-creates the store on a fresh path."""
+    ROLLUP.append(partials, path)
 
 
 def rollup_load(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        g = _rollup_gen_store(path).load(spark)[""]
-    except (ValueError, FileNotFoundError) as exc:
-        raise ValueError(
-            f"rollup_load: {path} is not a rollup_store output ({exc})"
-        ) from exc
-    return g
+    return ROLLUP.load(spark, path)
 
 
 def rollup_compact(spark: SparkSession, path: str) -> None:
@@ -1819,15 +1782,7 @@ def rollup_compact(spark: SparkSession, path: str) -> None:
     would both break the partition layout and let a checkpoint replay
     double-count a folded batch. Refused loudly; use
     stream_rollup_compact, which folds only committed batches."""
-    data_dir = _rollup_gen_store(path).data_dir()
-    if "batch_id" in spark.read.parquet(data_dir).columns:
-        raise ValueError(
-            f"rollup_compact: {path} is a streaming rollup store "
-            "(batch_id-partitioned); use streaming.pipeline."
-            "stream_rollup_compact so replayed micro-batches can't "
-            "double-count folded partials"
-        )
-    _rollup_gen_store(path).compact(spark)
+    ROLLUP.compact(spark, path)
 
 
 def rollup_serve(spark: SparkSession, path: str) -> DataFrame:
@@ -1835,17 +1790,7 @@ def rollup_serve(spark: SparkSession, path: str) -> DataFrame:
     per month (1 after compact, N after N appends), then derive the
     non-mergeable aggregate (avg) from merged state. Reads ONLY the
     3-column partials — never the fact table."""
-    merged = (
-        rollup_load(spark, path)
-        .groupBy("month")
-        .agg(
-            F.sum("n_orders").cast("long").alias("n_orders"),
-            F.sum("total_cents").cast("long").alias("total_cents"),
-        )
-    )
-    return merged.withColumn(
-        "avg_cents", F.expr("CAST(total_cents div n_orders AS BIGINT)")
-    )
+    return _rollup_answer(ROLLUP.load(spark, path))
 
 
 _ROLLUP_STORED_ORACLE = """
@@ -1950,7 +1895,7 @@ def r_rollup_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the whole lifecycle is hash-gated cross-engine (no sampling, unlike
 # approx_percentile).
 _QHIST_BUCKET_CENTS = 1_000_000  # $10k buckets over o_totalprice
-_QHIST_COLS = ["month", "bucket", "n"]
+_QHIST_COLS = ("month", "bucket", "n")
 
 
 def _qhist_partials(orders: DataFrame) -> DataFrame:
@@ -1974,38 +1919,15 @@ def _qhist_merge(partials: DataFrame) -> DataFrame:
     )
 
 
-def _qhist_gen_store(path: str) -> GenStore:
-    return GenStore(
-        path,
-        [
-            TableSpec(
-                name="",
-                columns=tuple(_QHIST_COLS),
-                partition_by=("month",),
-                merge=_qhist_merge,
-            )
-        ],
-    )
+QHIST = Rollup("qhist", _qhist_partials, _qhist_merge, _QHIST_COLS, "month")
 
 
 def qhist_rollup_store(partials: DataFrame, path: str) -> None:
-    missing = [c for c in _QHIST_COLS if c not in partials.columns]
-    if missing:
-        raise ValueError(
-            f"qhist_rollup_store: partials frame is missing {missing}; "
-            "build it with _qhist_partials (month, bucket, n)"
-        )
-    _qhist_gen_store(path).create({"": partials})
+    QHIST.create(partials, path)
 
 
 def qhist_rollup_append(partials: DataFrame, path: str) -> None:
-    missing = [c for c in _QHIST_COLS if c not in partials.columns]
-    if missing:
-        raise ValueError(
-            f"qhist_rollup_append: partials frame is missing {missing}; "
-            "build it with _qhist_partials (month, bucket, n)"
-        )
-    _qhist_gen_store(path).append({"": partials})
+    QHIST.append(partials, path)
 
 
 def qhist_rollup_compact(spark: SparkSession, path: str) -> None:
@@ -2019,15 +1941,7 @@ def qhist_rollup_compact(spark: SparkSession, path: str) -> None:
     batch committed since the last stream_qhist_compact would
     re-materialize its partition and double-count, and later folds
     would mix batch_id- and month-partitioned files in one generation."""
-    store = _qhist_gen_store(path)
-    if "batch_id" in spark.read.parquet(store.data_dir()).columns:
-        raise ValueError(
-            f"qhist_rollup_compact: {path} is a streaming qhist store "
-            "(batch_id-partitioned); use streaming.pipeline."
-            "stream_qhist_compact so replayed micro-batches can't "
-            "double-count folded partials"
-        )
-    store.compact(spark)
+    QHIST.compact(spark, path)
 
 
 def _qhist_quantiles(hist: DataFrame, group: list[str]) -> DataFrame:
@@ -2072,8 +1986,7 @@ def _qhist_quantiles(hist: DataFrame, group: list[str]) -> DataFrame:
 
 def qhist_rollup_serve(spark: SparkSession, path: str) -> DataFrame:
     """Per-month p50/p95 from the stored histograms alone."""
-    g = _qhist_gen_store(path).load(spark)[""]
-    return _qhist_quantiles(g, ["month"])
+    return _qhist_quantiles(QHIST.load(spark, path), ["month"])
 
 
 def qhist_rollup_serve_range(
@@ -2083,12 +1996,9 @@ def qhist_rollup_serve_range(
     histograms — the query per-month quantiles cannot answer (quantiles
     don't merge; histograms do). The BETWEEN prunes to the window's
     month directories."""
-    g = (
-        _qhist_gen_store(path)
-        .load(spark)[""]
-        .filter(F.col("month").between(lo, hi))
+    return _qhist_quantiles(
+        QHIST.load(spark, path).filter(F.col("month").between(lo, hi)), []
     )
-    return _qhist_quantiles(g, [])
 
 
 _QHIST_HIST_DUCK = f"""h AS (

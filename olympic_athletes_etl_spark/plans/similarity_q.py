@@ -1583,13 +1583,7 @@ def ivfpq_index_store(index: DataFrame, path: str) -> None:
 
 
 def ivfpq_index_load(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        return _ivfpq_store(path).load(spark)[""]
-    except (ValueError, FileNotFoundError) as exc:
-        raise ValueError(
-            f"ivfpq_index_load: {path} is not an ivfpq_index_store "
-            f"output ({exc})"
-        ) from exc
+    return _ivfpq_store(path).load(spark)[""]
 
 
 def ivfpq_index_append(
@@ -2218,13 +2212,7 @@ def _knn_graph_gen_store(path: str) -> GenStore:
 def knn_graph_load(spark: SparkSession, path: str) -> DataFrame:
     """Read a graph written by ``knn_graph_store`` back in the exact
     shape ``knn_graph_merge(old_graph=...)`` consumes."""
-    try:
-        return _knn_graph_gen_store(path).load(spark)[""]
-    except (ValueError, FileNotFoundError) as exc:
-        raise ValueError(
-            f"knn_graph_load: {path} is not a knn_graph_store output "
-            f"({exc})"
-        ) from exc
+    return _knn_graph_gen_store(path).load(spark)[""]
 
 
 def _knn_graph_oracle(multiprobe: bool) -> str:

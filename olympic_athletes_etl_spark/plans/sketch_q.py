@@ -31,6 +31,7 @@ from olympic_athletes_etl_spark.operators.sketches import (
     kmv_params,
     kmv_scramble_sql,
 )
+from olympic_athletes_etl_spark.operators.store import Rollup
 from olympic_athletes_etl_spark.plans.registry import query
 from olympic_athletes_etl_spark.plans.tables import load
 
@@ -899,7 +900,6 @@ from olympic_athletes_etl_spark.operators.sketches import (  # noqa: E402
     _HLL_RHO_MAX,
 )
 
-_HLL_ROLLUP_COLS = ["day", "b", "reg"]
 _HLL_RANGE_LO, _HLL_RANGE_HI = "2024-01-10", "2024-01-16"  # 7-day WAU window
 
 
@@ -926,29 +926,9 @@ def _hll_merge(regs: DataFrame) -> DataFrame:
     return regs.groupBy("day", "b").agg(F.max("reg").cast("long").alias("reg"))
 
 
-def _hll_gen_store(path: str):
-    from olympic_athletes_etl_spark.operators.store import GenStore, TableSpec
-
-    return GenStore(
-        path,
-        [
-            TableSpec(
-                name="",
-                columns=tuple(_HLL_ROLLUP_COLS),
-                partition_by=("day",),
-                merge=_hll_merge,
-            )
-        ],
-    )
-
-
-def _check_hll_partials(partials: DataFrame, caller: str) -> None:
-    missing = [c for c in _HLL_ROLLUP_COLS if c not in partials.columns]
-    if missing:
-        raise ValueError(
-            f"{caller}: partials frame is missing {missing}; "
-            "build it with hll_rollup_partials (day, b, reg)"
-        )
+HLL_ROLLUP = Rollup(
+    "hll", hll_rollup_partials, _hll_merge, ("day", "b", "reg"), "day"
+)
 
 
 def hll_rollup_store(partials: DataFrame, path: str) -> None:
@@ -956,31 +936,22 @@ def hll_rollup_store(partials: DataFrame, path: str) -> None:
     range prunes to the window's directories, each holding ≤64-row
     register sets per batch. Generation-versioned (operators/store.py):
     re-storing over an existing path is an atomic snapshot replace."""
-    _check_hll_partials(partials, "hll_rollup_store")
-    _hll_gen_store(path).create({"": partials})
+    HLL_ROLLUP.create(partials, path)
 
 
 def hll_rollup_append(partials: DataFrame, path: str) -> None:
     """Append a batch's partials. Auto-creates the store on a fresh path
     (the streaming ingest's first micro-batch): GenStore.append alone
     requires an existing manifest and would raise FileNotFoundError."""
-    _check_hll_partials(partials, "hll_rollup_append")
-    store = _hll_gen_store(path)
-    store.ensure()
-    store.append({"": partials})
+    HLL_ROLLUP.append(partials, path)
 
 
 def hll_rollup_load(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        g = _hll_gen_store(path).load(spark)[""]
-    except (ValueError, FileNotFoundError) as exc:
-        raise ValueError(
-            f"hll_rollup_load: {path} is not a hll_rollup_store output "
-            f"({exc})"
-        ) from exc
     # the day partition directory may be re-inferred as DATE; the
     # estimator groups and labels on the string form
-    return g.select(F.col("day").cast("string").alias("day"), "b", "reg")
+    return HLL_ROLLUP.load(spark, path).withColumn(
+        "day", F.col("day").cast("string")
+    )
 
 
 def hll_rollup_compact(spark: SparkSession, path: str) -> None:
@@ -991,7 +962,7 @@ def hll_rollup_compact(spark: SparkSession, path: str) -> None:
     stream_rollup_compact: register-max is idempotent, so a checkpoint
     replay re-appending an already-folded batch cannot change any
     served estimate (pinned in test_streaming)."""
-    _hll_gen_store(path).compact(spark)
+    HLL_ROLLUP.compact(spark, path)
 
 
 def _hll_estimate_from_regs(regs: DataFrame, group: list[str]) -> DataFrame:

@@ -1445,20 +1445,6 @@ def _bm25_gen_store(path: str):
     )
 
 
-def _bm25_frames(index: dict[str, DataFrame], caller: str) -> dict[str, DataFrame]:
-    missing = [c for c in _BM25_POSTINGS_COLS if c not in index["postings"].columns]
-    if missing:
-        raise ValueError(
-            f"{caller}: postings frame is missing {missing}; "
-            "build it with bm25_index_build"
-        )
-    return {
-        "postings": index["postings"],
-        "dlen": index["dlen"],
-        "stats": index["stats"],
-    }
-
-
 def bm25_index_store(index: dict[str, DataFrame], path: str) -> None:
     """Persist the index: postings partitioned BY token bucket (the
     serve path prunes to the query terms' buckets at the DIRECTORY
@@ -1468,7 +1454,7 @@ def bm25_index_store(index: dict[str, DataFrame], path: str) -> None:
     One generation manifest spans all three tables (operators/store.py),
     so compaction commits postings + dlen + stats atomically together —
     a crash can't leave merged stats beside unmerged postings."""
-    _bm25_gen_store(path).create(_bm25_frames(index, "bm25_index_store"))
+    _bm25_gen_store(path).create(index)
 
 
 def bm25_index_append(docs_batch: DataFrame, path: str) -> None:
@@ -1480,8 +1466,7 @@ def bm25_index_append(docs_batch: DataFrame, path: str) -> None:
     is nothing stale to rebuild: serving recounts df from the postings
     sliver it reads — the reason this index never needs a
     read-modify-write of history."""
-    frames = _bm25_frames(bm25_index_build(docs_batch), "bm25_index_append")
-    _bm25_gen_store(path).append(frames)
+    _bm25_gen_store(path).append(bm25_index_build(docs_batch))
 
 
 def bm25_index_compact(spark: SparkSession, path: str) -> None:

@@ -34,6 +34,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from olympic_athletes_etl_spark.operators.store import Rollup
+from olympic_athletes_etl_spark.plans.relational import QHIST, ROLLUP
+
 # applyInPandasWithState closures below run in Spark Python workers; a
 # worker that cannot import this package (driver launched from an
 # arbitrary cwd) would die on by-reference unpickling. By-value
@@ -503,70 +506,19 @@ _ROLLUP_STREAMS: dict = {}
 _STREAM_ROLLUP_FOLDED = -1
 
 
-class StreamFoldFamily:
-    """One exactly-once streaming fold family: how a micro-batch reduces
-    to mergeable partial rows, how partial rows merge, and the partial
-    schema (without batch_id). The batch_id-partition + dynamic-
-    overwrite + compaction-high-water-mark machinery is family-agnostic
-    — any NON-idempotent semigroup (counts, sums, histograms) gets
-    exactly-once streaming ingestion by supplying these three pieces;
-    idempotent families (HLL register-max) don't need it at all."""
-
-    def __init__(self, name, partials, merge, columns):
-        self.name = name
-        self.partials = partials  # batch DataFrame -> partial rows
-        self.merge = merge        # partial rows -> one merged row per key
-        self.columns = tuple(columns)
-
-
-def _rollup_family() -> StreamFoldFamily:
-    from olympic_athletes_etl_spark.plans.relational import (
-        _monthly_partials,
-        _rollup_merge,
-    )
-
-    return StreamFoldFamily(
-        "rollup", _monthly_partials, _rollup_merge,
-        ("month", "n_orders", "total_cents"),
-    )
-
-
-def _qhist_family() -> StreamFoldFamily:
-    from olympic_athletes_etl_spark.plans.relational import (
-        _qhist_merge,
-        _qhist_partials,
-    )
-
-    return StreamFoldFamily(
-        "qhist", _qhist_partials, _qhist_merge, ("month", "bucket", "n")
-    )
-
-
-def _stream_fold_store(store_path: str, fam: StreamFoldFamily):
-    from olympic_athletes_etl_spark.operators.store import GenStore, TableSpec
-
-    return GenStore(
-        store_path,
-        [
-            TableSpec(
-                name="",
-                columns=(*fam.columns, "batch_id"),
-                partition_by=("batch_id",),
-            )
-        ],
-    )
-
-
 def stream_fold_batch(
-    batch: DataFrame, batch_id: int, store_path: str, fam: StreamFoldFamily
+    batch: DataFrame, batch_id: int, store_path: str, fam: Rollup
 ) -> None:
     """The generic exactly-once fold body (tests simulate checkpoint
     replays by calling it directly): idempotent fold of one
     micro-batch's partials into its own batch_id partition via dynamic
     partition overwrite — skipping batches at or below the store's
     compaction high-water mark, which are already folded into the
-    reserved partition and must not re-materialize."""
-    store = _stream_fold_store(store_path, fam)
+    reserved partition and must not re-materialize. Any NON-idempotent
+    rollup family (counts, sums, histograms) gets exactly-once streaming
+    ingestion from its one ``Rollup`` declaration; idempotent families
+    (HLL register-max) don't need this machinery at all."""
+    store = fam.stream_at(store_path)
     store.ensure()
     hwm = (store.manifest() or {}).get("hwm")
     if hwm is not None and batch_id <= hwm:
@@ -600,7 +552,7 @@ def stream_fold_batch(
 def rollup_fold_batch(batch: DataFrame, batch_id: int, store_path: str) -> None:
     """stream_rollup_ingest's fold body — stream_fold_batch with the
     (count, sum) monthly-rollup family."""
-    stream_fold_batch(batch, batch_id, store_path, _rollup_family())
+    stream_fold_batch(batch, batch_id, store_path, ROLLUP)
 
 
 def _checkpoint_committed_hwm(checkpoint_dir: str) -> int | None:
@@ -640,14 +592,14 @@ def stream_rollup_compact(
     mis-classifies) — stream_rollup_ingest registers its queries so the
     check is exact; across processes, single-maintenance-writer
     discipline applies as with every store family."""
-    stream_fold_compact(spark, store_path, checkpoint_dir, _rollup_family())
+    stream_fold_compact(spark, store_path, checkpoint_dir, ROLLUP)
 
 
 def stream_fold_compact(
     spark: SparkSession,
     store_path: str,
     checkpoint_dir: str,
-    fam: StreamFoldFamily,
+    fam: Rollup,
 ) -> None:
     """The generic replay-safe streaming-store compactor (see
     stream_rollup_compact for the protocol): fold committed batches +
@@ -666,7 +618,7 @@ def stream_fold_compact(
     hwm = _checkpoint_committed_hwm(checkpoint_dir)
     if hwm is None:
         return  # nothing committed yet → nothing safe to fold
-    store = _stream_fold_store(store_path, fam)
+    store = fam.stream_at(store_path)
     prev_hwm = (store.manifest() or {}).get("hwm")
     if prev_hwm is not None and hwm < prev_hwm:
         raise RuntimeError(
@@ -702,14 +654,14 @@ def stream_qhist_ingest(
     same exactly-once machinery as stream_rollup_ingest — histogram
     counts are a non-idempotent semigroup, so they need the dynamic-
     overwrite + high-water-mark protocol, and they get it from the
-    shared StreamFoldFamily plumbing. Serve with
+    shared stream_fold_batch plumbing. Serve with
     plans.relational.qhist_rollup_serve/serve_range over the store
     (the batch_id column is ignored by the (month, bucket) merge);
     compact between runs with stream_qhist_compact."""
     import os
 
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        stream_fold_batch(batch, batch_id, store_path, _qhist_family())
+        stream_fold_batch(batch, batch_id, store_path, QHIST)
 
     q = (
         orders.writeStream.foreachBatch(fold_batch)
@@ -725,7 +677,7 @@ def stream_qhist_compact(
     spark: SparkSession, store_path: str, checkpoint_dir: str
 ) -> None:
     """stream_fold_compact with the quantile-histogram family."""
-    stream_fold_compact(spark, store_path, checkpoint_dir, _qhist_family())
+    stream_fold_compact(spark, store_path, checkpoint_dir, QHIST)
 
 
 def dedup_within_watermark(

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import unicodedata
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -162,34 +163,43 @@ def test_qhist_batch_compactor_refuses_streaming_layout(spark, sf_dir, tmp_path)
     the same guard rollup_compact has had since r9."""
     import pytest
 
-    from olympic_athletes_etl_spark.plans.relational import qhist_rollup_compact
-    from olympic_athletes_etl_spark.streaming.pipeline import (
-        _qhist_family,
-        stream_fold_batch,
+    from olympic_athletes_etl_spark.plans.relational import (
+        QHIST,
+        qhist_rollup_compact,
     )
+    from olympic_athletes_etl_spark.streaming.pipeline import stream_fold_batch
 
     orders = _orders(spark, sf_dir)
     store = str(tmp_path / "qhist")
-    stream_fold_batch(orders, 0, store, _qhist_family())
+    stream_fold_batch(orders, 0, store, QHIST)
     with pytest.raises(ValueError, match="stream_qhist_compact"):
         qhist_rollup_compact(spark, store)
 
 
-def test_hll_rollup_store_append_autocreates(spark, sf_dir, tmp_path):
-    """An append on a fresh path auto-creates the store: the streaming
-    ingest's first micro-batch appends to a path no store has written
-    yet, and GenStore.append alone would raise FileNotFoundError."""
-    from olympic_athletes_etl_spark.plans.sketch_q import (
-        hll_rollup_append,
-        hll_rollup_load,
-        hll_rollup_partials,
-    )
+@pytest.mark.parametrize(
+    "module, append, partials, serve, table",
+    [
+        ("relational", "rollup_append", "_monthly_partials", "rollup_serve", "orders"),
+        ("relational", "qhist_rollup_append", "_qhist_partials", "qhist_rollup_serve", "orders"),
+        ("sketch_q", "hll_rollup_append", "hll_rollup_partials", "hll_rollup_serve", "events"),
+    ],
+    ids=["rollup_append", "qhist_rollup_append", "hll_rollup_append"],
+)
+def test_hll_rollup_store_append_autocreates(
+    spark, sf_dir, tmp_path, module, append, partials, serve, table
+):
+    """An append on a fresh path auto-creates the store, for every rollup
+    family: the streaming ingest's first micro-batch appends to a path no
+    store has written yet, and GenStore.append alone would raise
+    FileNotFoundError."""
+    import importlib
+
     from olympic_athletes_etl_spark.plans.tables import load as load_t
 
-    events = load_t(spark, sf_dir, "events")
-    path = str(tmp_path / "hll")
-    hll_rollup_append(hll_rollup_partials(events), path)
-    assert hll_rollup_load(spark, path).count() > 0
+    mod = importlib.import_module(f"olympic_athletes_etl_spark.plans.{module}")
+    path = str(tmp_path / "store")
+    getattr(mod, append)(getattr(mod, partials)(load_t(spark, sf_dir, table)), path)
+    assert getattr(mod, serve)(spark, path).count() > 0
 
 
 def test_bpe_encode_auto_dispatch_and_equality(spark, sf_dir):

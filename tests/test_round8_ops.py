@@ -88,7 +88,7 @@ def test_knn_graph_store_rejects_rounded_graph(spark, sf_dir, tmp_path):
 def test_knn_graph_load_rejects_foreign_parquet(spark, sf_dir, tmp_path):
     path = str(tmp_path / "not_a_graph")
     _emb_double(spark, sf_dir).select("vec_id").write.parquet(path)
-    with pytest.raises(ValueError, match="knn_graph_store"):
+    with pytest.raises(ValueError, match="no _STORE manifest"):
         knn_graph_load(spark, path)
 
 
@@ -333,7 +333,7 @@ def test_ivfpq_index_load_rejects_foreign_parquet(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "not_an_index")
     _emb_double(spark, sf_dir).select("vec_id").write.parquet(path)
-    with pytest.raises(ValueError, match="ivfpq_index_store"):
+    with pytest.raises(ValueError, match="no _STORE manifest"):
         ivfpq_index_load(spark, path)
 
 
@@ -408,7 +408,7 @@ def test_lsh_postings_store_rejects_non_bands(spark, sf_dir, tmp_path):
     from olympic_athletes_etl_spark.plans.dedup_q import lsh_postings_store
     from olympic_athletes_etl_spark.plans.tables import load
 
-    with pytest.raises(ValueError, match="_minhash_bands"):
+    with pytest.raises(ValueError, match="missing contract columns"):
         lsh_postings_store(
             load(spark, sf_dir, "documents"), str(tmp_path / "bad")
         )
@@ -420,7 +420,7 @@ def test_lsh_postings_load_rejects_foreign_parquet(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "not_postings")
     load(spark, sf_dir, "documents").select("doc_id").write.parquet(path)
-    with pytest.raises(ValueError, match="lsh_postings_store"):
+    with pytest.raises(ValueError, match="no _STORE manifest"):
         lsh_postings_load(spark, path)
 
 

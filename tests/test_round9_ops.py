@@ -578,17 +578,18 @@ class TestRollupStore:
         ), txt[:2000]
         assert df.count() == 12
 
-    def test_store_rejects_wrong_frame(self, spark):
+    def test_store_rejects_wrong_frame(self, spark, tmp_path):
         from olympic_athletes_etl_spark.plans.relational import (
             rollup_append,
             rollup_store,
         )
 
         bad = spark.createDataFrame([("x", 1)], "month string, n_orders long")
-        with pytest.raises(ValueError, match="total_cents"):
-            rollup_store(bad, "/tmp/nope")
-        with pytest.raises(ValueError, match="total_cents"):
-            rollup_append(bad, "/tmp/nope")
+        path = tmp_path / "nope"
+        for write in (rollup_store, rollup_append):
+            with pytest.raises(ValueError, match="total_cents"):
+                write(bad, str(path))
+            assert not path.exists()
 
 
 # --------------------------------------------------------------------------
@@ -695,7 +696,7 @@ class TestBM25Store:
         txt = df._jdf.queryExecution().executedPlan().toString()
         assert re.search(r"PartitionFilters: \[tbucket#\d+ IN \(", txt), txt[:2000]
 
-    def test_store_rejects_wrong_frame(self, spark):
+    def test_store_rejects_wrong_frame(self, spark, tmp_path):
         from olympic_athletes_etl_spark.plans.textstats import bm25_index_store
 
         bad = {
@@ -703,8 +704,10 @@ class TestBM25Store:
             "dlen": None,
             "stats": None,
         }
+        path = tmp_path / "nope"
         with pytest.raises(ValueError, match="tbucket"):
-            bm25_index_store(bad, "/tmp/nope")
+            bm25_index_store(bad, str(path))
+        assert not path.exists()
 
 
 # --------------------------------------------------------------------------
@@ -815,12 +818,18 @@ class TestHLLRollup:
         ).collect()[0]["est_distinct"]
         assert df.collect()[0]["est_distinct"] == want
 
-    def test_store_rejects_wrong_frame(self, spark):
-        from olympic_athletes_etl_spark.plans.sketch_q import hll_rollup_store
+    def test_store_rejects_wrong_frame(self, spark, tmp_path):
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            hll_rollup_append,
+            hll_rollup_store,
+        )
 
         bad = spark.createDataFrame([("x", 1)], "day string, b long")
-        with pytest.raises(ValueError, match="reg"):
-            hll_rollup_store(bad, "/tmp/nope")
+        path = tmp_path / "nope"
+        for write in (hll_rollup_store, hll_rollup_append):
+            with pytest.raises(ValueError, match="reg"):
+                write(bad, str(path))
+            assert not path.exists()
 
 
 # --------------------------------------------------------------------------

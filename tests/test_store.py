@@ -186,6 +186,29 @@ def test_contract_enforced_on_create_and_load(spark, sf_dir, tmp_path):
         store.create({"": orders})
     with pytest.raises(FileNotFoundError, match="_STORE"):
         resolve_data_dir(str(tmp_path / "nope"))
+    with pytest.raises(ValueError, match="nope has no _STORE manifest"):
+        GenStore(str(tmp_path / "nope"), [_SPEC]).load(spark)
+
+
+def test_rejected_multi_table_append_writes_nothing(spark, sf_dir, tmp_path):
+    """Every table's frame is checked before any table is written: an
+    append whose SECOND frame breaks the contract must not have appended
+    the first (a BM25 append with a bad dlen frame used to land its
+    postings), and must release the writer lock."""
+    partials = _partials(_orders(spark, sf_dir))
+    store = GenStore(
+        str(tmp_path / "s"),
+        [
+            TableSpec(name="rollup", columns=_SPEC.columns),
+            TableSpec(name="totals", columns=("n_orders",)),
+        ],
+    )
+    store.create({"rollup": partials, "totals": partials})
+    before = store.load(spark)["rollup"].count()
+    with pytest.raises(ValueError, match="'totals'.*n_orders"):
+        store.append({"rollup": partials, "totals": partials.drop("n_orders")})
+    assert store.load(spark)["rollup"].count() == before
+    assert not os.path.exists(os.path.join(store.path, "_LOCK"))
 
 
 def test_random_lifecycles_with_crashes_always_serve_model(

@@ -708,7 +708,7 @@ def test_stream_rollup_compact_enforces_replay_high_water_mark(
 def test_stream_qhist_ingest_matches_batch_and_replay_safe(
     spark, sf_dir, tmp_path
 ):
-    """The generalized exactly-once fold (StreamFoldFamily) applied to
+    """The generalized exactly-once fold (stream_fold_batch) applied to
     the round-10 quantile-histogram family: two micro-batches of orders
     fold (month, bucket) counts into batch_id partitions; the served
     p50/p95 equal the one-shot batch build. After stream_qhist_compact,
@@ -717,6 +717,7 @@ def test_stream_qhist_ingest_matches_batch_and_replay_safe(
     rollup-specific)."""
     from olympic_athletes_etl_spark.operators.store import read_manifest
     from olympic_athletes_etl_spark.plans.relational import (
+        QHIST,
         _qhist_partials,
         qhist_rollup_serve,
         qhist_rollup_serve_range,
@@ -724,7 +725,6 @@ def test_stream_qhist_ingest_matches_batch_and_replay_safe(
     )
     from olympic_athletes_etl_spark.plans.tables import load
     from olympic_athletes_etl_spark.streaming.pipeline import (
-        _qhist_family,
         stream_fold_batch,
         stream_qhist_compact,
         stream_qhist_ingest,
@@ -766,7 +766,7 @@ def test_stream_qhist_ingest_matches_batch_and_replay_safe(
         tuple(r) for r in qhist_rollup_serve(spark, store).collect()
     ) == want
     # replay of batch 0 after compaction: no-op under the hwm guard
-    stream_fold_batch(orders.filter(b1), 0, store, _qhist_family())
+    stream_fold_batch(orders.filter(b1), 0, store, QHIST)
     assert sorted(
         tuple(r) for r in qhist_rollup_serve(spark, store).collect()
     ) == want
