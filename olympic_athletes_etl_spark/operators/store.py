@@ -295,9 +295,9 @@ class GenStore:
     def _require(self) -> dict:
         man = self.manifest()
         if man is None:
-            raise FileNotFoundError(
-                f"{self.path} has no {MANIFEST_NAME} manifest; create the "
-                "store first"
+            raise ValueError(
+                f"{self.path} has no {MANIFEST_NAME} manifest; not a "
+                "GenStore (write it with the family's store function)"
             )
         return man
 
@@ -400,13 +400,7 @@ class GenStore:
         ``keep_last > 1``), failing any still-unmaterialized action with
         missing-file errors — resolve-then-act promptly, or size
         ``keep_last`` to the longest reader you run concurrently."""
-        man = self.manifest()
-        if man is None:
-            raise ValueError(
-                f"{self.path} has no {MANIFEST_NAME} manifest; not a "
-                "GenStore (write it with the family's store function)"
-            )
-        root = gen_dir(self.path, man["gen"])
+        root = gen_dir(self.path, self._require()["gen"])
         return {
             t.name: self._contract(
                 t, spark.read.parquet(_subdir(root, t.name)), "stored data"
@@ -559,8 +553,8 @@ class Rollup:
         if any(e.startswith("batch_id=") for e in os.listdir(store.data_dir())):
             raise ValueError(
                 f"{path} is a streaming {self.name} store (batch_id-"
-                f"partitioned); use streaming.pipeline.stream_{self.name}"
-                "_compact so replayed micro-batches can't double-count "
-                "folded partials"
+                "partitioned); use streaming.pipeline.stream_fold_compact "
+                "so replayed micro-batches can't double-count folded "
+                "partials"
             )
         store.compact(spark)

@@ -942,7 +942,7 @@ def hll_rollup_store(partials: DataFrame, path: str) -> None:
 def hll_rollup_append(partials: DataFrame, path: str) -> None:
     """Append a batch's partials. Auto-creates the store on a fresh path
     (the streaming ingest's first micro-batch): GenStore.append alone
-    requires an existing manifest and would raise FileNotFoundError."""
+    requires an existing manifest and would raise ValueError."""
     HLL_ROLLUP.append(partials, path)
 
 

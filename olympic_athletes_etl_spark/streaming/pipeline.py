@@ -35,7 +35,6 @@ from pyspark.sql.types import (
 )
 
 from olympic_athletes_etl_spark.operators.store import Rollup
-from olympic_athletes_etl_spark.plans.relational import QHIST, ROLLUP
 
 # applyInPandasWithState closures below run in Spark Python workers; a
 # worker that cannot import this package (driver launched from an
@@ -552,6 +551,8 @@ def stream_fold_batch(
 def rollup_fold_batch(batch: DataFrame, batch_id: int, store_path: str) -> None:
     """stream_rollup_ingest's fold body — stream_fold_batch with the
     (count, sum) monthly-rollup family."""
+    from olympic_athletes_etl_spark.plans.relational import ROLLUP
+
     stream_fold_batch(batch, batch_id, store_path, ROLLUP)
 
 
@@ -592,6 +593,8 @@ def stream_rollup_compact(
     mis-classifies) — stream_rollup_ingest registers its queries so the
     check is exact; across processes, single-maintenance-writer
     discipline applies as with every store family."""
+    from olympic_athletes_etl_spark.plans.relational import ROLLUP
+
     stream_fold_compact(spark, store_path, checkpoint_dir, ROLLUP)
 
 
@@ -660,6 +663,8 @@ def stream_qhist_ingest(
     compact between runs with stream_qhist_compact."""
     import os
 
+    from olympic_athletes_etl_spark.plans.relational import QHIST
+
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
         stream_fold_batch(batch, batch_id, store_path, QHIST)
 
@@ -677,6 +682,8 @@ def stream_qhist_compact(
     spark: SparkSession, store_path: str, checkpoint_dir: str
 ) -> None:
     """stream_fold_compact with the quantile-histogram family."""
+    from olympic_athletes_etl_spark.plans.relational import QHIST
+
     stream_fold_compact(spark, store_path, checkpoint_dir, QHIST)
 
 

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from tools.perfbench_ab import end_to_end_metrics, summarize
+from tools.perfbench_ab import end_to_end_metrics, summarize, workload_names
 
 
 def _run(pair, side, failed=0, **metrics):
@@ -50,7 +50,8 @@ def test_summary_skips_crashed_runs():
     assert s["crashed"] == {"parent": 0, "change": 1}
 
 
-def test_metrics_come_from_benchmark_json():
+def test_metrics_and_workloads_come_from_benchmark_json():
     metrics = end_to_end_metrics()
     assert metrics and set(metrics.values()) <= {"lower", "higher"}
     assert "pass_cpu_s" in metrics
+    assert {"composites", "store"} <= set(workload_names())

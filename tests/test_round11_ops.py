@@ -159,8 +159,9 @@ def test_stream_fold_batch_warns_on_replay_skip(spark, sf_dir, tmp_path):
 def test_qhist_batch_compactor_refuses_streaming_layout(spark, sf_dir, tmp_path):
     """qhist_rollup_compact on a stream_qhist store would merge away the
     batch_id partitions WITHOUT raising the hwm (replay double-counts,
-    mixed layout). It must refuse and point at stream_qhist_compact —
-    the same guard rollup_compact has had since r9."""
+    mixed layout). It must refuse and point at the streaming compactor
+    (stream_fold_compact) — the same guard rollup_compact has had since
+    r9."""
     import pytest
 
     from olympic_athletes_etl_spark.plans.relational import (
@@ -172,7 +173,7 @@ def test_qhist_batch_compactor_refuses_streaming_layout(spark, sf_dir, tmp_path)
     orders = _orders(spark, sf_dir)
     store = str(tmp_path / "qhist")
     stream_fold_batch(orders, 0, store, QHIST)
-    with pytest.raises(ValueError, match="stream_qhist_compact"):
+    with pytest.raises(ValueError, match="stream_fold_compact"):
         qhist_rollup_compact(spark, store)
 
 
@@ -191,7 +192,7 @@ def test_hll_rollup_store_append_autocreates(
     """An append on a fresh path auto-creates the store, for every rollup
     family: the streaming ingest's first micro-batch appends to a path no
     store has written yet, and GenStore.append alone would raise
-    FileNotFoundError."""
+    ValueError."""
     import importlib
 
     from olympic_athletes_etl_spark.plans.tables import load as load_t

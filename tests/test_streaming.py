@@ -666,7 +666,7 @@ def test_stream_rollup_compact_enforces_replay_high_water_mark(
     want = sorted(tuple(r) for r in rollup_serve(spark, store).collect())
 
     # the BATCH compactor refuses the streaming (batch_id) layout
-    with pytest.raises(ValueError, match="stream_rollup_compact"):
+    with pytest.raises(ValueError, match="stream_fold_compact"):
         rollup_compact(spark, store)
 
     stream_rollup_compact(spark, store, ckpt)

@@ -1,14 +1,14 @@
 """Interleaved perfbench A/B: a parent git ref against this checkout.
 
-    python tools/perfbench_ab.py --name NAME [--parent REF] [--pairs N] \\
-        [--workloads composites store]
+    python tools/perfbench_ab.py --name NAME [--parent REF] [--pairs N]
 
 The parent ref is extracted with ``git archive`` into a temporary
 directory (under ``$TMPDIR``; removed when the A/B ends, however it
 ends); the change side is this checkout's working tree.  For each
 workload, pair i runs ``perfbench/run.py --seed i+1`` once on each side,
 the parent first on even i and the change first on odd i, so a drift in
-the host's speed lands on both sides alike.
+the host's speed lands on both sides alike.  Every workload that this
+checkout's BENCHMARK.json declares is run.
 
 Every run's end-to-end metrics (BENCHMARK.json ``end_to_end``) and its
 ``failed`` count are written to ``AB_<NAME>.json`` after each run, so an
@@ -31,11 +31,19 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _benchmark() -> dict:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        return json.load(fh)
+
+
 def end_to_end_metrics() -> dict[str, str]:
     """{metric: "lower" | "higher"} from this checkout's BENCHMARK.json."""
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)
-    return {m["name"]: m["better"] for m in spec["end_to_end"]}
+    return {m["name"]: m["better"] for m in _benchmark()["end_to_end"]}
+
+
+def workload_names() -> list[str]:
+    """The workloads this checkout's BENCHMARK.json declares."""
+    return [w["name"] for w in _benchmark()["workloads"]]
 
 
 def summarize(runs: list[dict], metrics: dict[str, str]) -> dict:
@@ -107,7 +115,6 @@ def main(argv: list[str]) -> int:
     p.add_argument("--name", required=True, help="writes AB_<name>.json")
     p.add_argument("--parent", default="HEAD", help="git ref of the parent side")
     p.add_argument("--pairs", type=int, default=10)
-    p.add_argument("--workloads", nargs="+", default=["composites", "store"])
     args = p.parse_args(argv)
 
     sha = subprocess.run(
@@ -136,7 +143,7 @@ def main(argv: list[str]) -> int:
             stdout=subprocess.DEVNULL, check=True,
         )
         checkouts = {"parent": parent_dir, "change": ROOT}
-        for workload in args.workloads:
+        for workload in workload_names():
             runs: list[dict] = []
             entry = record["workloads"][workload] = {
                 "runs": runs, "summary": summarize(runs, metrics)
