@@ -95,44 +95,42 @@ def connected_components(
     it RAISES rather than silently returning partial labels (the
     pre-round-6 behavior with the old default of 20 — a >20-diameter
     component would have come back split into wrong sub-components).
+
+    ``sym`` holds both directions of every edge plus one self-loop per
+    vertex, so a vertex's own label arrives through the same join as
+    its neighbors' and a round is one join and one aggregate:
+    ``min(component)`` over the rows of ``a`` is the new label, and the
+    same min over the self-loop row alone is the previous one. Every
+    label starts as its own vertex, so round 1 needs no join at all:
+    it is ``sym.groupBy(a).min(b)``.
     """
+    # one scan of the (possibly expensively derived) edge input
+    ends = [(src, dst), (dst, src), (src, src), (dst, dst)]
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(
+            F.explode(
+                F.array(
+                    *[F.struct(F.col(x).alias("a"), F.col(y).alias("b")) for x, y in ends]
+                )
+            ).alias("e")
+        )
+        .select("e.a", "e.b")
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select(F.col("a").alias("vertex"))
-        .dropDuplicates()
-        .withColumn("component", F.col("vertex"))
-    )
-    prev_ckpt = labels
+    rows = sym.withColumn("component", F.col("b"))
+    labels = None
     for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["vertex"])
-            .groupBy(F.col("a").alias("vertex"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
         # The fixpoint probe rides the round's OWN checkpoint
-        # materialization: count(label changed) is collected as an
-        # observed metric during the checkpoint job, so convergence
-        # detection costs no extra job at all (r13 carried the prev
-        # label through the checkpoint and paid one probe-scan job per
-        # round — and 2+ jobs on the converged round, where the
-        # limit(1).count() CollectLimit escalates through every
-        # partition batch before finding nothing). The checkpoint is
-        # also one column NARROWER: prev is consumed by the metric
-        # below the ``keep`` projection and never materialized. Labels
-        # are bit-identical — CollectMetrics passes rows through
-        # untouched.
+        # materialization: count(label changed) is an observed metric
+        # of the checkpoint job, and prev is consumed below the ``keep``
+        # projection, never materialized.
         new_ckpt, got = _observed_checkpoint(
-            labels.join(neighbor_min, on="vertex", how="left").select(
-                "vertex",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                F.col("component").alias("prev"),
+            rows.groupBy(F.col("a").alias("vertex")).agg(
+                F.min("component").alias("component"),
+                F.min(
+                    F.when(F.col("a") == F.col("b"), F.col("component"))
+                ).alias("prev"),
             ),
             [
                 F.count(
@@ -141,11 +139,12 @@ def connected_components(
             ],
             keep=["vertex", "component"],
         )
-        _release_checkpoint(prev_ckpt)  # superseded — keep ONE label table
-        prev_ckpt = new_ckpt
+        if labels is not None:
+            _release_checkpoint(labels)  # superseded — keep ONE label table
         labels = new_ckpt
         if got["changed"] == 0:
             break
+        rows = sym.join(labels.withColumnRenamed("vertex", "b"), "b")
     else:
         raise RuntimeError(
             f"connected_components: labels still changing after "

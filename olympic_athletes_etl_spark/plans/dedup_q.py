@@ -73,30 +73,53 @@ _TOKHASH_DUCK = (
 )
 
 
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, hs) — each document's distinct hashed word bigrams as one
+    array, from any frame with (doc_id, text)."""
+    return docs.select(
+        "doc_id", F.expr(_TOKHASH_SPARK).alias("th")
+    ).select("doc_id", F.expr(_BIGRAM_H_SPARK).alias("hs"))
+
+
 def shingle_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, h) — distinct hashed word bigrams per document, from any
     frame with (doc_id, text). Frame-based so streaming micro-batches
     (streaming/pipeline.py:stream_neardup_screen) reuse the exact
-    signature definition the batch queries and oracles pin."""
+    signature definition the batch queries and oracles pin.
+
+    Explodes the bigram expression itself, never shingle_sets' ``hs``
+    column: over a column, Catalyst infers ``size(hs) > 0`` from the
+    explode and pushes it below both projections, inlining the
+    tokenizer into every ``element_at`` of the bigram lambda (measured
+    0.7 s -> 34 s on a tier-1 test at sf0.001). A checkpointed ``hs``
+    (d_neardup_pipeline) has no projection left to inline."""
     return docs.select(
         "doc_id", F.expr(_TOKHASH_SPARK).alias("th")
     ).select("doc_id", F.explode(F.expr(_BIGRAM_H_SPARK)).alias("h"))
 
 
+def _spread_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` table spread_on doc_id (tables.spread, guide
+    §2.5): the bench layout's single-row-group file would pin the
+    tokenize+hash derivation to ONE populated scan task for every
+    consumer; a no-op on any layout that splits."""
+    return load(spark, sf_dir, "documents", spread_on="doc_id")
+
+
 def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h) over the ``documents`` table — see shingle_hashes.
 
-    spread_on doc_id (tables.spread, guide §2.5): the bench layout's
-    single-row-group file would pin the tokenize+hash+explode derivation
-    to ONE populated scan task for every consumer; a no-op on any layout
-    that splits. Multi-consumer plans (d_ngram_jaccard reads this 4×)
-    also get the scan deduplicated via ReuseExchange on the identical
-    repartition subtree. Layout-invariance: every consumer aggregates
-    exactly (counts, integer min-hashes, ±1 bit votes) or joins on
-    set-shaped output — no result bit depends on partitioning."""
-    return shingle_hashes(
-        load(spark, sf_dir, "documents", spread_on="doc_id")
-    )
+    Multi-consumer plans (d_ngram_jaccard reads this 4×) share the
+    spread's exchange via ReuseExchange, but NOT the tokenize projection
+    above it: every consumer re-tokenizes above the shared shuffle read
+    (a verify + cluster plan reading this frame 3× tokenized in 4
+    places of its final sf0.01 plan). A plan that reads the shingles
+    more than once and can afford one eager job materializes
+    shingle_sets instead (d_neardup_pipeline). Layout-invariance: every
+    consumer aggregates exactly (counts, integer min-hashes, ±1 bit
+    votes) or joins on set-shaped output — no result bit depends on
+    partitioning."""
+    return shingle_hashes(_spread_documents(spark, sf_dir))
 
 
 _SHINGLE_HASHES_DUCK = f"""
@@ -334,7 +357,13 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (shingle) then (band, sig0, sig1); the band join only ever
     compares docs inside a bucket — the whole point of LSH at scale.
     Candidates feed d_ngram_jaccard-style verification in production."""
-    bands = _minhash_bands(_doc_shingle_hashes(spark, sf_dir))
+    return _band_pairs(_minhash_bands(_doc_shingle_hashes(spark, sf_dir)))
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """DISTINCT (doc_a, doc_b), doc_a < doc_b: the docs of ``bands``
+    (_minhash_bands rows) sharing any (band, sig0, sig1) bucket — the
+    band self-join of d_minhash_lsh and d_neardup_pipeline."""
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -995,13 +1024,19 @@ def d_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         MinHash-LSH candidates  →  exact-Jaccard verify  →  clusters
 
-    1. Candidates from d_minhash_lsh's banded signatures — the only
-       pair-generating join, equi-keyed on (band, sig0, sig1).
+    0. Each doc's distinct shingle-hash set (shingle_sets: an array of
+       8-byte ints) is tokenized ONCE, into one eager localCheckpoint
+       of (doc_id, hs); both later stages read it, so tokenizing runs
+       in one stage instead of one per consumer (set once, intersect
+       many — the shape of "Highly Efficient String Similarity Search
+       and Join over Compressed Indexes", ICDE 2022).
+    1. Candidates from d_minhash_lsh's banded signatures over
+       explode(hs) — the only pair-generating join (_band_pairs),
+       equi-keyed on (band, sig0, sig1).
     2. Verification computes TRUE bigram Jaccard on candidates only:
-       each doc's distinct shingle-hash set is collected once (array of
-       8-byte ints), candidate pairs fetch the two sets by doc_id and
-       verify in-row via array_intersect — per-pair cost is |set a| +
-       |set b|, total cost linear in candidates, never in n².
+       candidate pairs fetch the two sets by doc_id and verify in-row
+       via array_intersect — per-pair cost is |set a| + |set b|, total
+       cost linear in candidates, never in n².
     3. Verified pairs (jaccard ≥ 0.5) feed iterative connected
        components (operators/graph.py); every document gets a cluster
        id (min member id), singletons cluster as themselves.
@@ -1012,14 +1047,17 @@ def d_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the identical pipeline (shared-count Jaccard ≡
     array_intersect on distinct sets; recursive-CTE closure ≡ min-label
     propagation)."""
-    from olympic_athletes_etl_spark.operators.graph import dedup_clusters
+    from olympic_athletes_etl_spark.operators.graph import (
+        _release_checkpoint,
+        dedup_clusters,
+    )
 
     docs = load(spark, sf_dir, "documents")
-    cand = d_minhash_lsh(spark, sf_dir)
-    sets = (
-        _doc_shingle_hashes(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
+    sets = shingle_sets(_spread_documents(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
+    cand = _band_pairs(
+        _minhash_bands(sets.select("doc_id", F.explode("hs").alias("h")))
     )
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
@@ -1031,7 +1069,10 @@ def d_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= _VERIFY_JACCARD)
         .select("doc_a", "doc_b")
     )
-    return dedup_clusters(docs, verified, id_col="doc_id")
+    # the labels are a self-contained checkpoint once CC returns
+    clusters = dedup_clusters(docs, verified, id_col="doc_id")
+    _release_checkpoint(sets)
+    return clusters
 
 
 # --------------------------------------------------------------------------

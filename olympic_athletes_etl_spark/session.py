@@ -14,6 +14,14 @@ expressed so the same code runs unchanged on a multi-executor cluster:
 - Arrow enabled for any pandas-UDF path (the slow-path escape hatch).
 - CORRECTED time-parser policy (we deliberately avoid the reference's
   LEGACY conf — see SURVEY.md §4, data_clean_glue.py:604).
+- Python workers start from ``worker_daemon``, which takes the archives
+  (pyspark.zip, py4j, the spark-core jar) off their import path when an
+  unpacked pyspark of the same version is installed: each task's
+  ``importlib.invalidate_caches()`` then re-reads no archive. The
+  package's parent directory joins the workers' ``PYTHONPATH`` so the
+  daemon imports from any working directory. A session a caller builds
+  itself for ``__spark_entry__`` keeps pyspark's daemon; every query
+  runs on both.
 """
 
 from __future__ import annotations
@@ -21,6 +29,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -41,6 +51,8 @@ def get_spark(
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -594,6 +594,24 @@ def test_cc_star_deep_path_converges_in_log_rounds(spark):
     assert set(got.values()) == {0}
 
 
+def _union_find_labels(edges) -> dict:
+    """{vertex: min member of its component} for every endpoint of
+    ``edges`` — the pure-Python reference for both CC forms."""
+    parent = {v: v for e in edges for v in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
 def test_cc_star_matches_reference_on_random_graphs(spark):
     import random
 
@@ -604,29 +622,30 @@ def test_cc_star_matches_reference_on_random_graphs(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(45)
         ]
         edges = [e for e in edges if e[0] != e[1]]
-        # python reference: union-find
-        parent = list(range(n))
+        assert _cc_star_labels(spark, edges) == _union_find_labels(edges), seed
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
 
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = {v for e in edges for v in e}
-        want = {v: find(v) for v in sorted(touched)}
-        # canonical min-member labels
-        from collections import defaultdict
+def test_label_cc_matches_reference_on_random_graphs(spark):
+    """Label CC (self-loop rows, one join + one aggregate per round)
+    against union-find, on inputs that carry self-loops — including a
+    vertex whose only edge is its own loop — and duplicate edges in
+    both orientations."""
+    import random
 
-        groups = defaultdict(list)
-        for v, r in want.items():
-            groups[find(r)].append(v)
-        want = {v: min(g) for g in groups.values() for v in g}
-        assert _cc_star_labels(spark, edges) == want, seed
+    for seed in (3, 19, 58):
+        rng = random.Random(seed)
+        n = 50
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
+        edges += [(v, v) for v in rng.sample(range(n), 5)]
+        edges += [(n, n)]
+        edges += [(b, a) for a, b in rng.sample(edges, 10)]
+        edges += rng.sample(edges, 10)
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {
+            r["vertex"]: r["component"]
+            for r in connected_components(df).collect()
+        }
+        assert got == _union_find_labels(edges), seed
 
 
 def test_cc_star_empty_graph(spark):
@@ -747,6 +766,18 @@ def test_iterative_operators_do_not_accumulate_checkpoints(spark):
     core = kcore(edges, k=2)  # a path has no 2-core: full 30-round peel
     assert core.count() == 0
     assert _n_persistent(spark) - before <= 2
+
+
+def test_neardup_pipeline_releases_its_shingle_sets(spark, sf_dir):
+    """d_neardup_pipeline checkpoints each doc's shingle set once and
+    releases it before returning: one call leaves at most one new
+    persistent RDD, the CC labels its answer reads."""
+    from olympic_athletes_etl_spark.plans.dedup_q import d_neardup_pipeline
+
+    before = _n_persistent(spark)
+    clusters = d_neardup_pipeline(spark, sf_dir)
+    assert clusters.count() > 0
+    assert _n_persistent(spark) - before <= 1
 
 
 def test_observed_checkpoint_metric_survives_keep_projection(spark):

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from tools.perfbench_ab import end_to_end_metrics, summarize, workload_names
+import json
+
+from tools.perfbench_ab import end_to_end_metrics, op_cpu_s, summarize, workload_names
 
 
 def _run(pair, side, failed=0, **metrics):
@@ -55,3 +57,13 @@ def test_metrics_and_workloads_come_from_benchmark_json():
     assert metrics and set(metrics.values()) <= {"lower", "higher"}
     assert "pass_cpu_s" in metrics
     assert {"composites", "store"} <= set(workload_names())
+
+
+def test_op_cpu_is_the_median_over_a_records_passes(tmp_path):
+    record = tmp_path / "run-composites-1.json"
+    record.write_text(json.dumps({"pass_ops": [
+        [["km_fit", 0.5, 1.0], ["nd", 0.9, 3.0]],
+        [["nd", 0.8, 2.0], ["km_fit", 0.4, 2.0]],
+        [["km_fit", 0.6, 4.0], ["nd", 1.0, None]],
+    ]}))
+    assert op_cpu_s(str(record)) == {"op_cpu_s.km_fit": 2.0, "op_cpu_s.nd": 2.5}

@@ -10,11 +10,13 @@ the parent first on even i and the change first on odd i, so a drift in
 the host's speed lands on both sides alike.  Every workload that this
 checkout's BENCHMARK.json declares is run.
 
-Every run's end-to-end metrics (BENCHMARK.json ``end_to_end``) and its
-``failed`` count are written to ``AB_<NAME>.json`` after each run, so an
-interrupted A/B keeps what it measured.  Per metric the summary gives
-the parent and change medians, the parent's quartiles, and the pairs the
-change won; a tie counts for neither side.
+Every run's end-to-end metrics (BENCHMARK.json ``end_to_end``), its
+``failed`` count and, per operation, the median CPU seconds over its
+timed passes (``op_cpu_s.<op>``, from the run's record) are written to
+``AB_<NAME>.json`` after each run, so an interrupted A/B keeps what it
+measured.  Per metric the summary gives the parent and change medians,
+the parent's quartiles, and the pairs the change won; a tie counts for
+neither side.
 """
 
 from __future__ import annotations
@@ -94,6 +96,19 @@ def summarize(runs: list[dict], metrics: dict[str, str]) -> dict:
     return out
 
 
+def op_cpu_s(record_path: str) -> dict[str, float]:
+    """{``op_cpu_s.<op>``: median CPU seconds} over the timed passes in
+    a run record that perfbench/run.py wrote."""
+    with open(record_path) as fh:
+        passes = json.load(fh)["pass_ops"]
+    per_op: dict[str, list[float]] = {}
+    for ops in passes:
+        for name, _wall, cpu in ops:
+            if cpu is not None:
+                per_op.setdefault(name, []).append(cpu)
+    return {f"op_cpu_s.{n}": statistics.median(v) for n, v in per_op.items()}
+
+
 def run_once(checkout: str, workload: str, seed: int) -> dict:
     """One perfbench run at the benchmark's own run length; its end-to-end
     metrics and ``failed``, or ``failed: None`` and the exit code when it
@@ -107,7 +122,8 @@ def run_once(checkout: str, workload: str, seed: int) -> dict:
         return {"failed": None, "exit": proc.returncode}
     result = json.loads(lines[-1])
     metrics = {name: m["value"] for name, m in result["metrics"].items()}
-    return {"failed": result["failed"], **metrics}
+    record = os.path.join(checkout, ".perfbench", f"run-{workload}-{seed}.json")
+    return {"failed": result["failed"], **metrics, **op_cpu_s(record)}
 
 
 def main(argv: list[str]) -> int:
@@ -154,7 +170,8 @@ def main(argv: list[str]) -> int:
                     r = run_once(checkouts[side], workload, i + 1)
                     runs.append({"pair": i, "side": side, "seed": i + 1, **r})
                     print(json.dumps({"workload": workload, **runs[-1]}), flush=True)
-                    entry["summary"] = summarize(runs, metrics)
+                    ops = {k: "lower" for run in runs for k in run if k.startswith("op_cpu_s.")}
+                    entry["summary"] = summarize(runs, {**metrics, **ops})
                     with open(out_path, "w") as fh:
                         json.dump(record, fh, indent=1)
                         fh.write("\n")
