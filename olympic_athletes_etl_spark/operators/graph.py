@@ -1,6 +1,7 @@
 """Iterative graph operators — connected components for dedup
 clustering (beyond reference; the canonical last stage of a near-dup
-pipeline: candidate PAIRS → duplicate CLUSTERS → one canonical doc).
+pipeline: candidate PAIRS → duplicate CLUSTERS → one canonical doc),
+k-core peeling, BFS depths and integer PageRank.
 
 Spark has no recursion; components are computed by iterative min-label
 propagation on DataFrames:
@@ -10,9 +11,8 @@ propagation on DataFrames:
 repeated until a fixpoint. Each iteration is one shuffle (join on the
 edge list + min-aggregate); convergence in O(graph diameter) rounds —
 near-dup graphs are unions of small cliques, so diameter is tiny. Every
-iteration ``localCheckpoint``s to truncate the lineage (without it the
-plan doubles each round and the driver OOMs planning, long before data
-size matters).
+fixpoint loop here runs through ``iterate``, which checkpoints, observes,
+releases and caps each round the same way.
 
 At 100 TB: ``connected_components`` is the simple-and-robust
 formulation for low-diameter graphs (near-dup clique unions);
@@ -24,8 +24,14 @@ O(log² n) rounds instead of O(diameter).
 
 from __future__ import annotations
 
+import logging
+import time
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+_log = logging.getLogger("olympic_athletes_etl_spark.iterate")
 
 
 def _observed_checkpoint(
@@ -36,15 +42,11 @@ def _observed_checkpoint(
     """Eager ``localCheckpoint`` with aggregate ``metrics`` collected
     DURING the materialization job (``Dataset.observe``), so per-round
     bookkeeping — convergence probes, row counts, L1 deltas — costs no
-    extra Spark job. The old shape paid one probe job per round on the
-    already-materialized blocks (and a converged ``limit(1).count()``
-    probe pays 2+ jobs: CollectLimit escalates through partition
-    batches before concluding the frame is empty); ``observe`` folds
-    the same aggregate into the checkpoint's own pass (guide §2.4/§5 —
-    measured 3 jobs → 1 per label-CC round, OPTIMIZATION_r14.md batch 1;
-    the contract is pinned in tests/test_graph.py).
-    ``keep`` projects the checkpointed output ABOVE the observe node,
-    so metric-only columns are never materialized into the checkpoint.
+    extra Spark job (a separate probe job per round, or a 2+-job
+    ``limit(1).count()``, measured 3 jobs → 1 per label-CC round,
+    OPTIMIZATION_r14.md batch 1). ``keep`` projects the checkpointed
+    output ABOVE the observe node, so metric-only columns are never
+    materialized into the checkpoint.
     CollectMetrics is a row-level pass-through: the checkpointed rows
     are bit-identical to an unobserved checkpoint's."""
     obs = Observation()
@@ -77,6 +79,69 @@ def _release_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, deg) over an undirected (pa, pb) edge list."""
+    return (
+        e.select(F.col("pa").alias("node"))
+        .unionByName(e.select(F.col("pb").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def iterate(
+    state: DataFrame | None,
+    step: Callable[[DataFrame | None, int], DataFrame],
+    metrics: list,
+    done: Callable[[dict, dict | None, DataFrame, DataFrame | None], bool],
+    *,
+    name: str,
+    max_iter: int,
+    rounds: int | None = None,
+    keep: list[str] | None = None,
+) -> tuple[DataFrame, list[dict]]:
+    """``(final state, per-round records)`` — the one driver of every
+    fixpoint loop in this module. Round ``i`` (from 1) eagerly
+    checkpoints ``step(state, i)`` with ``metrics`` observed by that same
+    job (``_observed_checkpoint``), then evaluates ``done(got, prev_got,
+    nxt, state)`` while both frames are live (``prev_got`` is None in
+    round 1).
+
+    Lineage and release discipline: every state is a self-contained
+    checkpoint, so the plan does not grow with the round count (an
+    unmaterialized unroll re-derives the whole history per reference and
+    the driver OOMs planning long before data size matters). Once
+    ``done`` has run, the superseded state's blocks are freed, so
+    storage holds one state, not one per round — but only states made
+    here: the caller's initial frame, and whatever ``step`` closes over,
+    stay the caller's to release.
+
+    Fixpoint mode (``rounds=None``) raises RuntimeError after ``max_iter``
+    rounds instead of returning a partial answer. ``rounds=R`` runs at
+    most R rounds and never raises, stopping early at a fixpoint (the
+    answer the remaining rounds would give). Each round's record,
+    ``{round, wall_s, **metrics}``, is returned and logged at DEBUG on
+    ``olympic_athletes_etl_spark.iterate``."""
+    records: list[dict] = []
+    prev_got = None
+    for i in range(1, (max_iter if rounds is None else rounds) + 1):
+        t0 = time.perf_counter()
+        nxt, got = _observed_checkpoint(step(state, i), metrics, keep)
+        stop = done(got, prev_got, nxt, state)
+        if i > 1:
+            _release_checkpoint(state)
+        rec = {"round": i, "wall_s": round(time.perf_counter() - t0, 4), **got}
+        records.append(rec)
+        _log.debug("%s %s", name, rec)
+        state, prev_got = nxt, got
+        if stop:
+            break
+    else:
+        if rounds is None:
+            raise RuntimeError(f"{name}: no fixpoint within max_iter={max_iter}")
+    return state, records
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -91,10 +156,8 @@ def connected_components(
     Runs to the FIXPOINT (a round that changes no label); convergence
     takes O(component diameter) rounds — tiny on near-dup graphs
     (unions of small cliques), graph-diameter-many on a long path.
-    ``max_iter`` is a runaway backstop like kcore/bfs_depths': hitting
-    it RAISES rather than silently returning partial labels (the
-    pre-round-6 behavior with the old default of 20 — a >20-diameter
-    component would have come back split into wrong sub-components).
+    ``max_iter`` is a runaway backstop: hitting it raises rather than
+    returning a component split into wrong sub-components.
 
     ``sym`` holds both directions of every edge plus one self-loop per
     vertex, so a vertex's own label arrives through the same join as
@@ -118,40 +181,29 @@ def connected_components(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    rows = sym.withColumn("component", F.col("b"))
-    labels = None
-    for _ in range(max_iter):
-        # The fixpoint probe rides the round's OWN checkpoint
-        # materialization: count(label changed) is an observed metric
-        # of the checkpoint job, and prev is consumed below the ``keep``
-        # projection, never materialized.
-        new_ckpt, got = _observed_checkpoint(
-            rows.groupBy(F.col("a").alias("vertex")).agg(
-                F.min("component").alias("component"),
-                F.min(
-                    F.when(F.col("a") == F.col("b"), F.col("component"))
-                ).alias("prev"),
-            ),
-            [
-                F.count(
-                    F.when(F.col("component") != F.col("prev"), True)
-                ).alias("changed")
-            ],
-            keep=["vertex", "component"],
+
+    def step(labels: DataFrame | None, i: int) -> DataFrame:
+        rows = (
+            sym.withColumn("component", F.col("b"))
+            if i == 1
+            else sym.join(labels.withColumnRenamed("vertex", "b"), "b")
         )
-        if labels is not None:
-            _release_checkpoint(labels)  # superseded — keep ONE label table
-        labels = new_ckpt
-        if got["changed"] == 0:
-            break
-        rows = sym.join(labels.withColumnRenamed("vertex", "b"), "b")
-    else:
-        raise RuntimeError(
-            f"connected_components: labels still changing after "
-            f"max_iter={max_iter}"
+        return rows.groupBy(F.col("a").alias("vertex")).agg(
+            F.min("component").alias("component"),
+            F.min(F.when(F.col("a") == F.col("b"), F.col("component"))).alias("prev"),
         )
-    # the edge list is dead once the loop exits (labels is a
-    # self-contained checkpoint)
+
+    # prev is consumed by the observed fixpoint probe below the ``keep``
+    # projection, never materialized
+    labels, _ = iterate(
+        None,
+        step,
+        [F.count(F.when(F.col("component") != F.col("prev"), True)).alias("changed")],
+        lambda got, *_: got["changed"] == 0,
+        name="connected_components",
+        max_iter=max_iter,
+        keep=["vertex", "component"],
+    )
     _release_checkpoint(sym)
     return labels
 
@@ -194,76 +246,6 @@ def dedup_clusters(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 10,
-) -> DataFrame:
-    """(vertex, rank) — PageRank over a DIRECTED edge list, fixed
-    iteration count (deterministic: no convergence-threshold float
-    compare; same input → same plan → same ranks).
-
-    Per iteration, one shuffle pattern: contributions = rank/out_degree
-    shipped along edges (join on src), summed per destination (aggregate
-    on dst), then the damping update. Dangling vertices (no out-edges)
-    redistribute nothing — their mass exits and the (1-d) teleport term
-    keeps the total bounded; ranks are normalized to sum = n_vertices at
-    the end so the output is comparable across graphs. localCheckpoint
-    truncates lineage each round exactly as connected_components does.
-
-    At 100 TB: per-round cost is |edges| shuffle bytes keyed on vertex
-    ids; heavy-hitter hub vertices are the skew risk — AQE skew splitting
-    handles the aggregate side, and the join side is bounded by
-    out-degree (k in a KNN graph). Tolerance-tested like the sketches —
-    iterative float fixpoints are not oracle-hashable.
-    """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("s").alias("vertex"))
-        .unionByName(e.select(F.col("t").alias("vertex")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    n = verts.count()
-    out_deg = e.groupBy(F.col("s").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    ranks = verts.withColumn("rank", F.lit(1.0))
-    for _ in range(n_iter):
-        contribs = (
-            e.join(ranks, e["s"] == ranks["vertex"])
-            .join(out_deg, "vertex")
-            .select(F.col("t").alias("vertex"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("vertex")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        prev = ranks
-        ranks = (
-            verts.join(contribs, "vertex", "left")
-            .select(
-                "vertex",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # superseded round checkpoint (round 1's prev is unmaterialized
-        # and the release no-ops) — keep ONE rank table live
-        _release_checkpoint(prev)
-    total = ranks.agg(F.sum("rank").alias("t"))
-    return ranks.crossJoin(F.broadcast(total)).select(
-        "vertex", (F.col("rank") * n / F.col("t")).alias("rank")
-    )
-
-
 _TRI_STRIDE = 100_000_000_000  # (degree, id) packed total order; ids < 1e11
 
 
@@ -295,12 +277,7 @@ def triangle_stats(
             .dropDuplicates()
         )
     e = e.localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("pa").alias("node"))
-        .unionByName(e.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(e)
     okey = F.col("deg") * _TRI_STRIDE + F.col("node")
     ka = deg.select(F.col("node").alias("pa"), okey.alias("ka"))
     kb = deg.select(F.col("node").alias("pb"), okey.alias("kb"))
@@ -356,68 +333,49 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 1000,
+    rounds: int | None = None,
 ) -> DataFrame:
     """(node, core_deg) — the k-CORE of an undirected edge list (one row
     per edge), peeled to the FIXPOINT: rounds continue until a round
     removes no edge, so callers on arbitrarily deep graphs get the true
-    core. This is the library form of plans/graph_q.py's ``g_kcore``,
-    whose round count is a pinned CONSTANT so its oracle can unroll to
-    chained CTEs — the two agree whenever the constant reaches the
+    core. ``rounds=R`` stops after at most R peels instead (never
+    raising) — plans/graph_q.py's ``g_kcore`` pins R so its oracle can
+    unroll to chained CTEs, and the two agree whenever R reaches the
     fixpoint (pinned at test SF by test_graph's equivalence test).
 
     Per round: one degree aggregate plus two leftsemi joins on the edge
-    key, all shuffle-partitioned by node/edge keys; the shrinking edge
-    list is localCheckpointed per round (edges are referenced three
+    key, all shuffle-partitioned by node/edge keys, over the shrinking
+    edge list ``iterate`` checkpoints (the list is referenced three
     times per round — an unmaterialized unroll re-derives the input
     3^rounds times, the documented k-core 1000-scan lesson). The
-    early-exit test is a driver-side count of the already-materialized
-    checkpoint, so it costs one cheap job per round, and rounds needed
-    is the graph's degeneracy-peel depth (typically tens).
+    surviving-edge count is an observed metric of that checkpoint's own
+    job; a round that keeps every edge (or none) is the fixpoint. Rounds
+    needed is the graph's degeneracy-peel depth (typically tens).
 
     ``max_iter`` is a runaway backstop, not a tuning knob; hitting it
     raises rather than silently returning a partial peel."""
-    e, got = _observed_checkpoint(
-        edges.select(F.col(src).alias("pa"), F.col(dst).alias("pb")),
-        [F.count(F.lit(1)).alias("n")],
+    n = [F.count(F.lit(1)).alias("n")]
+    e0, got0 = _observed_checkpoint(
+        edges.select(F.col(src).alias("pa"), F.col(dst).alias("pb")), n
     )
-    n_edges = int(got["n"])
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
-        deg = (
-            e.select(F.col("pa").alias("node"))
-            .unionByName(e.select(F.col("pb").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
+
+    def step(e: DataFrame, i: int) -> DataFrame:
+        keep = _degrees(e).filter(F.col("deg") >= k).select("node")
+        return e.join(keep.withColumnRenamed("node", "pa"), "pa", "leftsemi").join(
+            keep.withColumnRenamed("node", "pb"), "pb", "leftsemi"
         )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        prev = e
-        # the surviving-edge count rides the round checkpoint's own
-        # materialization (observed metric — no per-round count job)
-        e, got = _observed_checkpoint(
-            e.join(keep.withColumnRenamed("node", "pa"), "pa", "leftsemi")
-            .join(keep.withColumnRenamed("node", "pb"), "pb", "leftsemi"),
-            [F.count(F.lit(1)).alias("n")],
-        )
-        # superseded checkpoint — keep ONE edge list in block-manager
-        # storage, not one per peel round (deep peels run hundreds)
-        _release_checkpoint(prev)
-        n_next = int(got["n"])
-        # n_next == 0 is a fixpoint by definition — break NOW rather
-        # than on the next pass's n_edges == 0 check, so a peel that
-        # empties the graph on exactly the last allowed iteration
-        # returns instead of spuriously raising at the for-else.
-        if n_next in (0, n_edges):
-            break
-        n_edges = n_next
-    else:
-        raise RuntimeError(f"kcore: no fixpoint within max_iter={max_iter}")
-    return (
-        e.select(F.col("pa").alias("node"))
-        .unionByName(e.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
+
+    e, _ = iterate(
+        e0,
+        step,
+        n,
+        lambda got, prev, *_: got["n"] in (0, (prev or got0)["n"]),
+        name="kcore",
+        max_iter=max_iter,
+        rounds=rounds,
     )
+    _release_checkpoint(e0)
+    return _degrees(e).withColumnRenamed("deg", "core_deg")
 
 
 def bfs_depths(
@@ -427,64 +385,113 @@ def bfs_depths(
     dst: str = "dst",
     symmetrize: bool = True,
     max_iter: int = 1000,
+    rounds: int | None = None,
 ) -> DataFrame:
     """(node, depth) — hop distance from the seed set, level-synchronous
     BFS run to the FIXPOINT (empty frontier), so callers on arbitrarily
-    deep graphs get full reachability. Library form of
-    plans/graph_q.py's ``g_bfs_depth``, whose round count is a pinned
-    constant for oracle unrolling; equivalence at test SF is pinned in
+    deep graphs get full reachability. ``rounds=R`` stops after at most
+    R hops instead (never raising): plans/graph_q.py's ``g_bfs_depth``
+    pins R for oracle unrolling; equivalence at test SF is pinned in
     test_graph.
 
     ``sources`` is a one-column (``node``) DataFrame of seeds, all at
-    depth 0 (a multi-source BFS is the same loop). Each round joins the
-    CURRENT frontier — not the visited set — against the edge list,
-    dedups, and anti-joins visited, so per-round work is
-    frontier-degree-sum; frontier and visited are localCheckpointed per
-    round (visited is referenced by every later anti-join). Terminates
-    in eccentricity-many rounds; ``max_iter`` is a runaway backstop and
-    hitting it raises rather than returning partial depths."""
+    depth 0 (a multi-source BFS is the same loop). The loop state is the
+    visited (node, depth) set alone, one checkpoint per round: round i's
+    frontier is ``visited`` at depth i - 1, joined against the edge list,
+    deduped and anti-joined with ``visited``, so per-round join work is
+    frontier-degree-sum. The observed ``max(depth)`` stops growing once
+    a round finds no new node. Terminates in eccentricity-many rounds;
+    ``max_iter`` is a runaway backstop and hitting it raises rather than
+    returning partial depths."""
     sym = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
     if symmetrize:
         sym = sym.unionByName(
             edges.select(F.col(dst).alias("s"), F.col(src).alias("t"))
         )
     sym = sym.localCheckpoint(eager=True)
-    frontier = sources.select("node").localCheckpoint(eager=True)
-    visited = frontier.withColumn("depth", F.lit(0).cast("long"))
-    for i in range(1, max_iter + 1):
-        prev_frontier = frontier
-        # frontier size rides the checkpoint materialization (observed
-        # metric — no per-round count job)
-        frontier, got = _observed_checkpoint(
-            sym.join(frontier.select(F.col("node").alias("s")), "s")
+    depth = [F.max("depth").alias("depth")]
+    visited0, got0 = _observed_checkpoint(
+        sources.select("node").withColumn("depth", F.lit(0).cast("long")), depth
+    )
+
+    def step(visited: DataFrame, i: int) -> DataFrame:
+        frontier = visited.filter(F.col("depth") == i - 1).select(
+            F.col("node").alias("s")
+        )
+        return visited.unionByName(
+            sym.join(frontier, "s")
             .select(F.col("t").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti"),
-            [F.count(F.lit(1)).alias("n")],
+            .join(visited.select("node"), "node", "left_anti")
+            .withColumn("depth", F.lit(i).cast("long"))
         )
-        if int(got["n"]) == 0:
-            # the last non-empty frontier is dead IF visited is already
-            # a self-contained checkpoint (every round but the first —
-            # round 1's visited still references the depth-0 frontier)
-            if i > 1:
-                _release_checkpoint(prev_frontier)
-            break
-        prev_visited = visited
-        visited = visited.unionByName(
-            frontier.withColumn("depth", F.lit(i).cast("long"))
-        ).localCheckpoint(eager=True)
-        # Both superseded checkpoints are dead only now: round 1's
-        # visited is an UNMATERIALIZED projection of the source
-        # frontier, so the source frontier must outlive the first
-        # visited checkpoint (and the release of an unmaterialized
-        # frame no-ops). On the empty-frontier break path nothing is
-        # released — the returned visited may still reference the
-        # depth-0 frontier.
-        _release_checkpoint(prev_frontier)
-        _release_checkpoint(prev_visited)
-    else:
-        raise RuntimeError(f"bfs_depths: frontier non-empty after max_iter={max_iter}")
+
+    visited, _ = iterate(
+        visited0,
+        step,
+        depth,
+        lambda got, prev, *_: got["depth"] == (prev or got0)["depth"],
+        name="bfs_depths",
+        max_iter=max_iter,
+        rounds=rounds,
+    )
+    _release_checkpoint(visited0)
+    _release_checkpoint(sym)
     return visited
+
+
+def _pagerank_update(
+    base: DataFrame,
+    ranks: DataFrame,
+    e: DataFrame,
+    scale: int,
+    damping_num: int,
+    damping_den: int,
+    *carry,
+) -> DataFrame:
+    """(node, rank, *carry) — one integer PageRank round, the arithmetic
+    both PageRank forms share: ``base``'s nodes left-joined to the
+    inflow that ``ranks`` sends along the (s, t) edges ``e``."""
+    out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+    shares = ranks.join(out_deg, ranks["node"] == out_deg["s"]).select(
+        F.col("s"), F.expr("rank div deg").alias("share")
+    )
+    inflow = (
+        e.join(shares, "s")
+        .groupBy(F.col("t").alias("node"))
+        .agg(F.sum("share").alias("inflow"))
+    )
+    teleport = (damping_den - damping_num) * scale // damping_den
+    return base.join(inflow, "node", "left").select(
+        "node",
+        (
+            F.lit(teleport)
+            + F.expr(
+                f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
+                f" div {damping_den}"
+            )
+        ).alias("rank"),
+        *carry,
+    )
+
+
+def _pagerank_start(
+    edges: DataFrame, src: str, dst: str, scale: int
+) -> tuple[DataFrame, DataFrame]:
+    """(e, ranks0): the checkpointed (s, t) edge list and the lazy
+    starting ranks, every node at ``scale``."""
+    # materialized once: an expensively-derived edge list (the
+    # co-purchase self-join) would otherwise be re-derived ~2+n_iter
+    # times (measured 12.2s -> ~5s at sf0.1 for g_pagerank)
+    e = edges.select(
+        F.col(src).alias("s"), F.col(dst).alias("t")
+    ).localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("s").alias("node"))
+        .unionByName(e.select(F.col("t").alias("node")))
+        .dropDuplicates()
+    )
+    return e, nodes.withColumn("rank", F.lit(scale).cast("long"))
 
 
 def pagerank_fixed_point(
@@ -497,9 +504,8 @@ def pagerank_fixed_point(
     damping_den: int = 100,
 ) -> DataFrame:
     """(node, rank) — PageRank in FIXED-POINT integer arithmetic, so the
-    result is bit-exact across engines and oracle-hashable (the float
-    ``pagerank`` above is tolerance-tested only; float sums depend on
-    partition reduction order).
+    result is bit-exact across engines and oracle-hashable (a float
+    PageRank's sums depend on partition reduction order).
 
     Ranks are integers scaled by ``scale``; each iteration is
         share(u)  = rank(u) div out_deg(u)
@@ -514,55 +520,26 @@ def pagerank_fixed_point(
     The edge list is treated as DIRECTED; symmetrize upstream for an
     undirected graph (then every node has out-degree >= 1 and no
     dangling-mass term is needed; dangling nodes in a directed input
-    simply leak their mass, as the float twin does).
+    simply leak their mass).
 
     Scale shape per iteration: one N-row projection (share), one
     edge-keyed equi-join shuffling |E| share rows, one map-side-
     combinable sum keyed on the destination node, one N-row left join.
     Hub skew on the aggregate side is AQE-splittable because the sum is
-    associative. The iteration count is a constant (default 3), so
-    lineage stays shallow and no checkpoint is needed.
+    associative. The iteration count is a constant (default 3), so the
+    rounds stay one lazy plan with shallow lineage and no per-round
+    checkpoint: run through ``iterate``, the gated g_pagerank's 3 rounds
+    cost 34 jobs instead of 17 (sf0.01, local[4]) for the same rows.
 
     Overflow bound: sum(rank) stays <= N*scale + N (teleport + damped
     inflow is a contraction), so d_num * inflow <= d_num * N * scale
     must stay under 2^63 — at scale=1e9 that holds to N ~ 1e8 nodes;
     shrink ``scale`` for larger vertex sets.
     """
-    # materialize once: the edge list feeds out_deg, nodes, AND every
-    # iteration's join — an expensively-derived edge list (e.g. the
-    # co-purchase self-join) would otherwise be re-derived ~2+n_iter
-    # times (measured 12.2s -> ~5s at sf0.1 for g_pagerank).
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t")
-    ).localCheckpoint(eager=True)
-    out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    teleport = (damping_den - damping_num) * scale // damping_den
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("t").alias("node")))
-        .dropDuplicates()
-    )
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
+    e, ranks = _pagerank_start(edges, src, dst, scale)
+    nodes = ranks.select("node")
     for _ in range(n_iter):
-        shares = (
-            ranks.join(out_deg, ranks["node"] == out_deg["s"])
-            .select(F.col("s"), F.expr("rank div deg").alias("share"))
-        )
-        inflow = (
-            e.join(shares, "s")
-            .groupBy(F.col("t").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        ranks = nodes.join(inflow, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.expr(
-                    f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
-                    f" div {damping_den}"
-                )
-            ).alias("rank"),
-        )
+        ranks = _pagerank_update(nodes, ranks, e, scale, damping_num, damping_den)
     return ranks
 
 
@@ -585,94 +562,38 @@ def pagerank_converged(
     rounds; the delta decays geometrically at ratio d, so each extra
     decade of precision costs ~14 more rounds and the floor-truncation
     quantization floor of a few units/node sits far below the
-    default). The fixpoint sibling of
-    ``kcore``/``bfs_depths`` for the gated constant-round ``g_pagerank``
-    (plans/graph_q.py): each round's update expression is IDENTICAL to
-    ``pagerank_fixed_point``'s, so running that with ``n_iter=rounds``
-    reproduces this result bit-for-bit (pinned in test_graph) — the
-    convergence wrapper adds a stopping rule, never different
-    arithmetic.
-
-    Lineage discipline: ranks are localCheckpointed per round (each
-    round's frame is referenced by the NEXT update and by the delta
-    aggregate — an unmaterialized unroll re-derives the whole history
-    per reference, the k-core 1000-scan lesson); the edge list and node
-    set are checkpointed once up front. Per round: the fixed-point
-    iteration's |E|-join + destination-keyed sum, plus one node-keyed
-    equi-join for the delta (both sides checkpointed; the sum is
-    map-side combinable, accumulated in DECIMAL(38,0) so the bound is
-    the 38-digit contract, not 2^63). ``max_iter`` is a runaway
+    default). Each ``iterate`` round is ``_pagerank_update``, the
+    arithmetic of ``pagerank_fixed_point`` (which backs the gated
+    ``g_pagerank``), so that with ``n_iter=rounds`` reproduces this
+    result bit-for-bit (pinned in test_graph). The old rank rides along
+    as ``prev``, so the L1 delta is an observed metric of the round's
+    checkpoint job, summed in DECIMAL(38,0). ``max_iter`` is a runaway
     backstop and hitting it raises rather than returning a
     non-converged ranking."""
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t")
-    ).localCheckpoint(eager=True)
-    out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    teleport = (damping_den - damping_num) * scale // damping_den
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("t").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    ranks = nodes.withColumn(
-        "rank", F.lit(scale).cast("long")
-    ).localCheckpoint(eager=True)
+    e, start = _pagerank_start(edges, src, dst, scale)
+    ranks0, got0 = _observed_checkpoint(start, [F.count(F.lit(1)).alias("n")])
+    n_nodes = got0["n"]
     if n_nodes == 0:
         # empty graph: already at the fixpoint (the delta aggregate
-        # below would collect a NULL sum over zero rows)
-        return ranks, 0
+        # would collect a NULL sum over zero rows)
+        _release_checkpoint(e)
+        return ranks0, 0
     if eps_units is None:
         eps_units = n_nodes * max(scale // 1_000_000, 1)
-    for rounds in range(1, max_iter + 1):
-        shares = (
-            ranks.join(out_deg, ranks["node"] == out_deg["s"])
-            .select(F.col("s"), F.expr("rank div deg").alias("share"))
-        )
-        inflow = (
-            e.join(shares, "s")
-            .groupBy(F.col("t").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        # Derive the new ranks from the CURRENT rank table (same node
-        # set as ``nodes`` — ranks is nodes × rank by construction), so
-        # the old rank is available as ``prev`` and the L1 delta rides
-        # the round checkpoint's own materialization as an observed
-        # metric: the old shape's whole node-keyed old⋈new delta join +
-        # aggregate job per round is gone (guide §2.4). Ranks are
-        # bit-identical — the update expression never reads prev.
-        new_ranks, got = _observed_checkpoint(
-            ranks.join(inflow, "node", "left").select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
-                        f" div {damping_den}"
-                    )
-                ).alias("rank"),
-                F.col("rank").alias("prev"),
-            ),
-            [
-                F.sum(
-                    F.abs(F.col("rank") - F.col("prev")).cast("decimal(38,0)")
-                ).alias("d")
-            ],
-            keep=["node", "rank"],
-        )
-        delta = got["d"]
-        # the superseded round's checkpoint is dead once the delta is
-        # computed — unpersist it so storage holds ONE rank table, not
-        # up to max_iter of them
-        _release_checkpoint(ranks)
-        ranks = new_ranks
-        if int(delta) <= eps_units:
-            return ranks, rounds
-    raise RuntimeError(
-        f"pagerank_converged: L1 delta above {eps_units} after "
-        f"max_iter={max_iter}"
+    ranks, records = iterate(
+        ranks0,
+        lambda r, i: _pagerank_update(
+            r, r, e, scale, damping_num, damping_den, F.col("rank").alias("prev")
+        ),
+        [F.sum(F.abs(F.col("rank") - F.col("prev")).cast("decimal(38,0)")).alias("d")],
+        lambda got, *_: int(got["d"]) <= eps_units,
+        name="pagerank_converged",
+        max_iter=max_iter,
+        keep=["node", "rank"],
     )
+    _release_checkpoint(ranks0)
+    _release_checkpoint(e)
+    return ranks, len(records)
 
 
 def connected_components_star(
@@ -696,15 +617,18 @@ def connected_components_star(
 
     Both phases are one groupBy(min) + one edge-keyed equi-join over the
     current edge list — the identical shuffle shape as a min-label
-    round, so everything said about skew/AQE there carries over. The
-    edge list is localCheckpointed per phase (each feeds the next
-    phase's aggregate AND join) and the superseded checkpoint is
-    unpersisted. Convergence = a full (large, small) round leaves the
-    edge set unchanged (checked by count equality — both sides are
-    distinct sets — plus ONE exceptAll probe; set equality follows
-    from |A| == |B| and A\\B == ∅). At the fixpoint the edges form
-    stars (v -> component min). ``max_iter`` bounds (large, small)
-    round PAIRS and raises on overrun: observed convergence is
+    round, so everything said about skew/AQE there carries over. Each
+    phase is one ``iterate`` round (large-star on odd rounds, small-star
+    on even), so the edge list is checkpointed per phase (each feeds the
+    next phase's aggregate AND join). Convergence = two phases in a row
+    (one of each) leave the edge set unchanged. A phase is unchanged
+    when its (count, sum of hash(a, b)) fingerprint, observed on every
+    checkpoint, equals its input's AND one exceptAll probe is empty
+    (both sides are distinct sets, so set equality follows from
+    |A| == |B| and A\\B == ∅); a fingerprint mismatch skips the probe.
+    At the fixpoint the edges form stars (v -> component min).
+    ``max_iter`` bounds (large, small) round PAIRS and raises on
+    overrun: observed convergence is
     ~log2(n) pairs (18 pairs on a 2^17-edge path; exhaustively ≤ a
     handful on all 6-vertex graphs), so 60 gives order-of-magnitude
     headroom over the measured behavior up to astronomically large
@@ -724,13 +648,18 @@ def connected_components_star(
     raw = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=True)
-    e = (
+    # (size, hash-sum) set fingerprint, observed on every edge-list
+    # checkpoint: unequal fingerprints prove a phase changed the edge
+    # set, so the exact exceptAll probe runs only when they match
+    witness = [
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.hash("a", "b")), F.lit(0)).alias("h"),
+    ]
+    e0, got0 = _observed_checkpoint(
         raw.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .dropDuplicates(),
+        witness,
     )
     all_vertices = (
         raw.select(F.col("a").alias("vertex"))
@@ -746,22 +675,16 @@ def connected_components_star(
         ).unionByName(df.select(F.col("b").alias("u"), F.col("a").alias("v")))
 
     # Each phase computes min(v) PER u while keeping every (u, v) row —
-    # a window min over partitionBy(u), not the groupBy+join-back form:
-    # the aggregate+join pays the same 2|E|-row exchange on u for the
-    # join's sym side PLUS the aggregate's own exchange (and at scale
-    # the per-u min table is |V| rows — beyond broadcast, so the join
-    # adds a second full sort), whereas the window computes the min in
-    # place after the one exchange (guide §2.4 — operations keyed the
-    # same way share one exchange). Measured at sf0.1: ~20% off the
-    # whole loop, identical edge sets every round
-    # (OPTIMIZATION_r13.md batch 3).
+    # a window min over partitionBy(u): one exchange on u, where a
+    # groupBy + join-back pays the aggregate's exchange too (measured
+    # ~20% off the whole loop at sf0.1, OPTIMIZATION_r13.md batch 3).
     _w_u = Window.partitionBy("u")
 
     def _large_star(df: DataFrame) -> DataFrame:
         withm = _sym(df).withColumn(
             "m", F.least(F.min("v").over(_w_u), F.col("u"))
         )
-        out = (
+        return (
             withm.filter(F.col("v") > F.col("u"))
             .select(
                 F.least("v", "m").alias("a"), F.greatest("v", "m").alias("b")
@@ -769,14 +692,13 @@ def connected_components_star(
             .filter(F.col("a") != F.col("b"))
             .dropDuplicates()
         )
-        return out
 
     def _small_star(df: DataFrame) -> DataFrame:
         # neighbors v <= u only (orient every edge toward the larger id)
         withm = _sym(df).filter(F.col("v") < F.col("u")).withColumn(
             "m", F.min("v").over(_w_u)  # m < u always
         )
-        out = (
+        return (
             withm.select(
                 F.least("v", "m").alias("a"), F.greatest("v", "m").alias("b")
             )
@@ -789,47 +711,33 @@ def connected_components_star(
             .filter(F.col("a") != F.col("b"))
             .dropDuplicates()
         )
-        return out
 
-    n_edges = e.count()
-    for _ in range(max_iter):
-        after_large = _large_star(e).localCheckpoint(eager=True)
-        # the per-round size rides the small-star checkpoint's own
-        # materialization as an observed metric (no separate count job
-        # per round — see _observed_checkpoint)
-        after_small, got = _observed_checkpoint(
-            _small_star(after_large), [F.count(F.lit(1)).alias("n")]
-        )
-        _release_checkpoint(after_large)
+    quiet = 0  # consecutive phases that left the edge set unchanged
+
+    def done(got: dict, prev: dict | None, nxt: DataFrame, e: DataFrame) -> bool:
+        nonlocal quiet
         # both sides are distinct sets: equal counts + one empty
         # difference direction is full set equality
-        n_next = int(got["n"])
-        unchanged = (
-            n_next == n_edges
-            and after_small.exceptAll(e).limit(1).count() == 0
-        )
-        _release_checkpoint(e)
-        e = after_small
-        n_edges = n_next
-        if unchanged:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star: edge set still changing after "
-            f"max_iter={max_iter} (large,small) rounds — raise max_iter "
-            f"(observed convergence is ~log2(n) rounds, so also check "
-            f"the input for pathological structure)"
-        )
-    # The loop detects convergence on the COMPOSED round
-    # (small(large(e)) == e); the label read-out below additionally
-    # requires the fixpoint to be star-shaped (every edge (a, b) has a
-    # as the component min and b as a leaf — no b-side vertex is also an
-    # a-side center). Kiveris et al. prove stars at the per-phase
-    # fixpoint; a composed-round cycle where large-star changes the edge
-    # set and small-star restores it would satisfy the loop's check with
-    # a NON-star edge set and silently mislabel. Never observed (random
-    # graphs, deep paths, kNN graphs all pass), but cheap to rule out at
-    # runtime: one leftsemi probe over the final edge list.
+        same = got == (prev or got0) and nxt.exceptAll(e).limit(1).count() == 0
+        quiet = quiet + 1 if same else 0
+        return quiet == 2
+
+    e, _ = iterate(
+        e0,
+        lambda e, i: _large_star(e) if i % 2 else _small_star(e),
+        witness,
+        done,
+        name="connected_components_star (large/small phases)",
+        max_iter=2 * max_iter,
+    )
+    _release_checkpoint(e0)
+    # The loop stops only when both phases are fixpoints of the edge
+    # set, where Kiveris et al. prove stars; one phase alone is not
+    # enough ({(1,3),(2,3)} is a large-star fixpoint but no star). The
+    # read-out below still requires the result to be star-shaped
+    # (every edge (a, b) has a as the component min and b as a leaf —
+    # no b-side vertex is also an a-side center) rather than silently
+    # mislabel: one leftsemi probe over the final edge list.
     non_star = (
         e.select("b")
         .join(e.select(F.col("a").alias("b")), "b", "leftsemi")

@@ -1,12 +1,13 @@
-"""Graph analytics over the co-purchase graph — triangle counting with
-degree orientation and the degree profile, both exact and oracle-hashable.
-
-The iterative float algorithms (PageRank, connected components) live in
-``operators/graph.py`` (tolerance-tested; CC is also oracle-gated via
-d_dup_clusters' recursive-CTE twin). The queries here are the
-SINGLE-PASS graph statistics a relational engine should answer without
-an iteration loop, over the same edge list every basket-analysis
-pipeline already derives (q_copurchase_pairs' within-order part pairs).
+"""Graph analytics over the co-purchase graph, every answer exact and
+oracle-hashable: the single-pass statistics (degree profile, triangle
+counting with degree orientation, link prediction, assortativity) and
+the bounded-round iterative queries (g_kcore, g_bfs_depth, integer
+g_pagerank). The iterative queries call the library forms in
+``operators/graph.py`` with a pinned round count, so each oracle unrolls
+the same rounds as chained CTEs; connected components is oracle-gated
+via d_dup_clusters' recursive-CTE twin. All of them run over the same
+edge list every basket-analysis pipeline already derives
+(q_copurchase_pairs' within-order part pairs).
 
 Graph: nodes = parts, undirected edge (a, b) when the pair is bought in
 the same order at least _MIN_SUPPORT times (the support threshold keeps
@@ -19,7 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olympic_athletes_etl_spark.operators.graph import _release_checkpoint
+from olympic_athletes_etl_spark.operators.graph import (
+    _degrees,
+    bfs_depths,
+    kcore,
+    pagerank_fixed_point,
+    triangle_stats,
+)
 from olympic_athletes_etl_spark.plans.registry import query
 from olympic_athletes_etl_spark.plans.tables import load
 
@@ -74,15 +81,6 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("support"))
         .filter(F.col("support") >= _MIN_SUPPORT)
         .select("pa", "pb")
-    )
-
-
-def _degrees(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("pa").alias("node"))
-        .unionByName(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
     )
 
 
@@ -168,8 +166,6 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.graph.triangle_stats`` so synthetic adversarial shapes
     (complete graph, star hub, degree ties) pin the orientation logic
     independently of this query's co-purchase edge derivation."""
-    from olympic_athletes_etl_spark.operators.graph import triangle_stats
-
     return triangle_stats(
         _edges(spark, sf_dir), src="pa", dst="pb", normalized=True
     )
@@ -235,8 +231,6 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable sum; the top-20 is TakeOrderedAndProject (per-
     partition heaps, no global sort). Ties broken by node id so the
     boundary of the top-N is deterministic."""
-    from olympic_athletes_etl_spark.operators.graph import pagerank_fixed_point
-
     edges = _edges(spark, sf_dir)
     sym = edges.select(
         F.col("pa").alias("s"), F.col("pb").alias("t")
@@ -382,40 +376,15 @@ def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The round count is a CONSTANT ({r}), not a convergence test, so the
     oracle unrolls the identical dataflow as chained CTEs (the
-    g_pagerank move); tests pin that {r} rounds reach the fixpoint at
-    test scale, and operators/graph.py:kcore is the exported
-    iterate-to-fixpoint library form for production callers (equality
-    with this unrolled form is itself pinned in test_graph). At 100 TB
-    you use that fixpoint form — each round
-    is one degree-count aggregate plus two leftsemi joins on the edge
-    key (all shuffle-partitioned by node/edge keys, no global
-    structure), with the shrinking edge list checkpointed each round to
-    cut the unrolled lineage (the documented iterative-algorithm
-    discipline; peel rounds needed in practice is the graph's
-    degeneracy ordering depth, typically tens)."""
-    # localCheckpoint per round (the connected_components discipline):
-    # each round references the edge list three times (degree count +
-    # two semi joins), so an unmaterialized unroll re-derives the
-    # lineitem self-join 3^rounds times — the plan audit showed 1000
-    # scans for 3 rounds. Checkpointing makes each round one pass over
-    # the current (shrinking) edge list.
-    e = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    for _ in range(_KCORE_ROUNDS):
-        deg = _degrees(e)
-        keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-        prev = e
-        e = (
-            e.join(keep.withColumnRenamed("node", "pa"), "pa", "leftsemi")
-            .join(keep.withColumnRenamed("node", "pb"), "pb", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-        _release_checkpoint(prev)  # superseded round — keep ONE edge list
-    return (
-        e.select(F.col("pa").alias("part"))
-        .unionByName(e.select(F.col("pb").alias("part")))
-        .groupBy("part")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
-    )
+    g_pagerank move): the query is operators/graph.py's ``kcore`` with
+    ``rounds={r}`` (a round that peels nothing ends it early, same
+    answer). Tests pin that {r} rounds reach the fixpoint at test scale;
+    at 100 TB you call ``kcore`` without ``rounds``, which iterates to
+    the fixpoint (peel depth is the graph's degeneracy ordering depth,
+    typically tens)."""
+    return kcore(
+        _edges(spark, sf_dir), k=_KCORE_K, src="pa", dst="pb", rounds=_KCORE_ROUNDS
+    ).select(F.col("node").alias("part"), "core_deg")
 
 
 g_kcore.__doc__ = g_kcore.__doc__.format(k=_KCORE_K, r=_KCORE_ROUNDS)
@@ -470,49 +439,17 @@ def g_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, so per-round work is frontier-degree-sum, not graph size.
 
     The round count is a constant (the g_kcore/g_pagerank convention)
-    so the oracle unrolls to chained CTEs; frontier and visited sets
-    are localCheckpointed per round — visited is referenced by every
-    later round's anti-join, and an unmaterialized unroll re-derives
-    the whole prefix each time (the k-core 1000-scan lesson). At
-    100 TB: operators/graph.py:bfs_depths is the exported fixpoint form
-    (frontier-size==0 early exit; equality with this unrolled form
-    pinned in test_graph); visited stays (node,depth)-thin regardless
-    of edge count."""
+    so the oracle unrolls to chained CTEs: the query is
+    operators/graph.py's ``bfs_depths`` with ``rounds={r}`` (one visited
+    checkpoint per round; an empty frontier ends it early, same answer).
+    At 100 TB you call ``bfs_depths`` without ``rounds``, which runs to
+    the empty frontier; visited stays (node, depth)-thin regardless of
+    edge count."""
     edges = _edges(spark, sf_dir)
-    sym = (
-        edges.select(F.col("pa").alias("s"), F.col("pb").alias("t"))
-        .unionByName(
-            edges.select(F.col("pb").alias("s"), F.col("pa").alias("t"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = (
-        _degrees(edges)
-        .agg(F.min("node").alias("node"))
-        .localCheckpoint(eager=True)
-    )
-    visited = frontier.withColumn("depth", F.lit(0).cast("long"))
-    for i in range(1, _BFS_ROUNDS + 1):
-        prev_frontier = frontier
-        frontier = (
-            sym.join(
-                frontier.select(F.col("node").alias("s")), "s"
-            )
-            .select(F.col("t").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        prev_visited = visited
-        visited = visited.unionByName(
-            frontier.withColumn("depth", F.lit(i).cast("long"))
-        ).localCheckpoint(eager=True)
-        # released only after the new visited checkpoint: round 1's
-        # visited is an unmaterialized projection of the seed frontier
-        # (same ordering constraint as operators/graph.py:bfs_depths)
-        _release_checkpoint(prev_frontier)
-        _release_checkpoint(prev_visited)
-    return visited.select(F.col("node").alias("part"), "depth")
+    seed = _degrees(edges).agg(F.min("node").alias("node"))
+    return bfs_depths(
+        edges, seed, src="pa", dst="pb", rounds=_BFS_ROUNDS
+    ).select(F.col("node").alias("part"), "depth")
 
 
 g_bfs_depth.__doc__ = g_bfs_depth.__doc__.format(r=_BFS_ROUNDS)

@@ -43,49 +43,6 @@ def test_dedup_clusters_includes_singletons(spark):
 
 
 # ---------------------------------------------------------------------------
-# pagerank
-# ---------------------------------------------------------------------------
-def test_pagerank_uniform_on_symmetric_cycle(spark):
-    from olympic_athletes_etl_spark.operators.graph import pagerank
-
-    # directed 4-cycle: perfectly symmetric → all ranks equal after norm
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 0)], ["src", "dst"]
-    )
-    ranks = {r["vertex"]: r["rank"] for r in pagerank(edges).collect()}
-    assert set(ranks) == {0, 1, 2, 3}
-    for v in ranks.values():
-        assert abs(v - 1.0) < 1e-9
-
-
-def test_pagerank_hub_outranks_leaves_and_conserves_mass(spark):
-    from olympic_athletes_etl_spark.operators.graph import pagerank
-
-    # pure star into vertex 0 (a dangling sink): it collects every
-    # leaf's contribution while the leaves stay at the teleport floor
-    edges = spark.createDataFrame([(i, 0) for i in range(1, 6)], ["src", "dst"])
-    rows = pagerank(edges).collect()
-    ranks = {r["vertex"]: r["rank"] for r in rows}
-    assert ranks[0] == max(ranks.values())
-    for leaf in range(1, 6):
-        assert ranks[0] > ranks[leaf]
-    # normalized: total == n_vertices
-    assert abs(sum(ranks.values()) - len(ranks)) < 1e-6
-
-
-def test_pagerank_deterministic_across_runs(spark):
-    from olympic_athletes_etl_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(a, b) for a in range(6) for b in range(6) if (a * 7 + b) % 3 == 0 and a != b],
-        ["src", "dst"],
-    )
-    r1 = sorted((r["vertex"], r["rank"]) for r in pagerank(edges).collect())
-    r2 = sorted((r["vertex"], r["rank"]) for r in pagerank(edges).collect())
-    assert r1 == r2
-
-
-# ---------------------------------------------------------------------------
 # triangle_stats — adversarial shapes for the degree-orientation logic
 # ---------------------------------------------------------------------------
 
@@ -738,14 +695,18 @@ def test_release_checkpoint_noops_on_unmaterialized_frames(spark):
     assert _n_persistent(spark) == before
 
 
-def test_iterative_operators_do_not_accumulate_checkpoints(spark):
+def test_iterative_operators_do_not_accumulate_checkpoints(spark, sf_dir):
     """A deep peel/propagation must hold O(1) checkpointed frames, not
-    one per round — superseded rounds are released deterministically."""
+    one per round — superseded rounds are released deterministically,
+    and so are the edge lists and seed frames the operators made."""
     from olympic_athletes_etl_spark.operators.graph import (
         bfs_depths,
         connected_components,
+        connected_components_star,
         kcore,
+        pagerank_converged,
     )
+    from olympic_athletes_etl_spark.plans.graph_q import g_bfs_depth, g_kcore
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(30)], ["src", "dst"])
 
@@ -759,13 +720,73 @@ def test_iterative_operators_do_not_accumulate_checkpoints(spark):
     sources = spark.createDataFrame([(0,)], ["node"])
     depths = bfs_depths(edges, sources)  # 30 frontier rounds
     assert depths.count() == 31
-    # final visited + final (empty) frontier + the edge list may remain
-    assert _n_persistent(spark) - before <= 3
+    # only the returned visited checkpoint may remain
+    assert _n_persistent(spark) - before <= 1
 
     before = _n_persistent(spark)
     core = kcore(edges, k=2)  # a path has no 2-core: full 30-round peel
     assert core.count() == 0
+    assert _n_persistent(spark) - before <= 1
+
+    before = _n_persistent(spark)
+    labels = connected_components_star(edges)  # ~log2(31) phase pairs
+    assert labels.count() == 31
+    # the vertex set and the converged star edge list the labels read
     assert _n_persistent(spark) - before <= 2
+
+    before = _n_persistent(spark)
+    sym = edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    ranks, rounds = pagerank_converged(sym, eps_units=31 * 10_000_000)
+    assert ranks.count() == 31 and rounds > 2
+    assert _n_persistent(spark) - before <= 1
+
+    for gated in (g_kcore, g_bfs_depth):
+        before = _n_persistent(spark)
+        assert gated(spark, sf_dir).count() > 0
+        assert _n_persistent(spark) - before <= 1, gated.__name__
+
+
+def test_iterate_logs_one_record_per_round(spark, caplog):
+    """Label CC on a 12-vertex path: ``iterate`` logs consecutive rounds
+    1..n at DEBUG, each with its observed metric, and only the last
+    round — the fixpoint — changed no label."""
+    import logging
+
+    logger = "olympic_athletes_etl_spark.iterate"
+    edges = spark.createDataFrame([(i, i + 1) for i in range(11)], ["src", "dst"])
+    with caplog.at_level(logging.DEBUG, logger=logger):
+        connected_components(edges)
+    recs = [
+        r.args[1]
+        for r in caplog.records
+        if r.name == logger and r.args[0] == "connected_components"
+    ]
+    assert [r["round"] for r in recs] == list(range(1, len(recs) + 1))
+    assert len(recs) > 2
+    assert [r["changed"] == 0 for r in recs] == [False] * (len(recs) - 1) + [True]
+    assert all(r["wall_s"] >= 0 for r in recs)
+
+
+def test_rounds_mode_returns_partial_answer_without_raising(spark):
+    """``rounds=R`` (the gated queries' mode) stops after R rounds and
+    returns what they computed, where fixpoint mode with
+    ``max_iter=R`` raises: on a 12-vertex path one peel strips only the
+    two ends, and two BFS hops reach depth 2."""
+    import pytest as _pytest
+
+    from olympic_athletes_etl_spark.operators.graph import bfs_depths, kcore
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(11)], "src long, dst long")
+    core = {r["node"]: r["core_deg"] for r in kcore(path, k=2, rounds=1).collect()}
+    assert core == {1: 1, **{v: 2 for v in range(2, 10)}, 10: 1}
+    with _pytest.raises(RuntimeError, match="kcore"):
+        kcore(path, k=2, max_iter=1)
+
+    seed = spark.createDataFrame([(0,)], "node long")
+    depths = {r["node"]: r["depth"] for r in bfs_depths(path, seed, rounds=2).collect()}
+    assert depths == {0: 0, 1: 1, 2: 2}
+    with _pytest.raises(RuntimeError, match="bfs_depths"):
+        bfs_depths(path, seed, max_iter=2)
 
 
 def test_neardup_pipeline_releases_its_shingle_sets(spark, sf_dir):
