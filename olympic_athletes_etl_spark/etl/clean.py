@@ -192,6 +192,4 @@ def clean_editions(raw: DataFrame) -> DataFrame:
     df = drop_if_present(df, ("#", "Opened", "Closed", "Competition"))
     # W2: global-order surrogate key — acceptable ONLY because editions is
     # a tiny dim (~76 rows; SURVEY §4 anti-pattern note).
-    return surrogate_key(
-        df, order_by=("Year", "Game_Type", "Edition_Name"), name="Game_Id", start=1
-    )
+    return surrogate_key(df, order_by=("Year", "Game_Type", "Edition_Name"), name="Game_Id")

@@ -326,16 +326,6 @@ def plan_resize_dims(
     ).withColumn("needs_resize", needs)
 
 
-def fake_resize_payload(payload: bytes, src_len: int, dst_len: int) -> bytes:
-    """Deterministic stand-in for pixel resampling: stride-sample the
-    payload down to ``dst_len`` bytes (nearest-index pick — the 1-D
-    analogue of nearest-neighbor resize). Exercises the plumbing without
-    codec libraries."""
-    if dst_len >= src_len or src_len == 0:
-        return payload
-    return bytes(payload[(i * src_len) // dst_len] for i in range(dst_len))
-
-
 def resize_image(payload: bytes, dst_w: int, dst_h: int) -> bytes:
     """REAL image resize: decode (any supported codec), nearest-neighbor
     resample via integer index maps (``(i·src)//dst`` — pure integer, so

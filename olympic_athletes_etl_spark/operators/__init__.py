@@ -1,6 +1,7 @@
 """Relational operator library (SURVEY.md §2.2-2.9) — reusable
-DataFrame → DataFrame functions; the plans/ queries are thin wrappers
-over these shapes applied to the driver's testdata."""
+DataFrame → DataFrame functions. The inventory queries in
+``plans/relational.py`` call them on the testdata tables, and the
+ETL pipeline (``etl/``) reuses them."""
 
 from olympic_athletes_etl_spark.operators.relational import (
     anti_resume,

@@ -66,17 +66,15 @@ def _release_checkpoint(df: DataFrame) -> None:
     frame ``unpersist()`` is a silent no-op and superseded per-round
     checkpoints would sit in block-manager storage until the JVM's
     ContextCleaner gets around to them. Reach the checkpointed RDD
-    through the plan's LogicalRDD node and unpersist IT. Falls back to
-    doing nothing if the internal handle is unavailable — the blocks
-    are then freed lazily by the ContextCleaner (the pre-fix behavior),
-    never leaked.
+    through the plan's LogicalRDD node and unpersist IT. A frame whose
+    analyzed plan is not a LogicalRDD (no checkpoint of its own) is left
+    alone. A broken handle raises: these are py4j internals that a Spark
+    upgrade can move, and a silent no-op would leave every superseded
+    round's blocks persisted.
     """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # pragma: no cover — py4j internals unavailable
-        pass
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _degrees(e: DataFrame) -> DataFrame:
@@ -440,60 +438,6 @@ def bfs_depths(
     return visited
 
 
-def _pagerank_update(
-    base: DataFrame,
-    ranks: DataFrame,
-    e: DataFrame,
-    scale: int,
-    damping_num: int,
-    damping_den: int,
-    *carry,
-) -> DataFrame:
-    """(node, rank, *carry) — one integer PageRank round, the arithmetic
-    both PageRank forms share: ``base``'s nodes left-joined to the
-    inflow that ``ranks`` sends along the (s, t) edges ``e``."""
-    out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    shares = ranks.join(out_deg, ranks["node"] == out_deg["s"]).select(
-        F.col("s"), F.expr("rank div deg").alias("share")
-    )
-    inflow = (
-        e.join(shares, "s")
-        .groupBy(F.col("t").alias("node"))
-        .agg(F.sum("share").alias("inflow"))
-    )
-    teleport = (damping_den - damping_num) * scale // damping_den
-    return base.join(inflow, "node", "left").select(
-        "node",
-        (
-            F.lit(teleport)
-            + F.expr(
-                f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
-                f" div {damping_den}"
-            )
-        ).alias("rank"),
-        *carry,
-    )
-
-
-def _pagerank_start(
-    edges: DataFrame, src: str, dst: str, scale: int
-) -> tuple[DataFrame, DataFrame]:
-    """(e, ranks0): the checkpointed (s, t) edge list and the lazy
-    starting ranks, every node at ``scale``."""
-    # materialized once: an expensively-derived edge list (the
-    # co-purchase self-join) would otherwise be re-derived ~2+n_iter
-    # times (measured 12.2s -> ~5s at sf0.1 for g_pagerank)
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t")
-    ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("t").alias("node")))
-        .dropDuplicates()
-    )
-    return e, nodes.withColumn("rank", F.lit(scale).cast("long"))
-
-
 def pagerank_fixed_point(
     edges: DataFrame,
     src: str = "src",
@@ -536,64 +480,41 @@ def pagerank_fixed_point(
     must stay under 2^63 — at scale=1e9 that holds to N ~ 1e8 nodes;
     shrink ``scale`` for larger vertex sets.
     """
-    e, ranks = _pagerank_start(edges, src, dst, scale)
-    nodes = ranks.select("node")
-    for _ in range(n_iter):
-        ranks = _pagerank_update(nodes, ranks, e, scale, damping_num, damping_den)
-    return ranks
-
-
-def pagerank_converged(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    scale: int = 1_000_000_000,
-    eps_units: int | None = None,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    max_iter: int = 200,
-) -> tuple[DataFrame, int]:
-    """((node, rank), rounds) — ``pagerank_fixed_point`` run to
-    CONVERGENCE instead of a pinned iteration count: rounds continue
-    until the total L1 rank movement sum(|rank' - rank|), an EXACT
-    integer in the same 1/scale units as the ranks, drops to
-    ``eps_units`` or below (default: scale/1e6 per node — mean drift
-    below 1e-6, which at damping d=0.85 takes ~log(1e-6)/log(d) ≈ 85
-    rounds; the delta decays geometrically at ratio d, so each extra
-    decade of precision costs ~14 more rounds and the floor-truncation
-    quantization floor of a few units/node sits far below the
-    default). Each ``iterate`` round is ``_pagerank_update``, the
-    arithmetic of ``pagerank_fixed_point`` (which backs the gated
-    ``g_pagerank``), so that with ``n_iter=rounds`` reproduces this
-    result bit-for-bit (pinned in test_graph). The old rank rides along
-    as ``prev``, so the L1 delta is an observed metric of the round's
-    checkpoint job, summed in DECIMAL(38,0). ``max_iter`` is a runaway
-    backstop and hitting it raises rather than returning a
-    non-converged ranking."""
-    e, start = _pagerank_start(edges, src, dst, scale)
-    ranks0, got0 = _observed_checkpoint(start, [F.count(F.lit(1)).alias("n")])
-    n_nodes = got0["n"]
-    if n_nodes == 0:
-        # empty graph: already at the fixpoint (the delta aggregate
-        # would collect a NULL sum over zero rows)
-        _release_checkpoint(e)
-        return ranks0, 0
-    if eps_units is None:
-        eps_units = n_nodes * max(scale // 1_000_000, 1)
-    ranks, records = iterate(
-        ranks0,
-        lambda r, i: _pagerank_update(
-            r, r, e, scale, damping_num, damping_den, F.col("rank").alias("prev")
-        ),
-        [F.sum(F.abs(F.col("rank") - F.col("prev")).cast("decimal(38,0)")).alias("d")],
-        lambda got, *_: int(got["d"]) <= eps_units,
-        name="pagerank_converged",
-        max_iter=max_iter,
-        keep=["node", "rank"],
+    # materialized once: an expensively-derived edge list (the
+    # co-purchase self-join) would otherwise be re-derived ~2+n_iter
+    # times (measured 12.2s -> ~5s at sf0.1 for g_pagerank)
+    e = edges.select(
+        F.col(src).alias("s"), F.col(dst).alias("t")
+    ).localCheckpoint(eager=True)
+    ranks = (
+        e.select(F.col("s").alias("node"))
+        .unionByName(e.select(F.col("t").alias("node")))
+        .dropDuplicates()
+        .withColumn("rank", F.lit(scale).cast("long"))
     )
-    _release_checkpoint(ranks0)
-    _release_checkpoint(e)
-    return ranks, len(records)
+    nodes = ranks.select("node")
+    teleport = (damping_den - damping_num) * scale // damping_den
+    for _ in range(n_iter):
+        out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+        shares = ranks.join(out_deg, ranks["node"] == out_deg["s"]).select(
+            F.col("s"), F.expr("rank div deg").alias("share")
+        )
+        inflow = (
+            e.join(shares, "s")
+            .groupBy(F.col("t").alias("node"))
+            .agg(F.sum("share").alias("inflow"))
+        )
+        ranks = nodes.join(inflow, "node", "left").select(
+            "node",
+            (
+                F.lit(teleport)
+                + F.expr(
+                    f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
+                    f" div {damping_den}"
+                )
+            ).alias("rank"),
+        )
+    return ranks
 
 
 def connected_components_star(

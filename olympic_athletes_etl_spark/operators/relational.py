@@ -1,9 +1,14 @@
 """Reusable relational operators (SURVEY.md §2.2-2.9).
 
-Library form of every composite operator in the inventory. All functions
-are lazy DataFrame → DataFrame transforms; Catalyst fuses them with the
-caller's plan. Determinism rules from the §7 decision log are baked in
-(value-ascending mode tie-break, exact median, row_number surrogate keys).
+Library form of every composite operator in the inventory. The
+registered inventory queries in ``plans/relational.py`` call these
+functions, renaming output columns at the call site, so the DuckDB
+oracles check the library code itself; the ETL pipeline (``etl/``)
+reuses them, and ``grouped_median_impute``/``normalize_dim_bridge``
+serve it alone. All functions are lazy DataFrame → DataFrame
+transforms; Catalyst fuses them with the caller's plan. Determinism
+rules from the §7 decision log are baked in (value-ascending mode
+tie-break, exact median, row_number surrogate keys).
 
 Scale notes sit on each function: which key the shuffle uses, when the
 small side should broadcast, and where a global window is (only) safe.
@@ -28,24 +33,25 @@ def drop_if_present(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return df.drop(*present) if present else df
 
 
-def rename_bulk(df: DataFrame, mapping: dict[str, str], reorder: bool = True) -> DataFrame:
-    """Dict-driven bulk rename, optionally reordering to the mapping's
-    declared order (F2/F3; columns_renaming_reordering_glue.py:82-89)."""
+def rename_bulk(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+    """Dict-driven bulk rename, reordering the renamed columns to the
+    mapping's declared order ahead of the rest (F2/F3;
+    columns_renaming_reordering_glue.py:82-89)."""
     out = df.withColumnsRenamed(mapping)
-    if reorder:
-        ordered = [new for old, new in mapping.items() if old in df.columns]
-        rest = [c for c in out.columns if c not in ordered]
-        out = out.select(*ordered, *rest)
-    return out
+    ordered = [new for old, new in mapping.items() if old in df.columns]
+    rest = [c for c in out.columns if c not in ordered]
+    return out.select(*ordered, *rest)
 
 
 def anti_resume(df: DataFrame, done: DataFrame, key: str | Sequence[str]) -> DataFrame:
     """Incremental-resume diff: rows of ``df`` whose key is NOT in ``done``
     (F8; reference does a driver-side set subtract,
     athlete_scrape_glue.py:280-283 — left_anti scales past driver memory
-    and broadcasts automatically when ``done`` is small)."""
+    and broadcasts automatically when ``done`` is small). A left_anti join
+    never repeats a ``df`` row, so ``done`` needs no dedup (that would
+    cost its own shuffle)."""
     keys = [key] if isinstance(key, str) else list(key)
-    return df.join(done.select(*keys).dropDuplicates(), on=keys, how="left_anti")
+    return df.join(done.select(*keys), on=keys, how="left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -129,10 +135,10 @@ def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
 
 
 def value_counts(df: DataFrame, col: str) -> DataFrame:
-    """Frequency table ordered desc (A7)."""
-    return df.groupBy(col).agg(F.count(F.lit(1)).alias("count")).orderBy(
-        F.desc("count"), F.asc(col)
-    )
+    """Frequency table (A7): one row per distinct ``col`` with its
+    ``count``. Unordered — a display sort would cost a range exchange
+    that no distributed consumer sees; order at the collect."""
+    return df.groupBy(col).agg(F.count(F.lit(1)).alias("count"))
 
 
 def collect_sorted(df: DataFrame, group: str, value: str) -> DataFrame:
@@ -155,19 +161,11 @@ def dup_detect(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def dedup_subset(df: DataFrame, keys: Sequence[str], order_by: Sequence[Column] | None = None) -> DataFrame:
-    """Keep one row per key (A4). With ``order_by``, keeps the first row in
-    that order (deterministic); without, Spark's dropDuplicates (arbitrary
-    but stable-per-plan) — reference semantics
+def dedup_subset(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Keep one row per key (A4): Spark's dropDuplicates, which keeps an
+    arbitrary row per key — reference semantics
     (data_clean_glue.py:128-152)."""
-    if order_by is None:
-        return df.dropDuplicates(list(keys))
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return df.dropDuplicates(list(keys))
 
 
 def union_align(dfs: Sequence[DataFrame]) -> DataFrame:
@@ -182,16 +180,14 @@ def union_align(dfs: Sequence[DataFrame]) -> DataFrame:
 # --------------------------------------------------------------------------
 # Windows (W1-W5)
 # --------------------------------------------------------------------------
-def surrogate_key(
-    df: DataFrame, order_by: Sequence[str], name: str, start: int = 1
-) -> DataFrame:
-    """Deterministic surrogate key via row_number over an explicit order
-    (W2/W4; replaces the reference's monotonically_increasing_id,
+def surrogate_key(df: DataFrame, order_by: Sequence[str], name: str) -> DataFrame:
+    """Deterministic surrogate key 1..n via row_number over an explicit
+    order (W2/W4; replaces the reference's monotonically_increasing_id,
     data_clean_glue.py:136 — SURVEY §7). Global window ⇒ single
     partition: ONLY for small dims (the reference's editions dim is 76
-    rows). For fact-scale keys use zipWithIndex-style instead."""
+    rows). For fact-scale keys use ``operators.scale.dense_ids``."""
     w = Window.orderBy(*[F.asc(c) for c in order_by])
-    return df.withColumn(name, F.row_number().over(w) + (start - 1))
+    return df.withColumn(name, F.row_number().over(w))
 
 
 def top_k_per_group(

@@ -1,14 +1,11 @@
-"""Scale utilities: skew mitigation and co-located joins (SCALE.md;
+"""Scale utilities: skew mitigation and fact-scale ids (SCALE.md;
 SURVEY.md §4 — the physical decisions Catalyst does NOT make for you).
 
-These are the two levers the engine reaches for when AQE's automatic
-skew-join splitting and broadcast selection aren't enough:
-
 - ``salted_join`` — explode a hot build side N ways so a skewed probe
-  key spreads over N reducers instead of one straggler.
-- ``bucketed_write`` / co-located reads — pre-shuffle both sides of a
-  recurring fact⋈fact join at WRITE time; every later join on the
-  bucket key runs shuffle-free.
+  key spreads over N reducers instead of one straggler, for skew that
+  AQE's automatic skew-join splitting does not absorb.
+- ``dense_ids`` (and its stored, appendable form) — global 1..N ids in
+  key order without a single-reducer window.
 """
 
 from __future__ import annotations
@@ -44,87 +41,6 @@ def salted_join(
     )
     out = salted_probe.join(salted_build, on=[key, salt_col], how=how)
     return out.drop(salt_col)
-
-
-def bucketed_write(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 32,
-    path: str | None = None,
-) -> None:
-    """Persist pre-shuffled on the join key: ``bucketBy + sortBy`` at
-    write time. Two tables bucketed identically on the same key sort-
-    merge-join WITHOUT an exchange — the recurring-join amortization at
-    100 TB (pay one shuffle at ingest, zero per query)."""
-    writer = df.write.bucketBy(n_buckets, key).sortBy(key)
-    if path:
-        writer = writer.option("path", path)
-    writer.mode("overwrite").saveAsTable(table)
-
-
-def cocluster_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two identically-bucketed tables on their bucket key. The
-    caller can assert the plan is exchange-free (see
-    tests/test_scale_ops.py) — if an Exchange appears, the bucket specs
-    don't match and the write-side contract was broken."""
-    return spark.table(left_table).join(spark.table(right_table), on=key, how=how)
-
-
-def range_sorted_write(
-    df: DataFrame,
-    path: str,
-    key: str,
-    num_partitions: int,
-    fmt: str = "parquet",
-) -> None:
-    """Globally-sorted layout writer: ``repartitionByRange(key)`` +
-    ``sortWithinPartitions(key)`` — file i holds keys strictly below
-    file i+1, each file internally sorted. Costs ONE range-exchange
-    (sampled bounds; no single-reducer global sort), and buys parquet
-    min/max row-group statistics that make later range predicates on
-    the key prune at the FOOTER level — the layout to publish
-    time-keyed or id-keyed data at 100 TB. ``num_partitions`` sizes the
-    output files (target ~256 MB-1 GB each; never 1)."""
-    (
-        df.repartitionByRange(num_partitions, key)
-        .sortWithinPartitions(key)
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )
-
-
-def hive_partitioned_write(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style directory-partitioned layout (``col=value/`` dirs) —
-    the default lake layout for low-cardinality slice keys (ingest
-    date, source, event type): a reader filtering on a partition column
-    never OPENS non-matching files (directory-level PartitionFilters,
-    checked in test_scale_ops), one level stronger than the row-group
-    footer pruning range_sorted_write buys.
-
-    Scale discipline: partition columns must be LOW-cardinality
-    (dirs = product of distinct values; a high-cardinality key
-    explodes the namespace and produces tiny files — that is what
-    bucketed_write / range_sorted_write are for), and the upstream df
-    should be repartitioned on the partition cols first if many input
-    partitions each hold many distinct values (otherwise every task
-    writes a file into every directory — the small-files problem)."""
-    (
-        df.repartition(*[F.col(c) for c in partition_cols])
-        .write.partitionBy(*partition_cols)
-        .mode(mode)
-        .format(fmt)
-        .save(path)
-    )
 
 
 def dense_ids(

@@ -1,12 +1,9 @@
-"""Sketch-based approximate aggregates — the documented 100 TB
-alternatives to the exact operators on the oracle surface (SCALE.md
-"known trade-offs": exact median/percentile sort within groups; these
-are the mergeable map-side forms that replace them at scale).
-
-Deliberately NOT registry queries: sketch outputs are
-implementation-defined (HLL++ / t-digest internals), so they cannot
-hash-match a DuckDB oracle — tests assert tolerance against the exact
-answer instead, which is the actual contract a pipeline relies on.
+"""Derandomized sketches: KMV distinct counts, count-min frequencies
+and HyperLogLog — the mergeable map-side alternatives to the exact
+operators on the oracle surface (SCALE.md "known trade-offs"). Their
+hash parameters are fixed, so results are reproducible across engines
+and runs and CAN sit on the oracle surface (plans/sketch_q.py registers
+them over the testdata tables).
 """
 
 from __future__ import annotations
@@ -15,39 +12,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def approx_distinct(
-    df: DataFrame, col: str, group: Sequence[str] = (), rsd: float = 0.05
-) -> DataFrame:
-    """HyperLogLog++ distinct count (mergeable partial sketches — one
-    shuffle of fixed-size sketch bytes regardless of cardinality; the
-    exact count-distinct shuffles every distinct value)."""
-    agg = F.approx_count_distinct(col, rsd=rsd).alias(f"approx_distinct_{col}")
-    return df.groupBy(*group).agg(agg) if group else df.agg(agg)
-
-
-def approx_percentiles(
-    df: DataFrame,
-    col: str,
-    probabilities: Sequence[float] = (0.5, 0.95, 0.99),
-    accuracy: int = 10_000,
-    group: Sequence[str] = (),
-) -> DataFrame:
-    """Quantile sketch percentiles (Greenwald-Khanna): bounded-memory
-    mergeable partials vs the exact form's per-group sort. ``accuracy``
-    trades memory for error (~1/accuracy relative rank error)."""
-    agg = F.percentile_approx(
-        col, list(probabilities), accuracy
-    ).alias(f"approx_percentiles_{col}")
-    return df.groupBy(*group).agg(agg) if group else df.agg(agg)
-
-
-# ---------------------------------------------------------------------------
-# Derandomized sketches — fixed hash parameters, so results are
-# reproducible across engines/runs and CAN sit on the oracle surface
-# (plans/sketch_q.py registers them over the testdata tables).
-# ---------------------------------------------------------------------------
 
 _P = 1_000_000_007
 

@@ -454,8 +454,6 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _EMB_DIM = 64
 _EMB_THRESHOLD = 0.45
-_NB_BANDS = 8
-_NB_ROWS = 2  # planes per band; 16 sign bits total
 
 # plane(p, d) weight — integers in [-998, 998], deterministic in (p, d);
 # same construction as similarity_q's ANN planes (see the _PLANE_W note
@@ -467,34 +465,6 @@ _DOT_D = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
     " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
 )
-
-
-def _nb_band_val_spark(band: int) -> str:
-    """2-bit band value: sign bits of the band's two plane dot products."""
-    bits = []
-    for j in range(_NB_ROWS):
-        p = band * _NB_ROWS + j
-        plane = (
-            f"transform(sequence(0, {_EMB_DIM - 1}),"
-            f" d -> CAST({_NB_PLANE_W.format(p=p)} AS DOUBLE))"
-        )
-        dot = _DOT_D.format(a="v", b=plane)
-        bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << j} ELSE 0 END)")
-    return " + ".join(bits)
-
-
-def _nb_band_val_duck(band: int) -> str:
-    bits = []
-    for j in range(_NB_ROWS):
-        p = band * _NB_ROWS + j
-        plane = (
-            f"list_transform(range(0, {_EMB_DIM}),"
-            f" d -> CAST({_NB_PLANE_W.format(p=p)} AS DOUBLE))"
-        )
-        bits.append(
-            f"(CASE WHEN list_dot_product(v, {plane}) > 0 THEN {1 << j} ELSE 0 END)"
-        )
-    return " + ".join(bits)
 
 
 def _emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -601,10 +571,8 @@ def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification by id, broadcast only while the measured corpus is
     bounded (<= {_NB_BCAST_MAX_N} vectors).
 
-    The survey's fixed 2-bit form lives on unregistered as
-    d_embedding_neardup_fixed2 (small-corpus yardstick), next to the
-    all-pairs yardstick d_embedding_neardup_allpairs; recall of THIS
-    banding vs all-pairs is pinned by tests/test_dedup_recall.py."""
+    Recall of this banding against the unregistered all-pairs yardstick
+    d_embedding_neardup_allpairs is pinned by tests/test_dedup_recall.py."""
     n_df = _emb_norm(spark, sf_dir)
     n_vec = n_df.count()
     r, b = _nb_params(n_vec)
@@ -661,85 +629,6 @@ def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if n_vec <= _NB_BCAST_MAX_N:
         na, nb = F.broadcast(na), F.broadcast(nb)
-    cos = F.expr(_DOT_D.format(a="va", b="vb")) / (F.col("nrm_a") * F.col("nrm_b"))
-    return (
-        cand.join(na, "vec_a")
-        .join(nb, "vec_b")
-        .withColumn("cos_raw", cos)
-        .filter(F.col("cos_raw") >= _EMB_THRESHOLD)
-        .select("vec_a", "vec_b", F.round("cos_raw", 4).alias("cos_sim"))
-    )
-
-
-_UNREGISTERED_FIXED2_ORACLE = f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
-    ), bv AS (
-      SELECT vec_id,
-             {", ".join(f"{_nb_band_val_duck(i)} AS bv{i}" for i in range(_NB_BANDS))}
-      FROM n
-    ), banded AS (
-      SELECT vec_id, band,
-             CASE band {" ".join(f"WHEN {i} THEN bv{i}" for i in range(_NB_BANDS))} END
-               AS band_val
-      FROM bv CROSS JOIN (SELECT unnest(range({_NB_BANDS})) AS band)
-    ), cand AS (
-      SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.band_val = b.band_val
-       AND a.vec_id < b.vec_id
-    )
-    SELECT c.vec_a, c.vec_b,
-           round(list_dot_product(na.v, nb.v) / (na.nrm * nb.nrm), 4) AS cos_sim
-    FROM cand c
-    JOIN n na ON na.vec_id = c.vec_a
-    JOIN n nb ON nb.vec_id = c.vec_b
-    WHERE list_dot_product(na.v, nb.v) / (na.nrm * nb.nrm) >= {_EMB_THRESHOLD}
-    """
-
-
-def d_embedding_neardup_fixed2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELIBERATELY UNREGISTERED small-corpus yardstick: the survey's
-    original fixed 16-bit/8×2-band form of d_embedding_neardup. A FIXED
-    2-bit band has only 4 values, so bucket density is Θ(n²/4) per band
-    regardless of data — at 200k vectors (r12 sf10) the candidate join
-    explodes engine-side. The registered query now sizes bits-per-band
-    from the corpus; this form remains as the recall/equivalence
-    yardstick at test scale (its DuckDB mirror is
-    _UNREGISTERED_FIXED2_ORACLE)."""
-    n = _emb_norm(spark, sf_dir)
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.expr(_nb_band_val_spark(i)).alias("band_val"),
-            )
-            for i in range(_NB_BANDS)
-        ]
-    )
-    banded = n.select(
-        "vec_id", F.explode(band_entries).alias("e")
-    ).select("vec_id", F.col("e.band").alias("band"), F.col("e.band_val").alias("band_val"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .dropDuplicates()
-    )
-    na = n.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("nrm_a")
-    )
-    nb = n.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nrm_b")
-    )
     cos = F.expr(_DOT_D.format(a="va", b="vb")) / (F.col("nrm_a") * F.col("nrm_b"))
     return (
         cand.join(na, "vec_a")
@@ -1324,8 +1213,8 @@ def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     content hash, and (b) against the already-ingested corpus
     (doc_id < 400), via an anti-join on the hash. Both sides reduce to
     hashes BEFORE any join — the corpus side never ships text. At 100 TB
-    the corpus hash store is a persisted bucketed table (sources/io.py:
-    bucketed_write) so the anti-join co-locates without a shuffle on the
+    the corpus hash store is a persisted table bucketed on the hash
+    (``bucketBy``) so the anti-join co-locates without a shuffle on the
     corpus side; here both derive from one documents scan."""
     docs = load(spark, sf_dir, "documents")
     corpus = (
@@ -2019,7 +1908,7 @@ def lsh_postings_store(bands: DataFrame, path: str) -> None:
     rebuild (hash-proven by d_neardup_stored). Partitioning by band
     bounds any one probe task's input to a single band's postings; at
     100 TB the inner layout would additionally bucket by (sig0, sig1)
-    (sources/io.py:bucketed_write) so the probe join co-locates without
+    (``bucketBy``) so the probe join co-locates without
     shuffling the corpus side. Generation-versioned (operators/store.py):
     a re-store over an existing path is an atomic snapshot replace."""
     _lsh_store(path).create({"": bands})

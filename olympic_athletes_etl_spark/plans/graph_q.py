@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.operators.graph import (
     _degrees,
+    _release_checkpoint,
     bfs_depths,
     kcore,
     pagerank_fixed_point,
@@ -444,12 +445,17 @@ def g_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint per round; an empty frontier ends it early, same answer).
     At 100 TB you call ``bfs_depths`` without ``rounds``, which runs to
     the empty frontier; visited stays (node, depth)-thin regardless of
-    edge count."""
-    edges = _edges(spark, sf_dir)
-    seed = _degrees(edges).agg(F.min("node").alias("node"))
-    return bfs_depths(
-        edges, seed, src="pa", dst="pb", rounds=_BFS_ROUNDS
-    ).select(F.col("node").alias("part"), "depth")
+    edge count.
+
+    The edge list is checkpointed once, so the seed — the lowest node,
+    which is the lowest ``pa`` since every edge has pa < pb — reads the
+    materialized edges instead of re-deriving the co-purchase
+    self-join."""
+    edges = _edges(spark, sf_dir).localCheckpoint(eager=True)
+    seed = edges.agg(F.min("pa").alias("node"))
+    visited = bfs_depths(edges, seed, src="pa", dst="pb", rounds=_BFS_ROUNDS)
+    _release_checkpoint(edges)
+    return visited.select(F.col("node").alias("part"), "depth")
 
 
 g_bfs_depth.__doc__ = g_bfs_depth.__doc__.format(r=_BFS_ROUNDS)

@@ -16,6 +16,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from olympic_athletes_etl_spark.operators.relational import (
+    anti_resume,
+    collect_sorted,
+    dedup_subset,
+    drop_if_present,
+    dup_detect,
+    explode_delimited,
+    forward_fill,
+    mode_per_group,
+    null_profile,
+    rename_bulk,
+    surrogate_key,
+    top_k_per_group,
+    union_align,
+    value_counts,
+)
 from olympic_athletes_etl_spark.operators.store import Rollup
 from olympic_athletes_etl_spark.plans.registry import query
 from olympic_athletes_etl_spark.plans.tables import load
@@ -43,7 +59,7 @@ def f_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal": "balance",
     }
     customer = load(spark, sf_dir, "customer")
-    df = customer.drop("c_nationkey").withColumnsRenamed(mapping)
+    df = rename_bulk(drop_if_present(customer, ["c_nationkey"]), mapping)
     return df.select("customer_id", "customer_name", "segment",
                      F.round("balance", 2).alias("balance"))
 
@@ -111,10 +127,8 @@ def f_anti_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     does a driver-side set subtract — we use the distributed left_anti join,
     which scales past driver memory)."""
     customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    return customer.join(
-        orders, customer.c_custkey == orders.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name")
+    done = load(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
+    return anti_resume(customer, done, "c_custkey").select("c_custkey", "c_name")
 
 
 @query(
@@ -273,12 +287,8 @@ def a_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterministic on ties; we are not). Aggregate-then-window: the
     window runs over (user × type) counts, not raw events."""
     events = load(spark, sf_dir, "events")
-    counts = events.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("user_id").orderBy(F.desc("n"), F.asc("event_type"))
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("mode_event"), F.col("n").alias("mode_count"))
+    return mode_per_group(events, "user_id", "event_type").withColumnRenamed(
+        "event_type", "mode_event"
     )
 
 
@@ -313,7 +323,8 @@ def a_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicates on a column subset (A4; reference:
     data_clean_glue.py:128-138)."""
     customer = load(spark, sf_dir, "customer")
-    return customer.select("c_mktsegment", "c_nationkey").dropDuplicates()
+    keys = ["c_mktsegment", "c_nationkey"]
+    return dedup_subset(customer.select(*keys), keys)
 
 
 # --------------------------------------------------------------------------
@@ -344,12 +355,9 @@ def a_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")).alias("pri"),
         F.col("o_totalprice"),
     )
-
-    def pct(c: str, alias: str) -> F.Column:
-        return F.round(F.avg(F.col(c).isNull().cast("int")) * 100, 2).alias(alias)
-
-    return t.agg(pct("st", "st_null_pct"), pct("pri", "pri_null_pct"),
-                 pct("o_totalprice", "price_null_pct"))
+    return null_profile(t).withColumnsRenamed(
+        {"st": "st_null_pct", "pri": "pri_null_pct", "o_totalprice": "price_null_pct"}
+    )
 
 
 # --------------------------------------------------------------------------
@@ -362,7 +370,7 @@ def a_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """value_counts (A7; reference: data_quality_and_validation.py:256-260)."""
     events = load(spark, sf_dir, "events")
-    return events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    return value_counts(events, "event_type").withColumnRenamed("count", "n")
 
 
 # --------------------------------------------------------------------------
@@ -382,8 +390,8 @@ def a_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-dependent → we expose the deterministic form:
     sort_array(collect_set) joined to a string, hash-stable on both engines."""
     events = load(spark, sf_dir, "events")
-    return events.groupBy("user_id").agg(
-        F.array_join(F.sort_array(F.collect_set("event_type")), ",").alias("event_types")
+    return collect_sorted(events, "user_id", "event_type").withColumnRenamed(
+        "event_type_list", "event_types"
     )
 
 
@@ -405,15 +413,11 @@ def a_dup_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_quality_and_validation.py:24-28). groupBy+HAVING, not a window —
     the aggregate form combines map-side, a count window over raw rows
     doesn't."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            "o_custkey",
-            F.date_trunc("day", F.col("o_orderdate")).cast("date").cast("string").alias("order_day"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
+    orders = load(spark, sf_dir, "orders").select(
+        "o_custkey",
+        F.date_trunc("day", F.col("o_orderdate")).cast("date").cast("string").alias("order_day"),
     )
+    return dup_detect(orders, ["o_custkey", "order_day"]).withColumnRenamed("dup_count", "n")
 
 
 # --------------------------------------------------------------------------
@@ -439,7 +443,7 @@ def a_union_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("s_acctbal", 2).alias("acctbal"),
         F.lit("supplier").alias("src"),
     )
-    out = nation.unionByName(supplier, allowMissingColumns=True)
+    out = union_align([nation, supplier])
     return out.select("name", F.col("acctbal").cast("double").alias("acctbal"), "src")
 
 
@@ -479,11 +483,8 @@ def w_surrogate_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is acceptable ONLY on tiny dims (nation = 25 rows; the reference's
     editions dim = 76). For fact-scale ids use ``w_dense_id`` below (the
     two-phase operators/scale.py:dense_ids — no global-order window)."""
-    nation = load(spark, sf_dir, "nation")
-    w = Window.orderBy(F.asc("n_name"), F.asc("n_nationkey"))
-    return nation.select("n_nationkey", "n_name").withColumn(
-        "nation_sk", F.row_number().over(w)
-    )
+    nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return surrogate_key(nation, ["n_name", "n_nationkey"], "nation_sk")
 
 
 # --------------------------------------------------------------------------
@@ -604,14 +605,12 @@ def w_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(
         F.round(F.col("value"), 2)
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    return forward_fill(
+        events.select("event_id", "user_id", v.alias("v_filled")),
+        ["v_filled"],
+        partition_by="user_id",
+        order_by="event_id",
     )
-    return events.select("event_id", "user_id", v.alias("v")).withColumn(
-        "v_filled", F.last("v", ignorenulls=True).over(w)
-    ).drop("v")
 
 
 # --------------------------------------------------------------------------
@@ -634,13 +633,10 @@ def o_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     a skewed brand; rank-then-filter pushes the k-limit into WindowExec
     (Spark's rank-limit pushdown)."""
     part = load(spark, sf_dir, "part")
-    w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
-    return (
-        part.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("p_brand", "p_partkey", "p_name",
-                F.round("p_retailprice", 2).alias("price"), "rn")
-    )
+    return top_k_per_group(
+        part, ["p_brand"], [F.desc("p_retailprice"), F.asc("p_partkey")], 3
+    ).select("p_brand", "p_partkey", "p_name",
+             F.round("p_retailprice", 2).alias("price"), F.col("rank").alias("rn"))
 
 
 # --------------------------------------------------------------------------
@@ -678,9 +674,7 @@ def r_explode_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explode split string → rows (R1; reference: data_clean_glue.py:105-111
     explodes '/'-separated Affiliations)."""
     part = load(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey", F.explode(F.split(F.col("p_name"), " ")).alias("word")
-    )
+    return explode_delimited(part, "p_name", " ", alias="word").select("p_partkey", "word")
 
 
 # --------------------------------------------------------------------------

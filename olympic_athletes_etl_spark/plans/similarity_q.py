@@ -469,15 +469,16 @@ def _round_sums(
     rows, matching groupBy semantics (an emptied centroid drops out of
     the next round's codebook).
 
-    One Python task runs per partition of ``n``, and each task has a
-    fixed cost that dwarfs the numpy work at small row counts: every
-    task, on a reused worker too, calls ``importlib.invalidate_caches()``
-    (pyspark's ``worker_util.setup_spark_files``), which makes each of
-    the worker's 16 cached zipimporters of ``pyspark.zip`` re-read the
-    zip directory — 0.19–0.24 CPU s per call, measured inside a worker
-    on a 4-vCPU VM (PySpark 4.1). A 500-row mapInPandas costs ~1.05
-    worker CPU s on 4 partitions and ~0.27 s on one. The fit therefore
-    passes the row-count-sized view from _fit_base, not the raw base."""
+    One Python task runs per partition of ``n``, and each task and job
+    has a fixed cost that the numpy work does not repay at small row
+    counts, even with the worker daemon (worker_daemon.py) that stopped
+    the per-task archive re-reads. Rounds on the base's own partitions,
+    measured at sf0.01, local[4], on a 4-vCPU VM, 4 processes × 8
+    uncached fits per side: k-means runs 7 jobs / 28 tasks instead of
+    5 / 12 and 1.9–2.4 CPU s instead of 1.6–1.8 s per fit; PQ runs 5 / 19
+    instead of 4 / 11 and 1.3–1.5 s instead of 0.8–1.0 s. The fit
+    therefore passes the row-count-sized view from _fit_base, not the
+    raw base."""
     data = {j: _np_entry_data(cents) for j, cents in sorted(books.items())}
     ids = {j: [int(c) for c in c_ids] for j, (c_ids, _, _) in data.items()}
     fns = {
@@ -841,12 +842,13 @@ def _fit_base(n: DataFrame) -> tuple[DataFrame, DataFrame]:
     With the default 10,000-row batch, k is 1 up to 10,000 rows (sf0.1
     has 2,000 embeddings), 2 at sf1's 20,000 rows for any core count,
     and min(P, 20) at sf10's 200,000 (20 of 32 partitions under
-    local[32], unchanged for P <= 20). The trade, measured on a 4-vCPU
-    VM: at sf1, local[4], a fit's CPU falls 15% (km) and 11% (pq) with
-    wall time unchanged; a one-task round costs ~0.37 s wall fixed plus
-    ~11 us (km) / ~18 us (pq) per row. Not measured: wall time on a
-    host with many real cores, where the sf1 rounds give up
-    parallelism (2 tasks of 10,000 rows instead of P smaller ones)."""
+    local[32], unchanged for P <= 20). The trade, with the worker
+    daemon on: at sf0.01, local[4], sizing saves 2 of 7 jobs and 16 of
+    28 tasks per k-means fit and about a quarter of its CPU (PQ: 1 of
+    5 jobs, 8 of 19 tasks, about a third; figures in _round_sums). Not
+    measured: wall time on a host with many real cores, where the sf1
+    rounds give up parallelism (2 tasks of 10,000 rows instead of P
+    smaller ones)."""
     base, metrics = _observed_checkpoint(
         n.select("vec_id", "vq"), [F.count(F.lit(1)).alias("rows")]
     )
@@ -885,9 +887,9 @@ def _lloyd_fit(
     −12–18%, bit-identical fits), computed fresh on every call and
     released on return. The rounds read its coalesced view: one Python
     task per ``maxRecordsPerBatch`` rows, at most one per base
-    partition, because each task pays ~0.2 CPU s of fixed worker set-up
-    (_round_sums) — one task per round at the bench's 500 rows, two at
-    sf1's 20,000."""
+    partition, because every task and job has a fixed cost the numpy
+    work does not repay at these sizes (measured in _round_sums) — one
+    task per round at the bench's 500 rows, two at sf1's 20,000."""
     n = _train_sample(n, train_mod)
     base, rounds = _fit_base(n)
     subdim = _DIM // m

@@ -415,8 +415,8 @@ def r_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan time — one-dimensional sort can only do that for its leading
     column. The registered aggregate verifies the envelope math; the
     actual write path is ``df.repartitionByRange('zval').sortWithinPartitions
-    ('zval').write`` (see operators/scale.py:range_sorted_write), whose
-    range exchange is the only shuffle involved."""
+    ('zval').write``, whose range exchange is the only shuffle
+    involved."""
     cust = load(spark, sf_dir, "customer")
     b = cust.select(
         F.col("c_nationkey").alias("x"),

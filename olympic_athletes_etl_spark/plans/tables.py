@@ -183,15 +183,3 @@ def load(
         keys = (spread_on,) if isinstance(spread_on, str) else spread_on
         df = spread(df, spark, path, *keys)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view so the WHOLE engine
-    surface is reachable from raw ``spark.sql`` — a user migrating
-    SQL-first workloads points their FROM clauses at these names (the
-    same names the DuckDB oracles use, so any oracle string in this repo
-    is also a runnable Spark query modulo dialect). Views are lazy
-    references to the normalized ``load`` output: events ts handling and
-    session tuning apply identically to SQL and DataFrame users."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

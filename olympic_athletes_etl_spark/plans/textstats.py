@@ -2324,9 +2324,8 @@ def bpe_encode(
     Token-less documents (empty or whitespace-only text) produce no
     output row, matching bpe_encode_pandas. The chained replaces still
     grow the plan linearly in n_merges — past the measured crossover
-    (SCALE.md) use bpe_encode_pandas, the constant-plan-size
-    Arrow-batched twin, or bpe_encode_auto which dispatches on the
-    rule count."""
+    (SCALE.md, 16 rules) use bpe_encode_pandas, the constant-plan-size
+    Arrow-batched twin."""
     d = "\x1f"
     s = F.regexp_replace(
         F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")),
@@ -2345,25 +2344,6 @@ def bpe_encode(
     return docs.select("doc_id", tokens.alias("tokens")).filter(
         F.size("tokens") > 0
     )
-
-
-#: measured fold-vs-Arrow crossover in rule count (SCALE.md): past this
-#: the chained fold's linear plan growth loses to the constant-size
-#: Arrow encoder even before worker warmup amortizes.
-BPE_FOLD_MAX_MERGES = 16
-
-
-def bpe_encode_auto(
-    docs: DataFrame, merges: list[tuple[str, str, int]] | list[tuple[str, str]]
-) -> DataFrame:
-    """Dispatching encoder: the JVM fold for small rule lists (≤
-    ``BPE_FOLD_MAX_MERGES`` — zero Python, whole-stage codegen), the
-    Arrow-batched bpe_encode_pandas past the crossover (constant plan
-    size at real vocab counts). Safe to dispatch on because the two
-    encoders are pinned byte-identical (test_round9_ops)."""
-    if len(merges) > BPE_FOLD_MAX_MERGES:
-        return bpe_encode_pandas(docs, merges)
-    return bpe_encode(docs, merges)
 
 
 # --------------------------------------------------------------------------

@@ -57,7 +57,6 @@ _REV_INT = (
 # <= 100%); a signed money column (e.g. acctbal deltas) must NOT reuse
 # these templates as-is — use a sign-safe truncation on both sides.
 _REV_SUM_SPARK = f"CAST(sum({_REV_INT}) DIV 100 AS DOUBLE) / 100.0"
-_REV_SUM_SQL = f"CAST(sum({_REV_INT}) // 100 AS DOUBLE) / 100.0"
 _CHARGE_INT = (
     f"CAST({_REV_INT} * (100 + CAST(round(l_tax * 100) AS BIGINT))"
     " AS DECIMAL(38,0))"

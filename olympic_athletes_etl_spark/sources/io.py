@@ -222,19 +222,3 @@ def split_by_tag(
     call site when the upstream is expensive, so the source computes once
     for all three sinks."""
     return {t: df.filter(F.col(tag_col) == t).drop(tag_col) for t in tags}
-
-
-def read_parquet_evolved(
-    spark: SparkSession, pattern: str, schema: "StructType | None" = None
-) -> DataFrame:
-    """Schema-evolution read: union files written under DIFFERENT schema
-    versions (columns added over time). With ``schema`` given, that
-    explicit contract wins — missing columns null-fill per file and the
-    footer union cost disappears; without it, ``mergeSchema`` reconciles
-    footers (name-keyed union; a type CONFLICT on a shared name fails
-    fast rather than coercing silently). At 100 TB prefer the explicit
-    schema: mergeSchema reads every file footer at planning time."""
-    reader = spark.read
-    if schema is not None:
-        return reader.schema(schema).parquet(pattern)
-    return reader.option("mergeSchema", "true").parquet(pattern)

@@ -91,41 +91,6 @@ def tumbling_counts(
     )
 
 
-def windowed_ohlc(
-    events: DataFrame, window: str = "1 hour", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Windowed OHLC bars per (window, event_type) — the streaming twin
-    of the batch e_ohlc_bars query: open/close via min_by/max_by on a
-    (ts, event_id) total order (single-pass mergeable state — five
-    scalars per bar, exactly what incremental micro-batch aggregation
-    needs), high/low as plain extremes. Same tie-break discipline as the
-    batch form so stream == batch holds row-for-row."""
-    okey = F.struct(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        F.col("event_id").alias("eid"),
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min_by("value", okey), 4).alias("open"),
-            F.round(F.max("value"), 4).alias("high"),
-            F.round(F.min("value"), 4).alias("low"),
-            F.round(F.max_by("value", okey), 4).alias("close"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "open",
-            "high",
-            "low",
-            "close",
-        )
-    )
-
-
 def sliding_counts(
     events: DataFrame,
     window: str = "1 hour",
@@ -685,26 +650,6 @@ def stream_qhist_compact(
     from olympic_athletes_etl_spark.plans.relational import QHIST
 
     stream_fold_compact(spark, store_path, checkpoint_dir, QHIST)
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup — the genuinely streaming-only operator
-    batch dedup can't replace: duplicate deliveries (at-least-once
-    sources redelivering on retry) are dropped by key while state stays
-    BOUNDED via ``dropDuplicatesWithinWatermark`` — a key's dedup state
-    is freed once the watermark passes it, so state size tracks the
-    duplicate-arrival window, not the stream's lifetime key count.
-    Plain ``dropDuplicates`` on a stream grows state forever; this is
-    the form that survives at ingest scale. Duplicates arriving later
-    than the watermark are NOT caught (they're late data by definition)
-    — pair with a downstream batch d_exact_dup sweep for exactness."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
 
 
 _SESSION_OUT = StructType(

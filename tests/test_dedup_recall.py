@@ -55,18 +55,6 @@ def test_embedding_neardup_recall_and_precision(spark, sf_dir):
     assert recall >= 0.9, f"LSH recall {recall:.3f} < 0.9 ({len(got)}/{len(truth)})"
 
 
-def test_embedding_fixed2_yardstick_recall(spark, sf_dir):
-    """The demoted fixed 16-bit/8×2 form (the r12 sf10 quadratic) still
-    works as a small-corpus yardstick — keep its recall measured so the
-    corpus-sized form has a baseline to be compared against."""
-    from olympic_athletes_etl_spark.plans.dedup_q import d_embedding_neardup_fixed2
-
-    got = _pairs(d_embedding_neardup_fixed2(spark, sf_dir), ("vec_a", "vec_b"))
-    truth = _pairs(d_embedding_neardup_allpairs(spark, sf_dir), ("vec_a", "vec_b"))
-    assert got <= truth
-    assert len(got & truth) / len(truth) >= 0.9
-
-
 def test_embedding_band_params_sql_ladder_matches_python():
     """The oracle derives (r, b) from count(*) via integer CASE ladders;
     the Spark side derives them in Python (_nb_params). A drift between

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.operators.graph import (
@@ -378,110 +379,6 @@ def test_bfs_isolated_seed_gets_depth_zero(spark):
     assert out == {(99, 0)}
 
 
-def test_pagerank_converged_matches_fixed_point_round_for_round(spark):
-    """The convergence wrapper must add a stopping rule, never different
-    arithmetic: pagerank_fixed_point run for exactly the rounds
-    pagerank_converged reports must reproduce its ranks bit-for-bit."""
-    from olympic_athletes_etl_spark.operators.graph import (
-        pagerank_converged,
-        pagerank_fixed_point,
-    )
-
-    # star + tail, symmetrized: hub/leaf asymmetry keeps deltas moving
-    # for several rounds before the contraction settles.
-    base = [(0, i) for i in range(1, 6)] + [(5, 6), (6, 7)]
-    sym = base + [(b, a) for a, b in base]
-    edges = spark.createDataFrame(sym, "src long, dst long")
-    # 1e-2 mean drift (~28 rounds at d=0.85) keeps the test quick while
-    # still exercising a multi-round convergence path.
-    eps = 8 * 10_000_000
-    ranks, rounds = pagerank_converged(edges, eps_units=eps, max_iter=100)
-    assert rounds >= 2  # non-trivial: converged after more than one round
-    got = {(r["node"], r["rank"]) for r in ranks.collect()}
-    want = {
-        (r["node"], r["rank"])
-        for r in pagerank_fixed_point(edges, n_iter=rounds).collect()
-    }
-    assert got == want
-
-
-def test_pagerank_converged_on_gated_query_graph(spark, sf_dir):
-    """On the same co-purchase edge graph the gated g_pagerank uses
-    (symmetrized, same scale/damping), the fixpoint form converges and
-    round-for-round matches the gated query's library
-    (pagerank_fixed_point) — linking the convergence form to the
-    oracle-pinned arithmetic at test SF."""
-    from olympic_athletes_etl_spark.operators.graph import (
-        pagerank_converged,
-        pagerank_fixed_point,
-    )
-    from olympic_athletes_etl_spark.plans.graph_q import _edges
-
-    edges = _edges(spark, sf_dir)
-    sym = edges.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionByName(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
-    n_nodes = sym.select("src").distinct().count()
-    ranks, rounds = pagerank_converged(
-        sym, eps_units=n_nodes * 10_000_000, max_iter=100
-    )
-    got = {(r["node"], r["rank"]) for r in ranks.collect()}
-    want = {
-        (r["node"], r["rank"])
-        for r in pagerank_fixed_point(sym, n_iter=rounds).collect()
-    }
-    assert got == want
-
-
-def test_pagerank_converged_delta_at_stop_is_small(spark):
-    """At the reported stopping round the L1 movement of one FURTHER
-    fixed-point round is <= the default epsilon (one unit per node) —
-    the stopping rule measured what it claims to measure."""
-    from olympic_athletes_etl_spark.operators.graph import (
-        pagerank_converged,
-        pagerank_fixed_point,
-    )
-
-    base = [(i, (i + 1) % 8) for i in range(8)] + [(0, 4)]
-    sym = base + [(b, a) for a, b in base]
-    edges = spark.createDataFrame(sym, "src long, dst long")
-    eps = 8 * 10_000_000
-    ranks, rounds = pagerank_converged(edges, eps_units=eps, max_iter=100)
-    at_stop = {r["node"]: r["rank"] for r in ranks.collect()}
-    prev = {
-        r["node"]: r["rank"]
-        for r in pagerank_fixed_point(edges, n_iter=rounds - 1).collect()
-    } if rounds > 1 else {n: 1_000_000_000 for n in at_stop}
-    delta = sum(abs(at_stop[n] - prev[n]) for n in at_stop)
-    assert delta <= eps
-
-
-def test_pagerank_converged_raises_on_max_iter(spark):
-    from olympic_athletes_etl_spark.operators.graph import pagerank_converged
-
-    base = [(0, i) for i in range(1, 6)]
-    sym = base + [(b, a) for a, b in base]
-    edges = spark.createDataFrame(sym, "src long, dst long")
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="pagerank_converged"):
-        pagerank_converged(edges, max_iter=1, eps_units=0)
-
-
-def test_pagerank_converged_empty_graph_returns_empty(spark):
-    """Empty edge list: already at the fixpoint — must return an empty
-    (node, rank) frame and 0 rounds, not TypeError on a NULL delta sum."""
-    from olympic_athletes_etl_spark.operators.graph import pagerank_converged
-
-    empty = spark.createDataFrame([], "src long, dst long")
-    ranks, rounds = pagerank_converged(empty)
-    assert rounds == 0
-    assert ranks.count() == 0
-    assert ranks.columns == ["node", "rank"]
-
-
 def test_connected_components_deep_path_beyond_old_default(spark):
     """A 60-vertex path has diameter 59 > the pre-round-6 max_iter of
     20, under which min-label propagation silently returned the path
@@ -695,6 +592,24 @@ def test_release_checkpoint_noops_on_unmaterialized_frames(spark):
     assert _n_persistent(spark) == before
 
 
+def test_release_checkpoint_raises_on_a_broken_plan_handle(spark, monkeypatch):
+    """The plan handle is py4j internals; if a Spark version moves it,
+    the release must fail loudly, not silently leave blocks persisted."""
+    from olympic_athletes_etl_spark.operators.graph import _release_checkpoint
+
+    class _Moved:
+        def queryExecution(self):
+            raise AttributeError("queryExecution moved")
+
+    df = spark.range(10).localCheckpoint(eager=True)
+    real = df._jdf
+    monkeypatch.setattr(df, "_jdf", _Moved())
+    with pytest.raises(AttributeError, match="moved"):
+        _release_checkpoint(df)
+    monkeypatch.setattr(df, "_jdf", real)
+    _release_checkpoint(df)
+
+
 def test_iterative_operators_do_not_accumulate_checkpoints(spark, sf_dir):
     """A deep peel/propagation must hold O(1) checkpointed frames, not
     one per round — superseded rounds are released deterministically,
@@ -704,7 +619,6 @@ def test_iterative_operators_do_not_accumulate_checkpoints(spark, sf_dir):
         connected_components,
         connected_components_star,
         kcore,
-        pagerank_converged,
     )
     from olympic_athletes_etl_spark.plans.graph_q import g_bfs_depth, g_kcore
 
@@ -733,12 +647,6 @@ def test_iterative_operators_do_not_accumulate_checkpoints(spark, sf_dir):
     assert labels.count() == 31
     # the vertex set and the converged star edge list the labels read
     assert _n_persistent(spark) - before <= 2
-
-    before = _n_persistent(spark)
-    sym = edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    ranks, rounds = pagerank_converged(sym, eps_units=31 * 10_000_000)
-    assert ranks.count() == 31 and rounds > 2
-    assert _n_persistent(spark) - before <= 1
 
     for gated in (g_kcore, g_bfs_depth):
         before = _n_persistent(spark)

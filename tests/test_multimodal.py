@@ -153,16 +153,6 @@ def test_plan_resize_dims_integer_fit(spark):
     assert all(dw <= 32 and dh <= 32 for dw, dh, _ in rows.values())
 
 
-def test_fake_resize_payload_stride_sampling():
-    from olympic_athletes_etl_spark.multimodal.columns import fake_resize_payload
-
-    src = bytes(range(100))
-    out = fake_resize_payload(src, len(src), 10)
-    assert len(out) == 10
-    assert out == bytes((i * 100) // 10 for i in range(10))
-    assert fake_resize_payload(src, len(src), 200) == src  # never upscales
-
-
 def test_resize_image_nearest_neighbor_exact():
     import numpy as np
 

@@ -203,36 +203,6 @@ def test_hll_rollup_store_append_autocreates(
     assert getattr(mod, serve)(spark, path).count() > 0
 
 
-def test_bpe_encode_auto_dispatch_and_equality(spark, sf_dir):
-    """bpe_encode_auto keeps the zero-Python JVM rewrite at/below the
-    crossover and ships an Arrow worker above it — and both paths
-    agree with the fold reference doc-for-doc."""
-    from olympic_athletes_etl_spark.plans.tables import load
-    from olympic_athletes_etl_spark.plans.textstats import (
-        BPE_FOLD_MAX_MERGES,
-        bpe_encode_auto,
-        bpe_encode_pandas,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    small = [("a", "t"), ("d", "at")]
-    big = small + [(chr(c), chr(c)) for c in range(ord("b"), ord("b") + BPE_FOLD_MAX_MERGES)]
-    assert len(big) > BPE_FOLD_MAX_MERGES
-    jvm_plan = bpe_encode_auto(docs, small)._jdf.queryExecution().toString()
-    py_plan = bpe_encode_auto(docs, big)._jdf.queryExecution().toString()
-    assert "MapInPandas" not in jvm_plan  # JVM rewrite, no Python worker
-    assert "MapInPandas" in py_plan  # dispatched past the crossover
-    got = {
-        r["doc_id"]: list(r["tokens"])
-        for r in bpe_encode_auto(docs, big).collect()
-    }
-    want = {
-        r["doc_id"]: list(r["tokens"])
-        for r in bpe_encode_pandas(docs, big).collect()
-    }
-    assert got == want
-
-
 def test_bpe_encode_rewrite_edge_cases(spark):
     """The delimiter-rewrite encoder matches the fold on the hard
     inputs: overlapping merges (aaa under (a,a)), cascades through

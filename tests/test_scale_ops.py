@@ -1,18 +1,10 @@
-"""operators.scale — salting correctness and bucketed shuffle-free joins."""
+"""operators.scale — salting correctness."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
-import pytest
 from pyspark.sql import functions as F
 
-from olympic_athletes_etl_spark.operators.scale import (
-    bucketed_write,
-    cocluster_join,
-    salted_join,
-)
+from olympic_athletes_etl_spark.operators.scale import salted_join
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -36,93 +28,3 @@ def test_salted_left_join_keeps_unmatched(spark):
     out = salted_join(probe, build, "k", n_salts=3, how="left").collect()
     got = {(r["k"], r["attr"]) for r in out}
     assert got == {("a", "A"), ("zzz", None)}
-
-
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    left = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("lv")
-    )
-    right = spark.range(500).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("rv")
-    )
-    bucketed_write(left, "t_bucket_left", "k", 4, path=str(tmp_path / "l"))
-    bucketed_write(right, "t_bucket_right", "k", 4, path=str(tmp_path / "r"))
-    # disable auto-broadcast: these test tables are tiny, and a BHJ would
-    # mask the property under test (bucketed SMJ without a shuffle)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = cocluster_join(spark, "t_bucket_left", "t_bucket_right", "k")
-        assert joined.count() == 500
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        # co-located: sort-merge join with NO shuffle on either side
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", prev_aqe)
-        else:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_left")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_right")
-
-
-def test_range_sorted_write_layout(spark, sf_dir, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from olympic_athletes_etl_spark.operators.scale import range_sorted_write
-    from olympic_athletes_etl_spark.plans.tables import load
-
-    out = str(tmp_path / "orders_by_date")
-    orders = load(spark, sf_dir, "orders")
-    range_sorted_write(orders, out, "o_orderkey", num_partitions=4)
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert len(files) == 4
-    # non-overlapping key ranges across files, sorted within each file
-    spans = []
-    for f in files:
-        rows = [r["o_orderkey"] for r in spark.read.parquet(f).collect()]
-        assert rows == sorted(rows)
-        spans.append((min(rows), max(rows)))
-    spans.sort()
-    for (lo_a, hi_a), (lo_b, _hi_b) in zip(spans, spans[1:]):
-        assert hi_a <= lo_b
-    # round-trips the full table
-    assert spark.read.parquet(out).count() == orders.count()
-
-
-def test_hive_partitioned_write_prunes_directories(spark, sf_dir, tmp_path):
-    from olympic_athletes_etl_spark.operators.scale import (
-        hive_partitioned_write,
-    )
-
-    from olympic_athletes_etl_spark.plans.tables import load
-
-    ev = load(spark, sf_dir, "events")
-    out = str(tmp_path / "events_by_type")
-    hive_partitioned_write(ev, out, ["event_type"])
-    # on-disk layout: one col=value directory per type
-    dirs = {p.name for p in (tmp_path / "events_by_type").iterdir()
-            if p.is_dir()}
-    types = {r["event_type"] for r in ev.select("event_type").distinct().collect()}
-    assert dirs == {f"event_type={t}" for t in types}
-    back = spark.read.parquet(out)
-    # roundtrip conservation
-    assert back.count() == ev.count()
-    # the filter must reach the scan as a PartitionFilter (directory
-    # pruning — non-matching files are never opened), not a post-scan
-    # Filter over all rows
-    pruned = back.filter(F.col("event_type") == "click")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "event_type" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0]
-    assert pruned.count() == ev.filter(F.col("event_type") == "click").count()

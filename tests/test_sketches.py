@@ -1,37 +1,8 @@
-"""operators.sketches — approximate aggregates within tolerance of exact."""
+"""operators.sketches — derandomized sketches within tolerance of exact."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from olympic_athletes_etl_spark.operators.sketches import (
-    approx_distinct,
-    approx_percentiles,
-)
-
-
-def test_approx_distinct_within_rsd(spark):
-    df = spark.range(20_000).select((F.col("id") % 5_000).alias("v"))
-    got = approx_distinct(df, "v", rsd=0.02).collect()[0][0]
-    assert abs(got - 5_000) / 5_000 < 0.05
-
-
-def test_approx_distinct_grouped(spark):
-    df = spark.range(10_000).select(
-        (F.col("id") % 2).alias("g"), (F.col("id") % 1_000).alias("v")
-    )
-    rows = {r["g"]: r["approx_distinct_v"] for r in
-            approx_distinct(df, "v", group=["g"]).collect()}
-    for g in (0, 1):
-        assert abs(rows[g] - 500) / 500 < 0.05
-
-
-def test_approx_percentiles_close_to_exact(spark):
-    df = spark.range(100_000).select(F.col("id").cast("double").alias("v"))
-    [approx] = approx_percentiles(df, "v", (0.5, 0.99)).collect()[0]
-    p50, p99 = approx
-    assert abs(p50 - 50_000) < 1_000
-    assert abs(p99 - 99_000) < 1_000
 
 
 def test_kmv_cardinality_tracks_known_distincts(spark):

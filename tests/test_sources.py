@@ -109,43 +109,6 @@ def test_object_store_conf_reaches_live_hadoop_conf(spark):
     }
 
 
-def test_read_parquet_evolved_unions_schema_versions(spark, tmp_path):
-    """Files written under v1 (id, a) and v2 (id, a, b) read as one table:
-    merged schema covers both versions, v1 rows null-fill the new column;
-    an explicit schema read produces the identical result."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from olympic_athletes_etl_spark.sources.io import read_parquet_evolved
-
-    d = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "x")], "id long, a string").write.mode(
-        "append"
-    ).parquet(d)
-    spark.createDataFrame(
-        [(2, "y", "new")], "id long, a string, b string"
-    ).write.mode("append").parquet(d)
-
-    merged = read_parquet_evolved(spark, d)
-    assert set(merged.columns) == {"id", "a", "b"}
-    rows = {r["id"]: (r["a"], r["b"]) for r in merged.collect()}
-    assert rows == {1: ("x", None), 2: ("y", "new")}
-
-    contract = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("a", StringType()),
-            StructField("b", StringType()),
-        ]
-    )
-    explicit = read_parquet_evolved(spark, d, schema=contract)
-    assert {r["id"]: (r["a"], r["b"]) for r in explicit.collect()} == rows
-
-
 def test_read_jsonl_roundtrip_and_corrupt_side_channel(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, StringType, StructField, StructType

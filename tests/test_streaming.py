@@ -249,73 +249,6 @@ def test_stream_stream_attribution_matches_batch(spark, tmp_path):
     assert expected == {(1, 0), (3, 2)}
 
 
-def test_dedup_within_watermark_drops_redelivery(spark, tmp_path):
-    import shutil
-
-    from olympic_athletes_etl_spark.streaming.pipeline import (
-        dedup_within_watermark,
-        run_available_now,
-    )
-
-    # two micro-batch files with overlapping event_ids (redelivery)
-    src = str(tmp_path / "dup_stream")
-    rows1 = [(1, "2024-01-01 10:00:00", 1, "view", 1.0, "{}"),
-             (2, "2024-01-01 10:01:00", 1, "view", 2.0, "{}")]
-    rows2 = [(2, "2024-01-01 10:01:00", 1, "view", 2.0, "{}"),  # dup of id 2
-             (3, "2024-01-01 10:02:00", 2, "click", 3.0, "{}")]
-    for i, rows in enumerate((rows1, rows2)):
-        df = spark.createDataFrame(
-            [(e, __import__("datetime").datetime.fromisoformat(t), u, k, v, p)
-             for e, t, u, k, v, p in rows],
-            schema=EVENT_SCHEMA,
-        )
-        df.coalesce(1).write.mode("append").parquet(src)
-    stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    run_available_now(
-        dedup_within_watermark(stream),
-        "t_dedup_wm",
-        output_mode="append",
-        checkpoint_dir=str(tmp_path / "ck_dedup"),
-    )
-    out = spark.table("t_dedup_wm").collect()
-    ids = sorted(r["event_id"] for r in out)
-    assert ids == [1, 2, 3]  # the redelivered id 2 appears exactly once
-    shutil.rmtree(src, ignore_errors=True)
-
-
-def test_windowed_ohlc_matches_batch(spark, stream_dir, tmp_path):
-    from olympic_athletes_etl_spark.streaming.pipeline import windowed_ohlc
-
-    stream = read_event_stream(spark, stream_dir)
-    run_available_now(
-        windowed_ohlc(stream, "1 hour", "30 minutes"),
-        "t_ohlc_all",
-        output_mode="complete",
-        checkpoint_dir=str(tmp_path / "ck_ohlc"),
-    )
-    got = {
-        (r["window_start"], r["event_type"]): (
-            r["n"], r["open"], r["high"], r["low"], r["close"]
-        )
-        for r in spark.table("t_ohlc_all").collect()
-    }
-    want = {
-        (r["window_start"], r["event_type"]): (
-            r["n"], r["open"], r["high"], r["low"], r["close"]
-        )
-        for r in windowed_ohlc(
-            spark.read.schema(EVENT_SCHEMA).parquet(stream_dir),
-            "1 hour",
-            "30 minutes",
-        ).collect()
-    }
-    assert got == want
-    # the 10:00 view bar saw values 1 (ts+0), 2 (ts+10m), 100 (ts+5m):
-    # open = first by time = 1, close = last = 2, high = 100, low = 1
-    t0_view = got[(T0, "view")]
-    assert t0_view == (3, 1.0, 100.0, 1.0, 2.0)
-
-
 def test_sessionize_with_state_emits_on_close_and_timeout(spark, tmp_path):
     from olympic_athletes_etl_spark.streaming import (
         read_event_stream,
