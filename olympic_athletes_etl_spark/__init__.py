@@ -5,7 +5,7 @@ capabilities of the reference ETL pipeline (Ayham-0010/Olympic-Athletes-ETL,
 surveyed in SURVEY.md), re-expressed on the DataFrame/Catalyst stack:
 
 - ``session``       — SparkSession factory (AQE on, UTC, tuned shuffle counts)
-- ``sources``       — scans/sinks (parquet/CSV/glob/in-memory/checkpoint-resume)
+- ``sources``       — scraper source, CSV/glob scans, checkpoint-resume sinks
 - ``functions``     — scalar text/date/cast helpers (SURVEY §2.8)
 - ``operators``     — relational/window/restructure operator library (§2.2-2.9)
 - ``etl``           — the reference pipeline's clean → impute → publish stages
@@ -14,7 +14,9 @@ surveyed in SURVEY.md), re-expressed on the DataFrame/Catalyst stack:
 - ``dedup`` / ``similarity`` / ``textstats`` / ``multimodal`` — large-scale
   training-data-pipeline extensions (exact/MinHash/SimHash dedup, ANN search,
   language-ID/quality/tokenize, binary-column plumbing)
-- ``streaming``     — Structured Streaming extensions over the events table
+
+There is no streaming layer: the reference is a weekly batch job
+(SURVEY §2.10), and the ``events`` analytics are batch queries.
 """
 
 __version__ = "0.1.0"

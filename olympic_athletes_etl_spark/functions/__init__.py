@@ -5,7 +5,6 @@ from olympic_athletes_etl_spark.functions.text import (
     extract_group,
     parse_date_flexible,
     split_range,
-    strip_unit,
 )
 
 __all__ = [
@@ -13,5 +12,4 @@ __all__ = [
     "extract_group",
     "parse_date_flexible",
     "split_range",
-    "strip_unit",
 ]

@@ -43,16 +43,6 @@ def extract_group(col: Column | str, pattern: str, group: int = 1) -> Column:
     return F.nullif(F.regexp_extract(c, pattern, group), F.lit(""))
 
 
-def strip_unit(col: Column | str, unit: str) -> Column:
-    """Strip a trailing unit suffix (`` cm``/`` kg``) and cast to double;
-    malformed numerics become NULL — matching pandas
-    ``to_numeric(errors="coerce")`` (C9; data_clean_glue.py:40-42)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # try_cast, not cast: ANSI mode (Spark 4 default) makes a plain cast
-    # of malformed text THROW; to_numeric(errors="coerce") wants NULL
-    return F.trim(F.regexp_replace(c, rf"\s*{unit}\s*$", "")).try_cast("double")
-
-
 def parse_date_flexible(col: Column | str) -> Column:
     """Parse ``d MMMM yyyy`` strings with a bare-year fallback
     (``1894`` → 1894-01-01) — the pandas ``format="mixed"`` semantics the

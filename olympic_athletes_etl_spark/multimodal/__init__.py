@@ -6,7 +6,6 @@ with PNG/JPEG dispatching to pillow when installed; unsupported codecs
 raise ValueError for the quarantine side-channel."""
 
 from olympic_athletes_etl_spark.multimodal.columns import (
-    MEDIA_META_SCHEMA,
     attach_text_payload,
     decode_audio,
     decode_image,
@@ -15,13 +14,9 @@ from olympic_athletes_etl_spark.multimodal.columns import (
     encode_ppm,
     encode_wav,
     extract_byte_features,
-    fake_decode_meta,
-    resize_image,
-    sample_frame_indices,
 )
 
 __all__ = [
-    "MEDIA_META_SCHEMA",
     "attach_text_payload",
     "decode_audio",
     "decode_image",
@@ -30,7 +25,4 @@ __all__ = [
     "encode_ppm",
     "encode_wav",
     "extract_byte_features",
-    "fake_decode_meta",
-    "resize_image",
-    "sample_frame_indices",
 ]

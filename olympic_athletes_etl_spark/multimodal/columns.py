@@ -4,9 +4,10 @@ Conventions for media at 100 TB:
 
 - payload: one ``binary`` column (Parquet BYTE_ARRAY — column-pruned
   away unless the query touches it; never decode in a filter);
-- metadata: a typed struct column (``MEDIA_META_SCHEMA``) written AT
-  INGEST so planning-time predicates (resolution, duration, codec) prune
-  without touching bytes;
+- metadata: a typed struct column (``media_meta``: media type, codec,
+  dimensions, sample rate, frame count) written AT INGEST so
+  planning-time predicates (resolution, duration, codec) prune without
+  touching bytes;
 - compute: ``mapInPandas`` — Arrow moves each batch to Python once; the
   UDF sees a pandas iterator, so per-batch vectorization applies and
   memory stays bounded by the batch size, not the partition;
@@ -43,18 +44,6 @@ try:  # pragma: no cover - exercised implicitly by every mapInPandas test
     _cp.register_pickle_by_value(sys.modules[__name__])
 except Exception:  # noqa: BLE001 - older cloudpickle: fall back to by-ref
     pass
-
-#: typed metadata carried beside every binary payload
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_type", StringType()),  # image|audio|video|text
-        StructField("codec", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
-)
 
 _FEATURES_SCHEMA = StructType(
     [
@@ -106,17 +95,6 @@ def extract_byte_features(df: DataFrame, id_col: str = "doc_id", payload_col: st
             )
 
     return df.select(id_col, payload_col).mapInPandas(compute, _FEATURES_SCHEMA)
-
-
-def fake_decode_meta(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic stand-in for an image decode: pseudo
-    (width, height, mean_byte) derived from the bytes. Used by tests to
-    exercise the decode plumbing without codec libraries."""
-    n = len(payload)
-    w = 16 + (n % 64)
-    h = 16 + ((n // 64) % 64)
-    mean = (sum(payload) // n) if n else 0
-    return w, h, mean
 
 
 def _read_pnm_token(buf: bytes, pos: int) -> tuple[bytes, int]:
@@ -228,28 +206,6 @@ def encode_ppm(pixels) -> bytes:
     return b"P6\n%d %d\n255\n" % (w, h) + arr.tobytes()
 
 
-def sample_frame_indices(
-    df: DataFrame, n_frames_col: str = "media_meta.n_frames", every: int = 10
-) -> DataFrame:
-    """Video frame sampling as metadata arithmetic (no decode): one row
-    per sampled frame index via ``posexplode(sequence(...))``. The
-    payload column is deliberately NOT selected — at scale the sampled
-    decode happens in a later mapInPandas over (payload, frame_idx)."""
-    return (
-        df.withColumn(
-            "frame_idx",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col(n_frames_col).cast("int") - 1, F.lit(0)),
-                    F.lit(every),
-                )
-            ),
-        )
-        .drop("payload")
-    )
-
-
 _FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -324,21 +280,6 @@ def plan_resize_dims(
     return df.withColumn("dst_w", dst_w.cast("int")).withColumn(
         "dst_h", dst_h.cast("int")
     ).withColumn("needs_resize", needs)
-
-
-def resize_image(payload: bytes, dst_w: int, dst_h: int) -> bytes:
-    """REAL image resize: decode (any supported codec), nearest-neighbor
-    resample via integer index maps (``(i·src)//dst`` — pure integer, so
-    bit-reproducible across platforms, unlike float-kernel resamplers),
-    re-encode as PPM. Pair with ``plan_resize_dims`` so only
-    ``needs_resize`` rows reach this Python path."""
-    import numpy as np
-
-    _, _, arr = decode_image(payload)
-    src_h, src_w = arr.shape[:2]
-    ys = (np.arange(int(dst_h)) * src_h) // int(dst_h)
-    xs = (np.arange(int(dst_w)) * src_w) // int(dst_w)
-    return encode_ppm(arr[ys][:, xs])
 
 
 def decode_audio(payload: bytes):

@@ -169,8 +169,7 @@ def dense_ids_append(
     SINGLE WRITER REQUIRED: the max(id) read and the append are not
     one transaction — two concurrent appenders would both read the
     same stored_max and hand out duplicate ids. Serialize ingest
-    batches through one writer (the same discipline
-    stream_rollup_ingest documents for its store); under a scheduler,
+    batches through one writer; under a scheduler,
     that's one non-concurrent job per identity table."""
     store = _dense_ids_store_obj(path)
     stored_max = (

@@ -14,8 +14,7 @@ table's frame before taking the writer lock or writing a file, and
 ``load`` checks the stored data with the same helper.  The three
 mergeable rollups (exact (count, sum), quantile histogram, HLL registers)
 are one more level up: a ``Rollup`` declares partials + merge + columns +
-partition key once, and serves both the batch store (``at``) and the
-streaming fold's ``batch_id``-partitioned store (``stream_at``).
+partition key once, and its store (``at``) runs the whole lifecycle.
 
 A compaction must never rewrite a store in place: a crash (or executor
 loss, when the read is staged through a ``localCheckpoint``) between the
@@ -24,9 +23,8 @@ is the primary copy of an index that took hours to build.  Every write
 here is a GENERATION SWAP:
 
 * a store root holds numbered generation directories ``gen-0``, ``gen-1``,
-  … plus a tiny ``_STORE`` manifest (JSON: the current generation number
-  and optional family metadata such as the streaming replay high-water
-  mark);
+  … plus a tiny ``_STORE`` manifest (JSON: the current generation
+  number);
 * every read resolves the manifest and touches only the current
   generation's directory;
 * ``compact`` (and snapshot ``create`` over an existing store) writes the
@@ -120,7 +118,7 @@ class TableSpec:
                       schemas).
     ``partition_by``  physical partition key — the directory layout serve
                       paths prune on (band / list_id / month / day /
-                      tbucket / batch_id).
+                      tbucket).
     ``merge``         compaction fold for mergeable state (sum the
                       (count,sum) semigroup, max HLL registers). None =
                       refile-only compaction: rows are untouched and just
@@ -305,10 +303,10 @@ class GenStore:
         """Current generation's directory for ``table``."""
         return _subdir(gen_dir(self.path, self._require()["gen"]), table)
 
-    def ensure(self, extra: Mapping | None = None) -> str:
+    def ensure(self) -> str:
         """Create an EMPTY store (manifest + gen-0 dir) if none exists —
-        the streaming writer's first-batch path. Returns the current
-        generation dir either way."""
+        an append's first-batch path. Returns the current generation dir
+        either way."""
         man = self.manifest()
         if man is None:
             try:
@@ -316,7 +314,7 @@ class GenStore:
                     man = self.manifest()  # may exist by now
                     if man is None:
                         os.makedirs(gen_dir(self.path, 0), exist_ok=True)
-                        man = {"gen": 0, **(extra or {})}
+                        man = {"gen": 0}
                         _commit_manifest(self.path, man)
             except ConcurrentWriteError:
                 man = self.manifest()  # a racing writer created it
@@ -355,7 +353,7 @@ class GenStore:
             w.parquet(_subdir(root, t.name))
 
     # -- lifecycle -----------------------------------------------------------
-    def create(self, frames: Mapping[str, DataFrame], extra: Mapping | None = None) -> None:
+    def create(self, frames: Mapping[str, DataFrame]) -> None:
         """Write a full snapshot as a NEW generation and commit it.
 
         On a fresh path this writes gen-0. Over an EXISTING store it is an
@@ -374,10 +372,7 @@ class GenStore:
                 shutil.rmtree(dst)
             self._write(dst, frames, mode="errorifexists")
             self._check_unmoved(expected, "create")
-            _commit_manifest(
-                self.path,
-                {**({} if man is None else man), "gen": nxt, **(extra or {})},
-            )
+            _commit_manifest(self.path, {"gen": nxt})
             self._gc(keep=nxt)
 
     def append(self, frames: Mapping[str, DataFrame]) -> None:
@@ -408,12 +403,7 @@ class GenStore:
             for t in self.tables
         }
 
-    def compact(
-        self,
-        spark: SparkSession,
-        merge_overrides: Mapping[str, MergeFn] | None = None,
-        extra: Mapping | None = None,
-    ) -> None:
+    def compact(self, spark: SparkSession) -> None:
         """Copy-on-write maintenance rewrite with an atomic commit.
 
         Stage: each table's current generation is read (and stays readable
@@ -430,14 +420,9 @@ class GenStore:
         before the commit leaves the old generation current and complete;
         the orphan staging dir is removed by the next attempt."""
         with self._writer_lock("compact"):
-            self._compact_locked(spark, merge_overrides, extra)
+            self._compact_locked(spark)
 
-    def _compact_locked(
-        self,
-        spark: SparkSession,
-        merge_overrides: Mapping[str, MergeFn] | None,
-        extra: Mapping | None,
-    ) -> None:
+    def _compact_locked(self, spark: SparkSession) -> None:
         man = self._require()
         cur, nxt = man["gen"], man["gen"] + 1
         src_root, dst_root = gen_dir(self.path, cur), gen_dir(self.path, nxt)
@@ -447,9 +432,8 @@ class GenStore:
             src = self._contract(
                 t, spark.read.parquet(_subdir(src_root, t.name)), "stored data"
             )
-            fn = (merge_overrides or {}).get(t.name, t.merge)
-            if fn is not None:
-                out = fn(src)
+            if t.merge is not None:
+                out = t.merge(src)
             elif t.partition_by:
                 out = src.repartition(*[c for c in t.partition_by])
             else:
@@ -468,13 +452,13 @@ class GenStore:
                     f"compact verify failed for table {t.name!r}: new "
                     f"generation is missing {missing}"
                 )
-            if fn is None and chk.count() != src.count():
+            if t.merge is None and chk.count() != src.count():
                 raise RuntimeError(
                     f"compact verify failed for table {t.name!r}: refile "
                     "changed the row count"
                 )
         self._check_unmoved(cur, "compact")
-        _commit_manifest(self.path, {**man, "gen": nxt, **(extra or {})})
+        _commit_manifest(self.path, {"gen": nxt})
         self._gc(keep=nxt)
 
     def _gc(self, keep: int) -> None:
@@ -499,12 +483,9 @@ class Rollup:
     """One mergeable rollup family, declared once: how a batch reduces to
     partial rows (``partials``), how partial rows fold to one row per key
     (``merge``), the stored ``columns`` and the ``partition_by`` key serves
-    prune on.  The batch lifecycle (create / append / load / compact) and
-    the streaming exactly-once fold (streaming/pipeline.py:
-    stream_fold_batch / stream_fold_compact) both run off this one
-    declaration."""
+    prune on.  The lifecycle (create / append / load / compact) runs off
+    this one declaration."""
 
-    name: str
     partials: Callable[[DataFrame], DataFrame]
     merge: MergeFn
     columns: tuple[str, ...]
@@ -516,13 +497,6 @@ class Rollup:
         return GenStore(
             path,
             [TableSpec("", self.columns, (self.partition_by,), self.merge)],
-        )
-
-    def stream_at(self, path: str) -> GenStore:
-        """The streaming fold's store: one ``batch_id`` partition per
-        micro-batch, so a replayed batch overwrites only its own rows."""
-        return GenStore(
-            path, [TableSpec("", (*self.columns, "batch_id"), ("batch_id",))]
         )
 
     def create(self, partials: DataFrame, path: str) -> None:
@@ -541,20 +515,5 @@ class Rollup:
         return self.at(path).load(spark)[""]
 
     def compact(self, spark: SparkSession, path: str) -> None:
-        """Fold the partial rows to one per key (generation swap).
-
-        Batch stores only: a streaming store is ``batch_id``-partitioned
-        and carries a replay high-water mark, and folding it here would
-        merge the batch partitions WITHOUT raising the mark — a checkpoint
-        replay of a batch committed since the last streaming compaction
-        would then re-materialize its partition and double-count.  The
-        layout is read from the directory listing, not a schema read."""
-        store = self.at(path)
-        if any(e.startswith("batch_id=") for e in os.listdir(store.data_dir())):
-            raise ValueError(
-                f"{path} is a streaming {self.name} store (batch_id-"
-                "partitioned); use streaming.pipeline.stream_fold_compact "
-                "so replayed micro-batches can't double-count folded "
-                "partials"
-            )
-        store.compact(spark)
+        """Fold the partial rows to one per key (generation swap)."""
+        self.at(path).compact(spark)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.operators.store import GenStore, TableSpec
 from olympic_athletes_etl_spark.plans.registry import query
+from olympic_athletes_etl_spark.plans.similarity_q import _DOT, _PLANE_W
 from olympic_athletes_etl_spark.plans.tables import load
 from olympic_athletes_etl_spark.plans.textstats import polyhash_duck
 
@@ -83,9 +84,8 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
 
 def shingle_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, h) — distinct hashed word bigrams per document, from any
-    frame with (doc_id, text). Frame-based so streaming micro-batches
-    (streaming/pipeline.py:stream_neardup_screen) reuse the exact
-    signature definition the batch queries and oracles pin.
+    frame with (doc_id, text). Frame-based so ingest batches reuse the
+    exact signature definition the batch queries and oracles pin.
 
     Explodes the bigram expression itself, never shingle_sets' ``hs``
     column: over a column, Catalyst infers ``size(hs) > 0`` from the
@@ -455,23 +455,18 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMB_DIM = 64
 _EMB_THRESHOLD = 0.45
 
-# plane(p, d) weight — integers in [-998, 998], deterministic in (p, d);
-# same construction as similarity_q's ANN planes (see the _PLANE_W note
-# there: the d² term decorrelates consecutive planes, which for BANDED
-# LSH keeps the bands independent — correlated bands agree together and
-# inflate the candidate volume without adding recall).
-_NB_PLANE_W = "(((({p} + 1) * (d * d * 31 + d * 7919 + 1) + {p} * {p} * 104729) % 1997) - 998)"
-_DOT_D = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-    " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
+# The banded hyperplane-LSH planes are similarity_q's ANN planes
+# (_PLANE_W: integer weights in [-998, 998], deterministic in (p, d); its
+# d² term decorrelates consecutive planes, which for BANDED LSH keeps the
+# bands independent — correlated bands agree together and inflate the
+# candidate volume without adding recall).
 
 
 def _emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v")
     )
-    return emb.withColumn("nrm", F.sqrt(F.expr(_DOT_D.format(a="v", b="v"))))
+    return emb.withColumn("nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v"))))
 
 
 # Corpus-sized banding (r13, replacing the fixed 2-bit form that is
@@ -504,14 +499,14 @@ def _nb_params(n: int) -> tuple[int, int]:
 
 
 def _nb_plane_w_py(p: int, d: int) -> int:
-    """Python mirror of _NB_PLANE_W (same integer formula; pinned against
+    """Python mirror of _PLANE_W (same integer formula; pinned against
     the SQL form by tests/test_dedup_recall.py)."""
     return (((p + 1) * (d * d * 31 + d * 7919 + 1) + p * p * 104729) % 1997) - 998
 
 
 def _nb_adaptive_oracle() -> str:
     p_expr = "(band * r + j)"
-    w = _NB_PLANE_W.format(p=p_expr)
+    w = _PLANE_W.format(p=p_expr)
     plane = f"list_transform(range(0, {_EMB_DIM}), d -> CAST({w} AS DOUBLE))"
     r_ladder = " ".join(
         f"WHEN n <= {_NB_TARGET_BUCKET * (1 << k)} THEN {k}"
@@ -629,7 +624,7 @@ def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if n_vec <= _NB_BCAST_MAX_N:
         na, nb = F.broadcast(na), F.broadcast(nb)
-    cos = F.expr(_DOT_D.format(a="va", b="vb")) / (F.col("nrm_a") * F.col("nrm_b"))
+    cos = F.expr(_DOT.format(a="va", b="vb")) / (F.col("nrm_a") * F.col("nrm_b"))
     return (
         cand.join(na, "vec_a")
         .join(nb, "vec_b")
@@ -646,7 +641,7 @@ def d_embedding_neardup_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _emb_norm(spark, sf_dir)
     a = n.alias("a")
     b = n.alias("b")
-    dot_ab = F.expr(_DOT_D.format(a="a.v", b="b.v"))
+    dot_ab = F.expr(_DOT.format(a="a.v", b="b.v"))
     cos = dot_ab / (F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
@@ -1622,7 +1617,6 @@ def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold mirrors DuckDB's list_dot_product accumulation order, so the
     ≥ compare cannot flip cross-engine)."""
     from olympic_athletes_etl_spark.plans.similarity_q import (
-        _DOT,
         _km_assign_np_col,
         _km_base,
         _km_fit_for,
@@ -1952,8 +1946,7 @@ def lsh_postings_compact(spark: SparkSession, path: str) -> None:
 def lsh_probe(batch_bands: DataFrame, stored_bands: DataFrame) -> DataFrame:
     """DISTINCT (doc_new, doc_old) collisions of a batch's band rows
     against a postings frame — the probe join shared by the registered
-    d_neardup_stored and the streaming screen
-    (streaming/pipeline.py:stream_neardup_screen), keyed on the uniform
+    d_neardup_stored and d_neardup_compacted, keyed on the uniform
     (band, sig0, sig1) bucket key."""
     n, o = batch_bands.alias("n"), stored_bands.alias("o")
     return (
@@ -2001,8 +1994,7 @@ def d_neardup_within_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch SELF-probe, driver-gated: within-batch near-dup
     candidates for the same ingest batch d_neardup_stored screens
     against the corpus — together they are the complete per-batch
-    screen (the composition the streaming form runs; see
-    stream_neardup_screen). Same uniform (band, sig0, sig1) bucket
+    screen. Same uniform (band, sig0, sig1) bucket
     key; doc_new > doc_old orients each pair once, later id flagged
     against the earlier. Cost at 100 TB is batch-sized on both sides —
     the corpus never enters this join."""
@@ -2044,8 +2036,7 @@ def d_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONTRACT: this probe screens batch-vs-STORE only — two near-dups
     inside the same batch are invisible to it by construction. Callers
     screening a raw ingest batch compose it with lsh_probe_within
-    (the batch self-probe), exactly as the always-on form does
-    (streaming/pipeline.py:stream_neardup_screen)."""
+    (the batch self-probe), as d_neardup_within_batch does."""
     bands = _minhash_bands(_doc_shingle_hashes(spark, sf_dir))
     path = os.path.join(
         tempfile.mkdtemp(prefix="d_neardup_stored_"), "postings"
@@ -2060,7 +2051,7 @@ def d_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("d_neardup_compacted", oracle=_NEARDUP_STORED_ORACLE)
 def d_neardup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d_neardup_stored through the MAINTAINED store — the full
-    ingest-loop lifecycle the streaming screen accumulates: the corpus
+    ingest-loop lifecycle a deployed screen accumulates: the corpus
     postings arrive as an initial store plus an APPEND (two ingest
     batches, two file sets per band), the store is COMPACTED back to
     one file per band (lsh_postings_compact — the in-place

@@ -1,11 +1,11 @@
 """Event-stream analytics over the ``events`` table (batch form).
 
-The reference has no streaming operators (SURVEY.md §2.10) — these are
-beyond-reference extensions expressed first as deterministic batch
-queries (correctness-gated here); the same logic runs incrementally via
-Structured Streaming in ``olympic_athletes_etl_spark.streaming`` (windowed
-aggs + watermarks), which shares these semantics but is tested separately
-(streams aren't DuckDB-oracle-able).
+The reference is a weekly batch job with no streaming operators
+(SURVEY.md §2.10) — these are beyond-reference analytics expressed as
+deterministic batch queries, correctness-gated against DuckDB. Where a
+docstring names a Structured Streaming twin (``window``,
+``session_window``, watermarks) it states the equivalent semantics;
+the package ships no streaming code.
 
 ``events.ts`` arrives as whatever the driver round shipped physically
 (nanos→truncated-to-micros in r1-2, native micros/TIMESTAMP_NTZ in r3+) —
@@ -213,8 +213,9 @@ def e_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def e_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 minutes: each event lands in
     window/slide = 4 overlapping windows (the oracle enumerates the same
-    4 epoch-aligned starts arithmetically). Batch twin of the streaming
-    ``sliding_counts`` operator; shuffle keys on (window, type) AFTER the
+    4 epoch-aligned starts arithmetically). Batch twin of a streaming
+    ``window(ts, '1 hour', '15 minutes')`` count; shuffle keys on
+    (window, type) AFTER the
     4× in-row expansion — state and shuffle scale linearly with the
     overlap factor, the scan does not re-read."""
     events = load(spark, sf_dir, "events")
@@ -2171,8 +2172,8 @@ def e_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     div 10), provided the click happened within {d} days — otherwise
     the purchase lands in the NULL 'organic' bucket (never silently
     dropped: attribution reports must conserve revenue). Contrast with
-    the multi-touch stream-stream join (view_click_attribution): last-
-    touch needs no pair fan-out at all.
+    a multi-touch view⋈click join: last-touch needs no pair fan-out at
+    all.
 
     Same scalable shape as e_asof_join — union-tag both event kinds,
     ONE user-keyed window forward-fills the latest campaign and click

@@ -99,8 +99,8 @@ _RESIZE_MAX_H = 32
 )
 def m_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-resize planning as metadata arithmetic: pseudo (w, h) from
-    the payload length (the fake_decode_meta convention — real pipelines
-    read these from ingest-time media_meta), then an integer-exact
+    the payload length (``16 + n % 64`` by ``16 + (n // 64) % 64`` —
+    real pipelines read these from ingest-time media_meta), then an integer-exact
     aspect-preserving downscale-only fit into a 32×32 box. ZERO decode
     and zero Python: the expensive pixel resample happens later in a
     mapInPandas over only ``needs_resize`` rows — planning prunes the

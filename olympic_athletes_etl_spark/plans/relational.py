@@ -269,7 +269,8 @@ def j_dynamic_keys_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH counts AS (
       SELECT user_id, event_type, count(*) AS n
-      FROM events GROUP BY user_id, event_type
+      FROM events WHERE event_type IS NOT NULL
+      GROUP BY user_id, event_type
     ), ranked AS (
       SELECT user_id, event_type, n,
              row_number() OVER (PARTITION BY user_id
@@ -284,8 +285,9 @@ def a_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mode per group (A2/W1/F7; reference: data_clean_II_glue.py:57-66).
     Tie-break is value-ascending — pandas ``mode().iloc[0]`` semantics per
     SURVEY §7's decision log (the reference's Glue variant is
-    nondeterministic on ties; we are not). Aggregate-then-window: the
-    window runs over (user × type) counts, not raw events."""
+    nondeterministic on ties; we are not). A NULL ``event_type`` is never
+    a candidate mode (pandas ``mode()`` drops NaN). Aggregate-then-window:
+    the window runs over (user × type) counts, not raw events."""
     events = load(spark, sf_dir, "events")
     return mode_per_group(events, "user_id", "event_type").withColumnRenamed(
         "event_type", "mode_event"
@@ -667,12 +669,15 @@ def o_ordered_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "r_explode_split",
     oracle="""
-    SELECT p_partkey, unnest(string_split(p_name, ' ')) AS word FROM part
+    SELECT p_partkey, word
+    FROM (SELECT p_partkey, unnest(string_split(p_name, ' ')) AS word FROM part)
+    WHERE word <> ''
     """,
 )
 def r_explode_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explode split string → rows (R1; reference: data_clean_glue.py:105-111
-    explodes '/'-separated Affiliations)."""
+    explodes '/'-separated Affiliations). Leading, trailing and doubled
+    spaces yield no empty words (the reference's post-split dropna)."""
     part = load(spark, sf_dir, "part")
     return explode_delimited(part, "p_name", " ", alias="word").select("p_partkey", "word")
 
@@ -1725,11 +1730,7 @@ def _rollup_answer(partials: DataFrame) -> DataFrame:
 
 
 ROLLUP = Rollup(
-    "rollup",
-    _monthly_partials,
-    _rollup_merge,
-    ("month", "n_orders", "total_cents"),
-    "month",
+    _monthly_partials, _rollup_merge, ("month", "n_orders", "total_cents"), "month"
 )
 
 
@@ -1768,14 +1769,7 @@ def rollup_compact(spark: SparkSession, path: str) -> None:
     test_round9_ops) because (count, sum) addition is associative — the
     whole point of storing the semigroup. Generation-swap rewrite with
     an atomic manifest commit (operators/store.py): a crash mid-rewrite
-    leaves the old generation serving.
-
-    BATCH stores only: a store written by the STREAMING ingest
-    (streaming/pipeline.py:stream_rollup_ingest) is partitioned by
-    batch_id and carries a replay high-water mark — compacting it here
-    would both break the partition layout and let a checkpoint replay
-    double-count a folded batch. Refused loudly; use
-    stream_rollup_compact, which folds only committed batches."""
+    leaves the old generation serving."""
     ROLLUP.compact(spark, path)
 
 
@@ -1913,7 +1907,7 @@ def _qhist_merge(partials: DataFrame) -> DataFrame:
     )
 
 
-QHIST = Rollup("qhist", _qhist_partials, _qhist_merge, _QHIST_COLS, "month")
+QHIST = Rollup(_qhist_partials, _qhist_merge, _QHIST_COLS, "month")
 
 
 def qhist_rollup_store(partials: DataFrame, path: str) -> None:
@@ -1926,15 +1920,7 @@ def qhist_rollup_append(partials: DataFrame, path: str) -> None:
 
 def qhist_rollup_compact(spark: SparkSession, path: str) -> None:
     """Fold per-batch rows to one (month, bucket) row — sum-merge, the
-    same generation-swap commit as rollup_compact.
-
-    BATCH stores only (same guard as rollup_compact): a store written by
-    stream_qhist_ingest is batch_id-partitioned and carries a replay
-    high-water mark — folding it here would merge the batch_id
-    partitions WITHOUT raising the hwm, so a checkpoint replay of any
-    batch committed since the last stream_qhist_compact would
-    re-materialize its partition and double-count, and later folds
-    would mix batch_id- and month-partitioned files in one generation."""
+    same generation-swap commit as rollup_compact."""
     QHIST.compact(spark, path)
 
 

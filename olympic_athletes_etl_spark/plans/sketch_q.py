@@ -825,7 +825,7 @@ def v_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     join cardinality sum_k fA(k)*fB(k) is over-approximated by the
     inner product of any CMS row pair built with the same hashes, and
     min over the d rows tightens it. Sized here for the view⋈click
-    self-join on user_id (exactly what the streaming attribution join
+    self-join on user_id (what a multi-touch attribution join
     buffers), with the exact answer riding along to expose the error.
 
     This is the planning primitive behind join reordering and
@@ -926,9 +926,7 @@ def _hll_merge(regs: DataFrame) -> DataFrame:
     return regs.groupBy("day", "b").agg(F.max("reg").cast("long").alias("reg"))
 
 
-HLL_ROLLUP = Rollup(
-    "hll", hll_rollup_partials, _hll_merge, ("day", "b", "reg"), "day"
-)
+HLL_ROLLUP = Rollup(hll_rollup_partials, _hll_merge, ("day", "b", "reg"), "day")
 
 
 def hll_rollup_store(partials: DataFrame, path: str) -> None:
@@ -941,8 +939,7 @@ def hll_rollup_store(partials: DataFrame, path: str) -> None:
 
 def hll_rollup_append(partials: DataFrame, path: str) -> None:
     """Append a batch's partials. Auto-creates the store on a fresh path
-    (the streaming ingest's first micro-batch): GenStore.append alone
-    requires an existing manifest and would raise ValueError."""
+    (an ingest's first batch): GenStore.append alone requires an existing manifest and would raise ValueError."""
     HLL_ROLLUP.append(partials, path)
 
 
@@ -958,10 +955,8 @@ def hll_rollup_compact(spark: SparkSession, path: str) -> None:
     """Fold per-batch register rows to ONE row per (day, register) by
     MAX — the sketch-merge maintenance pass (generation-swap rewrite
     with an atomic manifest commit, operators/store.py; merging is max,
-    not sum). No replay high-water mark is needed here, unlike
-    stream_rollup_compact: register-max is idempotent, so a checkpoint
-    replay re-appending an already-folded batch cannot change any
-    served estimate (pinned in test_streaming)."""
+    not sum). Register-max is idempotent, so re-appending an
+    already-folded batch cannot change any served estimate."""
     HLL_ROLLUP.compact(spark, path)
 
 

@@ -2143,7 +2143,7 @@ def _bpe_merges_from_word_freqs(
 
 
 def bpe_learn_merges_local(
-    docs: DataFrame, n_merges: int = 8, min_freq: int = 1
+    docs: DataFrame, n_merges: int = 8
 ) -> list[tuple[str, str, int]]:
     """bpe_learn_merges at PRODUCTION merge counts: one distributed
     corpus scan builds the word-frequency table (the only part that
@@ -2156,19 +2156,12 @@ def bpe_learn_merges_local(
     whitespace words — tens of millions of short rows at web scale,
     i.e. driver-RAM-sized, which is why every production BPE trainer
     (Sennrich, SentencePiece, HF tokenizers) trains exactly this way.
-    ``min_freq`` is the standard vocabulary bound when even that is too
-    big: words below the floor are dropped BEFORE the collect (a
-    distributed filter), trading exactness for a hard cap — the default
-    1 keeps the result bit-identical to bpe_learn_merges (pinned in
-    test_round9_ops, plus the measured crossover note in SCALE.md)."""
+    Every word is kept, so the result is bit-identical to
+    bpe_learn_merges (pinned in test_round9_ops; the measured crossover
+    note is in SCALE.md)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if min_freq < 1:
-        raise ValueError(f"min_freq must be >= 1, got {min_freq}")
-    wfd = _word_freqs(docs)
-    if min_freq > 1:
-        wfd = wfd.filter(F.col("freq") >= min_freq)
-    wf = {r["w"]: int(r["freq"]) for r in wfd.collect()}
+    wf = {r["w"]: int(r["freq"]) for r in _word_freqs(docs).collect()}
     return _bpe_merges_from_word_freqs(wf, n_merges)
 
 

@@ -1,4 +1,7 @@
-"""Sources & sinks (SURVEY.md §2.1, S1-S10)."""
+"""Sources & sinks (SURVEY.md §2.1, S2-S10): the scraper's HTML source
+and tagged demux, CSV scans, the checkpoint-resume lifecycle and the
+object-store conf. Plain parquet scans and publishes (S1/S5) are
+``spark.read.parquet`` / ``df.write.parquet`` at the call site."""
 
 from olympic_athletes_etl_spark.sources.html_source import (
     parse_kv_table,
@@ -12,15 +15,9 @@ from olympic_athletes_etl_spark.sources.io import (
     compacted_write,
     object_store_conf,
     read_csv,
-    read_jsonl,
-    read_orc,
-    read_parquet,
     read_parquet_glob,
     resume_remaining,
     split_by_tag,
-    write_jsonl,
-    write_orc,
-    write_parquet,
 )
 
 __all__ = [
@@ -31,15 +28,9 @@ __all__ = [
     "parse_results_table",
     "parse_tables",
     "read_csv",
-    "read_jsonl",
-    "read_orc",
-    "read_parquet",
     "read_parquet_glob",
     "resume_remaining",
     "scrape_source",
     "split_by_tag",
     "tagged_to_tables",
-    "write_jsonl",
-    "write_orc",
-    "write_parquet",
 ]

@@ -1,10 +1,12 @@
 """Scans, sinks, and the incremental checkpoint-resume lifecycle
 (SURVEY.md §2.1, S1-S10 + §4 incremental recompute avoidance).
 
-All readers take an optional explicit ``StructType`` — explicit schemas
-at I/O boundaries are an engine rule (§4): they keep column pruning
-reaching the parquet footer and make CSV reads deterministic (never
-``inferSchema``'s extra pass + type drift).
+Plain parquet scans and publishes (S1/S5) are ``spark.read.parquet`` /
+``df.write.parquet`` at the call site; this module holds only the
+lifecycle around them. ``read_csv`` takes an explicit ``StructType`` —
+explicit schemas at I/O boundaries are an engine rule (§4): they make
+CSV reads deterministic (never ``inferSchema``'s extra pass + type
+drift).
 
 Object-store access (S9): paths are plain strings — ``s3a://`` URIs work
 unchanged once ``fs.s3a.*`` is configured; ``object_store_conf`` below
@@ -17,43 +19,17 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 
 # --------------------------------------------------------------------------
-# Scans (S1-S3)
+# Scans (S2-S3)
 # --------------------------------------------------------------------------
-def read_parquet(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    """S1. With ``schema``, mismatched files fail fast instead of
-    silently widening types."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def read_parquet_glob(spark: SparkSession, pattern: str) -> DataFrame:
     """S3: glob/multi-file union scan (checkpoint parts read as one table;
     reference: athlete_scrape_glue.py:226,341). Spark lists matching files
     once and unions them at the scan — no per-file jobs."""
     return spark.read.option("mergeSchema", "false").parquet(pattern)
-
-
-def read_orc(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    """S1-adjacent (beyond reference): ORC scan. Spark-native columnar
-    alternative to parquet — same predicate-pushdown/column-pruning
-    behavior through the DataSource V1 ORC reader, useful when the lake
-    standardized on ORC (Hive lineage). With ``schema``, mismatched
-    files fail fast instead of silently widening types, mirroring
-    read_parquet's contract."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
 
 
 def read_csv(
@@ -75,49 +51,6 @@ def read_csv(
 # --------------------------------------------------------------------------
 # Object store (S9)
 # --------------------------------------------------------------------------
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    corrupt_col: str | None = "_corrupt_record",
-) -> DataFrame:
-    """JSON-Lines scan with an EXPLICIT schema — the training-data
-    interchange format (one JSON document per line, .jsonl/.jsonl.gz).
-
-    Explicit schema is mandatory here (engine rule §4): ``inferSchema``
-    on JSONL costs a full extra pass AND drifts types across shards.
-    Malformed lines follow the S10 error-side-channel pattern instead of
-    failing the job: PERMISSIVE mode nulls the data columns and captures
-    the raw line in ``corrupt_col`` (pair with ``split_by_tag`` on
-    ``corrupt_col IS NOT NULL`` to route rejects — after a
-    cache()/persist() of the parsed frame: Spark refuses plans that
-    reference ONLY the corrupt column,
-    QUERY_ONLY_CORRUPT_RECORD_COLUMN). Pass
-    ``corrupt_col=None`` for strict FAILFAST ingestion. Line-split JSON
-    stays fully parallel at any file size; gzip shards parallelize per
-    FILE, so shard (~256 MB-1 GB each), never one giant .gz."""
-    if corrupt_col is not None:
-        if corrupt_col not in [f.name for f in schema.fields]:
-            schema = StructType(
-                [*schema.fields, StructField(corrupt_col, StringType(), True)]
-            )
-        return (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", corrupt_col)
-            .json(path)
-        )
-    return spark.read.schema(schema).option("mode", "FAILFAST").json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, num_files: int | None = None) -> None:
-    """JSONL sink (one JSON object per line per row). ``num_files``
-    compacts via ``coalesce`` — same sizing rule as compacted_write:
-    target ~256 MB-1 GB per shard at scale, never 1."""
-    out = df.coalesce(num_files) if num_files else df
-    out.write.mode("overwrite").json(path)
-
-
 def object_store_conf(
     spark: SparkSession,
     endpoint: str | None = None,
@@ -161,17 +94,6 @@ def object_store_conf(
 # --------------------------------------------------------------------------
 # Sinks (S5-S7)
 # --------------------------------------------------------------------------
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5: layer publish."""
-    df.write.mode(mode).parquet(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5-adjacent (beyond reference): ORC publish, parity twin of
-    write_parquet for ORC-standardized lakes."""
-    df.write.mode(mode).orc(path)
-
-
 def checkpoint_append(df: DataFrame, path: str) -> None:
     """S6: crash-safe incremental persist — append-mode parquet; each batch
     adds files, the consolidated read is a glob scan (S3)."""

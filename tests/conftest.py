@@ -6,6 +6,7 @@ partition count so tiny-fixture shuffles don't schedule 32 empty tasks.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -33,6 +34,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def built_query(spark, sf_dir):
+    """``built_query(name)`` is the registered query's DataFrame at
+    ``sf_dir``, built once per session. Building runs a query's eager
+    jobs (local checkpoints, fits), so the tests that only analyze,
+    explain or sample every query share one build."""
+    from olympic_athletes_etl_spark.plans import queries
+
+    qs = queries()
+    return functools.cache(lambda name: qs[name](spark, sf_dir))
 
 
 @pytest.fixture(scope="session")

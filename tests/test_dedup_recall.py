@@ -97,13 +97,12 @@ def test_embedding_band_hash_numpy_equals_jvm_fold(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from olympic_athletes_etl_spark.plans.dedup_q import (
-        _DOT_D,
         _EMB_DIM,
-        _NB_PLANE_W,
         _emb_norm,
         _nb_params,
         _nb_plane_w_py,
     )
+    from olympic_athletes_etl_spark.plans.similarity_q import _DOT, _PLANE_W
 
     n_df = _emb_norm(spark, sf_dir).select("vec_id", "v")
     r, b = _nb_params(n_df.count())
@@ -114,9 +113,9 @@ def test_embedding_band_hash_numpy_equals_jvm_fold(spark, sf_dir):
             p = band * r + j
             plane = (
                 f"transform(sequence(0, {_EMB_DIM - 1}),"
-                f" d -> CAST({_NB_PLANE_W.format(p=p)} AS DOUBLE))"
+                f" d -> CAST({_PLANE_W.format(p=p)} AS DOUBLE))"
             )
-            dot = _DOT_D.format(a="v", b=plane)
+            dot = _DOT.format(a="v", b=plane)
             bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << j}L ELSE 0L END)")
         return " + ".join(bits)
 

@@ -206,10 +206,10 @@ def _unpartitioned_windows(txt: str) -> int:
 
 
 @pytest.fixture(scope="module")
-def plan_stats(spark, sf_dir):
+def plan_stats(built_query):
     stats = {}
-    for name, fn in queries().items():
-        txt = _plan_text(fn(spark, sf_dir))
+    for name in queries():
+        txt = _plan_text(built_query(name))
         stats[name] = {
             "cartesian": len(re.findall(r"CartesianProduct", txt)),
             "bnlj": len(

@@ -253,32 +253,6 @@ def test_wav_round_trip_identity(data, nch, rate):
     assert np.array_equal(out, samples)
 
 
-@given(
-    _pixels(),
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-)
-@settings(max_examples=40, deadline=None)
-def test_resize_never_invents_pixels(arr, dst_w, dst_h):
-    from olympic_athletes_etl_spark.multimodal import decode_image, resize_image
-
-    w, h, out = decode_image(resize_image(encode_ppm_safe(arr), dst_w, dst_h))
-    assert (w, h) == (dst_w, dst_h)
-    # every output pixel is the exact source pixel at the integer map
-    src_h, src_w = arr.shape[:2]
-    for y in range(dst_h):
-        for x in range(dst_w):
-            assert (
-                out[y, x] == arr[(y * src_h) // dst_h, (x * src_w) // dst_w]
-            ).all()
-
-
-def encode_ppm_safe(arr):
-    from olympic_athletes_etl_spark.multimodal import encode_ppm
-
-    return encode_ppm(arr)
-
-
 # ------------------------------------------------- NOC UDF == DF twin
 # The round-6 shared oracle for u_noc_canonicalize rests on this
 # equivalence: on a name list where no valid name word-boundary-contains

@@ -53,22 +53,22 @@ def test_audit_prefix_composition():
 
 
 @pytest.mark.parametrize("name", sorted(queries()))
-def test_query_analyzes(spark, sf_dir, name):
-    df = queries()[name](spark, sf_dir)
+def test_query_analyzes(built_query, name):
+    df = built_query(name)
     assert len(df.columns) > 0  # forces analysis (schema resolution)
 
 
 @pytest.mark.parametrize("name", EXECUTE_SAMPLE)
-def test_query_executes(spark, sf_dir, name):
-    out = queries()[name](spark, sf_dir).limit(5).collect()
+def test_query_executes(built_query, name):
+    out = built_query(name).limit(5).collect()
     assert out is not None
 
 
 @pytest.mark.parametrize("name", sorted(queries()))
-def test_no_duplicate_output_columns(spark, sf_dir, name):
+def test_no_duplicate_output_columns(built_query, name):
     """The driver's compare sorts columns BY NAME before hashing —
     duplicate names would silently corrupt the comparison."""
-    cols = queries()[name](spark, sf_dir).columns
+    cols = built_query(name).columns
     assert len(cols) == len(set(cols))
 
 

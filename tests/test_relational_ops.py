@@ -7,6 +7,7 @@ surrogate keys, outer-aligned union, deterministic dim/bridge ids.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.operators.relational import (
@@ -246,3 +247,61 @@ def test_explode_delimited_drops_empty_elements(spark):
         for r in explode_delimited(df, "s", r"\s*/\s*", alias="e").collect()
     )
     assert got == [(1, "A"), (1, "B"), (2, "C")]
+
+
+@pytest.fixture(scope="module")
+def null_and_space_fixture(sf_dir, tmp_path_factory):
+    """sf_dir's events and part with the two input shapes the testdata
+    lacks: NULL ``event_type`` as a group's most frequent value, and
+    doubled, leading and trailing spaces in ``p_name``."""
+    import duckdb
+
+    fix = str(tmp_path_factory.mktemp("null_space"))
+    con = duckdb.connect()
+    events = f"read_parquet('{sf_dir}/events.parquet')"
+    lo, hi = con.sql(f"SELECT min(user_id), max(user_id) FROM {events}").fetchone()
+    first = con.sql(f"SELECT min(event_id) FROM {events} WHERE user_id = {hi}").fetchone()[0]
+    # one user's events all NULL, another's NULL but for its first event
+    con.execute(
+        f"""COPY (
+          SELECT * REPLACE (CASE WHEN user_id = {lo}
+                                   OR (user_id = {hi} AND event_id > {first})
+                                 THEN NULL ELSE event_type END AS event_type)
+          FROM {events}
+        ) TO '{fix}/events.parquet' (FORMAT parquet)"""
+    )
+    con.execute(
+        f"""COPY (
+          SELECT * REPLACE (CASE p_partkey % 3
+                              WHEN 0 THEN '  ' || replace(p_name, ' ', '  ') || ' '
+                              WHEN 1 THEN ' ' || p_name
+                              ELSE p_name END AS p_name)
+          FROM read_parquet('{sf_dir}/part.parquet')
+        ) TO '{fix}/part.parquet' (FORMAT parquet)"""
+    )
+    return fix
+
+
+@pytest.mark.parametrize("name", ["a_mode_per_group", "r_explode_split"])
+def test_oracle_states_library_semantics(spark, null_and_space_fixture, name):
+    """a_mode_per_group never returns a NULL mode (pandas ``mode()`` drops
+    NaN) and r_explode_split yields no empty words from doubled or edge
+    spaces (post-split dropna): on a fixture with both input shapes,
+    each query equals its DuckDB oracle."""
+    from collections import Counter
+
+    import duckdb
+
+    from olympic_athletes_etl_spark.plans import oracle_sql, queries
+
+    fix = null_and_space_fixture
+    con = duckdb.connect()
+    for t in ("events", "part"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')")
+    df = queries()[name](spark, fix)
+    cols = sorted(df.columns)
+    got = Counter(tuple(r) for r in df.select(*cols).collect())
+    want = Counter(
+        con.sql(f"SELECT {', '.join(cols)} FROM ({oracle_sql()[name]})").fetchall()
+    )
+    assert got == want

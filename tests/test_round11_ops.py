@@ -11,7 +11,6 @@ import unicodedata
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.functions.text import (
     MOJIBAKE_TABLE,
@@ -84,99 +83,6 @@ def test_unicode_normalize_query_shape(spark, sf_dir):
     assert row["n_chars_norm"] < row["n_chars_dirty"]
 
 
-# --------------------------------------------------------------------------
-# Round-11 guard pins: streaming-store / checkpoint pairing and the
-# qhist batch-compactor layout guard (r10 advice items).
-# --------------------------------------------------------------------------
-
-
-def _orders(spark, sf_dir):
-    from olympic_athletes_etl_spark.plans.tables import load
-
-    return load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-
-
-def _fake_ckpt(tmp_path, name, committed_ids):
-    import os
-
-    ckpt = tmp_path / name
-    os.makedirs(ckpt / "commits")
-    for i in committed_ids:
-        (ckpt / "commits" / str(i)).write_text("{}")
-    return str(ckpt)
-
-
-def test_stream_fold_compact_refuses_reset_checkpoint(spark, sf_dir, tmp_path):
-    """A reset/swapped checkpoint restarts batch ids at 0; committing its
-    LOWER hwm would re-admit replays of already-folded ids. The
-    compactor must refuse the mismatch, and the store must keep serving
-    its pre-refusal answer."""
-    import pytest
-
-    from olympic_athletes_etl_spark.operators.store import read_manifest
-    from olympic_athletes_etl_spark.plans.relational import rollup_serve
-    from olympic_athletes_etl_spark.streaming.pipeline import (
-        rollup_fold_batch,
-        stream_rollup_compact,
-    )
-
-    orders = _orders(spark, sf_dir)
-    store = str(tmp_path / "rollup")
-    b1 = F.col("o_orderkey") % 2 == 0
-    rollup_fold_batch(orders.filter(b1), 0, store)
-    rollup_fold_batch(orders.filter(~b1), 1, store)
-    stream_rollup_compact(spark, store, _fake_ckpt(tmp_path, "ckpt", [0, 1]))
-    assert read_manifest(store)["hwm"] == 1
-    want = sorted(tuple(r) for r in rollup_serve(spark, store).collect())
-
-    with pytest.raises(RuntimeError, match="reset or swapped"):
-        stream_rollup_compact(spark, store, _fake_ckpt(tmp_path, "ckpt2", [0]))
-    assert read_manifest(store)["hwm"] == 1  # mark not lowered
-    assert sorted(tuple(r) for r in rollup_serve(spark, store).collect()) == want
-
-
-def test_stream_fold_batch_warns_on_replay_skip(spark, sf_dir, tmp_path):
-    """Skipping a batch at/below the folded hwm stays a no-op (genuine
-    replays) but now WARNS, so a reset checkpoint silently dropping new
-    batches is visible."""
-    import pytest
-
-    from olympic_athletes_etl_spark.streaming.pipeline import (
-        rollup_fold_batch,
-        stream_rollup_compact,
-    )
-
-    orders = _orders(spark, sf_dir)
-    store = str(tmp_path / "rollup")
-    rollup_fold_batch(orders, 0, store)
-    stream_rollup_compact(spark, store, _fake_ckpt(tmp_path, "ckpt", [0]))
-    with pytest.warns(UserWarning, match="skipping batch 0"):
-        rollup_fold_batch(orders, 0, store)
-
-
-def test_qhist_batch_compactor_refuses_streaming_layout(spark, sf_dir, tmp_path):
-    """qhist_rollup_compact on a stream_qhist store would merge away the
-    batch_id partitions WITHOUT raising the hwm (replay double-counts,
-    mixed layout). It must refuse and point at the streaming compactor
-    (stream_fold_compact) — the same guard rollup_compact has had since
-    r9."""
-    import pytest
-
-    from olympic_athletes_etl_spark.plans.relational import (
-        QHIST,
-        qhist_rollup_compact,
-    )
-    from olympic_athletes_etl_spark.streaming.pipeline import stream_fold_batch
-
-    orders = _orders(spark, sf_dir)
-    store = str(tmp_path / "qhist")
-    stream_fold_batch(orders, 0, store, QHIST)
-    with pytest.raises(ValueError, match="stream_fold_compact"):
-        qhist_rollup_compact(spark, store)
-
-
 @pytest.mark.parametrize(
     "module, append, partials, serve, table",
     [
@@ -190,9 +96,8 @@ def test_hll_rollup_store_append_autocreates(
     spark, sf_dir, tmp_path, module, append, partials, serve, table
 ):
     """An append on a fresh path auto-creates the store, for every rollup
-    family: the streaming ingest's first micro-batch appends to a path no
-    store has written yet, and GenStore.append alone would raise
-    ValueError."""
+    family: an ingest's first batch may append to a path no store has
+    written yet, and GenStore.append alone would raise ValueError."""
     import importlib
 
     from olympic_athletes_etl_spark.plans.tables import load as load_t

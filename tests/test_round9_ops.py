@@ -227,29 +227,6 @@ def test_bpe_local_trainer_handles_recreated_pairs():
             ), (wf, n)
 
 
-def test_bpe_local_trainer_min_freq_floor(spark, sf_dir):
-    """min_freq drops sub-floor words BEFORE the collect — the result
-    must equal training on the filtered word table (the documented
-    exactness trade), and min_freq=1 is the bit-identical default."""
-    from olympic_athletes_etl_spark.plans.tables import load
-    from olympic_athletes_etl_spark.plans.textstats import (
-        _bpe_merges_from_word_freqs,
-        _word_freqs,
-        bpe_learn_merges_local,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    wf_all = {r["w"]: int(r["freq"]) for r in _word_freqs(docs).collect()}
-    floor = sorted(wf_all.values())[len(wf_all) // 2]  # median: drops some
-    wf_kept = {w: f for w, f in wf_all.items() if f >= floor}
-    assert len(wf_kept) < len(wf_all)
-    assert bpe_learn_merges_local(
-        docs, n_merges=6, min_freq=floor
-    ) == _bpe_merges_from_word_freqs(wf_kept, 6)
-    with pytest.raises(ValueError, match="min_freq"):
-        bpe_learn_merges_local(docs, n_merges=2, min_freq=0)
-
-
 def test_bpe_encode_pandas_equals_fold_encoder(spark, sf_dir):
     """The Arrow-batched encoder must produce byte-identical token
     sequences to the chained-fold encoder for the same learned rules

@@ -10,6 +10,7 @@ crash-kill tests here would have found an empty directory.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,6 +46,13 @@ _SPEC = TableSpec(
         F.sum("total_cents").cast("long").alias("total_cents"),
     ),
 )
+
+
+def _merging(store, merge):
+    """A second handle on ``store``'s path whose compaction folds with
+    ``merge``: a test injects a concurrent writer or a crash into the
+    staging step, where the writer lock is held."""
+    return GenStore(store.path, [replace(_SPEC, merge=merge)])
 
 
 def _served(spark, store):
@@ -318,7 +326,7 @@ def test_append_during_compaction_refuses_loudly(spark, sf_dir, tmp_path):
         hit["raised"] = True
         return _SPEC.merge(df)
 
-    store.compact(spark, merge_overrides={"": merge_and_interleave})
+    _merging(store, merge_and_interleave).compact(spark)
     assert hit["raised"]
     assert _served(spark, store) == want  # nothing lost, nothing doubled
     store.append({"": late})  # retry after the compaction: survives
@@ -340,7 +348,7 @@ def test_concurrent_compactions_refuse(spark, sf_dir, tmp_path):
             store.compact(spark)
         return _SPEC.merge(df)
 
-    store.compact(spark, merge_overrides={"": merge_and_reenter})
+    _merging(store, merge_and_reenter).compact(spark)
     assert read_manifest(store.path)["gen"] == 1
 
 
@@ -387,7 +395,7 @@ def test_live_lock_refuses_and_is_released_on_error(spark, sf_dir, tmp_path):
         raise RuntimeError("killed mid-staging")
 
     with pytest.raises(RuntimeError, match="killed mid-staging"):
-        store.compact(spark, merge_overrides={"": boom})
+        _merging(store, boom).compact(spark)
     assert not os.path.exists(lock)
     store.compact(spark)  # and the store still works
 
@@ -411,7 +419,7 @@ def test_commit_cas_refuses_when_generation_moved(spark, sf_dir, tmp_path):
         return _SPEC.merge(df)
 
     with pytest.raises(ConcurrentWriteError, match="generation moved"):
-        store.compact(spark, merge_overrides={"": move_gen})
+        _merging(store, move_gen).compact(spark)
 
 
 def test_corrupt_manifest_raises_distinct_error(spark, sf_dir, tmp_path):

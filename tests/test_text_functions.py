@@ -1,7 +1,7 @@
 """functions.text — decision-log semantics (SURVEY.md §7).
 
 Pinned here: nullif-wrapped regex extract (C2), bare-year date fallback
-(C8), separator normalization (C1), range split (C3), unit strip (C9).
+(C8), separator normalization (C1), range split (C3).
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from olympic_athletes_etl_spark.functions.text import (
     extract_group,
     parse_date_flexible,
     split_range,
-    strip_unit,
 )
 
 
@@ -74,8 +73,3 @@ def test_split_range(spark):
         ("27 April", None),
         (None, None),
     ]
-
-
-def test_strip_unit_coerces_bad_numeric_to_null(spark):
-    out = _vals(spark, ["181 cm", "181.5 cm", "abc cm", None], lambda c: strip_unit(c, "cm"))
-    assert out == [181.0, 181.5, None, None]
