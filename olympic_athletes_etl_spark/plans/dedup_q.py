@@ -17,6 +17,17 @@ Training-data-pipeline dedup, each as a correctness-gated query:
                        the per-ingestion-batch form: the corpus is a
                        band-partitioned postings read, never re-hashed)
 
+One shingle pipeline serves the whole near-dup family, each step with
+one implementation:
+
+- shingles     — shingle_hashes (doc_id, h) rows / shingle_sets (doc_id,
+                 hs) arrays, tokens polyhashed by textstats' fold
+- hot cap      — _capped_shingles (stop-shingle removal + df)
+- signatures   — _minhash_sig → _minhash_bands; _simhash (16 or 60 bits)
+- candidates   — _band_pairs, the distinct id-ordered bucket self-join
+- verification — _overlap: per-pair array_intersect of the two docs'
+                 shingle arrays (Jaccard, containment)
+
 Scale notes: everything is expressed as explode → hash-aggregate → equi-join,
 so the shuffles key on (shingle) or (band, signature) — exactly the keys
 that stay well-distributed at 100 TB. Every REGISTERED query generates
@@ -37,13 +48,12 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from olympic_athletes_etl_spark.operators.sketches import _P
 from olympic_athletes_etl_spark.operators.store import GenStore, TableSpec
 from olympic_athletes_etl_spark.plans.registry import query
 from olympic_athletes_etl_spark.plans.similarity_q import _DOT, _PLANE_W
 from olympic_athletes_etl_spark.plans.tables import load
-from olympic_athletes_etl_spark.plans.textstats import polyhash_duck
-
-_P = 1_000_000_007
+from olympic_athletes_etl_spark.plans.textstats import _POLYHASH_SPARK, polyhash_duck
 
 # (k, a, b) parameters of the k-th minhash permutation h_k(x) = (a*x+b) mod P.
 _MINHASH_PARAMS = [(k, 37 + 2 * k, (1_000_003 * k) % _P) for k in range(8)]
@@ -58,9 +68,7 @@ _MINHASH_PARAMS = [(k, 37 + 2 * k, (1_000_003 * k) % _P) for k in range(8)]
 #    strings (shuffle bytes drop accordingly). DuckDB computes the
 #    identical combine, so every downstream value still hash-matches.
 _TOKHASH_SPARK = (
-    "transform(split(text, '\\\\s+'),"
-    " t -> aggregate(split(t, ''), CAST(0 AS BIGINT),"
-    " (acc, c) -> (acc * 31 + ascii(c)) % 1000000007))"
+    f"transform(split(text, '\\\\s+'), t -> {_POLYHASH_SPARK.format(col='t')})"
 )
 _BIGRAM_H_SPARK = (
     "CASE WHEN size(th) >= 2 THEN array_distinct("
@@ -173,15 +181,44 @@ def d_exact_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bit-identical to the single-limb form.
 _HOT_DF_FRAC = 0.25
 _HOT_DF_ABS = 500
+_HOT_HAVING = (
+    "HAVING count(*) >= least("
+    f"{_HOT_DF_FRAC} * (SELECT count(*) FROM documents), {_HOT_DF_ABS})"
+)
 
 
-@query(
-    "d_ngram_jaccard",
-    oracle=f"""
+def _capped_shingles(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(shingles, df): the (doc_id, h) rows of _doc_shingle_hashes minus
+    every hot shingle, and the (h, df) document frequency the cap was
+    read from. A shingle is hot at df >= min(frac·n_docs, absolute); the
+    hot set is broadcast-sized (see d_ngram_jaccard), so the cap is a
+    broadcast left-anti join with no shuffle on the shingle side."""
+    shingles = _doc_shingle_hashes(spark, sf_dir)
+    n_docs = load(spark, sf_dir, "documents").agg(
+        F.count(F.lit(1)).alias("n_total")
+    )
+    df = shingles.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+    hot = (
+        df.crossJoin(F.broadcast(n_docs))
+        .filter(
+            F.col("df")
+            >= F.least(_HOT_DF_FRAC * F.col("n_total"), F.lit(_HOT_DF_ABS))
+        )
+        .select("h")
+    )
+    return shingles.join(F.broadcast(hot), "h", "left_anti"), df
+
+
+# Exact bigram Jaccard >= 0.5 over the capped shingle space: the oracle of
+# d_ngram_jaccard and of d_jaccard_prefix_filter, which return the same
+# pairs from different candidate generation.
+_JACCARD_ORACLE = f"""
     WITH shingles0 AS ({_SHINGLE_HASHES_DUCK}),
     hot AS (
       SELECT h FROM shingles0 GROUP BY h
-      HAVING count(*) >= least({_HOT_DF_FRAC} * (SELECT count(*) FROM documents), {_HOT_DF_ABS})
+      {_HOT_HAVING}
     ),
     shingles AS (
       SELECT * FROM shingles0 WHERE h NOT IN (SELECT h FROM hot)
@@ -199,8 +236,10 @@ _HOT_DF_ABS = 500
     JOIN sizes sa ON sa.doc_id = doc_a
     JOIN sizes sb ON sb.doc_id = doc_b
     WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
-    """,
-)
+    """
+
+
+@query("d_ngram_jaccard", oracle=_JACCARD_ORACLE)
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-set Jaccard near-dup pairs via inverted index: explode
     shingles, self-equi-join on the shingle (shuffle keyed on shingle —
@@ -230,21 +269,7 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     and breaks pipelining. At 100 TB the calculus flips only if shingling
     cost dominates the join — then persist a bucketed shingle table
     shared by the whole dedup suite."""
-    shingles_all = _doc_shingle_hashes(spark, sf_dir)
-    n_docs = load(spark, sf_dir, "documents").agg(
-        F.count(F.lit(1)).alias("n_total")
-    )
-    hot = (
-        shingles_all.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .filter(
-            F.col("df")
-            >= F.least(_HOT_DF_FRAC * F.col("n_total"), F.lit(_HOT_DF_ABS))
-        )
-        .select("h")
-    )
-    shingles = shingles_all.join(F.broadcast(hot), "h", "left_anti")
+    shingles, _ = _capped_shingles(spark, sf_dir)
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shingles.alias("a")
     b = shingles.alias("b")
@@ -309,12 +334,22 @@ def _minhash_cand_ctes() -> str:
     )"""
 
 
+def _minhash_sig(hashed: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh7) from (doc_id, h) rows. One shuffle: all 8
+    permutation-mins as aggregate columns (map-side partial mins),
+    instead of exploding 8× rows per shingle."""
+    return hashed.groupBy("doc_id").agg(
+        *[
+            F.min((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"mh{k}")
+            for k, a, b in _MINHASH_PARAMS
+        ]
+    )
+
+
 def _minhash_bands(hashed: DataFrame) -> DataFrame:
-    """(doc_id, band, sig0, sig1) — the banded minhash signature rows,
+    """(doc_id, band, sig0, sig1) — the banded _minhash_sig rows,
     factored for d_minhash_lsh (self-join) and the stored-postings path
-    (d_neardup_stored). One shuffle: all 8 permutation-mins as aggregate
-    columns (map-side partial mins), instead of exploding 8× rows per
-    shingle.
+    (d_neardup_stored).
 
     MEASURED REJECTION (sf0.1, median-of-3): the tempting "shuffle-free"
     per-row form — array_min(transform(hs, h -> (a·h+b)%P)) over the
@@ -327,12 +362,7 @@ def _minhash_bands(hashed: DataFrame) -> DataFrame:
     keeps the shuffle tiny — at any scale this plan wins unless the
     array form's input is pre-materialized, which costs the same
     shuffle it saves."""
-    sig = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"mh{k}")
-            for k, a, b in _MINHASH_PARAMS
-        ]
-    )
+    sig = _minhash_sig(hashed)
     n_bands = len(_MINHASH_PARAMS) // 2
     stack_args = ", ".join(
         f"{bnd}, mh{2 * bnd}, mh{2 * bnd + 1}" for bnd in range(n_bands)
@@ -363,7 +393,8 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _band_pairs(bands: DataFrame) -> DataFrame:
     """DISTINCT (doc_a, doc_b), doc_a < doc_b: the docs of ``bands``
     (_minhash_bands rows) sharing any (band, sig0, sig1) bucket — the
-    band self-join of d_minhash_lsh and d_neardup_pipeline."""
+    band self-join of d_minhash_lsh, d_neardup_pipeline and
+    d_neardup_within_batch."""
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -400,26 +431,31 @@ _SIMHASH_DUCK = f"""
 """
 
 
-def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, simhash): per-bit ±1 vote over shingle hashes, bit set
-    where the vote is positive. 16 bits keeps the bits×shingles explode
-    bounded; production would use 64 and the same plan."""
-    hashed = _doc_shingle_hashes(spark, sf_dir)
-    # One shuffle: per-bit ±1 votes as 16 aggregate columns (map-side
-    # partial sums), then assemble the signature arithmetically.
-    votes = hashed.groupBy("doc_id").agg(
+def _simhash(frame: DataFrame, col: str, n_bits: int) -> DataFrame:
+    """(doc_id, simhash) from (doc_id, ``col``) hash rows: per-bit ±1
+    vote, bit set where the vote is positive. One shuffle: the votes are
+    ``n_bits`` aggregate columns (map-side partial sums), then the
+    signature is assembled arithmetically."""
+    votes = frame.groupBy("doc_id").agg(
         *[
             F.sum(
-                F.when(F.expr(f"(h >> {b}) & 1") == 1, 1).otherwise(-1)
+                F.when(F.expr(f"({col} >> {b}) & 1") == 1, 1).otherwise(-1)
             ).alias(f"s{b}")
-            for b in range(16)
+            for b in range(n_bits)
         ]
     )
     simhash = None
-    for b in range(16):
+    for b in range(n_bits):
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         simhash = term if simhash is None else simhash + term
     return votes.select("doc_id", simhash.cast("bigint").alias("simhash"))
+
+
+def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, simhash), 16 bits over the shingle hashes. 16 bits keeps
+    the oracle's bits×shingles explode bounded; d_simhash_wide is the
+    same plan at 60 bits."""
+    return _simhash(_doc_shingle_hashes(spark, sf_dir), "h", 16)
 
 
 @query("d_simhash", oracle=_SIMHASH_DUCK)
@@ -750,21 +786,9 @@ def d_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically). Pairs/banding compose exactly as d_simhash_banded,
     with 15 4-bit bands giving recall 1.0 for hamming ≤ 3."""
     wide = _doc_shingle_hashes(spark, sf_dir).select(
-        "doc_id", F.expr(_WIDE_H.replace("h", "h", 1)).alias("wh")
+        "doc_id", F.expr(_WIDE_H).alias("wh")
     )
-    votes = wide.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(wh >> {b}) & 1") == 1, 1).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(_N_WIDE_BITS)
-        ]
-    )
-    simhash = None
-    for b in range(_N_WIDE_BITS):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        simhash = term if simhash is None else simhash + term
-    return votes.select("doc_id", simhash.cast("bigint").alias("simhash"))
+    return _simhash(wide, "wh", _N_WIDE_BITS)
 
 
 # --------------------------------------------------------------------------
@@ -789,12 +813,13 @@ def _closure_ctes(pairs_cte: str = "cand") -> str:
 
 
 def _intersection_ctes() -> str:
-    """Shared exact-intersection CTEs (expects ``hashed`` and ``cand`` in
-    scope; yields ``sizes(doc_id, n)`` and ``shared(doc_a, doc_b, i)``).
-    Single source of truth for every candidate-verification oracle
-    (d_neardup_pipeline, d_jaccard_histogram, d_containment_pairs) —
+    """Exact-intersection CTEs of the candidate-verification oracles
+    (expects ``hashed`` and ``cand`` in scope; yields ``sizes(doc_id, n)``
+    and ``shared(doc_a, doc_b, i)``). Single source of truth for
+    d_neardup_pipeline, d_jaccard_histogram and d_containment_pairs —
     same rationale as _minhash_cand_ctes/_closure_ctes: an intersection-
-    semantics edit cannot desynchronize the three."""
+    semantics edit cannot desynchronize the three. The Spark side of all
+    three verifies through _overlap."""
     return '''sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY 1),
     shared AS (
       SELECT c.doc_a, c.doc_b, count(*) AS i
@@ -805,27 +830,31 @@ def _intersection_ctes() -> str:
     )'''
 
 
-def _candidate_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_a, doc_b, i, na, nb) for every MinHash-LSH candidate pair:
-    shared-shingle count plus both docs' shingle-set sizes — the common
-    input to Jaccard (i/(na+nb-i)) and containment (i/min(na,nb))
-    scoring. Spark twin of _intersection_ctes, factored for the same
-    no-drift reason; cost is candidate-bounded (the joins key on doc id
-    and shingle hash, never a cross product)."""
-    cand = d_minhash_lsh(spark, sf_dir)
-    hashed = _doc_shingle_hashes(spark, sf_dir)
-    sizes = hashed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ha = hashed.select(F.col("doc_id").alias("doc_a"), "h")
-    hb = hashed.select(F.col("doc_id").alias("b_id"), F.col("h").alias("hb"))
-    shared = (
-        cand.join(ha, "doc_a")
-        .join(hb, (F.col("doc_b") == F.col("b_id")) & (F.col("h") == F.col("hb")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
+def _overlap(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, i, na, nb) for every ``cand`` pair: i is the size
+    of the intersection of the two docs' ``hs`` arrays from ``sets``
+    (doc_id, hs — distinct shingle hashes per doc), na/nb the array
+    sizes — the common input to Jaccard (i/(na+nb-i)) and containment
+    (i/min(na,nb)). Each pair fetches the two arrays by doc id and
+    intersects them in-row (array_intersect), so the exchange carries
+    one row per pair, never pair × shingle rows — the set-once,
+    intersect-many shape of "Highly Efficient String Similarity Search
+    and Join over Compressed Indexes" (ICDE 2022). The one
+    pair-verification path of the module."""
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
+    return cand.join(sa, "doc_a").join(sb, "doc_b").select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("hs_a", "hs_b")).alias("i"),
+        F.size("hs_a").alias("na"),
+        F.size("hs_b").alias("nb"),
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return shared.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _jaccard() -> F.Column:
+    """i / (na + nb - i) over _overlap's columns."""
+    return F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
 
 
 @query(
@@ -917,10 +946,10 @@ def d_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. Candidates from d_minhash_lsh's banded signatures over
        explode(hs) — the only pair-generating join (_band_pairs),
        equi-keyed on (band, sig0, sig1).
-    2. Verification computes TRUE bigram Jaccard on candidates only:
-       candidate pairs fetch the two sets by doc_id and verify in-row
-       via array_intersect — per-pair cost is |set a| + |set b|, total
-       cost linear in candidates, never in n².
+    2. Verification computes TRUE bigram Jaccard on candidates only
+       (_overlap): candidate pairs fetch the two sets by doc_id and
+       verify in-row via array_intersect — per-pair cost is
+       |set a| + |set b|, total cost linear in candidates, never in n².
     3. Verified pairs (jaccard ≥ 0.5) feed iterative connected
        components (operators/graph.py); every document gets a cluster
        id (min member id), singletons cluster as themselves.
@@ -943,14 +972,9 @@ def d_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _band_pairs(
         _minhash_bands(sets.select("doc_id", F.explode("hs").alias("h")))
     )
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    jac = inter.cast("double") / (F.size("hs_a") + F.size("hs_b") - inter)
     verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= _VERIFY_JACCARD)
+        _overlap(cand, sets)
+        .filter(_jaccard() >= _VERIFY_JACCARD)
         .select("doc_a", "doc_b")
     )
     # the labels are a self-contained checkpoint once CC returns
@@ -976,7 +1000,7 @@ _CONTAM_K = 10
     WITH hashed AS ({_SHINGLE_HASHES_DUCK}),
     hot AS (
       SELECT h FROM hashed GROUP BY h
-      HAVING count(*) >= least({_HOT_DF_FRAC} * (SELECT count(*) FROM documents), {_HOT_DF_ABS})
+      {_HOT_HAVING}
     ),
     sh AS (SELECT * FROM hashed WHERE h NOT IN (SELECT h FROM hot)),
     ov AS (
@@ -1002,21 +1026,7 @@ def d_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     kills quadratic hot keys; the eval side is ~1% of the corpus, so at
     100 TB the join's build side prunes to eval-only shingles (and with
     a real benchmark table the eval side is broadcast-sized)."""
-    shingles_all = _doc_shingle_hashes(spark, sf_dir)
-    n_docs = load(spark, sf_dir, "documents").agg(
-        F.count(F.lit(1)).alias("n_total")
-    )
-    hot = (
-        shingles_all.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .filter(
-            F.col("df")
-            >= F.least(_HOT_DF_FRAC * F.col("n_total"), F.lit(_HOT_DF_ABS))
-        )
-        .select("h")
-    )
-    sh = shingles_all.join(F.broadcast(hot), "h", "left_anti")
+    sh, _ = _capped_shingles(spark, sf_dir)
     ev = sh.filter(F.col("doc_id") % _CONTAM_MOD == 0).select(
         F.col("doc_id").alias("eval_doc"), "h"
     )
@@ -1067,13 +1077,7 @@ def d_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     only where the estimate is near the decision threshold). Resolution
     is 1/8 with 8 permutations; widen the sketch for finer estimates —
     cost grows linearly, never touches the corpus again."""
-    hashed = _doc_shingle_hashes(spark, sf_dir)
-    sig = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"mh{k}")
-            for k, a, b in _MINHASH_PARAMS
-        ]
-    )
+    sig = _minhash_sig(_doc_shingle_hashes(spark, sf_dir))
     cand = d_minhash_lsh(spark, sf_dir)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
@@ -1310,11 +1314,15 @@ def d_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by the candidate set (LSH-pruned), never n²; the decile
     is floor() of the identical double on both engines (exact — round()
     would not be). Reuses the shared candidate CTEs, so a banding edit
-    re-tunes the histogram automatically."""
-    inter = _candidate_intersections(spark, sf_dir)
-    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
+    re-tunes the histogram automatically. Pairs verify through _overlap
+    over shingle_sets' per-doc arrays: the pair exchange carries two id
+    arrays per candidate, not the candidate × shingle rows of a re-join
+    to the shingle table."""
+    inter = _overlap(
+        d_minhash_lsh(spark, sf_dir), shingle_sets(_spread_documents(spark, sf_dir))
+    )
     return (
-        inter.groupBy(F.floor(jac * 10).cast("bigint").alias("jacc_decile"))
+        inter.groupBy(F.floor(_jaccard() * 10).cast("bigint").alias("jacc_decile"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
 
@@ -1342,12 +1350,15 @@ def d_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores near 1.0 here but low on Jaccard (the union is dominated by
     the long doc) — the variant that catches quote-inclusion and
     boilerplate-wrapping duplication. Same candidate-bounded cost shape
-    as d_jaccard_histogram; threshold compare on the identical double
-    both engines compute from exact integer counts. Caveat documented:
+    as d_jaccard_histogram, and the same verification (_overlap over
+    shingle_sets); threshold compare on the identical double both
+    engines compute from exact integer counts. Caveat documented:
     MinHash bands estimate JACCARD, so extreme size ratios can miss
     high-containment pairs at candidate stage — production adds a
     suffix-array or seed-and-extend pass (d_substring_dup) for those."""
-    inter = _candidate_intersections(spark, sf_dir)
+    inter = _overlap(
+        d_minhash_lsh(spark, sf_dir), shingle_sets(_spread_documents(spark, sf_dir))
+    )
     cont = F.col("i").cast("double") / F.least("na", "nb")
     return (
         inter.filter(cont >= 0.8)
@@ -1662,32 +1673,7 @@ def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Prefix-filtered Jaccard join (PPJoin-style) — same answer as
 # d_ngram_jaccard, candidate generation from ordered prefixes only
 # --------------------------------------------------------------------------
-_PF_ORACLE = f"""
-    WITH shingles0 AS ({_SHINGLE_HASHES_DUCK}),
-    hot AS (
-      SELECT h FROM shingles0 GROUP BY h
-      HAVING count(*) >= least({_HOT_DF_FRAC} * (SELECT count(*) FROM documents), {_HOT_DF_ABS})
-    ),
-    shingles AS (
-      SELECT * FROM shingles0 WHERE h NOT IN (SELECT h FROM hot)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY 1),
-    shared AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-      FROM shingles a JOIN shingles b
-        ON a.h = b.h AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jaccard
-    FROM shared
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
-"""
-
-
-@query("d_jaccard_prefix_filter", oracle=_PF_ORACLE)
+@query("d_jaccard_prefix_filter", oracle=_JACCARD_ORACLE)
 def d_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Jaccard >= 0.5 pairs — identical output to d_ngram_jaccard
     (the oracle IS the exact form) — but candidates come from PREFIX
@@ -1713,7 +1699,7 @@ def d_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     index: re-joining would expand every candidate back into
     |candidates| x doc_size rows (measured 280M intermediate rows at
     sf0.1), while the array form is |candidates| rows of vectorized
-    set-intersection work.
+    set-intersection work (_overlap).
 
     Measured honesty (sf0.1, the synthetic corpus): 36.5M colliding
     index rows shrink to 5.5M candidate pairs — a 6.6x pair reduction —
@@ -1730,20 +1716,7 @@ def d_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on shingle hash; verify joins keyed on doc ids against the
     doc->shingle-array dim. All shuffles keyed on well-distributed
     columns; the hot-cap broadcast is shared with the exact form."""
-    shingles_all = _doc_shingle_hashes(spark, sf_dir)
-    n_docs = load(spark, sf_dir, "documents").agg(
-        F.count(F.lit(1)).alias("n_total")
-    )
-    dfreq = shingles_all.groupBy("h").agg(F.count(F.lit(1)).alias("dfh"))
-    hot = (
-        dfreq.crossJoin(F.broadcast(n_docs))
-        .filter(
-            F.col("dfh")
-            >= F.least(_HOT_DF_FRAC * F.col("n_total"), F.lit(_HOT_DF_ABS))
-        )
-        .select("h")
-    )
-    shingles = shingles_all.join(F.broadcast(hot), "h", "left_anti")
+    shingles, dfreq = _capped_shingles(spark, sf_dir)
     # doc -> (shingle array, size): consumed three times (prefix lengths
     # + both verify sides) and pref twice (self-join) — materialize both
     # once; they are doc-cardinality frames, so the checkpoint is tiny
@@ -1752,7 +1725,7 @@ def d_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_list("h").alias("hs"), F.count(F.lit(1)).alias("n")
     ).localCheckpoint(eager=True)
     rn = F.row_number().over(
-        Window.partitionBy("doc_id").orderBy("dfh", "h")
+        Window.partitionBy("doc_id").orderBy("df", "h")
     )
     pref = (
         shingles.join(dfreq, "h")
@@ -1778,26 +1751,10 @@ def d_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    ja = arrs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("hs").alias("hs_a"),
-        F.col("n").alias("n_a"),
-    )
-    jb = arrs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("hs").alias("hs_b"),
-        F.col("n").alias("n_b"),
-    )
-    ver = (
-        cand.join(ja, "doc_a")
-        .join(jb, "doc_b")
-        .withColumn("c", F.size(F.array_intersect("hs_a", "hs_b")))
-    )
-    jac = F.col("c").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("c")
-    )
-    return ver.filter(jac >= 0.5).select(
-        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
+    return (
+        _overlap(cand, arrs)
+        .filter(_jaccard() >= 0.5)
+        .select("doc_a", "doc_b", F.round(_jaccard(), 4).alias("jaccard"))
     )
 
 
@@ -1964,20 +1921,6 @@ def lsh_probe(batch_bands: DataFrame, stored_bands: DataFrame) -> DataFrame:
     )
 
 
-def lsh_probe_within(bands: DataFrame) -> DataFrame:
-    """DISTINCT (doc_new, doc_old) collisions WITHIN one batch's own band
-    rows — the self-probe that closes the ingest screen's intra-batch
-    blind spot: ``lsh_probe(batch, stored)`` only sees pairs that span
-    the store, so two near-duplicates arriving in the SAME micro-batch
-    would each miss the other and both be admitted. ``doc_new >
-    doc_old`` orients every within-batch pair exactly once (the later
-    id flags against the earlier — the d_incremental_dedup convention),
-    and drops the trivial self-collisions the self-join necessarily
-    produces. Same uniform (band, sig0, sig1) join key as lsh_probe;
-    candidate volume is batch-sized on both sides."""
-    return lsh_probe(bands, bands).filter(F.col("doc_new") > F.col("doc_old"))
-
-
 @query(
     "d_neardup_within_batch",
     oracle=f"""
@@ -1994,12 +1937,17 @@ def d_neardup_within_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch SELF-probe, driver-gated: within-batch near-dup
     candidates for the same ingest batch d_neardup_stored screens
     against the corpus — together they are the complete per-batch
-    screen. Same uniform (band, sig0, sig1) bucket
-    key; doc_new > doc_old orients each pair once, later id flagged
-    against the earlier. Cost at 100 TB is batch-sized on both sides —
-    the corpus never enters this join."""
+    screen. ``lsh_probe(batch, stored)`` only sees pairs that span the
+    store, so two near-duplicates arriving in the SAME batch would each
+    miss the other; this is the band self-join (_band_pairs) over the
+    batch's own rows, with doc_new > doc_old orienting each pair once,
+    later id flagged against the earlier (the d_incremental_dedup
+    convention). Cost at 100 TB is batch-sized on both sides — the
+    corpus never enters this join."""
     bands = _minhash_bands(_doc_shingle_hashes(spark, sf_dir))
-    return lsh_probe_within(bands.filter(F.col("doc_id") >= _STORED_SPLIT))
+    return _band_pairs(bands.filter(F.col("doc_id") >= _STORED_SPLIT)).select(
+        F.col("doc_b").alias("doc_new"), F.col("doc_a").alias("doc_old")
+    )
 
 
 _NEARDUP_STORED_ORACLE = f"""
@@ -2035,8 +1983,8 @@ def d_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     CONTRACT: this probe screens batch-vs-STORE only — two near-dups
     inside the same batch are invisible to it by construction. Callers
-    screening a raw ingest batch compose it with lsh_probe_within
-    (the batch self-probe), as d_neardup_within_batch does."""
+    screening a raw ingest batch compose it with the batch self-probe,
+    d_neardup_within_batch."""
     bands = _minhash_bands(_doc_shingle_hashes(spark, sf_dir))
     path = os.path.join(
         tempfile.mkdtemp(prefix="d_neardup_stored_"), "postings"

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.operators.sketches import (
+    _P,
     hll_bucket_sql,
     hll_rho_sql,
     cms_params,
@@ -34,8 +35,7 @@ from olympic_athletes_etl_spark.operators.sketches import (
 from olympic_athletes_etl_spark.operators.store import Rollup
 from olympic_athletes_etl_spark.plans.registry import query
 from olympic_athletes_etl_spark.plans.tables import load
-
-_P = 1_000_000_007
+from olympic_athletes_etl_spark.plans.textstats import polyhash_duck
 
 # --------------------------------------------------------------------------
 # KMV / minhash cardinality estimate — per-group distinct counting with
@@ -112,13 +112,6 @@ _CMS_A, _CMS_B = cms_params(_CMS_D)  # shared with cms_frequencies
 # total_tokens / _HH_INV_FRAC (the classic phi-heavy-hitter screen).
 _HH_INV_FRAC = 200
 
-_POLYHASH_DUCK_W = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-    " list_transform(string_split(w, ''), c -> CAST(ord(c) AS BIGINT))),"
-    " (acc, c) -> (acc * 31 + c) % 1000000007)"
-)
-
-
 @query(
     "t_heavy_hitters",
     oracle=f"""
@@ -128,7 +121,7 @@ _POLYHASH_DUCK_W = (
     ),
     tc AS (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY w),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
-    th AS (SELECT w, cnt, {_POLYHASH_DUCK_W} AS t FROM tc),
+    th AS (SELECT w, cnt, {polyhash_duck("w")} AS t FROM tc),
     posed AS (
       SELECT w, cnt, j,
              ((t * ([{", ".join(map(str, _CMS_A))}])[j + 1]

@@ -129,7 +129,9 @@ def resume_remaining(
     try:
         done = read_parquet_glob(spark, checkpoint_glob).select(key)
     except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in (exc.getErrorClass() or "") or                 "Path does not exist" in str(exc):
+        if "PATH_NOT_FOUND" in (exc.getCondition() or "") or (
+            "Path does not exist" in str(exc)
+        ):
             return all_ids  # no checkpoints yet (fresh run)
         raise
     return all_ids.join(done.dropDuplicates(), on=key, how="left_anti")

@@ -95,6 +95,11 @@ _PINS = {
     "v_rapid_repeat_orders": [("shuffles", "<=", 1), ("python", "==", 0)],
     "w_backward_fill": [("shuffles", "<=", 1), ("python", "==", 0)],
     "e_last_touch_attribution": [("shuffles", "<=", 2), ("python", "==", 0)],
+    # candidate pairs verify by intersecting per-doc shingle arrays
+    # (_overlap); a re-join of every pair to both docs' per-shingle rows
+    # costs two more exchanges (7 and 6 at sf0.001)
+    "d_jaccard_histogram": [("shuffles", "<=", 5), ("smj", "==", 0)],
+    "d_containment_pairs": [("shuffles", "<=", 4), ("smj", "==", 0)],
 }
 
 

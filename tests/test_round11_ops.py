@@ -202,23 +202,3 @@ def test_doc_entropy_bounds(spark, sf_dir):
         assert -1e-9 <= r["entropy_bits"] <= math.log2(r["n_distinct"]) + 1e-4
         if r["entropy_norm"] is not None:
             assert -1e-9 <= r["entropy_norm"] <= 1 + 1e-9
-
-
-def test_url_dedup_canonical_invariants(spark, sf_dir):
-    from olympic_athletes_etl_spark.plans.dedup_q import d_url_dedup
-    from olympic_athletes_etl_spark.plans.tables import load
-
-    rows = d_url_dedup(spark, sf_dir).collect()
-    n_docs = load(spark, sf_dir, "documents").count()
-    # every doc lands in exactly one canonical group
-    assert sum(r["n_dups"] for r in rows) == n_docs
-    for r in rows:
-        u = r["canonical_url"]
-        assert u == u.lower()
-        assert "#" not in u and "utm" not in u
-        assert not u.endswith("/")
-        assert "://www." not in u
-        assert u.startswith("https://")
-        assert r["n_raw_variants"] <= r["n_dups"]
-    # the canonicalization actually merges distinct raw variants
-    assert max(r["n_raw_variants"] for r in rows) > 1

@@ -6,13 +6,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from olympic_athletes_etl_spark.plans.dedup_q import (
-    d_containment_pairs,
-    d_dup_rate_by_source,
-    d_jaccard_histogram,
-    d_minhash_lsh,
-    d_ngram_jaccard,
-)
 from olympic_athletes_etl_spark.plans.events_q import (
     e_dow_hour_profile,
     e_user_pareto,
@@ -54,33 +47,6 @@ def test_revenue_trend_mom_identity(spark, sf_dir):
             assert abs(cur["mom_pct"] - round(expect, 4)) < 1e-6
 
 
-def test_jaccard_histogram_covers_all_candidates(spark, sf_dir):
-    hist = d_jaccard_histogram(spark, sf_dir).collect()
-    n_cand = d_minhash_lsh(spark, sf_dir).count()
-    assert sum(r["n_pairs"] for r in hist) == n_cand
-    for r in hist:
-        assert 0 <= r["jacc_decile"] <= 10  # 10 = exact-duplicate bucket
-
-
-def test_containment_dominates_jaccard(spark, sf_dir):
-    cont = {
-        (r["doc_a"], r["doc_b"]): r["containment"]
-        for r in d_containment_pairs(spark, sf_dir).collect()
-    }
-    assert cont
-    jac = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in d_ngram_jaccard(spark, sf_dir).collect()
-    }
-    for pair, c in cont.items():
-        assert 0.8 <= c <= 1.0
-        if pair in jac:
-            # |i|/min(|a|,|b|) >= |i|/|a∪b| always (different shingle
-            # capping makes this approximate only if the hot-cap fired;
-            # the synthetic corpus has no capped shingles at this SF)
-            assert c >= jac[pair] - 1e-9
-
-
 def test_user_pareto_is_cumulative_and_complete(spark, sf_dir):
     # round-4 shape: one row per DISTINCT activity level (n_ev), not per
     # user — the bounded curve that replaced the global per-user cumsum.
@@ -95,14 +61,6 @@ def test_user_pareto_is_cumulative_and_complete(spark, sf_dir):
         assert cur["n_ev"] < prev["n_ev"]  # strictly descending grid
         assert cur["cum_ev"] == prev["cum_ev"] + cur["n_ev"] * cur["n_users"]
         assert cur["cum_users"] == prev["cum_users"] + cur["n_users"]
-
-
-def test_dup_rate_by_source_accounts_for_every_doc(spark, sf_dir):
-    rows = d_dup_rate_by_source(spark, sf_dir).collect()
-    docs = load(spark, sf_dir, "documents")
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    n_distinct = docs.select(F.md5("text")).distinct().count()
-    assert sum(r["n_dupes"] for r in rows) == docs.count() - n_distinct
 
 
 def test_payload_dedup_matches_text_dedup(spark, sf_dir):

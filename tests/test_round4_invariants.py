@@ -107,38 +107,6 @@ def test_bucket_stats_conserves_vectors_and_band_bounds(spark, sf_dir):
         assert r["n_vectors"] <= r["n_buckets"] * r["max_occupancy"]
 
 
-# ----------------------------------------------------------------- dedup
-
-
-def test_novelty_counts_each_distinct_shingle_once(spark, sf_dir):
-    from olympic_athletes_etl_spark.plans.dedup_q import _doc_shingle_hashes
-
-    rows = _q("d_novelty_by_doc")(spark, sf_dir).collect()
-    hashed = _doc_shingle_hashes(spark, sf_dir)
-    # every distinct shingle is novel in exactly one doc (its first)
-    assert sum(r["n_novel"] for r in rows) == hashed.select("h").distinct().count()
-    assert sum(r["n_shingles"] for r in rows) == hashed.count()
-    for r in rows:
-        assert 0 <= r["n_novel"] <= r["n_shingles"]
-        assert abs(r["novelty_ratio"] - round(r["n_novel"] / r["n_shingles"], 4)) < 1e-9
-    # ingestion order: the earliest doc with shingles is fully novel
-    first = min((r for r in rows), key=lambda r: r["doc_id"])
-    assert first["n_novel"] == first["n_shingles"]
-
-
-def test_shingle_df_histogram_conserves_postings(spark, sf_dir):
-    from olympic_athletes_etl_spark.plans.dedup_q import _doc_shingle_hashes
-
-    rows = _q("d_shingle_df_histogram")(spark, sf_dir).collect()
-    hashed = _doc_shingle_hashes(spark, sf_dir)
-    assert sum(r["n_postings"] for r in rows) == hashed.count()
-    assert sum(r["n_shingles"] for r in rows) == hashed.select("h").distinct().count()
-    for r in rows:
-        assert r["n_shingles"] <= r["n_postings"]
-        if r["df_bucket"] == 0:  # df=1 exactly: one posting per shingle
-            assert r["n_shingles"] == r["n_postings"]
-
-
 # -------------------------------------------------------------- validate
 
 
@@ -961,31 +929,6 @@ def test_abc_analysis_partitions_and_orders(spark):
         k: r.revenue_cents / r.n_parts for k, r in rows.items()
     }
     assert inten["A"] > inten["B"] > inten["C"]
-
-
-def test_source_overlap_bounds(spark):
-    rows = _q("d_source_overlap")(spark, _SF001).collect()
-    assert rows
-    from olympic_athletes_etl_spark.plans.dedup_q import _doc_shingle_hashes
-
-    hs = (
-        _doc_shingle_hashes(spark, _SF001)
-        .join(
-            load(spark, _SF001, "documents").select("doc_id", "source"),
-            "doc_id",
-        )
-        .select("h", "source")
-        .distinct()
-    )
-    per = {
-        r.source: r.n
-        for r in hs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for r in rows:
-        assert r.source_a < r.source_b
-        lo = min(per[r.source_a], per[r.source_b])
-        assert 0 < r.n_shared <= lo
-        assert r.containment_x10000 == (10000 * r.n_shared) // lo
 
 
 def test_bfs_depth_levels_are_true_shortest_paths(spark):

@@ -169,63 +169,6 @@ def test_knn_graph_store_merge_chain_two_batches(spark, sf_dir, tmp_path):
     assert final == rebuild
 
 
-def test_lsh_postings_append_closes_ingest_loop(spark, sf_dir, tmp_path):
-    """Dedup-side loop composition: store corpus postings, screen
-    batch1, APPEND batch1's postings, screen batch2 — batch2's
-    candidates must equal the in-plan band join against corpus ∪
-    batch1 (integer signatures, append is exact union)."""
-    from olympic_athletes_etl_spark.plans.dedup_q import (
-        _doc_shingle_hashes,
-        _minhash_bands,
-        lsh_postings_append,
-        lsh_postings_load,
-        lsh_postings_store,
-    )
-
-    bands = _minhash_bands(_doc_shingle_hashes(spark, sf_dir))
-    path = str(tmp_path / "postings")
-    corpus = F.col("doc_id") < 300
-    batch1 = (F.col("doc_id") >= 300) & (F.col("doc_id") < 400)
-    batch2 = F.col("doc_id") >= 400
-    lsh_postings_store(bands.filter(corpus), path)
-    lsh_postings_append(bands.filter(batch1), path)
-    stored = lsh_postings_load(spark, path).alias("o")
-    n = bands.filter(batch2).alias("n")
-    got = {
-        (r["doc_new"], r["doc_old"])
-        for r in n.join(
-            stored,
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.sig0") == F.col("o.sig0"))
-            & (F.col("n.sig1") == F.col("o.sig1")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"),
-            F.col("o.doc_id").alias("doc_old"),
-        )
-        .dropDuplicates()
-        .collect()
-    }
-    inplan = bands.filter(corpus | batch1).alias("o")
-    want = {
-        (r["doc_new"], r["doc_old"])
-        for r in n.join(
-            inplan,
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.sig0") == F.col("o.sig0"))
-            & (F.col("n.sig1") == F.col("o.sig1")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"),
-            F.col("o.doc_id").alias("doc_old"),
-        )
-        .dropDuplicates()
-        .collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
 # --------------------------------------------------------------------------
 # IVFPQ stored index (the deployed serving shape)
 # --------------------------------------------------------------------------
@@ -360,68 +303,6 @@ def test_km_probe_lists_matches_in_plan_assignment(spark, sf_dir):
     probe_q = [int(x) for x in probe["vq"]]
     in_plan = list(probe["pls"])
     assert _km_probe_lists(probe_q, cents, len(cents)) == in_plan
-
-
-# --------------------------------------------------------------------------
-# Stored LSH postings (batch-vs-corpus near-dup screening)
-# --------------------------------------------------------------------------
-def test_neardup_stored_matches_oracle(spark, sf_dir):
-    from olympic_athletes_etl_spark.plans import queries
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    want = sorted(con.sql(oracle_sql()["d_neardup_stored"]).fetchall())
-    got = sorted(
-        tuple(r) for r in queries()["d_neardup_stored"](spark, sf_dir).collect()
-    )
-    assert got == want
-    assert len(got) > 0  # the split actually straddles near-dup pairs
-
-
-def test_neardup_stored_equals_lsh_pairs_across_split(spark, sf_dir):
-    """Consistency with the self-join form: the stored-probe candidates
-    are EXACTLY d_minhash_lsh's pairs that straddle the corpus/batch
-    split (old < 400 <= new, and lsh emits doc_a < doc_b) — the stored
-    index changes where the corpus signatures come from, never which
-    collisions exist."""
-    from olympic_athletes_etl_spark.plans import queries
-    from olympic_athletes_etl_spark.plans.dedup_q import _STORED_SPLIT
-
-    lsh = {
-        (r["doc_a"], r["doc_b"])
-        for r in queries()["d_minhash_lsh"](spark, sf_dir).collect()
-    }
-    straddle = {
-        (a, b) for a, b in lsh if a < _STORED_SPLIT <= b
-    }
-    stored = {
-        (r["doc_old"], r["doc_new"])
-        for r in queries()["d_neardup_stored"](spark, sf_dir).collect()
-    }
-    assert stored == straddle
-
-
-def test_lsh_postings_store_rejects_non_bands(spark, sf_dir, tmp_path):
-    from olympic_athletes_etl_spark.plans.dedup_q import lsh_postings_store
-    from olympic_athletes_etl_spark.plans.tables import load
-
-    with pytest.raises(ValueError, match="missing contract columns"):
-        lsh_postings_store(
-            load(spark, sf_dir, "documents"), str(tmp_path / "bad")
-        )
-
-
-def test_lsh_postings_load_rejects_foreign_parquet(spark, sf_dir, tmp_path):
-    from olympic_athletes_etl_spark.plans.dedup_q import lsh_postings_load
-    from olympic_athletes_etl_spark.plans.tables import load
-
-    path = str(tmp_path / "not_postings")
-    load(spark, sf_dir, "documents").select("doc_id").write.parquet(path)
-    with pytest.raises(ValueError, match="no _STORE manifest"):
-        lsh_postings_load(spark, path)
 
 
 # --------------------------------------------------------------------------

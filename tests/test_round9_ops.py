@@ -1,6 +1,6 @@
-"""Round-9 operators: store compaction for the two append-path indexes
-(lsh_postings_compact / ivfpq_index_compact — probe/serve-invariant,
-small-file count actually reduced), the driver-local BPE merge loop +
+"""Round-9 operators: store compaction for the IVFPQ append-path index
+(ivfpq_index_compact — serve-invariant, small-file count actually
+reduced; the LSH postings twin is in test_dedup), the driver-local BPE merge loop +
 mapInPandas encoder (production merge counts without per-merge Spark
 jobs), the fixed-merge-list encode query, and the IVFPQ quantization-
 error drift diagnostic for the frozen-quantizer append path.
@@ -53,52 +53,6 @@ def _parquet_files_by_dir(path: str) -> dict[str, int]:
 # --------------------------------------------------------------------------
 # Store compaction — append-path maintenance
 # --------------------------------------------------------------------------
-def test_lsh_postings_compact_is_probe_invariant(spark, sf_dir, tmp_path):
-    """store + 2 appends → >1 file per band; compact → exactly 1 file
-    per band and the probe result is unchanged (content-invariant
-    rewrite)."""
-    from olympic_athletes_etl_spark.plans.dedup_q import (
-        _doc_shingle_hashes,
-        _minhash_bands,
-        lsh_postings_append,
-        lsh_postings_compact,
-        lsh_postings_load,
-        lsh_postings_store,
-        lsh_probe,
-    )
-
-    bands = _minhash_bands(_doc_shingle_hashes(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
-    path = str(tmp_path / "postings")
-    lsh_postings_store(bands.filter(F.col("doc_id") < 300), path)
-    lsh_postings_append(
-        bands.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 350)), path
-    )
-    lsh_postings_append(
-        bands.filter((F.col("doc_id") >= 350) & (F.col("doc_id") < 400)), path
-    )
-    probe_batch = bands.filter(F.col("doc_id") >= 400)
-    pre = {
-        (r["doc_new"], r["doc_old"])
-        for r in lsh_probe(probe_batch, lsh_postings_load(spark, path)).collect()
-    }
-    before = _parquet_files_by_dir(path)
-    assert any(n > 1 for n in before.values()), before  # appends fragmented
-
-    lsh_postings_compact(spark, path)
-
-    after = _parquet_files_by_dir(path)
-    assert set(after) == set(before)  # no partition lost
-    assert all(n == 1 for n in after.values()), after
-    post = {
-        (r["doc_new"], r["doc_old"])
-        for r in lsh_probe(probe_batch, lsh_postings_load(spark, path)).collect()
-    }
-    assert post == pre
-    assert len(post) > 0
-
-
 def test_ivfpq_index_compact_serves_identically(spark, sf_dir, tmp_path):
     """store + append (frozen quantizers) → fragmented lists; compact →
     one file per list partition, stored serve unchanged, and the loaded

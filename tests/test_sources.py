@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from olympic_athletes_etl_spark.sources import (
     checkpoint_append,
     compacted_write,
@@ -117,6 +119,7 @@ def test_resume_remaining_propagates_real_read_errors(spark, tmp_path):
         resume_remaining(spark, all_ids, str(bad / "*.parquet"), "k").count()
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_resume_remaining_missing_dir_returns_everything(spark, tmp_path):
     all_ids = spark.range(5).withColumnRenamed("id", "k")
     got = resume_remaining(
