@@ -43,13 +43,15 @@ orphaned half-written directory.  ``tests/test_store.py`` kills the
 rewrite mid-flight and proves the store still serves the pre-compaction
 answer.
 
-Scale notes (100 TB): the manifest is O(bytes) and written driver-side
-once per maintenance pass; generations add one directory level, which
-changes no partition pruning (partition directories live INSIDE the
-generation, so literal PartitionFilters are untouched).  The transient 2×
-disk during a compaction is the standard cost of any copy-on-write
-rewrite (Delta OPTIMIZE, Iceberg rewrite_data_files); it buys crash
-safety and lets readers proceed against the old generation throughout.
+Scale notes (100 TB): the manifest is O(bytes), written driver-side once
+per maintenance pass; generations add one directory level, inside which
+partition directories and literal PartitionFilters are unchanged.  A
+compaction's transient 2× disk is the standard cost of any copy-on-write
+rewrite (Delta OPTIMIZE, Iceberg rewrite_data_files) and buys crash
+safety: readers proceed against the old generation throughout.  A write
+pays per file and per directory it creates: a forked ``chmod`` each on a
+local FS without Hadoop's native library, a PUT or LIST each on an
+object store.  So a partition key must leave many rows per directory.
 
 WRITER MUTUAL EXCLUSION (round 11): writes are serialized by a ``_LOCK``
 file taken with O_EXCL — the portable translation is the same as the
@@ -117,8 +119,7 @@ class TableSpec:
                       None = free-form (dense-id stores carry caller
                       schemas).
     ``partition_by``  physical partition key — the directory layout serve
-                      paths prune on (band / list_id / month / day /
-                      tbucket).
+                      paths prune on (band / list_id / month / tbucket).
     ``merge``         compaction fold for mergeable state (sum the
                       (count,sum) semigroup, max HLL registers). None =
                       refile-only compaction: rows are untouched and just

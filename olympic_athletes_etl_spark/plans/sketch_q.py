@@ -878,13 +878,13 @@ def v_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Stored HLL rollup — mergeable-sketch partials per day (store → append →
-# compact → serve), the approximate-distinct counterpart of the exact
-# rollup store (plans/relational.py:rollup_store): registers merge by
-# MAX, so per-batch sketch partials fold in without raw-id rescans, and
-# a day-RANGE estimate merges registers ACROSS days — the "HLL sketch
-# per day, merged over the window" alternative e_weekly_active_users'
-# docstring names, here as its deployed, driver-gated form.
+# Stored HLL rollup — mergeable-sketch partials per day, the approximate-
+# distinct counterpart of the exact rollup store (plans/relational.py:
+# rollup_store), stored BY MONTH like it: a day's ≤64 register rows are
+# too few to pay a directory and a file each (operators/store.py scale
+# notes). Registers merge by MAX, so batches fold in without raw-id
+# rescans, and a day-RANGE estimate merges registers ACROSS days — the
+# alternative e_weekly_active_users' docstring names, driver-gated.
 # --------------------------------------------------------------------------
 from olympic_athletes_etl_spark.operators.sketches import (  # noqa: E402
     _HLL_ALPHA_DEN,
@@ -894,6 +894,11 @@ from olympic_athletes_etl_spark.operators.sketches import (  # noqa: E402
 )
 
 _HLL_RANGE_LO, _HLL_RANGE_HI = "2024-01-10", "2024-01-16"  # 7-day WAU window
+_HLL_KEY = ("month", "day", "b")  # month is the partition directory
+
+
+def _hll_merge(regs: DataFrame) -> DataFrame:
+    return regs.groupBy(*_HLL_KEY).agg(F.max("reg").cast("long").alias("reg"))
 
 
 def hll_rollup_partials(events: DataFrame) -> DataFrame:
@@ -904,29 +909,23 @@ def hll_rollup_partials(events: DataFrame) -> DataFrame:
     algebra, unlike the (count, sum) rollup where replayed batches
     double; that robustness is why sketches are the distinct-count
     store at 100 TB). At most 64 rows per day per batch."""
-    return (
+    return _hll_merge(
         events.select(
+            F.date_format("ts", "yyyy-MM").alias("month"),
             F.col("ts").cast("date").cast("string").alias("day"),
             F.expr(hll_bucket_sql("user_id")).alias("b"),
-            F.expr(hll_rho_sql("user_id")).alias("rho"),
+            F.expr(hll_rho_sql("user_id")).alias("reg"),
         )
-        .groupBy("day", "b")
-        .agg(F.max("rho").cast("long").alias("reg"))
     )
 
 
-def _hll_merge(regs: DataFrame) -> DataFrame:
-    return regs.groupBy("day", "b").agg(F.max("reg").cast("long").alias("reg"))
-
-
-HLL_ROLLUP = Rollup(hll_rollup_partials, _hll_merge, ("day", "b", "reg"), "day")
+HLL_ROLLUP = Rollup(hll_rollup_partials, _hll_merge, (*_HLL_KEY, "reg"), "month")
 
 
 def hll_rollup_store(partials: DataFrame, path: str) -> None:
-    """Persist sketch partials partitioned BY day — a serve for any day
-    range prunes to the window's directories, each holding ≤64-row
-    register sets per batch. Generation-versioned (operators/store.py):
-    re-storing over an existing path is an atomic snapshot replace."""
+    """Persist sketch partials partitioned BY month (day is a stored
+    column): a batch adds one file set per month. Generation-versioned
+    (operators/store.py): re-storing is an atomic snapshot replace."""
     HLL_ROLLUP.create(partials, path)
 
 
@@ -937,18 +936,14 @@ def hll_rollup_append(partials: DataFrame, path: str) -> None:
 
 
 def hll_rollup_load(spark: SparkSession, path: str) -> DataFrame:
-    # the day partition directory may be re-inferred as DATE; the
-    # estimator groups and labels on the string form
-    return HLL_ROLLUP.load(spark, path).withColumn(
-        "day", F.col("day").cast("string")
-    )
+    # an old day-partitioned store has no month column: ValueError
+    return HLL_ROLLUP.load(spark, path)
 
 
 def hll_rollup_compact(spark: SparkSession, path: str) -> None:
     """Fold per-batch register rows to ONE row per (day, register) by
-    MAX — the sketch-merge maintenance pass (generation-swap rewrite
-    with an atomic manifest commit, operators/store.py; merging is max,
-    not sum). Register-max is idempotent, so re-appending an
+    MAX, one file per month directory — a generation-swap rewrite
+    (operators/store.py). Register-max is idempotent, so re-appending an
     already-folded batch cannot change any served estimate."""
     HLL_ROLLUP.compact(spark, path)
 
@@ -990,9 +985,11 @@ def hll_rollup_serve_range(
     """Distinct users over a day RANGE from the stored daily sketches —
     the query exact rollups cannot answer without re-scanning raw ids
     (distinct doesn't sum across days; registers MERGE by max). The
-    day BETWEEN lands on the partition directories, so a 7-day WAU
-    reads 7 × ≤64-row register sets."""
-    regs = hll_rollup_load(spark, path).filter(F.col("day").between(lo, hi))
+    month BETWEEN prunes to the window's directories and the day
+    BETWEEN is pushed down to parquet: a 7-day WAU keeps 7 × ≤64 rows."""
+    regs = hll_rollup_load(spark, path).filter(
+        F.col("month").between(lo[:7], hi[:7]) & F.col("day").between(lo, hi)
+    )
     return _hll_estimate_from_regs(regs, [])
 
 
@@ -1028,7 +1025,7 @@ _HLL_EST_DUCK_T = (
 def a_hll_rollup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SKETCH-rollup lifecycle end-to-end, driver-gated: daily HLL
     register partials from one half of the traffic stored
-    (hll_rollup_store, partitioned by day), the other half's partials
+    (hll_rollup_store, partitioned by month), the other half's partials
     APPENDED (batches split by user parity, so every day appears in
     BOTH batches and the serve MUST merge registers across batches to
     be right), the store COMPACTED to one row per (day, register) by
@@ -1037,11 +1034,11 @@ def a_hll_rollup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact raw-HLL estimate, so the hash proves
     partial → store → append → compact → merge-serve loses nothing.
 
-    This is the distinct-count store at 100 TB: per day per batch the
-    write is ≤64 small integers, the serve never touches raw ids, and
-    because max is idempotent a replayed batch cannot double-count —
-    the robustness the exact (count, sum) rollup lacks. Per-call temp
-    dir for re-entrancy."""
+    This is the distinct-count store at 100 TB: per month per batch the
+    write is one file of ≤64 small integers a day, the serve never
+    touches raw ids, and because max is idempotent a replayed batch
+    cannot double-count — the robustness the exact (count, sum) rollup
+    lacks. Per-call temp dir for re-entrancy."""
     import os
     import tempfile
 
@@ -1080,9 +1077,8 @@ def a_hll_rollup_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     names this sketch store as the approximate alternative — this
     registers that alternative, driver-gated). Serves from the
     UNCOMPACTED two-batch store, so the hash also proves range-serve
-    correctness is compaction-cadence-independent; the day BETWEEN
-    prunes to the window's 7 partition directories (pinned in
-    test_round9_ops). Oracle recomputes the same integer-exact raw-HLL
+    correctness is compaction-cadence-independent (pruning pinned in
+    test_sketch_q). Oracle recomputes the same integer-exact raw-HLL
     estimate from raw events restricted to the window."""
     import os
     import tempfile

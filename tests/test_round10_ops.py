@@ -1,7 +1,6 @@
 """Round-10 edge-case pins: empty-input behavior of the stored-index
 partials (flagged in round-9 advice) — an empty ingest batch must store
-clean integer zeros, and an empty serve window must serve an empty
-frame, not a NULL estimate.
+clean integer zeros (the HLL empty-window serve pin is in test_sketch_q).
 """
 
 from __future__ import annotations
@@ -19,31 +18,6 @@ def test_bm25_empty_batch_stats_store_integer_zeros(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     row = bm25_index_build(empty)["stats"].collect()[0]
     assert (row["n_docs"], row["sum_dl"]) == (0, 0)
-
-
-def test_hll_rollup_serve_range_empty_window_is_empty(spark, sf_dir, tmp_path):
-    """A day range with no stored partials serves an EMPTY frame — the
-    previous behavior was one row with est_distinct = NULL (global agg
-    over empty input)."""
-    from olympic_athletes_etl_spark.plans.sketch_q import (
-        hll_rollup_partials,
-        hll_rollup_serve_range,
-        hll_rollup_store,
-    )
-    from olympic_athletes_etl_spark.plans.tables import load
-
-    events = load(spark, sf_dir, "events").select("ts", "user_id")
-    path = str(tmp_path / "regs")
-    hll_rollup_store(hll_rollup_partials(events), path)
-    # a window far outside the data's day span
-    got = hll_rollup_serve_range(spark, path, "1990-01-01", "1990-01-07")
-    assert got.count() == 0
-    # and a real window still serves a positive estimate
-    some_day = events.select(
-        F.col("ts").cast("date").cast("string").alias("d")
-    ).first()["d"]
-    est = hll_rollup_serve_range(spark, path, some_day, some_day).collect()
-    assert len(est) == 1 and est[0]["est_distinct"] > 0
 
 
 def test_qhist_rollup_compact_is_serve_invariant(spark, sf_dir, tmp_path):

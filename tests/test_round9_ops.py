@@ -642,128 +642,6 @@ class TestBM25Store:
 
 
 # --------------------------------------------------------------------------
-# Stored HLL rollup — mergeable-sketch partials (store/append/compact/serve)
-# --------------------------------------------------------------------------
-class TestHLLRollup:
-    def _store(self, spark, sf_dir, tmp_path, batches):
-        from olympic_athletes_etl_spark.plans.sketch_q import (
-            hll_rollup_append,
-            hll_rollup_partials,
-            hll_rollup_store,
-        )
-        from olympic_athletes_etl_spark.plans.tables import load
-
-        events = load(spark, sf_dir, "events")
-        path = str(tmp_path / "regs")
-        first, *rest = batches
-        hll_rollup_store(hll_rollup_partials(first(events)), path)
-        for b in rest:
-            hll_rollup_append(hll_rollup_partials(b(events)), path)
-        return path, events
-
-    def test_batched_store_equals_one_shot(self, spark, sf_dir, tmp_path):
-        """Register merge across batches: user-parity batches put every
-        day in both files, so correct serving REQUIRES the max-merge."""
-        from olympic_athletes_etl_spark.plans.sketch_q import hll_rollup_serve
-
-        path, _ = self._store(
-            spark,
-            sf_dir,
-            tmp_path / "a",
-            [
-                lambda e: e.filter(F.col("user_id") % 2 == 0),
-                lambda e: e.filter(F.col("user_id") % 2 == 1),
-            ],
-        )
-        one, _ = self._store(spark, sf_dir, tmp_path / "b", [lambda e: e])
-        got = sorted(tuple(r) for r in hll_rollup_serve(spark, path).collect())
-        want = sorted(tuple(r) for r in hll_rollup_serve(spark, one).collect())
-        assert got == want and len(got) > 0
-
-    def test_replayed_batch_cannot_double_count(self, spark, sf_dir, tmp_path):
-        """max is idempotent: appending the SAME partials twice leaves
-        every estimate unchanged — the robustness the exact (count, sum)
-        rollup lacks (its double-append test shows the doubling)."""
-        from olympic_athletes_etl_spark.plans.sketch_q import hll_rollup_serve
-
-        odd = lambda e: e.filter(F.col("user_id") % 2 == 1)  # noqa: E731
-        once, _ = self._store(spark, sf_dir, tmp_path / "once", [odd])
-        twice, _ = self._store(spark, sf_dir, tmp_path / "twice", [odd, odd])
-        assert sorted(
-            tuple(r) for r in hll_rollup_serve(spark, once).collect()
-        ) == sorted(tuple(r) for r in hll_rollup_serve(spark, twice).collect())
-
-    def test_compact_is_serve_invariant(self, spark, sf_dir, tmp_path):
-        from olympic_athletes_etl_spark.plans.sketch_q import (
-            hll_rollup_compact,
-            hll_rollup_load,
-            hll_rollup_serve,
-        )
-
-        path, _ = self._store(
-            spark,
-            sf_dir,
-            tmp_path,
-            [
-                lambda e: e.filter(F.col("user_id") % 2 == 0),
-                lambda e: e.filter(F.col("user_id") % 2 == 1),
-            ],
-        )
-        before = sorted(tuple(r) for r in hll_rollup_serve(spark, path).collect())
-        hll_rollup_compact(spark, path)
-        after = sorted(tuple(r) for r in hll_rollup_serve(spark, path).collect())
-        assert before == after
-        per_key = (
-            hll_rollup_load(spark, path).groupBy("day", "b").count().collect()
-        )
-        assert all(r["count"] == 1 for r in per_key)
-        files = _parquet_files_by_dir(path)
-        assert files and all(n == 1 for n in files.values()), files
-
-    def test_range_serve_prunes_and_matches_raw(self, spark, sf_dir, tmp_path):
-        from olympic_athletes_etl_spark.operators.sketches import (
-            hll_cardinality,
-        )
-        from olympic_athletes_etl_spark.plans.sketch_q import (
-            _HLL_RANGE_HI,
-            _HLL_RANGE_LO,
-            hll_rollup_serve_range,
-        )
-
-        path, events = self._store(spark, sf_dir, tmp_path, [lambda e: e])
-        df = hll_rollup_serve_range(spark, path, _HLL_RANGE_LO, _HLL_RANGE_HI)
-        txt = df._jdf.queryExecution().executedPlan().toString()
-        # the day directory key may be re-inferred as DATE, so the
-        # pushed bounds appear as cast(day as string) >= / <= literals
-        assert re.search(
-            r"PartitionFilters: \[.*day#\d+[^\]]*>= 2024-01-10", txt
-        ), txt[:2000]
-        want = hll_cardinality(
-            events.filter(
-                F.col("ts")
-                .cast("date")
-                .cast("string")
-                .between(_HLL_RANGE_LO, _HLL_RANGE_HI)
-            ),
-            "user_id",
-        ).collect()[0]["est_distinct"]
-        assert df.collect()[0]["est_distinct"] == want
-
-    def test_store_rejects_wrong_frame(self, spark, tmp_path):
-        from olympic_athletes_etl_spark.plans.sketch_q import (
-            hll_rollup_append,
-            hll_rollup_store,
-        )
-
-        bad = spark.createDataFrame([("x", 1)], "day string, b long")
-        path = tmp_path / "nope"
-        for write in (hll_rollup_store, hll_rollup_append):
-            with pytest.raises(ValueError, match="reg"):
-                write(bad, str(path))
-            assert not path.exists()
-
-
-# --------------------------------------------------------------------------
 # Dense-id store — the identity-column lifecycle (assign/store/append/serve)
 # --------------------------------------------------------------------------
 class TestDenseIdStore:

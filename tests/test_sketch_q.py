@@ -3,14 +3,20 @@
 mirrored the bug could not catch: estimator-theory bounds (CMS never
 underestimates, Bloom never misses), conservation against the raw
 tables, and the z-order locality envelope the layout exists to provide.
+The stored HLL rollup's lifecycle (store/append/compact/serve) and its
+month-partitioned layout are pinned at the end.
 """
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.plans import queries
 from olympic_athletes_etl_spark.plans.tables import load
+from tests.test_round9_ops import _parquet_files_by_dir
 
 
 def _q(name):
@@ -392,3 +398,199 @@ def test_join_size_estimate_overestimates_and_is_tight_enough(spark, sf_dir):
     ta = ev.filter(F.col("event_type") == "view").count()
     tb = ev.filter(F.col("event_type") == "click").count()
     assert r["est_rows"] <= r["exact_rows"] + (ta * tb) // _JS_W + 1
+
+
+# --------------------------------------------------------------------------
+# Stored HLL rollup — mergeable-sketch partials (store/append/compact/serve)
+# --------------------------------------------------------------------------
+class TestHLLRollup:
+    def _store(self, spark, sf_dir, tmp_path, batches):
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            hll_rollup_append,
+            hll_rollup_partials,
+            hll_rollup_store,
+        )
+        from olympic_athletes_etl_spark.plans.tables import load
+
+        events = load(spark, sf_dir, "events")
+        path = str(tmp_path / "regs")
+        first, *rest = batches
+        hll_rollup_store(hll_rollup_partials(first(events)), path)
+        for b in rest:
+            hll_rollup_append(hll_rollup_partials(b(events)), path)
+        return path, events
+
+    def test_batched_store_equals_one_shot(self, spark, sf_dir, tmp_path):
+        """Register merge across batches: user-parity batches put every
+        day in both files, so correct serving REQUIRES the max-merge."""
+        from olympic_athletes_etl_spark.plans.sketch_q import hll_rollup_serve
+
+        path, _ = self._store(
+            spark,
+            sf_dir,
+            tmp_path / "a",
+            [
+                lambda e: e.filter(F.col("user_id") % 2 == 0),
+                lambda e: e.filter(F.col("user_id") % 2 == 1),
+            ],
+        )
+        one, _ = self._store(spark, sf_dir, tmp_path / "b", [lambda e: e])
+        got = sorted(tuple(r) for r in hll_rollup_serve(spark, path).collect())
+        want = sorted(tuple(r) for r in hll_rollup_serve(spark, one).collect())
+        assert got == want and len(got) > 0
+
+    def test_replayed_batch_cannot_double_count(self, spark, sf_dir, tmp_path):
+        """max is idempotent: appending the SAME partials twice leaves
+        every estimate unchanged — the robustness the exact (count, sum)
+        rollup lacks (its double-append test shows the doubling)."""
+        from olympic_athletes_etl_spark.plans.sketch_q import hll_rollup_serve
+
+        odd = lambda e: e.filter(F.col("user_id") % 2 == 1)  # noqa: E731
+        once, _ = self._store(spark, sf_dir, tmp_path / "once", [odd])
+        twice, _ = self._store(spark, sf_dir, tmp_path / "twice", [odd, odd])
+        assert sorted(
+            tuple(r) for r in hll_rollup_serve(spark, once).collect()
+        ) == sorted(tuple(r) for r in hll_rollup_serve(spark, twice).collect())
+
+    def test_compact_is_serve_invariant(self, spark, sf_dir, tmp_path):
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            hll_rollup_compact,
+            hll_rollup_load,
+            hll_rollup_serve,
+        )
+
+        path, _ = self._store(
+            spark,
+            sf_dir,
+            tmp_path,
+            [
+                lambda e: e.filter(F.col("user_id") % 2 == 0),
+                lambda e: e.filter(F.col("user_id") % 2 == 1),
+            ],
+        )
+        before = sorted(tuple(r) for r in hll_rollup_serve(spark, path).collect())
+        hll_rollup_compact(spark, path)
+        after = sorted(tuple(r) for r in hll_rollup_serve(spark, path).collect())
+        assert before == after
+        per_key = (
+            hll_rollup_load(spark, path).groupBy("day", "b").count().collect()
+        )
+        assert all(r["count"] == 1 for r in per_key)
+        files = _parquet_files_by_dir(path)
+        assert files and all(n == 1 for n in files.values()), files
+
+    def test_range_serve_prunes_and_matches_raw(self, spark, sf_dir, tmp_path):
+        from olympic_athletes_etl_spark.operators.sketches import (
+            hll_cardinality,
+        )
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            _HLL_RANGE_HI,
+            _HLL_RANGE_LO,
+            hll_rollup_serve_range,
+        )
+
+        path, events = self._store(spark, sf_dir, tmp_path, [lambda e: e])
+        df = hll_rollup_serve_range(spark, path, _HLL_RANGE_LO, _HLL_RANGE_HI)
+        txt = df._jdf.queryExecution().executedPlan().toString()
+        # the month bounds prune partition directories; the day bounds
+        # are pushed down to the parquet reader
+        assert re.search(
+            r"PartitionFilters: \[.*month#\d+[^\]]*>= 2024-01[^\]]*<= 2024-01",
+            txt,
+        ), txt[:2000]
+        assert re.search(
+            r"PushedFilters: \[.*GreaterThanOrEqual\(day,2024-01-10\), "
+            r"LessThanOrEqual\(day,2024-01-16\)",
+            txt,
+        ), txt[:2000]
+        want = hll_cardinality(
+            events.filter(
+                F.col("ts")
+                .cast("date")
+                .cast("string")
+                .between(_HLL_RANGE_LO, _HLL_RANGE_HI)
+            ),
+            "user_id",
+        ).collect()[0]["est_distinct"]
+        assert df.collect()[0]["est_distinct"] == want
+
+    def test_store_writes_one_file_per_month(self, spark, sf_dir, tmp_path):
+        """A write pays per file and per directory it creates: the store
+        lands one partition directory per distinct month of events, one
+        parquet file each, and an append adds one file per month."""
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            hll_rollup_append,
+            hll_rollup_partials,
+        )
+
+        path, events = self._store(spark, sf_dir, tmp_path, [lambda e: e])
+        months = {
+            f"month={r['m']}"
+            for r in events.select(F.date_format("ts", "yyyy-MM").alias("m"))
+            .distinct()
+            .collect()
+        }
+        assert _parquet_files_by_dir(path) == dict.fromkeys(months, 1)
+        hll_rollup_append(hll_rollup_partials(events), path)
+        assert _parquet_files_by_dir(path) == dict.fromkeys(months, 2)
+
+    def test_load_rejects_day_partitioned_store(self, spark, tmp_path):
+        """A store written in the old day-partitioned layout has no month
+        column: loading it fails the contract loudly, never serves."""
+        from olympic_athletes_etl_spark.operators.store import (
+            GenStore,
+            TableSpec,
+        )
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            hll_rollup_load,
+            hll_rollup_serve,
+        )
+
+        old = spark.createDataFrame(
+            [("2024-01-10", 3, 2)], "day string, b long, reg long"
+        )
+        path = str(tmp_path / "old")
+        GenStore(path, [TableSpec("", ("day", "b", "reg"), ("day",))]).create(
+            {"": old}
+        )
+        for read in (hll_rollup_load, hll_rollup_serve):
+            with pytest.raises(ValueError, match="month"):
+                read(spark, path)
+
+    def test_store_rejects_wrong_frame(self, spark, tmp_path):
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            hll_rollup_append,
+            hll_rollup_store,
+        )
+
+        bad = spark.createDataFrame([("x", 1)], "day string, b long")
+        path = tmp_path / "nope"
+        for write in (hll_rollup_store, hll_rollup_append):
+            with pytest.raises(ValueError, match="reg"):
+                write(bad, str(path))
+            assert not path.exists()
+
+
+def test_hll_rollup_serve_range_empty_window_is_empty(spark, sf_dir, tmp_path):
+    """A day range with no stored partials serves an EMPTY frame — the
+    previous behavior was one row with est_distinct = NULL (global agg
+    over empty input)."""
+    from olympic_athletes_etl_spark.plans.sketch_q import (
+        hll_rollup_partials,
+        hll_rollup_serve_range,
+        hll_rollup_store,
+    )
+    from olympic_athletes_etl_spark.plans.tables import load
+
+    events = load(spark, sf_dir, "events").select("ts", "user_id")
+    path = str(tmp_path / "regs")
+    hll_rollup_store(hll_rollup_partials(events), path)
+    # a window far outside the data's day span
+    got = hll_rollup_serve_range(spark, path, "1990-01-01", "1990-01-07")
+    assert got.count() == 0
+    # and a real window still serves a positive estimate
+    some_day = events.select(
+        F.col("ts").cast("date").cast("string").alias("d")
+    ).first()["d"]
+    est = hll_rollup_serve_range(spark, path, some_day, some_day).collect()
+    assert len(est) == 1 and est[0]["est_distinct"] > 0
