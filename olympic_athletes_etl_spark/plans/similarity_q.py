@@ -1,14 +1,31 @@
-"""Similarity search over the ``embeddings`` table.
+"""Similarity search over the ``embeddings`` table: 25 queries.
 
-- s_knn_bruteforce — exact cosine top-k: the correctness baseline.
-- s_ann_lsh        — random-hyperplane LSH buckets, search only the
-                     query's bucket: the scale path (candidates shrink
-                     by ~2^planes; recall tunable via plane count /
-                     multi-probe).
+Families:
 
-Determinism: hyperplane weights are integer-arithmetic pseudo-randoms
-(no RNG, no floats until the final dot product), so Spark and DuckDB
-compute bit-identical bucket ids and similarities.
+- exact search — s_knn_bruteforce (one probe), s_knn_batch (a probe
+  set), s_retrieval_eval and s_graph_recall (quality yardsticks);
+- random-hyperplane LSH — s_ann_lsh, s_ann_lsh_multiprobe, the kNN
+  graphs s_knn_graph, s_knn_graph_multiprobe, s_knn_graph_incr and
+  s_knn_graph_stored, and the s_bucket_stats diagnostic;
+- IVF over centroids — s_ann_ivf (fixed centroids), s_ann_ivf_kmeans
+  and s_ann_ivf_sampled (one Lloyd fit, _lloyd_fit), s_kmeans_clusters,
+  s_knn_graph_ivf and the s_list_stats diagnostic;
+- product quantization — s_ann_pq, s_ann_ivfpq, the stored index
+  s_ann_ivfpq_stored / s_ann_ivfpq_compacted and s_ivfpq_drift;
+- profiles and hybrid retrieval — s_dim_profile, s_centroid_outliers,
+  s_hybrid_search.
+
+Every serving step has one implementation: _probe collects the fixed
+probe; _top_k is the single-probe top-K tail, _adc_top_k the PQ
+shortlist-and-re-rank tail in front of it; _topk_raw is the per-source
+rank every graph build and exact per-probe leg shares, and _graph_out
+the graph builds' output tail. The IVF graph is the LSH graph build
+with list ids in its ``bucket`` column.
+
+Determinism: hyperplane weights are integer-arithmetic pseudo-randoms,
+centroids are integer sums, and every ranking runs on a raw double
+that both engines compute with the same IEEE operations, so Spark and
+DuckDB agree bit for bit on buckets, lists, codes and similarities.
 """
 
 from __future__ import annotations
@@ -67,6 +84,50 @@ _DOT = (
 )
 
 
+def _emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, nrm): the double vectors with their norms."""
+    return _emb_double(spark, sf_dir).withColumn(
+        "nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v")))
+    )
+
+
+def _vs_probe(rows: DataFrame, src: DataFrame, nrm: str = "nrm") -> DataFrame:
+    """(vec_id, cos_raw) of every row of ``rows`` but the probe, scored
+    against the probe's (v, ``nrm``) read from ``src``: a broadcast of
+    the 1-row probe (BroadcastNestedLoopJoin, map-side only)."""
+    probe = src.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
+        F.col("v").alias("pv"), F.col(nrm).alias("pnrm")
+    )
+    cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col(nrm) * F.col("pnrm"))
+    return (
+        rows.filter(F.col("vec_id") != _QUERY_VEC_ID)
+        .crossJoin(F.broadcast(probe))
+        .select("vec_id", cos.alias("cos_raw"))
+    )
+
+
+def _top_k(cand: DataFrame) -> DataFrame:
+    """(vec_id, cos_sim, rank) — the ``_K`` best of ``cand``'s (vec_id,
+    cos_raw) rows for the one fixed probe, ranked by (cos_raw DESC,
+    vec_id ASC): the serving tail every single-probe search shares.
+    Ranking runs on the raw double (bit-identical across engines);
+    rounding happens only in the output.
+
+    orderBy+limit compiles to TakeOrderedAndProject (per-partition
+    top-k, then a k-way merge) — never a global-window single-partition
+    sort. The rank window that follows is unpartitioned over exactly K
+    rows (post-limit). Spark still logs its "No Partition Defined"
+    warning — accepted: the input is K rows by construction, so the
+    single partition is the correct plan, not a scale hazard.
+    (partitionBy(lit(1)) does NOT silence it — the optimizer
+    constant-folds the literal back to an empty partition spec.)"""
+    topk = cand.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
+    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
+    return topk.withColumn("rank", F.row_number().over(w)).select(
+        "vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank"
+    )
+
+
 # --------------------------------------------------------------------------
 # Brute-force exact top-k
 # --------------------------------------------------------------------------
@@ -95,32 +156,8 @@ def s_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     final top-k, which TakeOrderedAndProject handles without a global
     sort). Rank ties break on vec_id; ranking runs on the raw double
     (bit-identical across engines), rounding only in the output."""
-    n = _emb_double(spark, sf_dir).withColumn(
-        "nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v")))
-    )
-    q = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
-    )
-    cos = F.expr(_DOT.format(a="v", b="qv")) / (F.col("nrm") * F.col("qnrm"))
-    scored = (
-        n.filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", cos.alias("cos_raw"))
-    )
-    # orderBy+limit compiles to TakeOrderedAndProject (per-partition
-    # top-k, then k-way merge on the driver) — never a global-window
-    # single-partition sort; the rank window then sees only K rows.
-    topk = scored.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit). Spark still
-    # logs its "No Partition Defined" warning — accepted: the input is K
-    # rows by construction, so the single partition is the correct plan,
-    # not a scale hazard. (partitionBy(lit(1)) does NOT silence it — the
-    # optimizer constant-folds the literal back to an empty partition spec.)
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    n = _emb_norm(spark, sf_dir)
+    return _top_k(_vs_probe(n, n))
 
 
 # --------------------------------------------------------------------------
@@ -134,6 +171,21 @@ def _bucket_expr_spark(n_planes: int = _N_PLANES) -> F.Column:
         dot = _DOT.format(a="v", b=plane)
         bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
     return F.expr(" + ".join(bits))
+
+
+def _bucketed(emb: DataFrame, n_planes: int) -> DataFrame:
+    """(vec_id, v, nrm, bucket) of ``emb``'s (vec_id, v) rows. The
+    ``bucket`` column carries its plane count as field metadata, which
+    survives checkpoints, filters and selects, so _check_bucketed can
+    verify a graph build's ``bucketed=`` frame without a job."""
+    return emb.select(
+        "vec_id",
+        "v",
+        F.sqrt(F.expr(_DOT.format(a="v", b="v"))).alias("nrm"),
+        _bucket_expr_spark(n_planes).alias(
+            "bucket", metadata={"n_planes": n_planes}
+        ),
+    )
 
 
 def _bucket_sql_duck(n_planes: int = _N_PLANES) -> str:
@@ -179,12 +231,7 @@ def s_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pruned scan, ~2^8 smaller than brute force. Recall < 1 by design
     (LSH); raise plane count / probe neighboring buckets to trade
     compute for recall."""
-    b = _emb_double(spark, sf_dir).select(
-        "vec_id",
-        "v",
-        F.sqrt(F.expr(_DOT.format(a="v", b="v"))).alias("nrm"),
-        _bucket_expr_spark().alias("bucket"),
-    )
+    b = _bucketed(_emb_double(spark, sf_dir), _N_PLANES)
     q = b.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
         F.col("v").alias("qv"), F.col("nrm").alias("qnrm"), F.col("bucket").alias("qbucket")
     )
@@ -194,15 +241,7 @@ def s_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != _QUERY_VEC_ID)
         .select("vec_id", cos.alias("cos_raw"))
     )
-    # distributed top-k (TakeOrderedAndProject), then rank K rows only
-    topk = cand.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit); the logged
-    # "No Partition Defined" warning is accepted — see s_knn_bruteforce.
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    return _top_k(cand)
 
 
 # --------------------------------------------------------------------------
@@ -258,9 +297,7 @@ def s_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned BY list_id and the probe's scan prunes to nprobe
     partitions — the classic IVF speedup, expressed as partition pruning.
     Recall grows with nprobe at linear candidate cost."""
-    n = _emb_double(spark, sf_dir).withColumn(
-        "nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v")))
-    )
+    n = _emb_norm(spark, sf_dir)
     # collect the 16 centroids once (bounded dim); the probe vector
     # (vec_id 0) is one of them, so its lists need no further job
     cents = sorted(
@@ -271,24 +308,7 @@ def s_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe_lists = _km_probe_lists(dict(cents)[_QUERY_VEC_ID], cents, _N_PROBE)
     assigned = n.withColumn("list_id", _km_assign_np_col(cents, "v", "nrm"))
-    probe = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
-    )
-    cos = F.expr(_DOT.format(a="v", b="qv")) / (F.col("nrm") * F.col("qnrm"))
-    cand = (
-        assigned.filter(F.col("list_id").isin(probe_lists))
-        .filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(F.broadcast(probe))
-        .select("vec_id", cos.alias("cos_raw"))
-    )
-    topk = cand.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit); the logged
-    # "No Partition Defined" warning is accepted — see s_knn_bruteforce.
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    return _top_k(_vs_probe(assigned.filter(F.col("list_id").isin(probe_lists)), n))
 
 
 # --------------------------------------------------------------------------
@@ -976,10 +996,22 @@ def s_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _km_ann_search(n, _km_fit_for(spark, sf_dir))
 
 
-def _probe_q(n: DataFrame) -> list[int]:
-    """The query vector's quantized components (one collected row)."""
-    row = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select("vq").collect()[0]
-    return [int(x) for x in row["vq"]]
+def _probe(n: DataFrame) -> tuple[list[int], list[float], float]:
+    """The fixed probe's ``(vq, v, vnrm)`` from a _km_base frame in one
+    collected row: its integer quantized components (probe lists, ADC
+    tables), its raw components and its engine-computed norm (the exact
+    re-rank ships both as literals, bit-identical to the column values
+    they stand for)."""
+    row = (
+        n.filter(F.col("vec_id") == _QUERY_VEC_ID)
+        .select("vq", "v", "vnrm")
+        .collect()[0]
+    )
+    return (
+        [int(x) for x in row["vq"]],
+        [float(x) for x in row["v"]],
+        float(row["vnrm"]),
+    )
 
 
 def _km_ann_search(
@@ -991,26 +1023,10 @@ def _km_ann_search(
     search the gated query runs. Train and serve are separate phases by
     design: at scale the fit happens once per index build while this
     search runs per query (bench.py times them separately)."""
-    probe_q = _probe_q(n)
-    probe_lists = _km_probe_lists(probe_q, cents, _N_PROBE)
+    probe_lists = _km_probe_lists(_probe(n)[0], cents, _N_PROBE)
     assigned = n.withColumn("list_id", _km_assign_np_col(cents))
-    probe = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("pv"), F.col("vnrm").alias("pnrm")
-    )
-    cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col("vnrm") * F.col("pnrm"))
-    cand = (
-        assigned.filter(F.col("list_id").isin(probe_lists))
-        .filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(F.broadcast(probe))
-        .select("vec_id", cos.alias("cos_raw"))
-    )
-    topk = cand.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit); the logged
-    # "No Partition Defined" warning is accepted — see s_knn_bruteforce.
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
+    return _top_k(
+        _vs_probe(assigned.filter(F.col("list_id").isin(probe_lists)), n, "vnrm")
     )
 
 
@@ -1127,37 +1143,16 @@ def s_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     9-row probe-bucket set broadcasts into a semi-join against the bucket
     column, so the scan stays pruned/parallel and no shuffle is added;
     only the candidate count grows (~9×)."""
-    b = _emb_double(spark, sf_dir).select(
-        "vec_id",
-        "v",
-        F.sqrt(F.expr(_DOT.format(a="v", b="v"))).alias("nrm"),
-        _bucket_expr_spark().alias("bucket"),
-    )
-    q = b.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    probes = q.select(
+    b = _bucketed(_emb_double(spark, sf_dir), _N_PLANES)
+    probes = b.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
         F.explode(
-            F.array(*[F.col("qbucket").bitwiseXOR(F.lit(m)) for m in _MP_MASKS])
+            F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in _MP_MASKS])
         ).alias("pb")
     )
-    cos = F.expr(_DOT.format(a="v", b="qv")) / (F.col("nrm") * F.col("qnrm"))
-    cand = (
-        b.join(F.broadcast(probes), F.col("bucket") == F.col("pb"), "left_semi")
-        .filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", cos.alias("cos_raw"))
+    cand = b.join(
+        F.broadcast(probes), F.col("bucket") == F.col("pb"), "left_semi"
     )
-    topk = cand.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit); the logged
-    # "No Partition Defined" warning is accepted — see s_knn_bruteforce.
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    return _top_k(_vs_probe(cand, b))
 
 
 # --------------------------------------------------------------------------
@@ -1254,14 +1249,9 @@ def _pq_train_ctes(base: str) -> str:
     return "".join(parts)
 
 
-_PQ_ADC_JOINS = " ".join(f"JOIN part{j} USING (vec_id)" for j in range(1, _PQ_M))
-_PQ_ADC_NUMS = " + ".join(f"part{j}.num" for j in range(_PQ_M))
-_PQ_ADC_CN2S = " + ".join(f"part{j}.cn2" for j in range(_PQ_M))
-
-
-def _pq_oracle() -> str:
-    """Unrolled per-subspace training + ADC + exact re-rank as CTEs."""
-    header = f"""
+# The corpus with its quantized vectors (nq2) — the head of every PQ
+# oracle that trains codebooks on their own.
+_NQ2 = f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), nq2 AS (
@@ -1272,8 +1262,15 @@ def _pq_oracle() -> str:
                list_transform(v, x -> CAST(floor(x * {_KM_SCALE}) AS DOUBLE)))) AS qnrm
       FROM e
     )"""
+_PQ_ADC_JOINS = " ".join(f"JOIN part{j} USING (vec_id)" for j in range(1, _PQ_M))
+_PQ_ADC_NUMS = " + ".join(f"part{j}.num" for j in range(_PQ_M))
+_PQ_ADC_CN2S = " + ".join(f"part{j}.cn2" for j in range(_PQ_M))
+
+
+def _pq_oracle() -> str:
+    """Unrolled per-subspace training + ADC + exact re-rank as CTEs."""
     return (
-        header
+        _NQ2
         + _pq_train_ctes("nq2")
         + f""", pn AS (
       SELECT qnrm AS pqnrm, v AS pv, vnrm AS pnrm FROM nq2
@@ -1366,11 +1363,22 @@ def _pq_ann_search(
     (_pq_fit(train_mod=...)) is recall-tested through the exact search
     the gated query runs, and bench.py times the one-per-build fit
     separately from the per-query search."""
-    probe_q = _probe_q(n)
+    return _adc_top_k(_with_np_codes(n, books), books, _probe(n))
 
+
+def _adc_top_k(
+    rows: DataFrame,
+    books: dict[int, list[tuple[int, list[int]]]],
+    probe: tuple[list[int], list[float], float],
+) -> DataFrame:
+    """The PQ serving tail every ADC search shares: score ``rows``
+    (vec_id, v, vnrm, code0..code{M-1}) from the probe's ADC lookup
+    maps, shortlist _PQ_SHORTLIST by approximate cosine
+    (TakeOrderedAndProject), then re-rank the shortlist exactly against
+    its raw vectors with the probe (a _probe triple) shipped as
+    literals — no join, so the corpus is scanned once."""
+    probe_q, probe_v, probe_nrm = probe
     num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
-    scored = _with_np_codes(n, books)
-
     # ADC cosine denominator: PROBE's quantized norm (a constant — exact
     # Python int arithmetic under the sqrt) × the reconstructed-candidate
     # norm. Dividing by the CANDIDATE's own qnrm here instead was a bug:
@@ -1380,25 +1388,17 @@ def _pq_ann_search(
     probe_qnrm = float(sum(x * x for x in probe_q)) ** 0.5
     adc = num_expr / (F.lit(probe_qnrm) * F.sqrt(cn2_expr))
     shortlist = (
-        scored.filter(F.col("vec_id") != _QUERY_VEC_ID)
+        rows.filter(F.col("vec_id") != _QUERY_VEC_ID)
         .select("vec_id", "v", "vnrm", adc.alias("score"))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(_PQ_SHORTLIST)
     )
-    probe = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("pv"), F.col("vnrm").alias("pnrm")
+    pv = F.array(*[F.lit(x) for x in probe_v])
+    cos = F.expr(_DOT.format(a="v", b="pv")) / (
+        F.col("vnrm") * F.lit(probe_nrm)
     )
-    cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col("vnrm") * F.col("pnrm"))
-    rescored = shortlist.crossJoin(F.broadcast(probe)).select(
-        "vec_id", cos.alias("cos_raw")
-    )
-    topk = rescored.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit); the logged
-    # "No Partition Defined" warning is accepted — see s_knn_bruteforce.
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
+    return _top_k(
+        shortlist.withColumn("pv", pv).select("vec_id", cos.alias("cos_raw"))
     )
 
 
@@ -1481,9 +1481,8 @@ def _ivfpq_search(
     one-per-build training (coarse _km_fit + _PQ_M codebook fits — the
     dominant index-build cost at scale) separately from this per-query
     search, and so the sampled-training knob composes here too."""
-    probe_q = _probe_q(n)
-    probe_lists = _km_probe_lists(probe_q, cents, _N_PROBE)
-    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
+    probe = _probe(n)
+    probe_lists = _km_probe_lists(probe[0], cents, _N_PROBE)
     # Restrict BEFORE encoding: only probed-list rows pay the in-row code
     # assignment (at 100 TB both the codes and list_id are precomputed
     # columns and this is pure partition pruning + a narrow scan).
@@ -1493,29 +1492,7 @@ def _ivfpq_search(
         ),
         books,
     )
-    probe_qnrm = float(sum(x * x for x in probe_q)) ** 0.5
-    adc = num_expr / (F.lit(probe_qnrm) * F.sqrt(cn2_expr))
-    shortlist = (
-        scored.filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .select("vec_id", "v", "vnrm", adc.alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(_PQ_SHORTLIST)
-    )
-    probe = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("pv"), F.col("vnrm").alias("pnrm")
-    )
-    cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col("vnrm") * F.col("pnrm"))
-    rescored = shortlist.crossJoin(F.broadcast(probe)).select(
-        "vec_id", cos.alias("cos_raw")
-    )
-    topk = rescored.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit); the logged
-    # "No Partition Defined" warning is accepted — see s_knn_bruteforce.
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    return _adc_top_k(scored, books, probe)
 
 
 # --------------------------------------------------------------------------
@@ -1636,19 +1613,8 @@ def s_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_index_store(ivfpq_index_build(n.filter(~is_new), cents, books), path)
     ivfpq_index_append(n.filter(is_new), cents, books, path)
     ivfpq_index_compact(spark, path)
-    probe = (
-        n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("v", "vnrm", "vq")
-        .collect()[0]
-    )
-    probe_q = [int(x) for x in probe["vq"]]
     return _ivfpq_search_stored(
-        ivfpq_index_load(spark, path),
-        books,
-        probe_q,
-        [float(x) for x in probe["v"]],
-        float(probe["vnrm"]),
-        _km_probe_lists(probe_q, cents, _N_PROBE),
+        ivfpq_index_load(spark, path), cents, books, _probe(n)
     )
 
 
@@ -1697,18 +1663,7 @@ def _ivfpq_drift_oracle() -> str:
     """Shared PQ training CTEs + per-subspace residual of each vector's
     ASSIGNED centroid (the same (sim DESC, c_id) argmax the codes CTE
     uses), totalled and grouped by the vec_id%2 batch split."""
-    header = f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), nq2 AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS vnrm,
-             list_transform(v, x -> CAST(floor(x * {_KM_SCALE}) AS DOUBLE)) AS vq,
-             sqrt(list_dot_product(
-               list_transform(v, x -> CAST(floor(x * {_KM_SCALE}) AS DOUBLE)),
-               list_transform(v, x -> CAST(floor(x * {_KM_SCALE}) AS DOUBLE)))) AS qnrm
-      FROM e
-    )"""
-    parts = [header, _pq_train_ctes("nq2")]
+    parts = [_NQ2, _pq_train_ctes("nq2")]
     for j in range(_PQ_M):
         parts.append(
             f""", drift{j} AS (
@@ -1780,42 +1735,19 @@ def ivfpq_index_compact(spark: SparkSession, path: str) -> None:
 
 def _ivfpq_search_stored(
     idx: DataFrame,
+    cents: list[tuple[int, list[int]]],
     books: dict[int, list[tuple[int, list[int]]]],
-    probe_q: list[int],
-    probe_v: list[float],
-    probe_nrm: float,
-    probe_lists: list[int],
+    probe: tuple[list[int], list[float], float],
 ) -> DataFrame:
-    """IVFADC serving against the STORED index: literal list_id filter
-    (partition pruning — zero non-probed bytes read), ADC from the
+    """IVFADC serving against the STORED index: the probe's lists ranked
+    driver-side (_km_probe_lists), a literal list_id filter (partition
+    pruning — zero non-probed bytes read), then _adc_top_k over the
     stored code columns (no in-row encode — the expensive
-    codebook-argmax projection of the in-plan form is gone), shortlist,
-    exact re-rank against the stored raw vectors with the probe shipped
-    as literals. Zero joins, zero shuffles before the bounded top-ks."""
-    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
-    probe_qnrm = float(sum(x * x for x in probe_q)) ** 0.5
-    adc = num_expr / (F.lit(probe_qnrm) * F.sqrt(cn2_expr))
-    shortlist = (
-        idx.filter(F.col("list_id").isin(probe_lists))
-        .filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .select("vec_id", "v", "vnrm", adc.alias("score"))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(_PQ_SHORTLIST)
-    )
-    pv = F.array(*[F.lit(float(x)) for x in probe_v])
-    cos = F.expr(_DOT.format(a="v", b="pv")) / (
-        F.col("vnrm") * F.lit(probe_nrm)
-    )
-    rescored = shortlist.withColumn("pv", pv).select(
-        "vec_id", cos.alias("cos_raw")
-    )
-    topk = rescored.orderBy(F.desc("cos_raw"), F.asc("vec_id")).limit(_K)
-    # Unpartitioned window over exactly K rows (post-limit); accepted —
-    # see s_knn_bruteforce.
-    w = Window.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        topk.withColumn("rank", F.row_number().over(w))
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
+    codebook-argmax projection of the in-plan form is gone). Zero
+    joins, zero shuffles before the bounded top-ks."""
+    probe_lists = _km_probe_lists(probe[0], cents, _N_PROBE)
+    return _adc_top_k(
+        idx.filter(F.col("list_id").isin(probe_lists)), books, probe
     )
 
 
@@ -1839,19 +1771,8 @@ def s_ann_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = _pq_fit_for(spark, sf_dir)
     path = os.path.join(tempfile.mkdtemp(prefix="s_ann_ivfpq_stored_"), "index")
     ivfpq_index_store(ivfpq_index_build(n, cents, books), path)
-    probe = (
-        n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("v", "vnrm", "vq")
-        .collect()[0]
-    )
-    probe_q = [int(x) for x in probe["vq"]]
     return _ivfpq_search_stored(
-        ivfpq_index_load(spark, path),
-        books,
-        probe_q,
-        [float(x) for x in probe["v"]],
-        float(probe["vnrm"]),
-        _km_probe_lists(probe_q, cents, _N_PROBE),
+        ivfpq_index_load(spark, path), cents, books, _probe(n)
     )
 
 
@@ -1922,42 +1843,59 @@ def knn_graph(
     bucket exchange and the per-src rank — plus the bucket join, which
     broadcasts the capped target side while its static 2^planes·cap
     bound fits (_BROADCAST_ROW_BOUND) and shuffle-joins beyond."""
-    if n_planes < 1:
-        raise ValueError(f"n_planes must be >= 1, got {n_planes}")
-    if bucket_cap < 1:
-        raise ValueError(f"bucket_cap must be >= 1, got {bucket_cap}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    # Materialize the bucketed corpus ONCE: the capped-target and probe
-    # branches below otherwise each re-scan the input and re-run the
-    # norm + n_planes-dot-product bucket map — the most expensive map of
-    # the build, doubled (the same fix as the IVF twin's assignment
-    # checkpoint). ``bucketed`` lets a composing caller (the stored
-    # build→merge lifecycle) hand in an ALREADY-bucketed frame — e.g. a
-    # filter over one shared corpus checkpoint — so the corpus is
-    # scanned and bucket-mapped once per lifecycle instead of once per
-    # stage; the bucket map is a per-row deterministic function, so
-    # bucketing-then-filtering equals filtering-then-bucketing row for
-    # row (r14; guide §2.4).
-    if bucketed is None:
-        n = _bucketed_corpus(emb, n_planes)
-    else:
-        n = _check_bucketed(bucketed, n_planes)
-    t = _capped_targets(n, bucket_cap)
-    probes = _graph_probes(n, n_planes, multiprobe)
+    n = _graph_corpus(emb, k, n_planes, bucket_cap, bucketed)
     # no duplicate (src, dst) pairs possible: a target lives in exactly
     # one bucket and the probe masks are distinct, so at most one probe
     # bucket matches — the rank window needs no pre-distinct.
-    pairs = _pair_edges(probes, t, _target_bound(n_planes, bucket_cap))
-    ranked = _topk_raw(pairs, k)
+    pairs = _bucket_pairs(n, n, n_planes, bucket_cap, multiprobe)
+    return _graph_out(_topk_raw(pairs, k), raw_scores)
+
+
+def _graph_corpus(
+    emb: DataFrame,
+    k: int,
+    n_planes: int,
+    bucket_cap: int,
+    bucketed: DataFrame | None,
+) -> DataFrame:
+    """The knob check and bucketed corpus both graph builders start
+    from. Rejects ``k``, ``n_planes`` or ``bucket_cap`` below 1 before
+    any job runs.
+
+    The bucketed corpus is materialized ONCE: the capped-target and
+    probe branches otherwise each re-scan the input and re-run the
+    norm + n_planes-dot-product bucket map — the most expensive map of
+    the build, doubled (the same fix as the IVF twin's assignment
+    checkpoint). ``bucketed`` lets a composing caller (the stored
+    build→merge lifecycle) hand in an ALREADY-bucketed frame — e.g. a
+    filter over one shared corpus checkpoint — so the corpus is
+    scanned and bucket-mapped once per lifecycle instead of once per
+    stage; the bucket map is a per-row deterministic function, so
+    bucketing-then-filtering equals filtering-then-bucketing row for
+    row (r14; guide §2.4)."""
+    for name, val in (("k", k), ("n_planes", n_planes), ("bucket_cap", bucket_cap)):
+        if val < 1:
+            raise ValueError(f"{name} must be >= 1, got {val}")
+    if bucketed is None:
+        return _bucketed_corpus(emb, n_planes)
+    return _check_bucketed(bucketed, n_planes)
+
+
+def _graph_out(ranked: DataFrame, raw_scores: bool) -> DataFrame:
+    """The output tail of every graph build: (src, dst, cos_sim, rank)
+    rounded to 4 places, or (src, dst, cos_raw, rank) at full precision
+    when ``raw_scores``.
+
+    The raw form is the merge-compatible one: knn_graph_merge re-ranks
+    stored edges against fresh batch candidates, and feeding it the
+    rounded cos_sim would flip near-tie ranks (two raw scores inside
+    the same 1e-4 rounding cell compare equal after rounding but not
+    before). Store THAT output (knn_graph_store) when the graph will be
+    maintained incrementally — store → merge → store → merge ... equals
+    the full rebuild while the cap doesn't bind (pinned across two
+    batches in test_round8_ops); the rounded default is the
+    human/oracle form."""
     if raw_scores:
-        # Merge-compatible form: keep the FULL-precision score.
-        # knn_graph_merge re-ranks the stored edges against fresh batch
-        # candidates; feeding it the rounded cos_sim would flip near-tie
-        # ranks (two raw scores inside the same 1e-4 rounding cell
-        # compare equal after rounding but not before). Store THIS
-        # output (knn_graph_store) when the graph will be maintained
-        # incrementally; the rounded default is the human/oracle form.
         return ranked.select("src", "dst", "cos_raw", "rank")
     return ranked.select(
         "src", "dst", F.round("cos_raw", 4).alias("cos_sim"), "rank"
@@ -1965,19 +1903,9 @@ def knn_graph(
 
 
 def _bucketed_corpus(emb: DataFrame, n_planes: int) -> DataFrame:
-    """(vec_id, v, nrm, bucket) — one eager checkpoint every graph-build
-    branch (target cap, probes, old/new splits) derives from. The
-    ``bucket`` column carries its plane count as field metadata, which
-    survives the checkpoint, filters and selects, so _check_bucketed
-    can verify a ``bucketed=`` frame without a job."""
-    return emb.select(
-        "vec_id",
-        "v",
-        F.sqrt(F.expr(_DOT.format(a="v", b="v"))).alias("nrm"),
-        _bucket_expr_spark(n_planes).alias(
-            "bucket", metadata={"n_planes": n_planes}
-        ),
-    ).localCheckpoint(eager=True)
+    """_bucketed as one eager checkpoint every graph-build branch
+    (target cap, probes, old/new splits) derives from."""
+    return _bucketed(emb, n_planes).localCheckpoint(eager=True)
 
 
 def _check_bucketed(bucketed: DataFrame, n_planes: int) -> DataFrame:
@@ -2048,6 +1976,23 @@ def _pair_edges(probes: DataFrame, t: DataFrame, t_bound: float) -> DataFrame:
             & (F.col("src") != F.col("dst")),
         )
         .select("src", "dst", cos.alias("cos_raw"))
+    )
+
+
+def _bucket_pairs(
+    probe_n: DataFrame,
+    target_n: DataFrame,
+    n_planes: int,
+    bucket_cap: int,
+    multiprobe: bool,
+) -> DataFrame:
+    """(src, dst, cos_raw): ``probe_n``'s rows against the capped
+    targets of ``target_n`` in their probed buckets — one leg of an LSH
+    graph build (both _bucketed_corpus frames)."""
+    return _pair_edges(
+        _graph_probes(probe_n, n_planes, multiprobe),
+        _capped_targets(target_n, bucket_cap),
+        _target_bound(n_planes, bucket_cap),
     )
 
 
@@ -2124,36 +2069,15 @@ def knn_graph_merge(
     the probe masks are distinct — the knn_graph argument); across the
     two batch legs the existing max(cos_raw) dedup already absorbs the
     overlap either way."""
-    if bucket_cap < 1:
-        raise ValueError(f"bucket_cap must be >= 1, got {bucket_cap}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    # ``bucketed``: the knn_graph escape hatch — reuse a caller-shared
-    # bucketed-corpus checkpoint instead of re-scanning + re-bucketing
-    if bucketed is None:
-        n = _bucketed_corpus(emb, n_planes)
-    else:
-        n = _check_bucketed(bucketed, n_planes)
+    n = _graph_corpus(emb, k, n_planes, bucket_cap, bucketed)
     new_n = n.filter(is_new)
-    t_bound = _target_bound(n_planes, bucket_cap)
+    knobs = (n_planes, bucket_cap, multiprobe)
     if old_graph is None:
         old_n = n.filter(~is_new)
-        old_pairs = _pair_edges(
-            _graph_probes(old_n, n_planes, multiprobe),
-            _capped_targets(old_n, bucket_cap),
-            t_bound,
-        )
+        old_pairs = _bucket_pairs(old_n, old_n, *knobs)
         old_graph = _topk_raw(old_pairs, k).select("src", "dst", "cos_raw")
-    cand_new_dst = _pair_edges(
-        _graph_probes(n, n_planes, multiprobe),
-        _capped_targets(new_n, bucket_cap),
-        t_bound,
-    )
-    cand_new_src = _pair_edges(
-        _graph_probes(new_n, n_planes, multiprobe),
-        _capped_targets(n, bucket_cap),
-        t_bound,
-    )
+    cand_new_dst = _bucket_pairs(n, new_n, *knobs)
+    cand_new_src = _bucket_pairs(new_n, n, *knobs)
     merged = (
         old_graph.select("src", "dst", "cos_raw")
         .unionByName(cand_new_dst)
@@ -2161,19 +2085,7 @@ def knn_graph_merge(
         .groupBy("src", "dst")
         .agg(F.max("cos_raw").alias("cos_raw"))
     )
-    ranked = _topk_raw(merged, k)
-    if raw_scores:
-        # Merge-compatible output — REQUIRED for the loop to compose:
-        # the next ingest batch stores THIS graph and merges against it
-        # (store → merge → store → merge ... equals the full rebuild
-        # while the cap doesn't bind; pinned across two batches in
-        # test_round8_ops). Without it the rounded output dead-ends the
-        # chain after one batch — the same near-tie hazard
-        # knn_graph_store rejects.
-        return ranked.select("src", "dst", "cos_raw", "rank")
-    return ranked.select(
-        "src", "dst", F.round("cos_raw", 4).alias("cos_sim"), "rank"
-    )
+    return _graph_out(_topk_raw(merged, k), raw_scores)
 
 
 _GRAPH_STORE_COLS = ("src", "dst", "cos_raw")
@@ -2343,59 +2255,33 @@ def _knn_graph_ivf_build(
     """The graph-build phase of s_knn_graph_ivf against already-fitted
     centroids — factored so bench.py times the one-per-index k-means
     training separately from the per-batch graph construction."""
-    # Materialize the per-vector probe lists ONCE. `t` and `probes` are
-    # two branches over the same corpus, and without this checkpoint each
-    # branch re-evaluates the k-dot-product assignment — the most
-    # expensive map of the build (k ≈ √n centroid dots per row at corpus
-    # scale) — plus a second full scan. This is the cluster-scale "write
-    # assignments, then join" IVF shape. Both consumers read only the
-    # list ids (_km_probe_ids_np_col); pls[0] is the row's own list.
+    # Materialize the per-vector probe lists ONCE. The target and probe
+    # branches both read them, and without this checkpoint each branch
+    # re-evaluates the k-dot-product assignment — the most expensive map
+    # of the build (k ≈ √n centroid dots per row at corpus scale) — plus
+    # a second full scan. This is the cluster-scale "write assignments,
+    # then join" IVF shape, and from here on it is the LSH build with
+    # list ids for buckets: ``bucket`` is the row's own list (pls[0],
+    # the targets the cap keeps) and the probe side explodes every
+    # probed list into ``pb``. A target lives in exactly one list and
+    # the probe lists are distinct, so no (src, dst) repeats.
     asg = n.select(
         "vec_id",
         "v",
-        "vnrm",
+        F.col("vnrm").alias("nrm"),
         _km_probe_ids_np_col(cents, _N_PROBE).alias("pls"),
     ).localCheckpoint(eager=True)
-    wl = Window.partitionBy("list_b").orderBy(F.asc("dst"))
-    t = (
-        asg.select(
-            F.col("vec_id").alias("dst"),
-            F.col("v").alias("vb"),
-            F.col("vnrm").alias("nb"),
-            F.col("pls")[0].alias("list_b"),
-        )
-        .withColumn("rn", F.row_number().over(wl))
-        .filter(F.col("rn") <= _GRAPH_BUCKET_CAP)
-        .drop("rn")
-    )
     probes = asg.select(
         F.col("vec_id").alias("src"),
         F.col("v").alias("va"),
-        F.col("vnrm").alias("na"),
-        F.explode("pls").alias("pl"),
-    ).select("src", "va", "na", "pl")
-    cos = F.expr(_DOT.format(a="va", b="vb")) / (F.col("na") * F.col("nb"))
-    # no duplicate (src, dst): a target lives in exactly one list, the
-    # probe lists are distinct — at most one probe matches.
-    # The capped target side is statically bounded at n_centroids·cap
-    # rows, a bound the checkpoint hides from the size estimator (a
-    # LogicalRDD defaults to "huge") — broadcast iff it actually fits:
-    # at the corpus-scale recipe (k ≈ √n centroids) the bound outgrows
-    # any broadcast and the list-keyed shuffle join takes over.
-    t_bound = _N_CENTROIDS * _GRAPH_BUCKET_CAP
-    pairs = (
-        probes.join(
-            F.broadcast(t) if t_bound <= _BROADCAST_ROW_BOUND else t,
-            (F.col("pl") == F.col("list_b")) & (F.col("src") != F.col("dst")),
-        )
-        .select("src", "dst", cos.alias("cos_raw"))
+        F.col("nrm").alias("na"),
+        F.explode("pls").alias("pb"),
     )
-    w = Window.partitionBy("src").orderBy(F.desc("cos_raw"), F.asc("dst"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _K_GRAPH)
-        .select("src", "dst", F.round("cos_raw", 4).alias("cos_sim"), "rank")
+    t = _capped_targets(
+        asg.withColumn("bucket", F.col("pls")[0]), _GRAPH_BUCKET_CAP
     )
+    pairs = _pair_edges(probes, t, _N_CENTROIDS * _GRAPH_BUCKET_CAP)
+    return _graph_out(_topk_raw(pairs, _K_GRAPH), raw_scores=False)
 
 
 # --------------------------------------------------------------------------
@@ -2604,13 +2490,11 @@ def s_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     is paid once per BATCH instead of once per QUERY; combine with the
     LSH/IVF bucket filters for sublinear scans when the batch is small.
     """
-    n = _emb_double(spark, sf_dir).withColumn(
-        "nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v")))
-    )
+    n = _emb_norm(spark, sf_dir)
     probes = (
         n.filter(F.col("vec_id").isin(*_BATCH_PROBES))
         .select(
-            F.col("vec_id").alias("probe_id"),
+            F.col("vec_id").alias("src"),
             F.col("v").alias("pv"),
             F.col("nrm").alias("pnrm"),
         )
@@ -2618,14 +2502,14 @@ def s_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col("nrm") * F.col("pnrm"))
     scored = (
         n.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", cos.alias("cos_raw"))
+        .filter(F.col("vec_id") != F.col("src"))
+        .select("src", F.col("vec_id").alias("dst"), cos.alias("cos_raw"))
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _K)
-        .select("probe_id", "vec_id", F.round("cos_raw", 4).alias("cos_sim"), "rank")
+    return _topk_raw(scored, _K).select(
+        F.col("src").alias("probe_id"),
+        F.col("dst").alias("vec_id"),
+        F.round("cos_raw", 4).alias("cos_sim"),
+        "rank",
     )
 
 
@@ -2931,9 +2815,7 @@ def s_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             Window.orderBy(F.desc("score_x1000"), "doc_id")
         ),
     )
-    n = _emb_double(spark, sf_dir).withColumn(
-        "nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v")))
-    )
+    n = _emb_norm(spark, sf_dir)
     q = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
         F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
@@ -3026,29 +2908,25 @@ def s_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = emb.withColumn("nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v"))))
     probes = n.filter(F.col("vec_id") % _EVAL_PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
+        F.col("vec_id").alias("src"),
         F.col("label").alias("p_label"),
         F.col("v").alias("pv"),
         F.col("nrm").alias("pnrm"),
     )
     cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col("nrm") * F.col("pnrm"))
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_raw"), F.asc("vec_id")
-    )
-    ranked = (
+    ranked = _topk_raw(
         n.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
+        .filter(F.col("vec_id") != F.col("src"))
         .select(
-            "probe_id",
+            "src",
             "p_label",
             "label",
-            "vec_id",
+            F.col("vec_id").alias("dst"),
             cos.alias("cos_raw"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _K)
+        ),
+        _K,
     )
-    per_probe = ranked.groupBy("probe_id").agg(
+    per_probe = ranked.groupBy("src").agg(
         F.coalesce(
             F.min(
                 F.when(F.col("label") == F.col("p_label"), F.col("rank"))
@@ -3146,22 +3024,20 @@ def s_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     window). The exact edge list is checkpointed once — it feeds both
     the per-variant hit join (broadcast: sample-bounded) and the
     denominator count."""
-    n = _emb_double(spark, sf_dir).withColumn(
-        "nrm", F.sqrt(F.expr(_DOT.format(a="v", b="v")))
-    )
+    n = _emb_norm(spark, sf_dir)
     probes = n.filter(F.col("vec_id") % _RECALL_MOD == 0).select(
         F.col("vec_id").alias("src"),
         F.col("v").alias("pv"),
         F.col("nrm").alias("pnrm"),
     )
     cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col("nrm") * F.col("pnrm"))
-    wx = Window.partitionBy("src").orderBy(F.desc("cos_raw"), F.asc("dst"))
     exact = (
-        n.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("src"))
-        .select("src", F.col("vec_id").alias("dst"), cos.alias("cos_raw"))
-        .withColumn("rk", F.row_number().over(wx))
-        .filter(F.col("rk") <= _K_GRAPH)
+        _topk_raw(
+            n.crossJoin(F.broadcast(probes))
+            .filter(F.col("vec_id") != F.col("src"))
+            .select("src", F.col("vec_id").alias("dst"), cos.alias("cos_raw")),
+            _K_GRAPH,
+        )
         .select("src", "dst")
         .localCheckpoint(eager=True)  # feeds the hit join AND the count
     )

@@ -88,6 +88,11 @@ _PINS = {
     # brute-force top-k: broadcast probe set, no shuffle after the
     # spread exchange before top-k
     "s_knn_bruteforce": [("shuffles", "<=", 2), ("python", "==", 0)],
+    # PQ searches re-rank their ADC shortlist against the probe shipped
+    # as literals (_adc_top_k): no broadcast-probe nested-loop join and
+    # no second corpus scan; the one exchange is the spread
+    "s_ann_pq": [("bnlj", "==", 0), ("shuffles", "<=", 1)],
+    "s_ann_ivfpq": [("bnlj", "==", 0), ("shuffles", "<=", 1)],
     # pure narrow expression pipeline — no exchange beyond the spread
     "t_quality_score": [("shuffles", "<=", 1), ("python", "==", 0)],
     # round-4b/c single-fact-shuffle contracts

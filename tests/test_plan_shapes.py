@@ -74,9 +74,7 @@ ALLOWED_BNLJ = {
     "s_ann_ivf": 1,
     "s_ann_ivf_kmeans": 1,
     "s_ann_ivf_sampled": 1,
-    "s_ann_ivfpq": 1,
     "s_ann_lsh_multiprobe": 1,
-    "s_ann_pq": 1,
     "s_graph_recall": 1,  # 1-row n_exact scalar aggregate cross-joined
                           # onto the 3-row per-variant hit counts (the
                           # probes×corpus cross join is behind the exact

@@ -15,6 +15,7 @@ from olympic_athletes_etl_spark.plans.similarity_q import (
     _K_GRAPH,
     _emb_double,
     knn_graph,
+    knn_graph_merge,
     s_dim_profile,
     s_knn_graph,
     s_knn_graph_ivf,
@@ -143,18 +144,23 @@ def test_knn_graph_hot_bucket_cap_bounds_candidates(spark):
     assert first[1] == 2 and first[cap + 1] == 1
 
 
-def test_knn_graph_rejects_degenerate_knobs(spark):
-    import pytest
+def _merge_all_new(emb, **knobs):
+    return knn_graph_merge(emb, F.lit(True), **knobs)
 
+
+@pytest.mark.parametrize(
+    "build", [knn_graph, _merge_all_new], ids=["knn_graph", "knn_graph_merge"]
+)
+def test_knn_graph_rejects_degenerate_knobs(spark, build):
     emb = spark.createDataFrame(
         [(1, [1.0] * 64)], "vec_id: long, v: array<double>"
     )
     with pytest.raises(ValueError, match="n_planes"):
-        knn_graph(emb, n_planes=0)
+        build(emb, n_planes=0)
     with pytest.raises(ValueError, match="bucket_cap"):
-        knn_graph(emb, bucket_cap=0)
+        build(emb, bucket_cap=0)
     with pytest.raises(ValueError, match="k"):
-        knn_graph(emb, k=0)
+        build(emb, k=0)
 
 
 def test_knn_graph_multiprobe_recall_vs_exact(spark, sf_dir):

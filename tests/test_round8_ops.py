@@ -215,9 +215,7 @@ def test_ivfpq_index_append_serves_identically(spark, sf_dir, tmp_path):
 
     from olympic_athletes_etl_spark.plans.similarity_q import (
         _ivfpq_search_stored,
-        _km_probe_lists,
-        _N_PROBE,
-        _QUERY_VEC_ID,
+        _probe,
         ivfpq_index_append,
         ivfpq_index_build,
         ivfpq_index_load,
@@ -235,19 +233,7 @@ def test_ivfpq_index_append_serves_identically(spark, sf_dir, tmp_path):
     )
     ivfpq_index_append(n.filter(is_new), cents, books, p_inc)
     ivfpq_index_store(ivfpq_index_build(n, cents, books), p_full)
-    probe = (
-        n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("v", "vnrm", "vq")
-        .collect()[0]
-    )
-    probe_q = [int(x) for x in probe["vq"]]
-    args = (
-        books,
-        probe_q,
-        [float(x) for x in probe["v"]],
-        float(probe["vnrm"]),
-        _km_probe_lists(probe_q, cents, _N_PROBE),
-    )
+    args = (cents, books, _probe(n))
     inc = sorted(
         tuple(r)
         for r in _ivfpq_search_stored(

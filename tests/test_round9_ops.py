@@ -17,13 +17,11 @@ from pyspark.sql import functions as F
 
 from olympic_athletes_etl_spark.plans.similarity_q import (
     _K,
-    _N_PROBE,
-    _QUERY_VEC_ID,
     _ivfpq_search_stored,
     _km_base,
     _km_fit,
-    _km_probe_lists,
     _pq_fit,
+    _probe,
     ivfpq_index_append,
     ivfpq_index_build,
     ivfpq_index_compact,
@@ -65,19 +63,7 @@ def test_ivfpq_index_compact_serves_identically(spark, sf_dir, tmp_path):
     ivfpq_index_store(ivfpq_index_build(n.filter(~is_new), cents, books), path)
     ivfpq_index_append(n.filter(is_new), cents, books, path)
 
-    probe = (
-        n.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("v", "vnrm", "vq")
-        .collect()[0]
-    )
-    probe_q = [int(x) for x in probe["vq"]]
-    args = (
-        books,
-        probe_q,
-        [float(x) for x in probe["v"]],
-        float(probe["vnrm"]),
-        _km_probe_lists(probe_q, cents, _N_PROBE),
-    )
+    args = (cents, books, _probe(n))
 
     def serve():
         return sorted(
