@@ -11,10 +11,26 @@ Each family follows the same deployed loop::
 ``GenStore`` owns that loop for a root path and its ``TableSpec``s, and
 owns the family's column contract: ``create``/``append`` check every
 table's frame before taking the writer lock or writing a file, and
-``load`` checks the stored data with the same helper.  The three
+``load`` checks the stored schema with the same helper.  The three
 mergeable rollups (exact (count, sum), quantile histogram, HLL registers)
 are one more level up: a ``Rollup`` declares partials + merge + columns +
 partition key once, and its store (``at``) runs the whole lifecycle.
+
+A READ IS NO SPARK JOB: every commit (``create``, ``compact``, and
+``ensure`` for an append's first batch) records each table's written
+schema in the manifest, and ``load`` (and compaction's source read)
+reads the parquet under that schema instead of inferring it from the
+footers -- on an object store, inference is a job of footer GETs per
+read.  (Spark still lists a table of more than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` -- 32 by
+default -- partition directories with a job, as it does for any read.)
+An append whose column types differ from the recorded ones is
+refused before it writes, so every file in a generation has the
+recorded types.  A manifest without a schema is refused, never
+inferred.  A rollup's state is small (key cardinality x batches rows),
+so it folds in ONE task: ``Rollup`` coalesces it to one partition
+before the merge, at compaction and on load, and its serves run one
+job with no exchange.
 
 A compaction must never rewrite a store in place: a crash (or executor
 loss, when the read is staged through a ``localCheckpoint``) between the
@@ -24,7 +40,7 @@ here is a GENERATION SWAP:
 
 * a store root holds numbered generation directories ``gen-0``, ``gen-1``,
   … plus a tiny ``_STORE`` manifest (JSON: the current generation
-  number);
+  number and each table's schema);
 * every read resolves the manifest and touches only the current
   generation's directory;
 * ``compact`` (and snapshot ``create`` over an existing store) writes the
@@ -88,6 +104,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_STORE"
 LOCK_NAME = "_LOCK"
@@ -136,6 +153,11 @@ class TableSpec:
 
 def _subdir(root: str, name: str) -> str:
     return os.path.join(root, name) if name else root
+
+
+def _schemas(frames: Mapping[str, DataFrame]) -> dict[str, dict]:
+    """The manifest's record of each table's written schema."""
+    return {name: df.schema.jsonValue() for name, df in frames.items()}
 
 
 def gen_dir(path: str, gen: int) -> str:
@@ -304,18 +326,26 @@ class GenStore:
         """Current generation's directory for ``table``."""
         return _subdir(gen_dir(self.path, self._require()["gen"]), table)
 
-    def ensure(self) -> str:
-        """Create an EMPTY store (manifest + gen-0 dir) if none exists —
-        an append's first-batch path. Returns the current generation dir
-        either way."""
+    def ensure(self, frames: Mapping[str, DataFrame]) -> str:
+        """Create an EMPTY store (manifest + gen-0 dir per table) if none
+        exists — an append's first-batch path. ``frames`` is the batch
+        about to be appended: it is checked against the contract, and
+        its schema is what the new manifest records, so the empty store
+        loads (as an empty frame) and takes the append. Returns the
+        current generation dir either way."""
+        frames = self.check(frames)
         man = self.manifest()
         if man is None:
             try:
                 with self._writer_lock("ensure"):
                     man = self.manifest()  # may exist by now
                     if man is None:
-                        os.makedirs(gen_dir(self.path, 0), exist_ok=True)
-                        man = {"gen": 0}
+                        for t in self.tables:
+                            os.makedirs(
+                                _subdir(gen_dir(self.path, 0), t.name),
+                                exist_ok=True,
+                            )
+                        man = {"gen": 0, "schema": _schemas(frames)}
                         _commit_manifest(self.path, man)
             except ConcurrentWriteError:
                 man = self.manifest()  # a racing writer created it
@@ -324,27 +354,66 @@ class GenStore:
         return gen_dir(self.path, man["gen"])
 
     # -- frame validation ----------------------------------------------------
-    def _contract(self, t: TableSpec, df: DataFrame, what: str) -> DataFrame:
-        """``df`` projected to ``t``'s contract columns; raises naming the
-        missing ones (``what`` says whose: an incoming frame or stored
-        data)."""
-        if t.columns is None:
-            return df
-        missing = [c for c in t.columns if c not in df.columns]
+    def _missing(self, t: TableSpec, columns: Sequence[str], what: str) -> None:
+        """Raise naming ``t``'s contract columns absent from ``columns``
+        (``what`` says whose: an incoming frame or the stored schema)."""
+        missing = [c for c in t.columns or () if c not in columns]
         if missing:
             raise ValueError(
                 f"store {self.path!r} table {t.name!r}: {what} is "
                 f"missing contract columns {missing}"
             )
-        return df.select(*t.columns)
 
     def check(self, frames: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
         """Every table's frame checked against its spec and projected to
         its contract — all of them before any write, so a rejected
         multi-table write writes nothing."""
-        return {
-            t.name: self._contract(t, frames[t.name], "frame") for t in self.tables
-        }
+        out = {}
+        for t in self.tables:
+            df = frames[t.name]
+            self._missing(t, df.columns, "frame")
+            out[t.name] = df if t.columns is None else df.select(*t.columns)
+        return out
+
+    def _schema(self, man: Mapping, t: TableSpec) -> StructType:
+        """``t``'s schema as the manifest recorded it at its last commit."""
+        recorded = man.get("schema", {}).get(t.name)
+        if recorded is None:
+            raise ValueError(
+                f"store {self.path!r} table {t.name!r}: the "
+                f"{MANIFEST_NAME} manifest records no schema; rewrite the "
+                "store with the family's store function"
+            )
+        return StructType.fromJson(recorded)
+
+    def _check_types(self, man: Mapping, frames: Mapping[str, DataFrame]) -> None:
+        """Raise naming every contract column (every recorded column of a
+        free-form table) whose type in ``frames`` differs from the stored
+        one. Nullability is not compared."""
+        for t in self.tables:
+            stored = {f.name: f.dataType.simpleString() for f in self._schema(man, t)}
+            got = {f.name: f.dataType.simpleString() for f in frames[t.name].schema}
+            bad = [
+                f"{c} {got.get(c)} (stored {stored.get(c)})"
+                for c in t.columns or tuple(stored)
+                if got.get(c) != stored.get(c)
+            ]
+            if bad:
+                raise ValueError(
+                    f"store {self.path!r} table {t.name!r}: frame column "
+                    f"types differ from the stored schema: {bad}"
+                )
+
+    def _read(
+        self, spark: SparkSession, man: Mapping, root: str, t: TableSpec
+    ) -> DataFrame:
+        """``t``'s files under generation dir ``root``, read with the
+        recorded schema (no footer inference, so no Spark job) and
+        projected to the contract."""
+        schema = self._schema(man, t)
+        self._missing(t, schema.fieldNames(), "stored data")
+        df = spark.read.schema(schema).parquet(_subdir(root, t.name))
+        return df if t.columns is None else df.select(*t.columns)
 
     def _write(self, root: str, frames: Mapping[str, DataFrame], mode: str) -> None:
         for t in self.tables:
@@ -355,7 +424,8 @@ class GenStore:
 
     # -- lifecycle -----------------------------------------------------------
     def create(self, frames: Mapping[str, DataFrame]) -> None:
-        """Write a full snapshot as a NEW generation and commit it.
+        """Write a full snapshot as a NEW generation and commit it, with
+        each table's schema recorded in the manifest.
 
         On a fresh path this writes gen-0. Over an EXISTING store it is an
         atomic snapshot REPLACE: the next generation is written beside the
@@ -373,53 +443,57 @@ class GenStore:
                 shutil.rmtree(dst)
             self._write(dst, frames, mode="errorifexists")
             self._check_unmoved(expected, "create")
-            _commit_manifest(self.path, {"gen": nxt})
+            _commit_manifest(self.path, {"gen": nxt, "schema": _schemas(frames)})
             self._gc(keep=nxt)
 
     def append(self, frames: Mapping[str, DataFrame]) -> None:
         """Fold an ingest batch in: plain parquet appends into the CURRENT
-        generation — no history is read or rewritten. Holds the writer
-        lock for the duration, so an append can no longer land in a
-        generation a concurrent compaction is about to sweep (it refuses
-        with ConcurrentWriteError instead)."""
+        generation — no history is read or rewritten. The frames must
+        match the recorded column types (checked before the lock is
+        taken, and again under it). Holds the writer lock for the
+        duration, so an append can no longer land in a generation a
+        concurrent compaction is about to sweep (it refuses with
+        ConcurrentWriteError instead)."""
         frames = self.check(frames)
+        self._check_types(self._require(), frames)
         with self._writer_lock("append"):
-            self._write(
-                gen_dir(self.path, self._require()["gen"]), frames, mode="append"
-            )
+            man = self._require()
+            self._check_types(man, frames)  # a create may have re-typed it
+            self._write(gen_dir(self.path, man["gen"]), frames, mode="append")
 
     def load(self, spark: SparkSession) -> dict[str, DataFrame]:
-        """Read every table of the current generation (contract-projected).
+        """Read every table of the current generation (contract-projected)
+        under the schema the manifest recorded: no Spark job runs until
+        the caller acts on a frame.
 
         The returned DataFrames are LAZY and pinned to this generation's
         files: a subsequent create/compact sweeps those files (unless
         ``keep_last > 1``), failing any still-unmaterialized action with
         missing-file errors — resolve-then-act promptly, or size
         ``keep_last`` to the longest reader you run concurrently."""
-        root = gen_dir(self.path, self._require()["gen"])
-        return {
-            t.name: self._contract(
-                t, spark.read.parquet(_subdir(root, t.name)), "stored data"
-            )
-            for t in self.tables
-        }
+        man = self._require()
+        root = gen_dir(self.path, man["gen"])
+        return {t.name: self._read(spark, man, root, t) for t in self.tables}
 
     def compact(self, spark: SparkSession) -> None:
         """Copy-on-write maintenance rewrite with an atomic commit.
 
-        Stage: each table's current generation is read (and stays readable
-        throughout — no localCheckpoint, no in-place delete), folded by its
-        ``merge`` fn (or refiled to one file set per partition directory),
-        and written to the NEXT generation directory.
+        Stage: each table's current generation is read under its recorded
+        schema (and stays readable throughout — no localCheckpoint, no
+        in-place delete), folded by its ``merge`` fn (or refiled to one
+        file set per partition directory), and written to the NEXT
+        generation directory.
 
-        Verify: the new files are re-read and checked — contract columns
-        present; for refile-only tables the row count must be UNCHANGED
+        Verify: the new files are re-read with their schema inferred from
+        the footers (this read IS the check) — contract columns present;
+        for refile-only tables the row count must be UNCHANGED
         (parquet-footer count, metadata-only even at scale).
 
-        Commit: one atomic manifest replace flips every reader to the new
-        generation; superseded generations are swept afterwards. A crash
-        before the commit leaves the old generation current and complete;
-        the orphan staging dir is removed by the next attempt."""
+        Commit: one atomic manifest replace, recording the written
+        schemas, flips every reader to the new generation; superseded
+        generations are swept afterwards. A crash before the commit
+        leaves the old generation current and complete; the orphan
+        staging dir is removed by the next attempt."""
         with self._writer_lock("compact"):
             self._compact_locked(spark)
 
@@ -429,10 +503,9 @@ class GenStore:
         src_root, dst_root = gen_dir(self.path, cur), gen_dir(self.path, nxt)
         if os.path.exists(dst_root):  # crashed prior attempt, unreferenced
             shutil.rmtree(dst_root)
+        written = {}
         for t in self.tables:
-            src = self._contract(
-                t, spark.read.parquet(_subdir(src_root, t.name)), "stored data"
-            )
+            src = self._read(spark, man, src_root, t)
             if t.merge is not None:
                 out = t.merge(src)
             elif t.partition_by:
@@ -444,6 +517,7 @@ class GenStore:
                 w = w.partitionBy(*t.partition_by)
             dst = _subdir(dst_root, t.name)
             w.parquet(dst)
+            written[t.name] = out
             # verify before the commit — a compaction that can't re-read
             # its own output must not become current
             chk = spark.read.parquet(dst)
@@ -459,7 +533,7 @@ class GenStore:
                     "changed the row count"
                 )
         self._check_unmoved(cur, "compact")
-        _commit_manifest(self.path, {"gen": nxt})
+        _commit_manifest(self.path, {"gen": nxt, "schema": _schemas(written)})
         self._gc(keep=nxt)
 
     def _gc(self, keep: int) -> None:
@@ -485,7 +559,12 @@ class Rollup:
     partial rows (``partials``), how partial rows fold to one row per key
     (``merge``), the stored ``columns`` and the ``partition_by`` key serves
     prune on.  The lifecycle (create / append / load / compact) runs off
-    this one declaration."""
+    this one declaration.
+
+    A rollup holds at most key-cardinality x batches rows, so its stored
+    state folds in ONE task: it is coalesced to one partition before the
+    merge at compaction and on load, and a merge or serve aggregate over
+    it needs no exchange."""
 
     partials: Callable[[DataFrame], DataFrame]
     merge: MergeFn
@@ -494,10 +573,17 @@ class Rollup:
 
     def at(self, path: str) -> GenStore:
         """The batch store: partitioned by the family key, compaction
-        folds by ``merge``."""
+        folds the state by ``merge`` in one task."""
         return GenStore(
             path,
-            [TableSpec("", self.columns, (self.partition_by,), self.merge)],
+            [
+                TableSpec(
+                    "",
+                    self.columns,
+                    (self.partition_by,),
+                    lambda state: self.merge(state.coalesce(1)),
+                )
+            ],
         )
 
     def create(self, partials: DataFrame, path: str) -> None:
@@ -505,15 +591,15 @@ class Rollup:
 
     def append(self, partials: DataFrame, path: str) -> None:
         """Append a batch's partials; a fresh path gets an empty store
-        first (the contract is checked before that, so a rejected frame
-        leaves the path untouched)."""
+        first (``ensure`` checks the contract before that, so a rejected
+        frame leaves the path untouched)."""
         store = self.at(path)
-        store.check({"": partials})
-        store.ensure()
+        store.ensure({"": partials})
         store.append({"": partials})
 
     def load(self, spark: SparkSession, path: str) -> DataFrame:
-        return self.at(path).load(spark)[""]
+        """The stored state in one partition."""
+        return self.at(path).load(spark)[""].coalesce(1)
 
     def compact(self, spark: SparkSession, path: str) -> None:
         """Fold the partial rows to one per key (generation swap)."""

@@ -15,8 +15,10 @@ Families:
 - profiles and hybrid retrieval — s_dim_profile, s_centroid_outliers,
   s_hybrid_search.
 
-Every serving step has one implementation: _probe collects the fixed
-probe; _top_k is the single-probe top-K tail, _adc_top_k the PQ
+Every serving step has one implementation: _probe (_probe_v for the
+unquantized frames) collects the fixed probe; _vs_probe scores rows
+against it shipped as literals, so no search scans the corpus twice;
+_top_k is the single-probe top-K tail, _adc_top_k the PQ
 shortlist-and-re-rank tail in front of it; _topk_raw is the per-source
 rank every graph build and exact per-probe leg shares, and _graph_out
 the graph builds' output tail. The IVF graph is the LSH graph build
@@ -91,17 +93,26 @@ def _emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _vs_probe(rows: DataFrame, src: DataFrame, nrm: str = "nrm") -> DataFrame:
+def _probe_v(n: DataFrame, nrm: str = "nrm") -> tuple[list[float], float]:
+    """The fixed probe's raw components and engine-computed norm (column
+    ``nrm``) from a (vec_id, v, ``nrm``) frame, in one collected row."""
+    row = n.filter(F.col("vec_id") == _QUERY_VEC_ID).select("v", nrm).collect()[0]
+    return [float(x) for x in row["v"]], float(row[nrm])
+
+
+def _vs_probe(
+    rows: DataFrame, probe_v: list[float], probe_nrm: float, nrm: str = "nrm"
+) -> DataFrame:
     """(vec_id, cos_raw) of every row of ``rows`` but the probe, scored
-    against the probe's (v, ``nrm``) read from ``src``: a broadcast of
-    the 1-row probe (BroadcastNestedLoopJoin, map-side only)."""
-    probe = src.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("pv"), F.col(nrm).alias("pnrm")
-    )
-    cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col(nrm) * F.col("pnrm"))
+    against the probe's components and norm shipped as literals — a
+    narrow projection, no join and no second scan. Literals of the
+    collected doubles are bit-identical to the column values they stand
+    for, so the scores equal an in-plan join's."""
+    pv = F.array(*[F.lit(x) for x in probe_v])
+    cos = F.expr(_DOT.format(a="v", b="pv")) / (F.col(nrm) * F.lit(probe_nrm))
     return (
         rows.filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(F.broadcast(probe))
+        .withColumn("pv", pv)
         .select("vec_id", cos.alias("cos_raw"))
     )
 
@@ -151,13 +162,14 @@ def _top_k(cand: DataFrame) -> DataFrame:
     """,
 )
 def s_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k for a fixed probe vector: broadcast the 1-row
-    query against all vectors (map-side only — no shuffle until the
-    final top-k, which TakeOrderedAndProject handles without a global
-    sort). Rank ties break on vec_id; ranking runs on the raw double
-    (bit-identical across engines), rounding only in the output."""
+    """Exact cosine top-k for a fixed probe vector: the probe, collected
+    once, scores every vector as literals (map-side only — no join and
+    no shuffle until the final top-k, which TakeOrderedAndProject
+    handles without a global sort). Rank ties break on vec_id; ranking
+    runs on the raw double (bit-identical across engines), rounding
+    only in the output."""
     n = _emb_norm(spark, sf_dir)
-    return _top_k(_vs_probe(n, n))
+    return _top_k(_vs_probe(n, *_probe_v(n)))
 
 
 # --------------------------------------------------------------------------
@@ -298,17 +310,26 @@ def s_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions — the classic IVF speedup, expressed as partition pruning.
     Recall grows with nprobe at linear candidate cost."""
     n = _emb_norm(spark, sf_dir)
-    # collect the 16 centroids once (bounded dim); the probe vector
-    # (vec_id 0) is one of them, so its lists need no further job
-    cents = sorted(
-        (int(r["vec_id"]), list(r["v"]))
+    # collect the 16 centroids once (bounded dim) with their norms; the
+    # probe vector (vec_id 0) is one of them, so neither its lists nor
+    # its scoring literals need a further job
+    rows = {
+        int(r["vec_id"]): r
         for r in n.filter(F.col("vec_id") < _N_CENTROIDS)
-        .select("vec_id", "v")
+        .select("vec_id", "v", "nrm")
         .collect()
-    )
-    probe_lists = _km_probe_lists(dict(cents)[_QUERY_VEC_ID], cents, _N_PROBE)
+    }
+    cents = sorted((i, list(r["v"])) for i, r in rows.items())
+    probe = rows[_QUERY_VEC_ID]
+    probe_lists = _km_probe_lists(list(probe["v"]), cents, _N_PROBE)
     assigned = n.withColumn("list_id", _km_assign_np_col(cents, "v", "nrm"))
-    return _top_k(_vs_probe(assigned.filter(F.col("list_id").isin(probe_lists)), n))
+    return _top_k(
+        _vs_probe(
+            assigned.filter(F.col("list_id").isin(probe_lists)),
+            [float(x) for x in probe["v"]],
+            float(probe["nrm"]),
+        )
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1023,10 +1044,16 @@ def _km_ann_search(
     search the gated query runs. Train and serve are separate phases by
     design: at scale the fit happens once per index build while this
     search runs per query (bench.py times them separately)."""
-    probe_lists = _km_probe_lists(_probe(n)[0], cents, _N_PROBE)
+    probe_q, probe_v, probe_nrm = _probe(n)
+    probe_lists = _km_probe_lists(probe_q, cents, _N_PROBE)
     assigned = n.withColumn("list_id", _km_assign_np_col(cents))
     return _top_k(
-        _vs_probe(assigned.filter(F.col("list_id").isin(probe_lists)), n, "vnrm")
+        _vs_probe(
+            assigned.filter(F.col("list_id").isin(probe_lists)),
+            probe_v,
+            probe_nrm,
+            "vnrm",
+        )
     )
 
 
@@ -1152,7 +1179,7 @@ def s_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = b.join(
         F.broadcast(probes), F.col("bucket") == F.col("pb"), "left_semi"
     )
-    return _top_k(_vs_probe(cand, b))
+    return _top_k(_vs_probe(cand, *_probe_v(b)))
 
 
 # --------------------------------------------------------------------------
@@ -1393,13 +1420,7 @@ def _adc_top_k(
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(_PQ_SHORTLIST)
     )
-    pv = F.array(*[F.lit(x) for x in probe_v])
-    cos = F.expr(_DOT.format(a="v", b="pv")) / (
-        F.col("vnrm") * F.lit(probe_nrm)
-    )
-    return _top_k(
-        shortlist.withColumn("pv", pv).select("vec_id", cos.alias("cos_raw"))
-    )
+    return _top_k(_vs_probe(shortlist, probe_v, probe_nrm, "vnrm"))
 
 
 # --------------------------------------------------------------------------
@@ -1725,7 +1746,7 @@ def ivfpq_index_compact(spark: SparkSession, path: str) -> None:
     repartition keys on list_id so every list lands in one task → one
     file per list directory; content is untouched, so a stored serve
     after compaction equals the pre-compaction serve exactly (pinned
-    in test_round9_ops, row count re-verified before the commit) and
+    in test_similarity, row count re-verified before the commit) and
     the literal PartitionFilters pruning is unchanged. Generation-swap
     rewrite with an atomic manifest commit (operators/store.py) — a
     crash mid-rewrite leaves the old generation serving; same 100 TB

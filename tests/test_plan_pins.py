@@ -85,14 +85,27 @@ _PINS = {
         ("python", "==", 0),
     ],
     "j_pit_features": [("shuffles", "<=", 1), ("python", "==", 0)],
-    # brute-force top-k: broadcast probe set, no shuffle after the
-    # spread exchange before top-k
-    "s_knn_bruteforce": [("shuffles", "<=", 2), ("python", "==", 0)],
+    # brute-force top-k: the probe scores as literals (_vs_probe), no
+    # shuffle after the spread exchange before top-k
+    "s_knn_bruteforce": [
+        ("shuffles", "<=", 2),
+        ("python", "==", 0),
+        ("bnlj", "==", 0),
+    ],
+    # the IVF and multi-probe LSH searches score through the same
+    # _vs_probe: no broadcast-probe nested-loop join
+    "s_ann_ivf": [("bnlj", "==", 0)],
+    "s_ann_ivf_kmeans": [("bnlj", "==", 0)],
+    "s_ann_ivf_sampled": [("bnlj", "==", 0)],
+    "s_ann_lsh_multiprobe": [("bnlj", "==", 0)],
     # PQ searches re-rank their ADC shortlist against the probe shipped
     # as literals (_adc_top_k): no broadcast-probe nested-loop join and
     # no second corpus scan; the one exchange is the spread
     "s_ann_pq": [("bnlj", "==", 0), ("shuffles", "<=", 1)],
     "s_ann_ivfpq": [("bnlj", "==", 0), ("shuffles", "<=", 1)],
+    # a rollup's state folds in one task (operators/store.py:Rollup):
+    # the stored HLL serve merges registers with no exchange
+    "a_hll_rollup_stored": [("shuffles", "==", 0)],
     # pure narrow expression pipeline — no exchange beyond the spread
     "t_quality_score": [("shuffles", "<=", 1), ("python", "==", 0)],
     # round-4b/c single-fact-shuffle contracts

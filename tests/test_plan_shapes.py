@@ -71,17 +71,12 @@ ALLOWED_BNLJ = {
     "q_association_rules": 1,
     "q_rfm_segments": 6,
     "q_skyline_parts": 1,
-    "s_ann_ivf": 1,
-    "s_ann_ivf_kmeans": 1,
-    "s_ann_ivf_sampled": 1,
-    "s_ann_lsh_multiprobe": 1,
     "s_graph_recall": 1,  # 1-row n_exact scalar aggregate cross-joined
                           # onto the 3-row per-variant hit counts (the
                           # probes×corpus cross join is behind the exact
                           # edge list's checkpoint, not in this plan)
     "s_hybrid_search": 2,
     "s_knn_batch": 1,
-    "s_knn_bruteforce": 1,
     "s_retrieval_eval": 1,
     "t_bm25_rank": 1,
     "t_bm25_stored": 1,  # same 1-row corpus-stats broadcast cross as

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from olympic_athletes_etl_spark.plans import queries
 from olympic_athletes_etl_spark.plans.tables import load
 from tests.test_round9_ops import _parquet_files_by_dir
+from tests.test_store import jobs_run
 
 
 def _q(name):
@@ -556,6 +557,66 @@ class TestHLLRollup:
         for read in (hll_rollup_load, hll_rollup_serve):
             with pytest.raises(ValueError, match="month"):
                 read(spark, path)
+
+    def test_lifecycle_job_counts(self, spark, sf_dir, tmp_path):
+        """The register state folds in one task: a serve and a range
+        serve are one Spark job each (no inference job, no exchange),
+        and a compaction is its write plus the verify read."""
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            _HLL_RANGE_HI,
+            _HLL_RANGE_LO,
+            hll_rollup_compact,
+            hll_rollup_serve,
+            hll_rollup_serve_range,
+        )
+
+        path, _ = self._store(
+            spark,
+            sf_dir,
+            tmp_path,
+            [
+                lambda e: e.filter(F.col("user_id") % 2 == 0),
+                lambda e: e.filter(F.col("user_id") % 2 == 1),
+            ],
+        )
+
+        def serve():
+            return hll_rollup_serve(spark, path).collect()
+
+        def serve_range():
+            return hll_rollup_serve_range(
+                spark, path, _HLL_RANGE_LO, _HLL_RANGE_HI
+            ).collect()
+
+        n_serve, before = jobs_run(spark, serve)
+        assert n_serve == 1
+        assert jobs_run(spark, serve_range)[0] == 1
+        n_compact, _ = jobs_run(spark, lambda: hll_rollup_compact(spark, path))
+        assert n_compact <= 2
+        n_serve, after = jobs_run(spark, serve)
+        assert n_serve == 1 and sorted(after) == sorted(before)
+
+    def test_append_with_other_types_leaves_store_unchanged(
+        self, spark, sf_dir, tmp_path
+    ):
+        """An append whose register index ``b`` is a string is refused
+        naming ``b`` before the lock or any file; the store is as it
+        was."""
+        import os
+
+        from olympic_athletes_etl_spark.plans.sketch_q import (
+            hll_rollup_append,
+            hll_rollup_partials,
+        )
+
+        path, events = self._store(spark, sf_dir, tmp_path, [lambda e: e])
+        before = sorted(os.walk(path))
+        bad = hll_rollup_partials(events).withColumn(
+            "b", F.col("b").cast("string")
+        )
+        with pytest.raises(ValueError, match=r"\['b string \(stored bigint\)'\]"):
+            hll_rollup_append(bad, path)
+        assert sorted(os.walk(path)) == before
 
     def test_store_rejects_wrong_frame(self, spark, tmp_path):
         from olympic_athletes_etl_spark.plans.sketch_q import (

@@ -14,6 +14,7 @@ from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from olympic_athletes_etl_spark.operators.store import (
     GenStore,
@@ -493,3 +494,97 @@ def test_keep_last_reader_survives_concurrent_compact_midscan(
     # new loads are unaffected: they resolve the current generation
     fresh = store.load(spark)[""]
     assert fresh.count() > 0
+
+
+# --------------------------------------------------------------------------
+# The manifest records each table's schema: a read runs no Spark job, an
+# append must match the recorded types, and a manifest without a schema
+# is refused.
+# --------------------------------------------------------------------------
+def jobs_run(spark, fn):
+    """(number of Spark jobs ``fn()`` ran, its result), counted by job
+    group through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_load_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """load reads under the schema the manifest recorded at the commit —
+    no footer-inference job — and the frame is the contract, typed as
+    written, at every generation. (One year of months: Spark lists more
+    than spark.sql.sources.parallelPartitionDiscovery.threshold = 32
+    partition directories with a job of its own, as any read does.)"""
+    partials = _partials(_orders(spark, sf_dir)).filter(
+        F.col("month").startswith("1995")
+    )
+    store = GenStore(str(tmp_path / "s"), [_SPEC])
+    store.create({"": partials})
+    store.append({"": partials})
+    want = partials.select(*_SPEC.columns).dtypes
+
+    def load_dtypes():
+        n_jobs, tables = jobs_run(spark, lambda: store.load(spark))
+        return n_jobs, tables[""].dtypes
+
+    assert load_dtypes() == (0, want)
+    store.compact(spark)
+    assert load_dtypes() == (0, want)
+
+
+def test_ensured_empty_store_loads_empty(spark, sf_dir, tmp_path):
+    """An append's first-batch path commits an empty store that records
+    the batch's schema: it loads as an empty frame with the contract
+    columns (inference over no files has nothing to read), and takes
+    the batch."""
+    partials = _partials(_orders(spark, sf_dir))
+    store = GenStore(str(tmp_path / "s"), [_SPEC])
+    store.ensure({"": partials})
+    empty = store.load(spark)[""]
+    assert empty.columns == list(_SPEC.columns)
+    assert empty.count() == 0
+    store.append({"": partials})
+    assert _served(spark, store) == _served_frames(spark, _orders(spark, sf_dir))
+
+
+def test_append_with_other_types_refused_before_writing(spark, sf_dir, tmp_path):
+    """A frame whose contract column has another type than the recorded
+    one is refused, naming the column, before the lock or any file;
+    nullability alone is not a difference."""
+    partials = _partials(_orders(spark, sf_dir))
+    store = GenStore(str(tmp_path / "s"), [_SPEC])
+    store.create({"": partials})
+    before = sorted(os.walk(store.path))
+    with pytest.raises(ValueError, match=r"n_orders int \(stored bigint\)"):
+        store.append(
+            {"": partials.withColumn("n_orders", F.col("n_orders").cast("int"))}
+        )
+    assert sorted(os.walk(store.path)) == before
+    nonnull = spark.createDataFrame(
+        partials.collect(),
+        StructType([StructField(f.name, f.dataType, False) for f in partials.schema]),
+    )
+    store.append({"": nonnull})
+
+
+def test_manifest_without_schema_is_refused(spark, sf_dir, tmp_path):
+    """A manifest that records no schema is refused loudly on load and
+    append: there is no fallback that infers it from the files."""
+    from olympic_athletes_etl_spark.operators import store as store_mod
+
+    partials = _partials(_orders(spark, sf_dir))
+    store = GenStore(str(tmp_path / "s"), [_SPEC])
+    store.create({"": partials})
+    store_mod._commit_manifest(store.path, {"gen": 0})
+    with pytest.raises(ValueError, match="records no schema"):
+        store.load(spark)
+    with pytest.raises(ValueError, match="records no schema"):
+        store.append({"": partials})
